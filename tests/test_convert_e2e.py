@@ -320,36 +320,3 @@ def test_convert_run_leaves_cache_empty(spark, tmp_path, monkeypatch):
     )
     assert len(result.converted) == 2
     assert cm.isEmpty(), "convert() leaked persisted frames after the run"
-
-
-def test_rebalance_toggle_writes_identical_rows(spark, tmp_path, monkeypatch):
-    """SPARK_GRAFT_CONVERT_REBALANCE=1 (the skew escape hatch measured in
-    tools/bench_convert_skew.py) swaps the writer exchange for Spark's
-    REBALANCE — the output contract must be unchanged: same rows, same
-    geohash3 dirs, _SUCCESS + sidecar markers, within-partition geohash
-    sort preserved."""
-    src = f"{WOD}/CTD/OBS/CTDO1971.gz"
-    out_a = str(tmp_path / "static")
-    out_b = str(tmp_path / "rebalance")
-    monkeypatch.delenv("SPARK_GRAFT_CONVERT_REBALANCE", raising=False)
-    convert_file(spark, FileTask("CTD", "OBS", src, out_a, out_a))
-    monkeypatch.setenv("SPARK_GRAFT_CONVERT_REBALANCE", "1")
-    convert_file(spark, FileTask("CTD", "OBS", src, out_b, out_b))
-
-    pa = f"{out_a}/yearly/CTD/OBS/CTDO1971.parquet"
-    pb = f"{out_b}/yearly/CTD/OBS/CTDO1971.parquet"
-    assert os.path.exists(f"{pb}/_SUCCESS")
-    assert os.path.exists(f"{pb}/_geo_metadata.json")
-    a = spark.read.parquet(pa)
-    b = spark.read.parquet(pb)
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # same partition dirs
-    dirs = lambda p: sorted(
-        d for d in os.listdir(p) if d.startswith("geohash3=")
-    )
-    assert dirs(pa) == dirs(pb)
-    # within-file geohash sort survives the rebalance exchange
-    for f in glob.glob(f"{pb}/geohash3=*/part-*.parquet")[:5]:
-        gh = [r.geohash for r in spark.read.parquet(f).select("geohash").collect()]
-        assert gh == sorted(gh)

@@ -1,5 +1,6 @@
-"""Unit tests for the pure-Python WOD decoder against the reference's bundled
-fixtures (read-only). Mirrors the reference's golden-input test strategy
+"""Unit tests for the pure-Python WOD decoder: against the reference's bundled
+fixtures (read-only; skipped when the files are absent) and against
+generated records. Mirrors the reference's golden-input test strategy
 (``SparklerExecutorLocalTest.java``) but asserts values, not just markers.
 """
 
@@ -12,10 +13,13 @@ import pytest
 
 from wod_ascii_to_parquet_spark_spark.sources.wod_format import (
     WodFormatError,
+    decode_record,
     iter_casts,
     parse_cast,
     split_records,
 )
+
+from .wod_encode import encode_cast, make_casts, wod_text, write_wod_file
 
 FIXTURES = sorted(glob.glob("/root/reference/src/test/resources/wod/*/*/*.gz"))
 
@@ -29,11 +33,19 @@ EXPECTED_COUNTS = {
 }
 
 
+XBT = next((p for p in FIXTURES if p.endswith("/XBT/OBS/XBTO1967.gz")), None)
+
+needs_real_files = pytest.mark.skipif(
+    XBT is None, reason="the real NOAA WOD fixture files are not present"
+)
+
+
 def _read(path: str) -> str:
     return gzip.open(path, "rt", errors="replace").read()
 
 
-@pytest.mark.parametrize("path", FIXTURES, ids=lambda p: p.split("/wod/")[-1])
+@needs_real_files
+@pytest.mark.parametrize("path", FIXTURES, ids=[p.split("/wod/")[-1] for p in FIXTURES])
 def test_all_fixture_casts_parse(path):
     ds = path.split("/")[-3]
     n_ok = n_err = 0
@@ -53,8 +65,9 @@ def test_all_fixture_casts_parse(path):
     assert n_ok == EXPECTED_COUNTS[path.split("/")[-1]]
 
 
+@needs_real_files
 def test_known_first_xbt_cast():
-    text = _read("/root/reference/src/test/resources/wod/XBT/OBS/XBTO1967.gz")
+    text = _read(XBT)
     rec = next(split_records(text))
     c = parse_cast(rec, "XBT")
     assert c.castNumber == 3411247
@@ -73,8 +86,9 @@ def test_known_first_xbt_cast():
     assert all(len(d[3]) == 1 for d in c.depths)
 
 
+@needs_real_files
 def test_depth_monotonicity_sampled():
-    text = _read("/root/reference/src/test/resources/wod/XBT/OBS/XBTO1967.gz")
+    text = _read(XBT)
     checked = 0
     for rec in split_records(text):
         c = parse_cast(rec, "XBT")
@@ -86,22 +100,28 @@ def test_depth_monotonicity_sampled():
 
 
 def test_corrupt_record_goes_to_error_channel():
-    text = _read("/root/reference/src/test/resources/wod/XBT/OBS/XBTO1967.gz")
-    rec = next(split_records(text))
-    corrupted = rec[:40] + "XX" + rec[42:]
-    results = list(iter_casts(corrupted, "XBT"))
+    c = make_casts(1, seed=1, first_cast=4242)[0]
+    results = list(iter_casts(encode_cast(c, malformed=True), "XBT"))
     assert len(results) == 1
     cast, err = results[0]
     assert cast is None
     assert err[0] == "XBT"
+    assert err[1] == 4242  # recovered from the header
     assert err[2]
 
 
+def test_unreadable_header_error_has_no_cast_number():
+    rec = next(split_records(encode_cast(make_casts(1, seed=2)[0])))
+    start = 2 + int(rec[1])  # version byte, then the WOD-int byte count
+    cast, err = decode_record(rec[:start] + "X" + rec[start + 1 :], "XBT")
+    assert cast is None and err[:2] == ("XBT", -1)
+    assert err[2] == f"bad WOD-int length byte 'X' at {start}"
+
+
 def test_truncated_record_raises_in_channel():
-    text = _read("/root/reference/src/test/resources/wod/XBT/OBS/XBTO1967.gz")
-    rec = next(split_records(text))
+    rec = next(split_records(encode_cast(make_casts(1, seed=3)[0])))
     with pytest.raises(WodFormatError):
-        parse_cast(rec[:100], "XBT")
+        parse_cast(rec[: len(rec) // 2], "XBT")
 
 
 def test_stream_error_yields_error_row():
@@ -110,20 +130,34 @@ def test_stream_error_yields_error_row():
     assert results[0][0] is None
 
 
-def test_dataset_inference_from_path():
-    """parse_file_content without dataset= infers DS from the reference
-    layout <...>/<DS>/<LEVEL>/<FILE> — regression: passing a dirname made
-    the fallback return the directory ABOVE the dataset code."""
-    import pathlib
+def test_stream_error_keeps_records_before_the_failure():
+    casts = make_casts(5, seed=4)
+    results = list(iter_casts(wod_text(casts, garbage_before=3), "XBT"))
+    assert [c.castNumber for c, _ in results[:3]] == [1, 2, 3]
+    assert len(results) == 4
+    cast, err = results[3]
+    assert cast is None and err[:2] == ("XBT", -1)
+    assert err[2].startswith("unrecoverable stream error: ")
+
+
+def test_dataset_inference_from_path(tmp_path):
+    """decode_file without dataset= infers DS from the reference layout
+    <...>/<DS>/<LEVEL>/<FILE> — regression: passing a dirname made the
+    fallback return the directory ABOVE the dataset code."""
+    import pyarrow as pa
 
     from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import (
         _dataset_of,
-        parse_file_content,
+        decode_file,
     )
 
-    path = "/root/reference/src/test/resources/wod/CTD/OBS/CTDO1971.gz"
+    path = write_wod_file(
+        str(tmp_path / "CTD" / "OBS" / "CTDO1971.gz"), wod_text(make_casts(3, seed=5))
+    )
     assert _dataset_of(path) == "CTD"
-    content = pathlib.Path(path).read_bytes()
-    rows = list(parse_file_content(path, content))
-    assert rows and all(err is None for _, err in rows)
-    assert {cast[0] for cast, _ in rows} == {"CTD"}  # cast[0] = dataset col
+    with open(path, "rb") as fh:
+        batches = list(decode_file(path, fh.read()))
+    assert batches and all(isinstance(b, pa.RecordBatch) for b in batches)
+    rows = pa.Table.from_batches(batches).to_pylist()
+    assert len(rows) == 3 and all(r["err"] is None for r in rows)
+    assert {r["ok"]["dataset"] for r in rows} == {"CTD"}

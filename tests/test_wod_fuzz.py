@@ -1,8 +1,8 @@
 """Property-based round-trip fuzzing of the WOD decoder.
 
-A test-only WOD *encoder* generates random casts, renders them in the WOD
-native variable-length encoding (including 80-char line framing), and the
-production decoder must recover every field exactly. This covers encode
+The test-only WOD *encoder* (``tests/wod_encode.py``) renders random casts
+in the WOD native variable-length encoding (including 80-char line
+framing), and the production decoder must recover every field exactly. This covers encode
 paths the six fixtures never exercise (missing values everywhere, extreme
 precisions, empty profiles, multi-variable metadata) — the reference ships
 no property tests at all (SURVEY §5).
@@ -15,95 +15,12 @@ import math
 from hypothesis import given, settings, strategies as st
 
 from wod_ascii_to_parquet_spark_spark.sources.wod_format import (
-    LINE_WIDTH,
     iter_casts,
     parse_cast,
     split_records,
 )
 
-
-# --- encoder (test-only) ---------------------------------------------------
-
-
-def enc_int(v: int | None) -> str:
-    if v is None:
-        return "-"
-    s = str(v)
-    assert 1 <= len(s) <= 9
-    return f"{len(s)}{s}"
-
-
-def enc_float(v: float | None, prec: int) -> str:
-    if v is None:
-        return "-"
-    raw = str(int(round(v * 10**prec)))
-    total = len(raw)
-    sig = len(raw.lstrip("-").lstrip("0")) or 1
-    assert total <= 9 and prec <= 9
-    return f"{sig}{total}{prec}{raw}"
-
-
-def dec_of(v: float | None, prec: int) -> float | None:
-    """The value the decoder should recover (quantized to prec)."""
-    if v is None:
-        return None
-    return int(round(v * 10**prec)) / 10**prec
-
-
-def encode_cast(c: dict) -> str:
-    body = []
-    body.append(enc_int(c["castNumber"]))
-    body.append(c["country"])
-    body.append(enc_int(c["cruise"]))
-    body.append(f"{c['year']:4d}")
-    body.append(f"{c['month']:2d}" if c["month"] is not None else "  ")
-    body.append(f"{c['day']:2d}" if c["day"] is not None else "  ")
-    body.append(enc_float(c["time"], 2))
-    body.append(enc_float(c["lat"], 4))
-    body.append(enc_float(c["lon"], 4))
-    body.append(enc_int(len(c["depths"])))
-    body.append(str(c["profileType"]))
-    body.append(f"{len(c['variables']):2d}")
-    for code, qc, meta in c["variables"]:
-        body.append(enc_int(code))
-        body.append(str(qc))
-        body.append(enc_int(len(meta)) if meta else "0")
-        for mcode, mval in meta:
-            body.append(enc_int(mcode))
-            body.append(enc_float(mval, 2))
-    body.append("-")  # no character data
-    # secondary header block
-    if c["attributes"]:
-        sec = [enc_int(len(c["attributes"]))]
-        for acode, aval in c["attributes"]:
-            sec.append(enc_int(acode))
-            sec.append(enc_float(aval, 3))
-        sec_str = "".join(sec)
-        body.append(enc_int(len(sec_str)))
-        body.append(sec_str)
-    else:
-        body.append("-")
-    body.append("-")  # no biology block
-    for depth, data in c["depths"]:
-        body.append(enc_float(depth, 1))
-        if depth is not None:
-            body.append("00")  # depth err + originator flags
-        for (vcode, _qc, _meta), val in zip(c["variables"], data):
-            body.append(enc_float(val, 3))
-            if val is not None:
-                body.append("00")
-    payload = "".join(body)
-    # total byte count includes itself and the version byte: solve fixpoint
-    count = len(payload) + 2  # 'C' + count-field placeholder grows
-    for _ in range(3):
-        count_field = enc_int(count)
-        count = len(payload) + 1 + len(count_field)
-    record = "C" + enc_int(count) + payload
-    assert len(record) == count, (len(record), count)
-    # frame into 80-char lines, last line padded
-    lines = [record[i : i + LINE_WIDTH] for i in range(0, len(record), LINE_WIDTH)]
-    lines[-1] = lines[-1].ljust(LINE_WIDTH)
-    return "\n".join(lines)
+from .wod_encode import dec_of, encode_cast
 
 
 # --- strategies ------------------------------------------------------------

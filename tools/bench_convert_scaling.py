@@ -70,7 +70,7 @@ for n in FACTORS:
     inputs[n] = p
 
 # JIT warmup: the write path needs ~4 runs to reach steady state
-# (tools/exp_convert_stages.py) — warm on the 1x input first.
+# (stage-timed warm runs in SCALE.md) — warm on the 1x input first.
 for _ in range(4):
     out = tempfile.mkdtemp(prefix="convscale_w_")
     try:

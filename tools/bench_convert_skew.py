@@ -214,13 +214,7 @@ def main() -> None:
             shutil.rmtree(out, ignore_errors=True)
 
     results: dict[str, dict] = {}
-    for label, path, rebalance in (
-        ("uniform", uniform, False),
-        ("skewed", skewed, False),
-        ("uniform_rebalance", uniform, True),
-        ("skewed_rebalance", skewed, True),
-    ):
-        os.environ["SPARK_GRAFT_CONVERT_REBALANCE"] = "1" if rebalance else "0"
+    for label, path in (("uniform", uniform), ("skewed", skewed)):
         runs = []
         files = None
         for i in range(RUNS):
@@ -244,7 +238,6 @@ def main() -> None:
             "data_files": files,
         }
         print({label: results[label]}, flush=True)
-    os.environ.pop("SPARK_GRAFT_CONVERT_REBALANCE", None)
 
     ratio = round(results["skewed"]["sec"] / results["uniform"]["sec"], 3)
     rec = {
@@ -252,13 +245,8 @@ def main() -> None:
         "hot_share": round(hot_share, 3),
         "uniform": results["uniform"],
         "skewed": results["skewed"],
-        "uniform_rebalance": results["uniform_rebalance"],
-        "skewed_rebalance": results["skewed_rebalance"],
         "skew_over_uniform": ratio,
         "straggler_dominates": ratio > 1.25,
-        "rebalance_skew_over_uniform": round(
-            results["skewed_rebalance"]["sec"] / results["uniform"]["sec"], 3
-        ),
         "method": "byte-matched arms: skew induced by in-place lat/lon "
         "digit rewrite (identical record lengths, depth rows, and decode "
         "work; only the geohash changes). A record-replication synthesis "

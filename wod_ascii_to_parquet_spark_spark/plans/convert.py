@@ -150,11 +150,19 @@ def _has_stale_temp(fs: FsClient, path: str) -> bool:
     return fs.is_dir(path) and fs.exists(_join(path, "_temporary"))
 
 
+def _scan(spark: SparkSession, fs: FsClient, task: FileTask):
+    """``wod_scan`` of one file task. Scatter-parse (gunzip+frame in the
+    file task, field-decode fanned out across all cores) for files big
+    enough that decode width matters; tiny files stay single-stage — their
+    record exchange would cost more than it balances."""
+    scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
+    return wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
+
+
 def _write_error_channel(
     spark: SparkSession,
     fs: FsClient,
     task: FileTask,
-    scatter: bool | None = None,
     known_has_errors: bool = False,
 ) -> None:
     """Materialize the per-file error store (one re-decode) if the file has
@@ -163,11 +171,7 @@ def _write_error_channel(
     count from the in-flight Observation — ``known_has_errors=True``
     skips the existence probe, saving a decode) and on sidecar heals,
     where nothing is known and the probe runs."""
-    if scatter is None:
-        scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
-    errs = errors(
-        wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
-    )
+    errs = errors(_scan(spark, fs, task))
     if known_has_errors or errs.limit(1).count() > 0:
         errs.coalesce(1).write.mode("overwrite").parquet(task.error_path)
 
@@ -211,14 +215,10 @@ def convert_file(
             fs.write_bytes(sidecar, geo_sidecar_bytes(enc))
         return "skipped"
 
-    # Scatter-parse (gunzip+frame in the file task, field-decode fanned out
-    # across all cores) for files big enough that decode width matters;
-    # tiny files stay single-stage — their record exchange would cost more
-    # than it balances. No cache: the scattered parse is cheap enough that
-    # recomputing it for the rare error-channel job beats paying the
-    # in-memory columnar encode of deeply nested cast structs.
-    scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
-    parsed = wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
+    # No cache: the scattered parse is cheap enough that recomputing it for
+    # the rare error-channel job beats paying the in-memory columnar encode
+    # of deeply nested cast structs.
+    parsed = _scan(spark, fs, task)
     # Error DETECTION is free: an Observation above the ok-filter counts
     # error rows while the main write's single decode streams by (the
     # filter is not pushed through CollectMetrics), so the happy path
@@ -283,24 +283,14 @@ def convert_file(
     # residual write cost is the floor: 1,652 parquet file creations
     # (header + nested-schema footer each), which IS the layout contract.
     n_write_tasks = min(16, spark.sparkContext.defaultParallelism)
-    # Writer distribution: geohash3-hash by default. Real WOD occupancy
+    # Writer distribution: geohash3-hash. Real WOD occupancy
     # is coastal-skewed, and a hash repartition routes a hot geohash3
     # ENTIRELY to one writer task — measured on byte-matched arms at a
     # 50% hot cell: 1.13x the uniform arm (tools/bench_convert_skew.py,
     # SCALING.json convert.skew_x16), i.e. the straggler does NOT
     # dominate at file-job scale (the single-gzip decode bound does), so
-    # the default stays the static exchange and per-file skew remains
-    # bounded by file size as the module docstring argues. The escape
-    # hatch for inputs whose hot-cell volume dwarfs the AQE advisory
-    # partition size is Spark's own REBALANCE exchange (splits oversized
-    # same-key partitions, coalesces cold ones — the hot dir then gets
-    # several geohash-sorted files, cold dirs keep one), opt-in via
-    # SPARK_GRAFT_CONVERT_REBALANCE=1; measured no worse on either arm
-    # (uniform 7.4 vs 8.1 s, skewed 8.8 vs 9.1 s).
-    if os.environ.get("SPARK_GRAFT_CONVERT_REBALANCE", "0") == "1":
-        staged = casts.hint("rebalance", F.col("geohash3"))
-    else:
-        staged = casts.repartition(n_write_tasks, F.col("geohash3"))
+    # the writer exchange stays static and per-file skew remains bounded
+    # by file size as the module docstring argues.
     (
         # Sort by (geohash3, geohash): the partitioned writer requires
         # ordering by the partition column and would insert its own
@@ -308,7 +298,8 @@ def convert_file(
         # existing sort order starts with it. Equivalent row order to
         # the reference's sortWithinPartitions("geohash") since
         # geohash3 is a prefix of geohash.
-        staged.sortWithinPartitions("geohash3", "geohash")
+        casts.repartition(n_write_tasks, F.col("geohash3"))
+        .sortWithinPartitions("geohash3", "geohash")
         .write.mode("overwrite")
         # static overwrite: the job owns the whole directory, and the
         # dynamic committer would skip the _SUCCESS marker the
@@ -321,9 +312,7 @@ def convert_file(
         # Rare path: re-decode to materialize the error channel (a fresh
         # scan — the observed frame's metric is already consumed; the
         # Observation already proved errors exist, so no probe).
-        _write_error_channel(
-            spark, fs, task, scatter=scatter, known_has_errors=True
-        )
+        _write_error_channel(spark, fs, task, known_has_errors=True)
     # Real GeoParquet: attach the `geo` footer key to every data file
     # (the Sedona-free mirror of the reference's geoparquet.version/crs
     # writer options, DatasetYearTrain.java:132-134), THEN the sidecar —

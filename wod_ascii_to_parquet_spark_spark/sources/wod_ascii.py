@@ -3,46 +3,52 @@
 The reference iterates casts with ``CastFileReader`` on the DRIVER thread and
 ships batches to Spark through a BlockingQueue
 (``DatasetYearTrain.java:141-209``) — the single biggest non-idiomatic
-bottleneck in its design. Here the parse is a distributed flatMap over whole
-files:
+bottleneck in its design. Here one decode kernel runs on the executors:
 
-- ``spark.read.format("binaryFile")`` yields one row per ``.gz`` object.
-  Gzip is unsplittable, so one-task-per-file is the maximum READ
-  parallelism — but not the maximum PARSE parallelism: the file task only
-  gunzips and frames cast records (cheap), then a round-robin exchange of
-  record strings scatters the expensive field decode across every core
-  (``wod_scan(scatter=True)``, the default).
-- The decode walks cast records with the pure-Python decoder
-  (``wod_format.py``), emitting a tagged union (ok-cast | error-row) —
-  the split replaces the reference's 1-parquet-write-per-bad-record error
-  handler (``TransformationErrorHandler.java:34-39``) with a single
-  channel filter.
+- per record, ``wod_format.decode_record`` yields a tagged union (ok-cast |
+  error-row), and ``wod_format.stream_error`` the one row for a file whose
+  framing fails — the split replaces the reference's
+  1-parquet-write-per-bad-record error handler
+  (``TransformationErrorHandler.java:34-39``) with a single channel filter;
+- :func:`encode_batches` turns those pairs into ``schemas.PARSED`` Arrow
+  RecordBatches, and :func:`decode_file` is that encoder over one whole
+  file.
+
+Three surfaces share the kernel: ``wod_scan(scatter=False)`` runs
+:func:`decode_file` per ``binaryFile`` row; ``wod_scan(scatter=True)`` (the
+default) only gunzips and FRAMES records in the file task, then a
+round-robin exchange of record strings scatters the field decode across
+every core; and the ``wod_ascii`` DataSource (``wod_datasource.py``) yields
+:func:`decode_file` batches per file.
 
 100 TB note: scatter decouples decode width from file count, so one giant
 yearly file parses at cluster width; for files too big to hold decompressed
 in one task the right fix remains upstream re-compression to a splittable
-codec. The per-file generator keeps O(record) memory so multi-GB casts
+codec. Batches are capped at ``_ARROW_BATCH_ROWS`` casts so multi-GB casts
 files stream through a 3g executor (the reference's cluster-mode executor
 size, ``src/spark/job.sh:11-14``).
 """
 
 from __future__ import annotations
 
+import functools
 import gzip
 import io
-from collections.abc import Iterator
+import itertools
+from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import PARSED
 from .wod_format import (
+    Decoded,
     RawCast,
     WodFormatError,
-    _Cursor,
+    decode_record,
     iter_casts,
-    parse_cast,
     split_records,
+    stream_error,
 )
 
 
@@ -50,47 +56,6 @@ def _dataset_of(path: str) -> str:
     """Dataset code from the reference layout ``<...>/<DS>/<LEVEL>/<FILE>``."""
     parts = path.rstrip("/").split("/")
     return parts[-3] if len(parts) >= 3 else "UNKNOWN"
-
-
-def _cast_row(c: RawCast) -> tuple:
-    return (
-        c.dataset,
-        c.castNumber,
-        c.cruiseNumber,
-        c.country,
-        c.originatorsCruise,
-        c.originatorsStationCode,
-        c.year,
-        c.month,
-        c.day,
-        c.time,
-        c.latitude,
-        c.longitude,
-        c.profileType,
-        c.attributes,
-        c.biologicalAttributes,
-        c.taxonomicDatasets,
-        c.principalInvestigators,
-        c.variables,
-        c.depths,
-    )
-
-
-def parse_file_content(path: str, content: bytes, dataset: str | None = None) -> Iterator[tuple]:
-    """Gunzip (if needed) + decode one file's casts → tagged-union tuples."""
-    ds = dataset or _dataset_of(path)
-    if path.endswith(".gz"):
-        reader = io.TextIOWrapper(
-            gzip.GzipFile(fileobj=io.BytesIO(content)), errors="replace"
-        )
-    else:
-        reader = io.TextIOWrapper(io.BytesIO(content), errors="replace")
-    text = reader.read()
-    for cast, err in iter_casts(text, ds):
-        if cast is not None:
-            yield (_cast_row(cast), None)
-        else:
-            yield (None, err)
 
 
 def _cast_dict(c: RawCast) -> dict:
@@ -150,12 +115,67 @@ def _cast_dict(c: RawCast) -> dict:
 _ARROW_BATCH_ROWS = 4096
 
 
+def _chunks(items: Iterable, n: int = _ARROW_BATCH_ROWS) -> Iterator[list]:
+    it = iter(items)
+    while chunk := list(itertools.islice(it, n)):
+        yield chunk
+
+
+@functools.cache
+def _parsed_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(PARSED)
+
+
+def encode_batches(pairs: Iterable[Decoded]) -> Iterator:
+    """``(cast, err)`` pairs → ``PARSED`` RecordBatches of at most
+    ``_ARROW_BATCH_ROWS`` rows. Building the nested arrays in pyarrow skips
+    the pickle → JVM row-verification path entirely."""
+    import pyarrow as pa
+
+    schema = _parsed_arrow_schema()
+    ok_type = schema.field("ok").type
+    err_type = schema.field("err").type
+    # Each cast becomes a dict as it streams by: holding a whole chunk of
+    # parsed casts first doubled the garbage collector's passes.
+    rows = (
+        (
+            None if c is None else _cast_dict(c),
+            None if e is None
+            else {"dataset": e[0], "castNumber": e[1], "error": e[2]},
+        )
+        for c, e in pairs
+    )
+    for chunk in _chunks(rows):
+        oks, errs = zip(*chunk)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(oks, type=ok_type), pa.array(errs, type=err_type)],
+            schema=schema,
+        )
+
+
 def _decompress(path: str, content: bytes) -> str:
     if path.endswith(".gz"):
         return io.TextIOWrapper(
             gzip.GzipFile(fileobj=io.BytesIO(content)), errors="replace"
         ).read()
     return content.decode(errors="replace")
+
+
+def decode_file(path: str, content: bytes, dataset: str | None = None) -> Iterator:
+    """Gunzip (if ``.gz``) and decode one file's casts into ``PARSED``
+    RecordBatches; ``dataset`` defaults to the one in the file's path."""
+    ds = dataset or _dataset_of(path)
+    return encode_batches(iter_casts(_decompress(path, content), ds))
+
+
+def _file_rows(batches) -> Iterator[tuple[str, bytes]]:
+    """``(path, content)`` per ``binaryFile`` row, one file at a time."""
+    for batch in batches:
+        paths, contents = batch.column(0), batch.column(1)
+        for i in range(batch.num_rows):
+            yield paths[i].as_py(), contents[i].as_py()
 
 
 def wod_scan(
@@ -166,13 +186,7 @@ def wod_scan(
 ) -> DataFrame:
     """Parse WOD ASCII file(s) into the tagged-union DataFrame (schema
     ``schemas.PARSED``: ``ok`` cast struct | ``err`` error struct).
-
-    Executor-side the decode emits Arrow RecordBatches directly
-    (``mapInArrow``): building the nested arrays in pyarrow skips the
-    pickle → JVM row-verification path entirely (~2× faster end-to-end
-    than the RDD formulation for the XBT fixture). Batches are capped at
-    ``_ARROW_BATCH_ROWS`` casts so multi-GB files stream with bounded
-    memory. Consumers split the channels with ``ok_casts`` / ``errors``.
+    Consumers split the channels with ``ok_casts`` / ``errors``.
 
     ``scatter=True`` (default) splits the work into two stages: the
     per-file task only gunzips and FRAMES cast records (the cheap part —
@@ -186,171 +200,59 @@ def wod_scan(
     the one-task formulation holds in memory anyway. ``scatter=False``
     keeps the single-stage in-task decode (no exchange; right when there
     are many small files and the shuffle would cost more than it
-    balances).
+    balances). Both arms emit identical rows.
     """
     import pyarrow as pa
 
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(PARSED)
-    ok_type = arrow_schema.field("ok").type
-    err_type = arrow_schema.field("err").type
     files = spark.read.format("binaryFile").load(paths).select("path", "content")
 
     if not scatter:
 
         def decode(batches):
-            def flush(oks, errs):
-                return pa.RecordBatch.from_arrays(
-                    [pa.array(oks, type=ok_type), pa.array(errs, type=err_type)],
-                    schema=arrow_schema,
-                )
-
-            for batch in batches:
-                paths_col = batch.column(0)
-                content_col = batch.column(1)
-                for i in range(batch.num_rows):
-                    path = paths_col[i].as_py()
-                    content = content_col[i].as_py()
-                    ds = dataset or _dataset_of(path)
-                    oks: list = []
-                    errs: list = []
-                    text = _decompress(path, content)
-                    for cast, err in iter_casts(text, ds):
-                        if cast is not None:
-                            oks.append(_cast_dict(cast))
-                            errs.append(None)
-                        else:
-                            oks.append(None)
-                            errs.append(
-                                {
-                                    "dataset": err[0],
-                                    "castNumber": err[1],
-                                    "error": err[2],
-                                }
-                            )
-                        if len(oks) >= _ARROW_BATCH_ROWS:
-                            yield flush(oks, errs)
-                            oks, errs = [], []
-                    if oks:
-                        yield flush(oks, errs)
+            for path, content in _file_rows(batches):
+                yield from decode_file(path, content, dataset)
 
         return files.mapInArrow(decode, PARSED)
 
-    framed_schema = pa.schema(
-        [("ds", pa.string()), ("rec", pa.string()), ("ferr", pa.string())]
-    )
+    def framed_rows(text: str) -> Iterator[tuple[str | None, str | None]]:
+        # iter_casts' stream contract: records before a framing failure
+        # survive, then one row carries the failure.
+        try:
+            for rec in split_records(text):
+                yield rec, None
+        except WodFormatError as e:
+            yield None, str(e)
 
     def frame(batches):
-        def flush(dss, recs, ferrs):
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(dss, type=pa.string()),
-                    pa.array(recs, type=pa.string()),
-                    pa.array(ferrs, type=pa.string()),
-                ],
-                schema=framed_schema,
-            )
-
-        for batch in batches:
-            paths_col = batch.column(0)
-            content_col = batch.column(1)
-            for i in range(batch.num_rows):
-                path = paths_col[i].as_py()
-                content = content_col[i].as_py()
-                ds = dataset or _dataset_of(path)
-                text = _decompress(path, content)
-                dss: list = []
-                recs: list = []
-                ferrs: list = []
-                try:
-                    for rec in split_records(text):
-                        dss.append(ds)
-                        recs.append(rec)
-                        ferrs.append(None)
-                        if len(recs) >= _ARROW_BATCH_ROWS:
-                            yield flush(dss, recs, ferrs)
-                            dss, recs, ferrs = [], [], []
-                except WodFormatError as e:
-                    # Same stream-level contract as iter_casts: records
-                    # before the framing failure survive; one error row
-                    # marks the failure and the rest of the file is lost.
-                    dss.append(ds)
-                    recs.append(None)
-                    ferrs.append(f"unrecoverable stream error: {e}")
-                if recs:
-                    yield flush(dss, recs, ferrs)
+        for path, content in _file_rows(batches):
+            ds = dataset or _dataset_of(path)
+            for chunk in _chunks(framed_rows(_decompress(path, content))):
+                recs, ferrs = zip(*chunk)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array([ds] * len(chunk), type=pa.string()),
+                        pa.array(recs, type=pa.string()),
+                        pa.array(ferrs, type=pa.string()),
+                    ],
+                    names=["ds", "rec", "ferr"],
+                )
 
     def decode_records(batches):
-        def flush(oks, errs):
-            return pa.RecordBatch.from_arrays(
-                [pa.array(oks, type=ok_type), pa.array(errs, type=err_type)],
-                schema=arrow_schema,
-            )
+        def pairs():
+            for batch in batches:
+                dss, recs, ferrs = (col.to_pylist() for col in batch.columns)
+                for ds, rec, ferr in zip(dss, recs, ferrs):
+                    if rec is None:
+                        yield stream_error(ds, ferr)
+                    else:
+                        yield decode_record(rec, ds)
 
-        oks: list = []
-        errs: list = []
-        for batch in batches:
-            ds_col = batch.column(0)
-            rec_col = batch.column(1)
-            ferr_col = batch.column(2)
-            for i in range(batch.num_rows):
-                ds = ds_col[i].as_py()
-                rec = rec_col[i].as_py()
-                if rec is None:
-                    oks.append(None)
-                    errs.append(
-                        {
-                            "dataset": ds,
-                            "castNumber": -1,
-                            "error": ferr_col[i].as_py(),
-                        }
-                    )
-                else:
-                    try:
-                        oks.append(_cast_dict(parse_cast(rec, ds)))
-                        errs.append(None)
-                    except WodFormatError as e:
-                        cast_number = -1
-                        try:
-                            cur = _Cursor(rec)
-                            cur.take(1)
-                            cur.wod_int()
-                            cast_number = cur.wod_int() or -1
-                        except WodFormatError:
-                            pass
-                        oks.append(None)
-                        errs.append(
-                            {
-                                "dataset": ds,
-                                "castNumber": cast_number,
-                                "error": str(e),
-                            }
-                        )
-                if len(oks) >= _ARROW_BATCH_ROWS:
-                    yield flush(oks, errs)
-                    oks, errs = [], []
-        if oks:
-            yield flush(oks, errs)
+        return encode_batches(pairs())
 
     framed = files.mapInArrow(frame, "ds string, rec string, ferr string")
     return framed.repartition(
         spark.sparkContext.defaultParallelism
     ).mapInArrow(decode_records, PARSED)
-
-
-def wod_scan_rdd(
-    spark: SparkSession, paths: list[str] | str, dataset: str | None = None
-) -> DataFrame:
-    """RDD-flatMap formulation of the same source (kept for comparison and
-    as a fallback where Arrow is unavailable)."""
-    files = spark.read.format("binaryFile").load(paths)
-    rdd = files.select("path", "content").rdd.flatMap(
-        lambda row: parse_file_content(row.path, bytes(row.content), dataset)
-    )
-    # verifySchema=False: the parser emits schema-exact tuples; per-row
-    # verification of deeply nested rows costs more than the parse itself.
-    return spark.createDataFrame(rdd, PARSED, verifySchema=False)
 
 
 def ok_casts(parsed: DataFrame) -> DataFrame:

@@ -3,18 +3,18 @@
     spark.dataSource.register(WodAsciiDataSource)
     spark.read.format("wod_ascii").load("/path/to/WOD/files")
 
-The same decoder as ``wod_ascii.wod_scan`` (``wod_format.iter_casts``),
-exposed through the DataSource V2 Python API instead of the
-binaryFile + mapInPandas plumbing: one InputPartition per file (gzip is
-unsplittable, so the file IS the natural split), rows stream out of the
-Python worker as the tagged-union ``schemas.PARSED`` tuples.
+The same decode kernel as ``wod_ascii.wod_scan`` (``wod_ascii.decode_file``),
+exposed through the DataSource V2 Python API: one InputPartition per file
+(gzip is unsplittable, so the file IS the natural split), and each
+partition's reader yields the ``schemas.PARSED`` Arrow RecordBatches the
+kernel builds, which Spark takes as they are.
 
 When to use which: ``wod_scan(scatter=True)`` remains the conversion
 pipeline's path — its record-scatter exchange decouples decode width from
 file count, which the one-partition-per-file DataSource cannot do. The
 DataSource is the ergonomic surface (``spark.read.format``) for ad-hoc
 exploration and for integration with catalogs/readers that speak formats,
-and the parity test pins both paths to identical casts.
+and the parity test pins all three paths to identical rows.
 
 Reference: the reader side of ``CastFileReader`` + ``DatasetYearTrain
 .java:141-209``, re-expressed as a planner-visible source.
@@ -56,16 +56,15 @@ def _discover(root: str) -> list[str]:
     return sorted(found)
 
 
-def _read_wod_file(path: str) -> Iterator[tuple]:
-    """Decode one WOD file's casts — the single kernel BOTH planner
-    surfaces (batch reader, stream reader) call, so the decode path can
-    never diverge between them (the parity test pins them equal). Runs in
-    the Python worker."""
-    from .wod_ascii import parse_file_content
+def _read_wod_file(path: str) -> Iterator:
+    """Decode one WOD file into ``PARSED`` RecordBatches — the call BOTH
+    planner surfaces (batch reader, stream reader) make. Runs in the Python
+    worker."""
+    from .wod_ascii import decode_file
 
     with open(path, "rb") as fh:
         content = fh.read()
-    yield from parse_file_content(path, content)
+    yield from decode_file(path, content)
 
 
 class WodAsciiReader(DataSourceReader):
@@ -81,7 +80,7 @@ class WodAsciiReader(DataSourceReader):
             raise FileNotFoundError(f"wod_ascii: no WOD files under {self.root}")
         return [WodFilePartition(p) for p in paths]
 
-    def read(self, partition: WodFilePartition) -> Iterator[tuple]:
+    def read(self, partition: WodFilePartition) -> Iterator:
         yield from _read_wod_file(partition.path)
 
 
@@ -143,7 +142,7 @@ class WodAsciiStreamReader(DataSourceStreamReader):
         # partition yields no rows.
         return [WodFilePartition(p) for p in new] or [WodFilePartition("")]
 
-    def read(self, partition: WodFilePartition) -> Iterator[tuple]:
+    def read(self, partition: WodFilePartition) -> Iterator:
         if not partition.path:
             return
         yield from _read_wod_file(partition.path)

@@ -398,22 +398,41 @@ def split_records(text: str) -> Iterator[str]:
         i += n_lines
 
 
-def iter_casts(
-    text: str, dataset: str
-) -> Iterator[tuple[RawCast | None, tuple[str, int, str] | None]]:
-    """Yield ``(cast, None)`` or ``(None, (dataset, castNumber, error))`` per
-    record — the tagged union the distributed parse emits."""
+def _cast_number_of(record: str) -> int:
+    """Best-effort cast number of a record that failed to parse: read from
+    the header (version byte, byte count, cast number); -1 when the header
+    itself is unreadable."""
+    try:
+        cur = _Cursor(record)
+        cur.take(1)
+        cur.wod_int()
+        return cur.wod_int() or -1
+    except WodFormatError:
+        return -1
+
+
+Decoded = tuple[RawCast | None, tuple[str, int, str] | None]
+
+
+def decode_record(record: str, dataset: str) -> Decoded:
+    """``(cast, None)`` or ``(None, (dataset, castNumber, error))`` for one
+    framed record — the tagged union every decode path emits."""
+    try:
+        return parse_cast(record, dataset), None
+    except WodFormatError as e:
+        return None, (dataset, _cast_number_of(record), str(e))
+
+
+def stream_error(dataset: str, error: object) -> Decoded:
+    """The one error row for a file whose record framing failed: records
+    before the failure survive; the rest of the file is lost."""
+    return None, (dataset, -1, f"unrecoverable stream error: {error}")
+
+
+def iter_casts(text: str, dataset: str) -> Iterator[Decoded]:
+    """Frame a whole decompressed file and decode each record."""
     try:
         for record in split_records(text):
-            cast_number = -1
-            try:
-                cur = _Cursor(record)
-                cur.take(1)
-                cur.wod_int()
-                cast_number = cur.wod_int() or -1
-                yield parse_cast(record, dataset), None
-            except WodFormatError as e:
-                yield None, (dataset, cast_number, str(e))
+            yield decode_record(record, dataset)
     except WodFormatError as e:
-        # Stream-level failure (bad record framing): one error row.
-        yield None, (dataset, -1, f"unrecoverable stream error: {e}")
+        yield stream_error(dataset, e)
