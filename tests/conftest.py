@@ -13,10 +13,7 @@ SF_DIR_01 = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark(
-        app_name="tests",
-        master="local[8]",
-        shuffle_partitions=8,
-        extra_confs={"spark.driver.memory": "8g"},
-    )
+    # local[N] and N shuffle partitions, N from SPARK_GRAFT_CPUS (the host's
+    # core count when unset), as get_spark sizes every session it builds.
+    spark = get_spark(app_name="tests", extra_confs={"spark.driver.memory": "8g"})
     yield spark

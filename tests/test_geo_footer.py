@@ -250,3 +250,33 @@ def test_rewrite_with_geo_heals_torn_delete_rename_window():
     # original not-found, not a rename error.
     with pytest.raises(FileNotFoundError):
         _rewrite_with_geo(store, "s3a://bucket/data/absent.parquet", geo)
+
+
+@pytest.mark.parametrize("files", [8, 130])
+def test_local_attach_sizes_tasks_to_their_fixed_cost(spark, tmp_path, files):
+    """A local attach runs one task per 64 files, up to the session's
+    parallelism: a Python task's fixed cost matches stamping about 64
+    files, so an 8-file layout is one task, not eight. Every file is
+    stamped either way."""
+    paths = []
+    for i in range(files):
+        cell = tmp_path / f"geohash3={i % 10}"
+        cell.mkdir(exist_ok=True)
+        paths.append(str(cell / f"part-{i:05d}.parquet"))
+        _mk_parquet(paths[-1])
+    sc = spark.sparkContext
+    group = f"geo-footer-tasks-{files}-{tmp_path.name}"
+    sc.setJobGroup(group, "footer attach task count")
+    try:
+        assert attach_geo_footer(None, str(tmp_path), spark=spark) == files
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stages = [
+        s for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    tasks = sum(tracker.getStageInfo(s).numTasks for s in stages)
+    assert tasks == (1 if files == 8 else min(sc.defaultParallelism, 3))
+    for p in paths:
+        assert b"geo" in pq.read_metadata(p).metadata

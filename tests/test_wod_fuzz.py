@@ -11,9 +11,12 @@ no property tests at all (SURVEY §5).
 from __future__ import annotations
 
 import math
+from unittest import mock
 
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
+from wod_ascii_to_parquet_spark_spark.sources import wod_ascii
 from wod_ascii_to_parquet_spark_spark.sources.wod_format import (
     iter_casts,
     parse_cast,
@@ -125,3 +128,93 @@ def test_roundtrip_multi_cast_stream(casts):
     assert [cast.castNumber for cast, _ in results] == [
         c["castNumber"] for c in casts
     ]
+
+
+def _expected_row(c: dict) -> dict:
+    """The ``ok`` struct the decoder must produce for generated cast ``c``."""
+
+    def level(depth, data):
+        present = depth is not None
+        return {
+            "depth": dec_of(depth, 1),
+            "depthErrorFlag": 0 if present else None,
+            "originatorsFlag": 0 if present else None,
+            "data": [
+                {"variableCode": v[0], "value": dec_of(val, 3),
+                 "qcFlag": 0, "originatorsFlag": 0}
+                for v, val in zip(c["variables"], data)
+                if val is not None
+            ],
+        }
+
+    return {
+        "dataset": "FUZZ",
+        "castNumber": c["castNumber"],
+        "cruiseNumber": c["cruise"],
+        "country": c["country"],
+        "originatorsCruise": None,
+        "originatorsStationCode": None,
+        "year": c["year"],
+        "month": c["month"],
+        "day": c["day"],
+        "time": dec_of(c["time"], 2),
+        "latitude": dec_of(c["lat"], 4),
+        "longitude": dec_of(c["lon"], 4),
+        "profileType": c["profileType"],
+        "attributes": [
+            {"code": a, "value": dec_of(v, 3)} for a, v in c["attributes"]
+        ],
+        "biologicalAttributes": [],
+        "taxonomicDatasets": [],
+        "principalInvestigators": [],
+        "variables": [
+            {"code": code, "qcFlag": qc,
+             "metadata": [{"code": m, "value": dec_of(v, 2)} for m, v in meta]}
+            for code, qc, meta in c["variables"]
+        ],
+        "depths": [level(d, data) for d, data in c["depths"]],
+    }
+
+
+@st.composite
+def stream_cast(draw):
+    """A cast and how it is written: well-formed, malformed in the header,
+    or malformed in the profile after at least one good level."""
+    c = draw(cast_strategy())
+    how = draw(st.sampled_from([False, False, "header", "profile"]))
+    if how == "profile":
+        if not c["variables"]:
+            c["variables"] = [(1, 0, [])]
+            c["depths"] = [(d, [None]) for d, _ in c["depths"]]
+        while len(c["depths"]) < 2:
+            c["depths"].append((10.0, [None] * len(c["variables"])))
+        depth, data = c["depths"][-1]
+        c["depths"][-1] = (depth, [draw(small_float), *data[1:]])
+    return c, how
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(stream_cast(), min_size=1, max_size=7))
+def test_decode_file_rolls_back_failed_casts(stream):
+    """A cast that fails part-way through its profile leaves nothing in the
+    column buffers: with two-row batches, every ok row still equals its
+    generated cast field for field and every error row carries its own
+    castNumber."""
+    text = "\n".join(encode_cast(c, how) for c, how in stream)
+    with mock.patch.object(wod_ascii, "_ARROW_BATCH_ROWS", 2):
+        batches = list(wod_ascii.decode_file("FUZZ/OBS/f", text.encode()))
+    assert all(b.num_rows <= 2 for b in batches)
+    rows = pa.Table.from_batches(batches).to_pylist()
+    assert len(rows) == len(stream)
+    for row, (c, how) in zip(rows, stream):
+        if how:
+            assert row["ok"] is None
+            assert row["err"]["dataset"] == "FUZZ"
+            assert row["err"]["castNumber"] == c["castNumber"]
+            assert row["err"]["error"].startswith(
+                "bad WOD-float sig byte" if how == "profile"
+                else "bad WOD-int length byte"
+            )
+        else:
+            assert row["err"] is None
+            assert row["ok"] == _expected_row(c)

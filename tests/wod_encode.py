@@ -46,16 +46,24 @@ def dec_of(v: float | None, prec: int) -> float | None:
     return int(round(v * 10**prec)) / 10**prec
 
 
-def encode_cast(c: dict, malformed: bool = False) -> str:
+def encode_cast(c: dict, malformed: bool | str = False) -> str:
     """One cast record framed into 80-character lines.
 
-    ``malformed`` writes ``X`` where the cruise number's length byte
-    belongs: framing and the cast number stay readable, so the decoder
-    routes the cast to the error channel under its own ``castNumber``."""
+    ``malformed`` (``True`` or ``"header"``) writes ``X`` where the cruise
+    number's length byte belongs; ``"profile"`` writes ``X`` over the
+    significant-figures byte of the last level's first data value, so the
+    decoder fails after it has read every earlier level (the cast needs at
+    least two levels and a value there). Either way framing and the cast
+    number stay readable, so the decoder routes the cast to the error
+    channel under its own ``castNumber``."""
+    bad_level = len(c["depths"]) - 1 if malformed == "profile" else None
+    if bad_level is not None:
+        assert bad_level >= 1 and any(v is not None for v in c["depths"][-1][1])
+    bad_header = malformed in (True, "header")
     body = []
     body.append(enc_int(c["castNumber"]))
     body.append(c["country"])
-    body.append("X" if malformed else enc_int(c["cruise"]))
+    body.append("X" if bad_header else enc_int(c["cruise"]))
     body.append(f"{c['year']:4d}")
     body.append(f"{c['month']:2d}" if c["month"] is not None else "  ")
     body.append(f"{c['day']:2d}" if c["day"] is not None else "  ")
@@ -85,12 +93,15 @@ def encode_cast(c: dict, malformed: bool = False) -> str:
     else:
         body.append("-")
     body.append("-")  # no biology block
-    for depth, data in c["depths"]:
+    for level, (depth, data) in enumerate(c["depths"]):
         body.append(enc_float(depth, 1))
         if depth is not None:
             body.append("00")  # depth err + originator flags
         for (vcode, _qc, _meta), val in zip(c["variables"], data):
-            body.append(enc_float(val, 3))
+            value = enc_float(val, 3)
+            if level == bad_level and val is not None:
+                value, bad_level = "X" + value[1:], None
+            body.append(value)
             if val is not None:
                 body.append("00")
     payload = "".join(body)

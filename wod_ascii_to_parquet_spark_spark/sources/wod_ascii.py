@@ -5,14 +5,17 @@ ships batches to Spark through a BlockingQueue
 (``DatasetYearTrain.java:141-209``) — the single biggest non-idiomatic
 bottleneck in its design. Here one decode kernel runs on the executors:
 
-- per record, ``wod_format.decode_record`` yields a tagged union (ok-cast |
-  error-row), and ``wod_format.stream_error`` the one row for a file whose
-  framing fails — the split replaces the reference's
-  1-parquet-write-per-bad-record error handler
-  (``TransformationErrorHandler.java:34-39``) with a single channel filter;
-- :func:`encode_batches` turns those pairs into ``schemas.PARSED`` Arrow
-  RecordBatches, and :func:`decode_file` is that encoder over one whole
-  file.
+- per record, ``wod_format.CastColumns.add_record`` walks the record once
+  and appends its fields straight onto flat column buffers, or, when the
+  record fails to parse, truncates what it appended and adds an error row;
+  a file whose framing fails gets the one ``wod_format.stream_error`` row.
+  The split replaces the reference's 1-parquet-write-per-bad-record error
+  handler (``TransformationErrorHandler.java:34-39``) with a single channel
+  filter;
+- :func:`encode_batches` turns each full set of buffers into one
+  ``schemas.PARSED`` Arrow RecordBatch with ``ListArray.from_arrays`` and
+  ``StructArray.from_arrays`` (no per-cast dict or tuple), and
+  :func:`decode_file` is that encoder over one whole file.
 
 Three surfaces share the kernel: ``wod_scan(scatter=False)`` runs
 :func:`decode_file` per ``binaryFile`` row; ``wod_scan(scatter=True)`` (the
@@ -41,15 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import PARSED
-from .wod_format import (
-    Decoded,
-    RawCast,
-    WodFormatError,
-    decode_record,
-    iter_casts,
-    split_records,
-    stream_error,
-)
+from .wod_format import CastColumns, frame_records, stream_error
 
 
 def _dataset_of(path: str) -> str:
@@ -58,66 +53,13 @@ def _dataset_of(path: str) -> str:
     return parts[-3] if len(parts) >= 3 else "UNKNOWN"
 
 
-def _cast_dict(c: RawCast) -> dict:
-    return {
-        "dataset": c.dataset,
-        "castNumber": c.castNumber,
-        "cruiseNumber": c.cruiseNumber,
-        "country": c.country,
-        "originatorsCruise": c.originatorsCruise,
-        "originatorsStationCode": c.originatorsStationCode,
-        "year": c.year,
-        "month": c.month,
-        "day": c.day,
-        "time": c.time,
-        "latitude": c.latitude,
-        "longitude": c.longitude,
-        "profileType": c.profileType,
-        "attributes": [{"code": a, "value": v} for a, v in c.attributes],
-        "biologicalAttributes": [
-            {"code": a, "value": v} for a, v in c.biologicalAttributes
-        ],
-        "taxonomicDatasets": [
-            [{"code": a, "value": v} for a, v in ts] for ts in c.taxonomicDatasets
-        ],
-        "principalInvestigators": [
-            {"variable": a, "pi": p} for a, p in c.principalInvestigators
-        ],
-        "variables": [
-            {
-                "code": vc,
-                "qcFlag": qc,
-                "metadata": [{"code": mc, "value": mv} for mc, mv in meta],
-            }
-            for vc, qc, meta in c.variables
-        ],
-        "depths": [
-            {
-                "depth": d,
-                "depthErrorFlag": de,
-                "originatorsFlag": do,
-                "data": [
-                    {
-                        "variableCode": dv,
-                        "value": val,
-                        "qcFlag": q,
-                        "originatorsFlag": o,
-                    }
-                    for dv, val, q, o in data
-                ],
-            }
-            for d, de, do, data in c.depths
-        ],
-    }
-
-
 #: casts per emitted Arrow batch — bounds executor memory for huge files.
 _ARROW_BATCH_ROWS = 4096
 
 
-def _chunks(items: Iterable, n: int = _ARROW_BATCH_ROWS) -> Iterator[list]:
+def _chunks(items: Iterable) -> Iterator[list]:
     it = iter(items)
-    while chunk := list(itertools.islice(it, n)):
+    while chunk := list(itertools.islice(it, _ARROW_BATCH_ROWS)):
         yield chunk
 
 
@@ -128,31 +70,63 @@ def _parsed_arrow_schema():
     return to_arrow_schema(PARSED)
 
 
-def encode_batches(pairs: Iterable[Decoded]) -> Iterator:
-    """``(cast, err)`` pairs → ``PARSED`` RecordBatches of at most
-    ``_ARROW_BATCH_ROWS`` rows. Building the nested arrays in pyarrow skips
-    the pickle → JVM row-verification path entirely."""
+def _arrow(typ, node, mask=None):
+    """One :meth:`CastColumns.ok_columns`-shaped node → an Arrow array of
+    ``typ``: a struct from its fields' arrays, a list from its offsets and
+    child array, a leaf from its value list."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(typ):
+        return pa.StructArray.from_arrays(
+            [_arrow(f.type, n) for f, n in zip(typ, node)],
+            fields=list(typ),
+            mask=mask,
+        )
+    if pa.types.is_list(typ):
+        offsets, child = node
+        return pa.ListArray.from_arrays(
+            pa.array(offsets, pa.int32()), _arrow(typ.value_type, child), type=typ
+        )
+    return pa.array(node, type=typ)
+
+
+def _batch(cols: CastColumns):
     import pyarrow as pa
 
     schema = _parsed_arrow_schema()
-    ok_type = schema.field("ok").type
-    err_type = schema.field("err").type
-    # Each cast becomes a dict as it streams by: holding a whole chunk of
-    # parsed casts first doubled the garbage collector's passes.
-    rows = (
-        (
-            None if c is None else _cast_dict(c),
-            None if e is None
-            else {"dataset": e[0], "castNumber": e[1], "error": e[2]},
-        )
-        for c, e in pairs
+    failed = [i in cols.errors for i in range(cols.rows)]
+    return pa.RecordBatch.from_arrays(
+        [
+            _arrow(schema.field("ok").type, cols.ok_columns(), pa.array(failed)),
+            _arrow(
+                schema.field("err").type,
+                cols.err_columns(),
+                pa.array([not f for f in failed]),
+            ),
+        ],
+        schema=schema,
     )
-    for chunk in _chunks(rows):
-        oks, errs = zip(*chunk)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(oks, type=ok_type), pa.array(errs, type=err_type)],
-            schema=schema,
-        )
+
+
+def encode_batches(
+    records: Iterable[tuple[str, str | None, str | None]],
+) -> Iterator:
+    """``(dataset, record, framing error)`` rows → ``PARSED`` RecordBatches
+    of at most ``_ARROW_BATCH_ROWS`` rows: each record is decoded straight
+    onto :class:`CastColumns` buffers, a ``None`` record becomes the stream
+    error row, and each full batch is encoded once. Building the nested
+    arrays in pyarrow skips the pickle → JVM row-verification path."""
+    cols = CastColumns()
+    for ds, rec, ferr in records:
+        if rec is None:
+            cols.add_error(*stream_error(ds, ferr))
+        else:
+            cols.add_record(rec, ds)
+        if cols.rows >= _ARROW_BATCH_ROWS:
+            yield _batch(cols)
+            cols = CastColumns()
+    if cols.rows:
+        yield _batch(cols)
 
 
 def _decompress(path: str, content: bytes) -> str:
@@ -167,7 +141,9 @@ def decode_file(path: str, content: bytes, dataset: str | None = None) -> Iterat
     """Gunzip (if ``.gz``) and decode one file's casts into ``PARSED``
     RecordBatches; ``dataset`` defaults to the one in the file's path."""
     ds = dataset or _dataset_of(path)
-    return encode_batches(iter_casts(_decompress(path, content), ds))
+    return encode_batches(
+        (ds, rec, ferr) for rec, ferr in frame_records(_decompress(path, content))
+    )
 
 
 def _file_rows(batches) -> Iterator[tuple[str, bytes]]:
@@ -214,19 +190,10 @@ def wod_scan(
 
         return files.mapInArrow(decode, PARSED)
 
-    def framed_rows(text: str) -> Iterator[tuple[str | None, str | None]]:
-        # iter_casts' stream contract: records before a framing failure
-        # survive, then one row carries the failure.
-        try:
-            for rec in split_records(text):
-                yield rec, None
-        except WodFormatError as e:
-            yield None, str(e)
-
     def frame(batches):
         for path, content in _file_rows(batches):
             ds = dataset or _dataset_of(path)
-            for chunk in _chunks(framed_rows(_decompress(path, content))):
+            for chunk in _chunks(frame_records(_decompress(path, content))):
                 recs, ferrs = zip(*chunk)
                 yield pa.RecordBatch.from_arrays(
                     [
@@ -238,16 +205,11 @@ def wod_scan(
                 )
 
     def decode_records(batches):
-        def pairs():
-            for batch in batches:
-                dss, recs, ferrs = (col.to_pylist() for col in batch.columns)
-                for ds, rec, ferr in zip(dss, recs, ferrs):
-                    if rec is None:
-                        yield stream_error(ds, ferr)
-                    else:
-                        yield decode_record(rec, ds)
-
-        return encode_batches(pairs())
+        return encode_batches(
+            row
+            for batch in batches
+            for row in zip(*(col.to_pylist() for col in batch.columns))
+        )
 
     framed = files.mapInArrow(frame, "ds string, rec string, ferr string")
     return framed.repartition(
