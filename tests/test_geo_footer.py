@@ -255,8 +255,8 @@ def test_rewrite_with_geo_heals_torn_delete_rename_window():
 @pytest.mark.parametrize("files", [8, 130])
 def test_local_attach_sizes_tasks_to_their_fixed_cost(spark, tmp_path, files):
     """A local attach runs one task per 64 files, up to the session's
-    parallelism: a Python task's fixed cost matches stamping about 64
-    files, so an 8-file layout is one task, not eight. Every file is
+    parallelism: fewer, fuller tasks spend less of a Python task's fixed
+    cost, so an 8-file layout is one task, not eight. Every file is
     stamped either way."""
     paths = []
     for i in range(files):

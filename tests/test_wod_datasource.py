@@ -10,7 +10,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
-from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import wod_scan
+from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import decode_file, wod_scan
 from wod_ascii_to_parquet_spark_spark.sources.wod_datasource import (
     WodAsciiReader,
     register_wod_datasource,
@@ -77,6 +77,28 @@ def test_datasource_error_channel_parity(spark, wod_dir, ds_df):
     ]
     assert all(e[2].startswith(bad) for e in errs if e[1] != -1)
     assert errs[2][2].startswith("unrecoverable stream error: ")
+
+
+def test_bad_year_digit_becomes_an_error_row(spark, tmp_path):
+    """A non-digit in the fixed-width year field fails only its own cast:
+    ``decode_file`` keeps the other casts, the error row carries the bad
+    cast's ``castNumber``, and all three scan surfaces agree."""
+    casts = make_casts(5, seed=11, first_cast=100)
+    path = write_wod_file(
+        str(tmp_path / "CTD" / "OBS" / "CTDO1980.gz"), wod_text(casts, {2}, kind="year")
+    )
+    with open(path, "rb") as fh:
+        rows = [r for b in decode_file(path, fh.read()) for r in b.to_pylist()]
+    assert [r["ok"]["castNumber"] for r in rows if r["ok"]] == [100, 101, 103, 104]
+    (err,) = [r["err"] for r in rows if r["err"]]
+    assert (err["dataset"], err["castNumber"]) == ("CTD", 102)
+    assert err["error"].startswith("bad fixed-width digits ")
+
+    register_wod_datasource(spark)
+    scatter = _rows(wod_scan(spark, [path], scatter=True))
+    single = _rows(wod_scan(spark, [path], scatter=False))
+    assert scatter == single == _rows(spark.read.format("wod_ascii").load(path))
+    assert len(scatter) == 5
 
 
 def test_datasource_reader_yields_record_batches(wod_dir):

@@ -55,7 +55,8 @@ def encode_cast(c: dict, malformed: bool | str = False) -> str:
     decoder fails after it has read every earlier level (the cast needs at
     least two levels and a value there). Either way framing and the cast
     number stay readable, so the decoder routes the cast to the error
-    channel under its own ``castNumber``."""
+    channel under its own ``castNumber``. ``"year"`` writes ``X`` over the
+    year field's third digit, a non-digit in a fixed-width header field."""
     bad_level = len(c["depths"]) - 1 if malformed == "profile" else None
     if bad_level is not None:
         assert bad_level >= 1 and any(v is not None for v in c["depths"][-1][1])
@@ -64,7 +65,8 @@ def encode_cast(c: dict, malformed: bool | str = False) -> str:
     body.append(enc_int(c["castNumber"]))
     body.append(c["country"])
     body.append("X" if bad_header else enc_int(c["cruise"]))
-    body.append(f"{c['year']:4d}")
+    year = f"{c['year']:4d}"
+    body.append(year[:2] + "X" + year[3:] if malformed == "year" else year)
     body.append(f"{c['month']:2d}" if c["month"] is not None else "  ")
     body.append(f"{c['day']:2d}" if c["day"] is not None else "  ")
     body.append(enc_float(c["time"], 2))
@@ -153,12 +155,15 @@ def make_casts(n: int, seed: int, first_cast: int = 1) -> list[dict]:
 
 
 def wod_text(
-    casts: list[dict], malformed: set[int] = frozenset(), garbage_before: int | None = None
+    casts: list[dict],
+    malformed: set[int] = frozenset(),
+    garbage_before: int | None = None,
+    kind: bool | str = True,
 ) -> str:
     """A whole decompressed file: the casts at the ``malformed`` indices are
-    written malformed, and :data:`GARBAGE_LINE` goes before the record at
-    index ``garbage_before``."""
-    records = [encode_cast(c, i in malformed) for i, c in enumerate(casts)]
+    written malformed the ``kind`` way (see :func:`encode_cast`), and
+    :data:`GARBAGE_LINE` goes before the record at index ``garbage_before``."""
+    records = [encode_cast(c, kind if i in malformed else False) for i, c in enumerate(casts)]
     if garbage_before is not None:
         records.insert(garbage_before, GARBAGE_LINE)
     return "\n".join(records) + "\n"

@@ -115,13 +115,15 @@ def geo_footer_dict(encoding: str = "point") -> dict:
 
 
 #: Files per local footer-attach task: the attach runs one task per this
-#: many files, rounded up, and at most ``defaultParallelism``. A Python
-#: task costs about 0.2 s of worker CPU before any user code runs
-#: (pyspark 4.1's ``worker.main`` calls ``importlib.invalidate_caches()``,
-#: and on Python 3.11 each cached zipimporter then re-reads the directory
-#: of ``pyspark.zip``), while stamping one file of the convert schema
-#: costs 2–3 ms: 64 files take about one task's fixed cost. Measured on a
-#: 4-vCPU x86 host.
+#: many files, rounded up, and at most ``defaultParallelism``. With local
+#: workers started from ``worker_daemon``, a no-op Python task costs about
+#: 27 ms of worker CPU, and stamping one file of the convert schema costs
+#: about 2.8 ms, so 64 files are about six tasks' fixed cost. 64 is kept
+#: because it spends less CPU: in a layer A/B on 16-130 convert output
+#: files at local[4], 10 files per task cut the attach's wall time by
+#: 0.01-0.07 s but added 0.04-0.11 s of worker CPU, and every layout of
+#: the benchmark's archive gets the same task count for any value from 8
+#: to 64. Measured on a 4-vCPU x86 host.
 _FOOTER_FILES_PER_TASK = 64
 
 
@@ -155,12 +157,12 @@ def attach_geo_footer(
     Scale shape: embarrassingly parallel per FILE. With a live session the
     listing becomes an RDD and each Python WORKER PROCESS stamps its slice
     directly on OS paths (no py4j, no driver GIL) — the 100 TB shape
-    verbatim; without one, a driver thread pool. Local tasks are sized to
-    their fixed cost: one task per ``_FOOTER_FILES_PER_TASK`` (64) files,
-    rounded up, at most ``defaultParallelism``, because a Python task costs
-    about as much worker CPU before it runs any user code as stamping 64
-    files does. A 4-file layout is one task, not four; a 1,652-file layout
-    still gets full width.
+    verbatim; without one, a driver thread pool. Local tasks are sized
+    against their fixed cost: one task per ``_FOOTER_FILES_PER_TASK`` (64)
+    files, rounded up, at most ``defaultParallelism``; a Python task costs
+    about as much worker CPU before it runs any user code as stamping ten
+    files does, and fewer, fuller tasks spend less CPU. A 4-file layout is
+    one task, not four; a 1,652-file layout still gets full width.
 
     Remote schemes (no append on object stores): each object is rebuilt
     IN MEMORY as ``old bytes + superseding footer`` (same O(footer) CPU as

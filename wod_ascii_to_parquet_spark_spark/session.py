@@ -10,6 +10,8 @@ scale-safe, not local-mode-specific:
   are cluster-location independent.
 - Shuffle partitions default to the local core count; on a real cluster this
   is overridden (AQE coalescing makes a high initial value cheap).
+- Local masters start their Python workers from :mod:`.worker_daemon`, which
+  spares each task a re-read of Spark's own zip archives.
 """
 
 from __future__ import annotations
@@ -55,6 +57,27 @@ BUILD_CONFS: dict[str, str] = {
 }
 
 
+#: The package's import root: the directory that holds the package.
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _with_worker_confs(master: str, extra_confs: dict[str, str] | None) -> dict[str, str]:
+    """``extra_confs`` plus, for a local master, the confs that start the
+    Python workers from :mod:`.worker_daemon`. That daemon imports the
+    package before any task runs, so the package's import root is appended
+    to ``spark.executorEnv.PYTHONPATH``, after any value the caller set.
+    Other masters get ``extra_confs`` unchanged."""
+    confs = dict(extra_confs or {})
+    if master == "local" or master.startswith("local["):
+        confs.setdefault(
+            "spark.python.daemon.module",
+            "wod_ascii_to_parquet_spark_spark.worker_daemon",
+        )
+        key = "spark.executorEnv.PYTHONPATH"
+        confs[key] = os.pathsep.join(p for p in (confs.get(key), _IMPORT_ROOT) if p)
+    return confs
+
+
 def get_spark(
     app_name: str = "wod_ascii_to_parquet_spark_spark",
     master: str | None = None,
@@ -70,7 +93,7 @@ def get_spark(
     builder = builder.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions or cpus)
     )
-    for k, v in (extra_confs or {}).items():
+    for k, v in _with_worker_confs(master, extra_confs).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

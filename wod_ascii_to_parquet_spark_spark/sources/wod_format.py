@@ -338,7 +338,10 @@ def _walk(record: str, dataset: str, cols: CastColumns) -> None:
         nonlocal pos
         s = buf[pos : pos + n].strip()
         pos += n
-        return int(s) if s else None
+        try:
+            return int(s) if s else None
+        except ValueError as e:
+            raise WodFormatError(f"bad fixed-width digits {s!r} at {pos - n}") from e
 
     def flag() -> int | None:
         nonlocal pos
