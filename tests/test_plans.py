@@ -158,14 +158,23 @@ def test_ivf_query_plan_reuses_quantizer_and_no_double_argmax(spark):
     assert "REPARTITION_BY_COL" not in plan, plan[:4000]
 
 
-def test_ivfadc_corpus_never_shuffles_on_cell(spark):
-    """similarity_ann_ivf_adc plan invariants: the corpus index build is
-    map-only against broadcast codebooks (no cell shuffle — probing is a
-    BROADCAST equi-join), every crossJoin is broadcast-bounded, and the
-    only hash exchange is the final per-query top-k window on qid."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "similarity_ann_ivf_adc",
+        "similarity_ann_ivf_adc_refined",
+        "similarity_ann_ivf_adc_residual",
+    ],
+)
+def test_ivfadc_corpus_never_shuffles_on_cell(spark, name):
+    """IVFADC chain plan invariants (plain, refined and residual chains):
+    the corpus index build is map-only against broadcast codebooks (no
+    cell shuffle — probing is a BROADCAST equi-join), every crossJoin is
+    broadcast-bounded, and the hash exchanges are the per-query top-k
+    windows on qid."""
     from wod_ascii_to_parquet_spark_spark.registry import load_all_operators
 
-    q = load_all_operators()["similarity_ann_ivf_adc"]
+    q = load_all_operators()[name]
     df = q.fn(spark, SF_DIR)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

@@ -2,7 +2,7 @@
 registered operator surface (VERDICT r11 #6): 251 queries are otherwise
 discoverable only by reading COVERAGE.md prose or the source. Each row:
 
-    name | module:line | oracled? | tags | first docstring sentence
+    name | module:function | oracled? | tags | first docstring sentence
 
 The file is PINNED by tests/test_registry_meta.py (regenerate-and-diff),
 so it cannot drift from the registry: registering a query without
@@ -52,14 +52,17 @@ def _first_sentence(doc: str, limit: int = 110) -> str:
 
 
 def _source_ref(fn) -> str:
+    """``path:function`` — anchored by name, not line, so moving code
+    inside a module does not churn this file."""
     target = inspect.unwrap(fn)
     try:
         path = inspect.getsourcefile(target)
-        _, line = inspect.getsourcelines(target)
-    except (TypeError, OSError):
+    except TypeError:
+        return "?"
+    if path is None:
         return "?"
     rel = os.path.relpath(path, REPO)
-    return f"{rel}:{line}"
+    return f"{rel}:{target.__name__}"
 
 
 def render() -> str:

@@ -4,7 +4,8 @@ DuckDB with the same row-count / schema / order-insensitive-value /
 strict-stringified comparison the suite applies at sf0.001
 (tests/oracle_harness.py). The per-round driver samples ~50 queries;
 this sweeps all of them at the driver's scale in one sitting (~8 min on
-local[16], r14: 258/258 green).
+local[16], r14: 258/258 green). The session is ``get_spark``'s default,
+``local[SPARK_GRAFT_CPUS]`` (all cores when unset).
 
 Usage: python tools/parity_sf001.py [sf_dir]
 """
@@ -26,9 +27,7 @@ def main() -> int:
     from wod_ascii_to_parquet_spark_spark.session import get_spark
 
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(
-        app_name="parity-sf001", master="local[16]", shuffle_partitions=16
-    )
+    spark = get_spark(app_name="parity-sf001")
     con = duck_connection(sf)
     qs = load_all_operators()
     bad = 0

@@ -1471,6 +1471,64 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: Row chunk of the Gram kernel: per-task transient is O(chunk·n), never
+#: O(n²) — a budget-sized block of ~6k rows needs ~100 MB, not a 16M-pair
+#: dense triangle.
+_GRAM_CHUNK = 2048
+
+
+def _gram_hits(E, tau: float = 0.4):
+    """The chunked cosine Gram kernel over the rows of ``E`` (float64,
+    ordered by vec_id): yields ``(st, hit, S)`` per chunk of rows
+    ``st..st+chunk`` — ``S`` their cosine against every row, ``hit`` the
+    upper-triangle mask ``col > row and S >= tau``. One BLAS matmul per
+    chunk; zero-norm rows yield NaN cosines, which never hit."""
+    import numpy as np
+
+    n = len(E)
+    nrm = np.sqrt((E * E).sum(axis=1))
+    cols = np.arange(n)
+    for st in range(0, n, _GRAM_CHUNK):
+        en = min(st + _GRAM_CHUNK, n)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            S = (E[st:en] @ E.T) / np.outer(nrm[st:en], nrm)
+            hit = (cols[None, :] > np.arange(st, en)[:, None]) & (S >= tau)
+        yield st, hit, S
+
+
+def _gram_pairs(pdf):
+    """Grouped-map pandas kernel: every within-group pair ``(vec_a <
+    vec_b)`` of the non-null ``emb`` rows with cosine ≥ 0.4, unrounded
+    (callers round Spark-side, HALF_UP like DuckDB). Shared by the
+    label-blocked ``dedup_embedding_cosine_blas`` and the cell-blocked
+    ``similarity.dedup_embedding_ann``."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf[pdf["emb"].notna()]
+    if len(pdf) < 2:
+        return pd.DataFrame(
+            {"vec_a": pd.Series(dtype="int64"),
+             "vec_b": pd.Series(dtype="int64"),
+             "cos_sim": pd.Series(dtype="float64")}
+        )
+    ids = pdf["vec_id"].to_numpy()
+    order = np.argsort(ids)
+    ids = ids[order]
+    E = np.array(pdf["emb"].to_numpy()[order].tolist(), dtype=np.float64)
+    out_a, out_b, out_s = [], [], []
+    for st, hit, S in _gram_hits(E):
+        ii, jj = np.nonzero(hit)
+        out_a.append(ids[ii + st])
+        out_b.append(ids[jj])
+        out_s.append(S[ii, jj])
+    return pd.DataFrame(
+        {"vec_a": np.concatenate(out_a),
+         "vec_b": np.concatenate(out_b),
+         "cos_sim": np.concatenate(out_s)}
+    )
+
+
 @register(
     "dedup_embedding_cosine_blas",
     f"""
@@ -1495,55 +1553,21 @@ def dedup_embedding_cosine_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     what decides whether an under-budget block finishes in seconds or
     minutes.
 
-    Memory: chunked (2048 rows of the Gram at a time), so per-task
-    transient is O(chunk·n), never O(n²) — a budget-sized block of ~6k
-    rows needs ~100 MB transient, not a 16M-pair dense triangle."""
-    import pandas as pd
-
-    raw = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    Memory: chunked (:data:`_GRAM_CHUNK` rows of the Gram at a time, see
+    :func:`_gram_hits`)."""
+    raw = load(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").alias("emb")
+    )
     _check_pair_budget(
         raw, "label", "dedup_embedding_cosine_blas",
         budget_default=_EMB_PAIR_BUDGET_BLAS,
     )
 
-    def gram(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        import numpy as np
-
-        pdf = pdf[pdf["embedding"].notna()]
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cos_sim": pd.Series(dtype="float64")}
-            )
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        E = np.array(pdf["embedding"].to_numpy()[order].tolist(), dtype=np.float64)
-        nrm = np.sqrt((E * E).sum(axis=1))
-        cols = np.arange(n)
-        out_a, out_b, out_s = [], [], []
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for st in range(0, n, 2048):
-                en = min(st + 2048, n)
-                S = (E[st:en] @ E.T) / np.outer(nrm[st:en], nrm)
-                hit = (cols[None, :] > np.arange(st, en)[:, None]) & (S >= 0.4)
-                ii, jj = np.nonzero(hit)
-                out_a.append(ids[ii + st])
-                out_b.append(ids[jj])
-                out_s.append(S[ii, jj])
-        return pd.DataFrame(
-            {"vec_a": np.concatenate(out_a),
-             "vec_b": np.concatenate(out_b),
-             "cos_sim": np.concatenate(out_s)}
-        )
-
     # round Spark-side: F.round is HALF_UP like the DuckDB oracle, while
     # np.round is banker's (half-to-even) — a dyadic-rational cosine whose
     # 7th decimal is exactly 5 would round differently under numpy.
     return raw.groupBy("label").applyInPandas(
-        gram, "vec_a bigint, vec_b bigint, cos_sim double"
+        _gram_pairs, "vec_a bigint, vec_b bigint, cos_sim double"
     ).withColumn("cos_sim", F.round("cos_sim", 6))
 
 

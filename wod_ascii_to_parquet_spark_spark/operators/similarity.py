@@ -21,6 +21,21 @@ Four tiers, mirroring how ANN is actually deployed over a 100 TB corpus:
   shape): cells bound which candidates are scored, codes bound the bytes
   per candidate — the only tier whose memory math works at 100 TB.
 
+Every IVF/PQ/ADC query — one-shot here, persisted-index in
+``plans/ann_index.py``, streaming in ``streaming/batch_equiv.py`` — is
+composed from ONE set of stages (Jégou et al.'s IVFADC: quantize → assign
+→ encode → probe → rank → refine), each spelled once per engine:
+
+- corpus: ``_emb_base`` / ``_E_CTE``
+- quantize: ``_medoid_seeds``, ``_sqrt_n_seeds``, ``_seed_array`` /
+  ``_seeds_cte``
+- assign + probe: ``_ivf_assign``, ``_ivf_probes`` / ``_ivf_cells_cte``
+- encode: ``_pq_codebook``, ``_pq_encode`` / ``_pq_codes_ctes``
+- per-query distance tables: ``_pq_qtabs`` / ``_pq_dists_sql``
+- ADC rank: ``_adc_topk`` / ``_adc_shortlist_sql``
+- exact-cosine top-k and refine: ``_cosine_topk``, ``_refine_topk`` /
+  ``_cosine_topk_sql``
+
 All vector math is Catalyst ``zip_with``/``aggregate`` over array<double> —
 JVM-side, codegen'd, no Python in the row path.
 """
@@ -28,13 +43,27 @@ JVM-side, codegen'd, no Python in the row path.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..registry import load, register
+from .dedup import _gram_hits, _gram_pairs
 
 _DIM = 64
 _NBITS = 8
 _PROBE_RADIUS = 2
+
+#: The member-query tiers' toy IVF quantizer: medoid cells = vectors
+#: ``0.._IVF_CELLS-1``, probed ``_IVF_NPROBE`` deep by the corpus-member
+#: queries ``vec_id < _N_QUERIES``.
+_IVF_CELLS = 16
+_IVF_NPROBE = 4
+_N_QUERIES = 10
+
+#: Product quantization: m=8 subspaces × 8 dims, k=16 centroids each.
+_PQ_M = 8
+_PQ_SUBDIM = 8
+_PQ_K = 16
 
 #: Row budgets for the interpreted-HOF REFERENCE arms (VERDICT r10 #2).
 #: Measured constants from the r9/r10 sf10 sweeps: the pair-kernel arms
@@ -104,216 +133,9 @@ def _check_catalyst_row_budget(
         )
 
 
-@register(
-    "similarity_topk",
-    """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0)
-    SELECT vec_id,
-           round(list_dot_product(emb, qemb)
-                 / (sqrt(list_dot_product(emb, emb))
-                    * sqrt(list_dot_product(qemb, qemb))), 6) AS cos_sim
-    FROM e, q
-    WHERE vec_id <> 0
-    ORDER BY list_dot_product(emb, qemb)
-             / (sqrt(list_dot_product(emb, emb))
-                * sqrt(list_dot_product(qemb, qemb))) DESC, vec_id
-    LIMIT 10
-    """,
-    tags=("similarity",),
-)
-def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-10 for query vector vec_id=0. The single-query
-    plan is a broadcast of the 1-row query + TakeOrderedAndProject — no
-    shuffle of the corpus at any scale."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    # Query norm hoisted into the broadcast 1-row side (computed once, not
-    # once per corpus row); bit-same value — see the norm-hoist note on
-    # dedup_semdedup_prune. The corpus-row norm stays inline (each row is
-    # scored exactly once here, so there is nothing to share).
-    norm = F.expr(f"sqrt({_dot_sql('emb', 'emb')})")
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("emb").alias("qemb"), norm.alias("qnorm")
-    )
-    sim = F.expr(_dot_sql("emb", "qemb")) / (norm * F.col("qnorm"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", F.round(sim, 6).alias("cos_sim"), sim.alias("__raw"))
-        .orderBy(F.desc("__raw"), F.asc("vec_id"))
-        .limit(10)
-        .select("vec_id", "cos_sim")
-    )
-
-
-@register(
-    "similarity_knn_join",
-    """
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-         q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < 10)
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim
-    FROM (
-        SELECT q.qid, e.vec_id,
-               list_dot_product(e.emb, q.qemb)
-               / (sqrt(list_dot_product(e.emb, e.emb))
-                  * sqrt(list_dot_product(q.qemb, q.qemb))) AS sim,
-               row_number() OVER (
-                   PARTITION BY q.qid
-                   ORDER BY list_dot_product(e.emb, q.qemb)
-                            / (sqrt(list_dot_product(e.emb, e.emb))
-                               * sqrt(list_dot_product(q.qemb, q.qemb))) DESC,
-                            e.vec_id) AS rn
-        FROM e CROSS JOIN q
-        WHERE e.vec_id <> q.qid
-    ) WHERE rn <= 3
-    """,
-    tags=("similarity",),
-)
-def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-NN join: top-3 neighbors for each of 10 query vectors. Broadcast the
-    query batch, score corpus-side, WindowGroupLimit keeps k per query
-    before the shuffle — O(N·Q) compute but O(k·Q) shuffle."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    # Both norms hoisted out of the per-pair kernel: each corpus row meets
-    # Q=10 queries and each query meets N rows, so cosine's two sqrt-folds
-    # would be recomputed Q× / N× — hoisting leaves one dot per pair
-    # (bit-same value; see dedup_semdedup_prune).
-    norm = F.expr(f"sqrt({_dot_sql('emb', 'emb')})")
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("emb").alias("qemb"),
-        norm.alias("qnorm"),
-    )
-    e = e.select("vec_id", "emb", norm.alias("enorm"))
-    sim = F.expr(_dot_sql("emb", "qemb")) / (
-        F.col("enorm") * F.col("qnorm")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
-    return (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", sim.alias("__raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
-    )
-
-
-@register(
-    "similarity_knn_join_filtered",
-    """
-    WITH e AS (
-        SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings
-        WHERE label % 2 = 0
-    ),
-    q AS (
-        SELECT vec_id AS qid, embedding::DOUBLE[] AS qemb FROM embeddings
-        WHERE vec_id < 10
-    )
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim
-    FROM (
-        SELECT q.qid, e.vec_id,
-               list_dot_product(e.emb, q.qemb)
-               / (sqrt(list_dot_product(e.emb, e.emb))
-                  * sqrt(list_dot_product(q.qemb, q.qemb))) AS sim,
-               row_number() OVER (
-                   PARTITION BY q.qid
-                   ORDER BY list_dot_product(e.emb, q.qemb)
-                            / (sqrt(list_dot_product(e.emb, e.emb))
-                               * sqrt(list_dot_product(q.qemb, q.qemb))) DESC,
-                            e.vec_id) AS rn
-        FROM e CROSS JOIN q
-        WHERE e.vec_id <> q.qid
-    ) WHERE rn <= 3
-    """,
-    tags=("similarity",),
-)
-def similarity_knn_join_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT filtered k-NN — the strict-recall serving answer SCALE.md
-    §Round 14 routes correlated-filter traffic to: when the metadata
-    predicate tracks the embedding geometry (excludes whole clusters),
-    the filtered ANN curve saturates below the identity-recall SLO at
-    any budget, and the right plan is the exact scan over the ELIGIBLE
-    stream. Same plan shape as ``similarity_knn_join`` with the filter
-    PUSHED INTO THE CORPUS SCAN (a parquet predicate on the label
-    column — `PushedFilters`, so the cross product is |eligible|·Q,
-    never |corpus|·Q), broadcast query batch, WindowGroupLimit top-k
-    before the one shuffle: O(|eligible|·Q) compute, O(k·Q) shuffle.
-    Admission-price it with ``probe_cost_report`` before choosing this
-    tier over the ANN index."""
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.filter(F.col("label") % 2 == 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    norm = F.expr(f"sqrt({_dot_sql('emb', 'emb')})")
-    q = (
-        emb.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").cast("array<double>").alias("qemb"),
-        )
-        .select(
-            "qid", "qemb",
-            F.expr(f"sqrt({_dot_sql('qemb', 'qemb')})").alias("qnorm"),
-        )
-    )
-    e = e.select("vec_id", "emb", norm.alias("enorm"))
-    sim = F.expr(_dot_sql("emb", "qemb")) / (
-        F.col("enorm") * F.col("qnorm")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
-    return (
-        e.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", sim.alias("__raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
-    )
-
-
-def _hyperplanes(nbits: int = _NBITS, dim: int = _DIM) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (fixed seed, engine-side
-    constants — broadcast as literals into the plan)."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    return rng.standard_normal((nbits, dim)).tolist()
-
-
-def _probe_masks(nbits: int = _NBITS, radius: int = _PROBE_RADIUS) -> list[int]:
-    """All XOR masks with ≤ radius bits set — the multi-probe neighborhood."""
-    from itertools import combinations
-
-    masks = [0]
-    for r in range(1, radius + 1):
-        for bits in combinations(range(nbits), r):
-            masks.append(sum(1 << b for b in bits))
-    return masks
-
-
-_IVF_COS = """
-    list_dot_product({a}, {b})
-    / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))
-"""
-
-#: Cell-scoring metric: cosine with the per-row ||emb|| factor dropped.
-#: Dividing by a positive per-row constant cannot change which cell ranks
-#: highest, so assignment/probe order is the cosine order — at a third of
-#: the arithmetic (the seed norm is precomputed once in the broadcast seed
-#: array; the corpus-row norm is never needed). Both engines use this same
-#: expression, so the index stays bit-exact / hash-checked.
-_IVF_SCALED = """
-    list_dot_product({a}, {b}) / sqrt(list_dot_product({b}, {b}))
-"""
+# ---------------------------------------------------------------------------
+# Vector arithmetic (Spark SQL text) and the DuckDB twins.
+# ---------------------------------------------------------------------------
 
 
 def _dot(a, b):
@@ -336,12 +158,291 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _l2_sql(a: str, b: str) -> str:
-    """SQL-text twin of :func:`_l2` (same fp addition order)."""
+    """Squared L2 via the dot-product identity (same fp addition order as
+    the oracle's :data:`_L2_SQL`)."""
     return f"{_dot_sql(a, a)} - 2 * {_dot_sql(a, b)} + {_dot_sql(b, b)}"
 
 
-def _emb_base(spark: SparkSession, sf_dir: str, persist: bool = False) -> DataFrame:
-    """The canonical ``(vec_id, emb double[])`` corpus frame.
+def _norm(c: str) -> "F.Column":
+    """``sqrt(c·c)`` — the per-row norm every cosine kernel hoists out of
+    its per-pair expression (one dot per pair instead of three; the norm
+    fold is the identical expression, so the value is bit-same)."""
+    return F.expr(f"sqrt({_dot_sql(c, c)})")
+
+
+_IVF_COS = """
+    list_dot_product({a}, {b})
+    / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))
+"""
+
+#: Cell-scoring metric: cosine with the per-row ||emb|| factor dropped.
+#: Dividing by a positive per-row constant cannot change which cell ranks
+#: highest, so assignment/probe order is the cosine order — at a third of
+#: the arithmetic (the seed norm is precomputed once in the broadcast seed
+#: array; the corpus-row norm is never needed). Both engines use this same
+#: expression, so the index stays bit-exact / hash-checked.
+_IVF_SCALED = """
+    list_dot_product({a}, {b}) / sqrt(list_dot_product({b}, {b}))
+"""
+
+_L2_SQL = (
+    "(list_dot_product({a}, {a}) - 2 * list_dot_product({a}, {b})"
+    " + list_dot_product({b}, {b}))"
+)
+
+
+# ---------------------------------------------------------------------------
+# Oracle-SQL stage generators. Every DuckDB oracle of the IVF/PQ/ADC family
+# is a WITH-list of these CTEs plus one of the two top-k tails; each stage
+# is written once and mirrors one Spark stage helper below.
+# ---------------------------------------------------------------------------
+
+#: The corpus CTE: ``e(vec_id, emb DOUBLE[])`` (Spark: :func:`_emb_base`).
+_E_SQL = "SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings"
+_E_CTE = f"e AS ({_E_SQL})"
+
+#: Oracle twin of :func:`_sqrt_n_seeds` — MUST stay in lockstep with it
+#: (both engines pick seeds as ``vec_id < ceil(sqrt(N))``).
+_SQRT_N_SQL = "vec_id < (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM e)"
+
+
+def _with(*ctes: str) -> str:
+    return "WITH " + ",\n    ".join(c.strip() for c in ctes)
+
+
+def _seeds_cte(
+    name: str = "seeds",
+    src: str = "e",
+    where: str = f"vec_id < {_IVF_CELLS}",
+    cell: str = "vec_id",
+) -> str:
+    """A quantizer/codebook CTE ``name(cell, cemb)`` — the medoid rule
+    (Spark: :func:`_medoid_seeds`, or :func:`_sqrt_n_seeds` with
+    ``where=_SQRT_N_SQL``)."""
+    return (
+        f"{name} AS (SELECT {cell} AS cell, emb AS cemb FROM {src} "
+        f"WHERE {where})"
+    )
+
+
+def _ivf_cells_cte(
+    name: str,
+    src: str,
+    rank: str,
+    *,
+    seeds: str = "seeds",
+    key: str = "vec_id",
+    out_key: str = "vec_id",
+    vec: str = "emb",
+    carry: dict[str, str] | None = None,
+    where: str = "",
+) -> str:
+    """The IVF cell-ranking CTE behind BOTH ``assign`` (``rank="= 1"``:
+    each corpus row's argmax cell; Spark :func:`_ivf_assign`) and
+    ``probes`` (``rank="<= nprobe"``: each query's nearest cells; Spark
+    :func:`_ivf_probes`). Rows of ``src`` (aliased ``t``) score every
+    ``seeds`` cell by :data:`_IVF_SCALED` and keep the cells ranked
+    ``rank`` under ``ORDER BY sim DESC, cell`` — the lowest cell wins
+    ties, exactly the Spark fold's strictly-greater replace.
+
+    Output columns: ``out_key`` (from ``t.key``), ``cell``, then each
+    ``carry`` alias (a SQL expression over ``t``)."""
+    carry = carry or {}
+    extra = "".join(f", {expr} AS {alias}" for alias, expr in carry.items())
+    outs = ", ".join([out_key, "cell", *carry])
+    order = _IVF_SCALED.format(a=f"t.{vec}", b="x.cemb").strip()
+    return f"""{name} AS (
+        SELECT {outs} FROM (
+            SELECT t.{key} AS {out_key}, x.cell{extra},
+                   row_number() OVER (
+                       PARTITION BY t.{key}
+                       ORDER BY {order} DESC, x.cell
+                   ) AS rn
+            FROM {src} t CROSS JOIN {seeds} x
+            {where}
+        ) WHERE rn {rank}
+    )"""
+
+
+def _member_probes_cte(
+    src: str = "e", where: str = f"WHERE t.vec_id < {_N_QUERIES}", **kw
+) -> str:
+    """``probes(qid, cell, ...)`` for a batch of corpus-member queries
+    (default ``vec_id < _N_QUERIES``) at ``nprobe = _IVF_NPROBE`` (Spark:
+    :func:`_member_queries` → :func:`_ivf_probes`)."""
+    return _ivf_cells_cte(
+        "probes", src, f"<= {_IVF_NPROBE}", out_key="qid", where=where, **kw
+    )
+
+
+def _pq_dists_sql(src: str, keys: str, vec: str, book: str = "seeds",
+                  dsel: bool = False) -> str:
+    """Per (row, subspace s, centroid): the full squared L2 ``dist`` of
+    the row's subvector ``vec`` to codebook ``book``'s centroid — the
+    values ADC sums — and, with ``dsel``, the SELECTION metric ``dsel =
+    ‖c‖² − 2a·c`` (the per-row-constant ‖a‖² cannot change the argmin,
+    and dropping it is a third of the arithmetic). One SELECT per
+    subspace — static slice bounds, like the Spark side's unrolled loop.
+    Serves both the corpus encode (``d``) and every per-query distance
+    table (Spark: :func:`_pq_qtabs_col`)."""
+    parts = []
+    for s in range(_PQ_M):
+        lo, hi = s * _PQ_SUBDIM + 1, (s + 1) * _PQ_SUBDIM
+        a, b = f"{vec}[{lo}:{hi}]", f"x.cemb[{lo}:{hi}]"
+        sel = (
+            f" (list_dot_product({b}, {b}) - 2 * list_dot_product({a}, {b}))"
+            " AS dsel," if dsel else ""
+        )
+        parts.append(
+            f"SELECT {keys}, {s} AS s, x.cell AS cent,{sel}"
+            f" {_L2_SQL.format(a=a, b=b)} AS dist"
+            f" FROM {src} CROSS JOIN {book} x"
+        )
+    return "\n        UNION ALL\n        ".join(parts)
+
+
+def _pq_codes_ctes(book: str = "seeds") -> str:
+    """``d`` (corpus × codebook distances) and ``picked(vec_id, s, cent)``
+    — the argmin PQ code per subspace, lowest centroid on ties (Spark:
+    :func:`_pq_encode`)."""
+    return f"""d AS (
+        {_pq_dists_sql("e t", "t.vec_id", "t.emb", book, dsel=True)}
+    ),
+    picked AS (
+        SELECT vec_id, s, cent FROM (
+            SELECT vec_id, s, cent, row_number() OVER (
+                PARTITION BY vec_id, s ORDER BY dsel, cent) AS rn
+            FROM d
+        ) WHERE rn = 1
+    )"""
+
+
+#: Fixed-order sum over subspaces (CASE-pivot): a plain sum() aggregates
+#: the 8 per-subspace doubles in nondeterministic order, and fp addition
+#: order must match Spark's static s=0..7 chain (:func:`_adc_sum`) exactly.
+_ADC_PIVOT_SQL = " + ".join(
+    f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
+)
+
+
+def _adc_shortlist_sql(
+    k: int,
+    cand_pred: str = "",
+    exclude_self: bool = True,
+    per_cell: bool = False,
+) -> str:
+    """The ADC ranking stage (Spark: :func:`_adc_topk`): candidates =
+    ``probes ⋈ assign`` on cell, distance = the fixed-order pivot of the
+    ``qd`` table lookups at each candidate's ``picked`` codes, top-``k``
+    per query by (adc, vec_id). Yields ``(qid, vec_id, adc)``.
+
+    ``cand_pred``: extra SQL (``AND ...``) on the candidate side ``a`` —
+    a tombstone mask, attribute filter or arrival cutoff, applied BEFORE
+    the top-k window exactly as the Spark plan pre-filters.
+    ``exclude_self`` drops the ``vec_id = qid`` self-match (member
+    queries only). ``per_cell``: ``qd`` is keyed per (qid, cell) — the
+    residual tier, whose query residual differs per probed cell."""
+    self_ = " AND a.vec_id <> p.qid" if exclude_self else ""
+    cell_ = " AND qd.cell = p.cell" if per_cell else ""
+    return f"""SELECT qid, vec_id, adc FROM (
+        SELECT qid, vec_id, adc,
+               row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
+        FROM (
+            SELECT p.qid, a.vec_id, {_ADC_PIVOT_SQL} AS adc
+            FROM probes p
+            JOIN assign a ON a.cell = p.cell{self_} {cand_pred}
+            JOIN picked pk ON pk.vec_id = a.vec_id
+            JOIN qd ON qd.qid = p.qid{cell_} AND qd.s = pk.s
+                   AND qd.cent = pk.cent
+            GROUP BY p.qid, a.vec_id
+        )
+    ) WHERE rn <= {int(k)}"""
+
+
+def _adc_select_sql(k: int, **kw) -> str:
+    """The ADC tiers' result: :func:`_adc_shortlist_sql` rounded to
+    ``(qid, vec_id, adc_dist)``."""
+    return (
+        "\n    SELECT qid, vec_id, round(adc, 6) AS adc_dist FROM ("
+        + _adc_shortlist_sql(k, **kw)
+        + ")"
+    )
+
+
+def _cosine_topk_sql(cand: str, k: int) -> str:
+    """The exact-cosine top-``k`` tail (Spark: :func:`_cosine_topk`):
+    ``cand`` is a FROM clause binding corpus rows as ``c(vec_id, emb)``
+    and queries as ``q(qid, qemb)``; per qid, rank by (cosine DESC,
+    vec_id) and keep ``k`` rows of ``(qid, vec_id, cos_sim)``."""
+    cos = _IVF_COS.format(a="c.emb", b="q.qemb")
+    return f"""SELECT qid, vec_id, round(sim, 6) AS cos_sim FROM (
+        SELECT q.qid, c.vec_id, {cos} AS sim,
+               row_number() OVER (
+                   PARTITION BY q.qid ORDER BY {cos} DESC, c.vec_id
+               ) AS rn
+        FROM {cand}
+    ) WHERE rn <= {int(k)}"""
+
+
+def _member_adc_head(
+    *ctes: str,
+    queries: str = f"vec_id < {_N_QUERIES}",
+    carry: dict[str, str] | None = None,
+) -> str:
+    """The member-query IVFADC CTE stack: corpus, the 16 medoid seeds
+    doubling as IVF quantizer AND PQ codebook (identical medoids), codes,
+    assignment, the probes of the corpus rows matching ``queries``
+    (``carry``: extra probe columns) and their distance tables (read off
+    the corpus ``d``: the queries ARE corpus rows), then ``ctes``."""
+    return _with(
+        _E_CTE,
+        _seeds_cte(),
+        _pq_codes_ctes(),
+        _ivf_cells_cte("assign", "e", "= 1"),
+        _member_probes_cte(where=f"WHERE t.{queries}", carry=carry),
+        f"qd AS (SELECT vec_id AS qid, s, cent, dist FROM d WHERE {queries})",
+        *ctes,
+    )
+
+
+def _ivf_adc_sql(cand_pred: str = "") -> str:
+    """DuckDB mirror of member-query IVFADC top-3 (``cand_pred``: see
+    :func:`_adc_shortlist_sql`)."""
+    return _member_adc_head() + _adc_select_sql(3, cand_pred=cand_pred)
+
+
+def _ivf_adc_refined_sql(cand_pred: str = "") -> str:
+    """DuckDB mirror of IVFADC + the FAISS refine stage: the member ADC
+    shortlist kept to top-100 per query, then an exact-cosine re-rank
+    over the candidates' TRUE vectors keeps top-3. The r12 recall ledger
+    measured why this stage exists: on a corpus with near-duplicates,
+    whole sibling clusters share one PQ code and ADC ties across them
+    (recall@10 floor 0.14 at sf10); re-scoring the top-R true vectors
+    recovers 0.999 at <1% of the corpus scanned (SCALE.md §Round 12)."""
+    return _member_adc_head(
+        f"topr AS ({_adc_shortlist_sql(100, cand_pred)})"
+    ) + "\n    " + _cosine_topk_sql(
+        "topr t JOIN e c ON c.vec_id = t.vec_id"
+        " JOIN (SELECT vec_id AS qid, emb AS qemb FROM e) q ON q.qid = t.qid",
+        3,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Spark stage helpers.
+# ---------------------------------------------------------------------------
+
+
+def _emb_base(
+    spark: SparkSession,
+    sf_dir: str,
+    persist: bool = False,
+    where: "F.Column | None" = None,
+) -> DataFrame:
+    """The canonical ``(vec_id, emb double[])`` corpus frame — the one
+    place the stored ``array<float>`` is widened. ``where`` filters the
+    raw rows first (a predicate on stored columns such as ``label``,
+    pushed into the parquet scan).
 
     ``persist=True`` is the IVF/PQ/ADC chain's materialization barrier
     (round 16): one chain query references this frame from MANY subtrees
@@ -356,10 +457,39 @@ def _emb_base(spark: SparkSession, sf_dir: str, persist: bool = False) -> DataFr
     parquet; at 100 TB the analogue is the materialized vectors table a
     serving stack reads anyway (``plans/ann_index.py`` stores exactly
     this frame)."""
-    e = load(spark, sf_dir, "embeddings").select(
+    raw = load(spark, sf_dir, "embeddings")
+    if where is not None:
+        raw = raw.filter(where)
+    e = raw.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
     return e.persist() if persist else e
+
+
+def _medoid_seeds(e: DataFrame, n: int = _IVF_CELLS) -> DataFrame:
+    """Deterministic medoid seeds ``(cell, cemb)``: the vectors ``vec_id <
+    n`` — raw data vectors, not float averages, so every dot product
+    against them is bit-exact across engines (oracle: :func:`_seeds_cte`)."""
+    return e.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
+    )
+
+
+def _member_queries(e: DataFrame, n: int = _N_QUERIES) -> DataFrame:
+    """The corpus-member query batch ``(qid, qemb)``: vectors ``vec_id <
+    n`` (queries ARE corpus rows — pair with ``exclude_self=True``)."""
+    return e.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
+    )
+
+
+def _seed_fold(seeds: DataFrame) -> DataFrame:
+    """One row: ``__raw`` = the ``(cell, cemb)`` seeds as a struct array
+    sorted by cell ascending — the broadcastable fold both the IVF
+    quantizer and the PQ codebook are built from."""
+    return seeds.select(F.struct("cell", "cemb").alias("s")).agg(
+        F.sort_array(F.collect_list("s")).alias("__raw")
+    )
 
 
 def _seed_array(seeds: DataFrame) -> DataFrame:
@@ -372,24 +502,13 @@ def _seed_array(seeds: DataFrame) -> DataFrame:
     asserted in tests/test_plans.py). ``corpus._centroid_row`` mirrors
     this fold for k-means (L2 metric, computed centroids) — plan-shape
     fixes here should be mirrored there."""
-    arr = seeds.select(F.struct("cell", "cemb").alias("s")).agg(
-        F.sort_array(F.collect_list("s")).alias("__raw")
-    )
     with_norm = F.expr(
         "transform(__raw, s -> named_struct("
         "'cell', s.cell, 'cemb', s.cemb, "
         "'cnorm', sqrt(aggregate(transform(s.cemb, x -> x * x), 0.0D,"
         " (a, b) -> a + b))))"
     )
-    return arr.select(with_norm.alias("__seeds"))
-
-
-#: Oracle fragment for :func:`_sqrt_n_seeds` — MUST stay in lockstep with
-#: it (both engines pick seeds as ``vec_id < ceil(sqrt(N))``).
-_SQRT_N_SEEDS_SQL = (
-    "SELECT vec_id AS cell, emb AS cemb FROM e "
-    "WHERE vec_id < (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM e)"
-)
+    return _seed_fold(seeds).select(with_norm.alias("__seeds"))
 
 
 def _sqrt_n_seeds(e: DataFrame) -> DataFrame:
@@ -401,7 +520,7 @@ def _sqrt_n_seeds(e: DataFrame) -> DataFrame:
     The threshold is computed IN-PLAN (one-row count aggregate crossed
     under the filter as a broadcast) so the query stays a single job
     with no driver-side action, and the DuckDB oracle mirrors it with a
-    scalar subquery (:data:`_SQRT_N_SEEDS_SQL`) — both engines'
+    scalar subquery (:data:`_SQRT_N_SQL`) — both engines'
     ``ceil(sqrt(double))`` agree on every count below 2^52."""
     k = e.agg(F.ceil(F.sqrt(F.count(F.lit(1)))).alias("__k"))
     return (
@@ -450,99 +569,6 @@ def _ivf_assign(e: DataFrame, seed_arr: DataFrame) -> DataFrame:
     )
 
 
-@register(
-    "similarity_ann_ivf",
-    f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    seeds AS (SELECT vec_id AS cell, emb AS cemb FROM e WHERE vec_id < 16),
-    assign AS (
-        SELECT vec_id, emb, cell FROM (
-            SELECT e.vec_id, e.emb, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="e.emb", b="s.cemb")} DESC,
-                                s.cell
-                   ) AS rn
-            FROM e CROSS JOIN seeds s
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qemb, cell FROM (
-            SELECT q.vec_id AS qid, q.emb AS qemb, s.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="q.emb", b="s.cemb")} DESC,
-                                s.cell
-                   ) AS rn
-            FROM e q CROSS JOIN seeds s
-            WHERE q.vec_id < 10
-        ) WHERE rn <= 4
-    )
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim FROM (
-        SELECT p.qid, a.vec_id,
-               {_IVF_COS.format(a="a.emb", b="p.qemb")} AS sim,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {_IVF_COS.format(a="a.emb", b="p.qemb")} DESC,
-                            a.vec_id
-               ) AS rn
-        FROM probes p JOIN assign a ON a.cell = p.cell
-        WHERE a.vec_id <> p.qid
-    ) WHERE rn <= 3
-    """,
-    tags=("similarity",),
-)
-def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: 16 coarse cells (medoid seeds = vectors 0..15), nprobe=4,
-    top-3 exact re-rank inside the probed cells.
-
-    Scale shape: assignment is one MAP-ONLY pass over the corpus against a
-    broadcast one-row quantizer array (``_ivf_assign`` — inline argmax
-    fold, no per-cell row inflation, no Window, no shuffle before the
-    single ``repartition(cell)``); probing is an EQUI-join on cell id —
-    the corpus partitioning by cell is built once and reused across query
-    batches, and candidate volume per query is ~nprobe/ncells of the
-    corpus instead of all of it. Deterministic medoid seeds (raw data
-    vectors, not float averages) keep every dot product bit-exact across
-    engines, which is what makes this ANN tier fully DuckDB-oracled
-    (LSH's hyperplanes are engine-side constants, so that tier is
-    rows-only)."""
-    from pyspark.sql import Window as W
-
-    # NOT persisted (round 16): only 3 references; the A/B read neutral
-    # and the cache breaks the pinned quantizer-fold ReusedExchange
-    # (test_plans.py) — the chain queries with 5+ references persist via
-    # _emb_base(persist=True), see that helper's docstring.
-    e = _emb_base(spark, sf_dir)
-    seeds = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-    )
-    seed_arr = _seed_array(seeds)
-    assign = _ivf_assign(e, seed_arr)
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    probes = _ivf_probes(q, seed_arr, nprobe=4).withColumn(
-        "qnorm", F.expr(f"sqrt({_dot_sql('qemb', 'qemb')})")
-    )
-    # Norms hoisted out of the rerank kernel: a probed cell's rows meet
-    # every query probing that cell, so per-pair sqrt-folds are wasted
-    # work — one dot per candidate pair instead (bit-same value).
-    assign = assign.withColumn("enorm", F.expr(f"sqrt({_dot_sql('emb', 'emb')})"))
-    rerank = F.expr(_dot_sql("emb", "qemb")) / (
-        F.col("enorm") * F.col("qnorm")
-    )
-    w_top = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
-    return (
-        assign.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", rerank.alias("__raw"))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
-    )
-
-
 def _ivf_probes(q: DataFrame, seed_arr: DataFrame, nprobe: int) -> DataFrame:
     """Map-only multi-probe cell selection: ``(qid, qemb, cell)`` with the
     ``nprobe`` nearest cells per query, one output row each.
@@ -568,48 +594,214 @@ def _ivf_probes(q: DataFrame, seed_arr: DataFrame, nprobe: int) -> DataFrame:
     )
 
 
-@register(
-    "similarity_ann_ivf_join",
-    f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    seeds AS (SELECT vec_id AS cell, emb AS cemb FROM e WHERE vec_id < 16),
-    assign AS (
-        SELECT vec_id, emb, cell FROM (
-            SELECT e.vec_id, e.emb, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="e.emb", b="s.cemb")} DESC,
-                                s.cell
-                   ) AS rn
-            FROM e CROSS JOIN seeds s
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, qemb, cell FROM (
-            SELECT q.vec_id AS qid, q.emb AS qemb, s.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="q.emb", b="s.cemb")} DESC,
-                                s.cell
-                   ) AS rn
-            FROM e q CROSS JOIN seeds s
-            WHERE q.vec_id < 100
-        ) WHERE rn <= 4
+def _cosine_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-``k`` per query over a candidate stream carrying
+    ``qid, vec_id, emb, qemb`` and the hoisted norms ``enorm``/``qnorm``:
+    one dot per candidate pair, WindowGroupLimit-able row_number by
+    (cosine DESC, vec_id), rounded Spark-side (HALF_UP, like DuckDB)."""
+    sim = F.expr(_dot_sql("emb", "qemb")) / (F.col("enorm") * F.col("qnorm"))
+    w = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
+    return (
+        cand.select("qid", "vec_id", sim.alias("__raw"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
     )
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim FROM (
-        SELECT p.qid, a.vec_id,
-               {_IVF_COS.format(a="a.emb", b="p.qemb")} AS sim,
-               row_number() OVER (
-                   PARTITION BY p.qid
-                   ORDER BY {_IVF_COS.format(a="a.emb", b="p.qemb")} DESC,
-                            a.vec_id
-               ) AS rn
-        FROM probes p JOIN assign a ON a.cell = p.cell
-        WHERE a.vec_id <> p.qid
-    ) WHERE rn <= 3
+
+
+def _refine_topk(
+    e: DataFrame, q: DataFrame, shortlist: DataFrame, k: int
+) -> DataFrame:
+    """Exact-cosine re-rank of a per-query ``(qid, vec_id)`` shortlist
+    against the true vectors: broadcast the shortlist onto the embeddings
+    scan, attach the (broadcast) query vectors, window top-``k`` by
+    (cosine DESC, vec_id). Shared by the one-shot refined query and the
+    persisted-index ``probe_ann_index_refined`` path so the rerank
+    semantics cannot drift."""
+    qn = q.select("qid", "qemb", _norm("qemb").alias("qnorm"))
+    return _cosine_topk(
+        e.join(F.broadcast(shortlist), "vec_id")
+        .withColumn("enorm", _norm("emb"))
+        .join(F.broadcast(qn), "qid"),
+        k,
+    )
+
+
+# ---------------------------------------------------------------------------
+# Brute-force tiers.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "similarity_topk",
+    """
+    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+         q AS (SELECT emb AS qemb FROM e WHERE vec_id = 0)
+    SELECT vec_id,
+           round(list_dot_product(emb, qemb)
+                 / (sqrt(list_dot_product(emb, emb))
+                    * sqrt(list_dot_product(qemb, qemb))), 6) AS cos_sim
+    FROM e, q
+    WHERE vec_id <> 0
+    ORDER BY list_dot_product(emb, qemb)
+             / (sqrt(list_dot_product(emb, emb))
+                * sqrt(list_dot_product(qemb, qemb))) DESC, vec_id
+    LIMIT 10
     """,
     tags=("similarity",),
 )
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force cosine top-10 for query vector vec_id=0. The single-query
+    plan is a broadcast of the 1-row query + TakeOrderedAndProject — no
+    shuffle of the corpus at any scale."""
+    e = _emb_base(spark, sf_dir)
+    # Query norm hoisted into the broadcast 1-row side (computed once, not
+    # once per corpus row). The corpus-row norm stays inline (each row is
+    # scored exactly once here, so there is nothing to share).
+    q = e.filter(F.col("vec_id") == 0).select(
+        F.col("emb").alias("qemb"), _norm("emb").alias("qnorm")
+    )
+    sim = F.expr(_dot_sql("emb", "qemb")) / (_norm("emb") * F.col("qnorm"))
+    return (
+        e.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .select("vec_id", F.round(sim, 6).alias("cos_sim"), sim.alias("__raw"))
+        .orderBy(F.desc("__raw"), F.asc("vec_id"))
+        .limit(10)
+        .select("vec_id", "cos_sim")
+    )
+
+
+def _knn_join(e: DataFrame, q: DataFrame) -> DataFrame:
+    """Brute-force top-3 k-NN join of the member query batch ``q`` over
+    corpus ``e``: broadcast the batch, score corpus-side, WindowGroupLimit
+    keeps k per query before the shuffle — O(N·Q) compute but O(k·Q)
+    shuffle. Both norms hoisted out of the per-pair kernel: each corpus
+    row meets Q queries and each query meets N rows."""
+    return _cosine_topk(
+        e.select("vec_id", "emb", _norm("emb").alias("enorm"))
+        .crossJoin(F.broadcast(q.withColumn("qnorm", _norm("qemb"))))
+        .filter(F.col("vec_id") != F.col("qid")),
+        3,
+    )
+
+
+_KNN_Q = (
+    f"q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < {_N_QUERIES})"
+)
+
+
+@register(
+    "similarity_knn_join",
+    _with(_E_CTE, _KNN_Q)
+    + "\n    "
+    + _cosine_topk_sql("e c CROSS JOIN q WHERE c.vec_id <> q.qid", 3),
+    tags=("similarity",),
+)
+def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-NN join: top-3 neighbors for each of 10 query vectors. Broadcast the
+    query batch, score corpus-side, WindowGroupLimit keeps k per query
+    before the shuffle — O(N·Q) compute but O(k·Q) shuffle."""
+    e = _emb_base(spark, sf_dir)
+    return _knn_join(e, _member_queries(e))
+
+
+@register(
+    "similarity_knn_join_filtered",
+    _with(
+        _E_CTE,
+        _KNN_Q,
+        f"ef AS ({_E_SQL} WHERE label % 2 = 0)",
+    )
+    + "\n    "
+    + _cosine_topk_sql("ef c CROSS JOIN q WHERE c.vec_id <> q.qid", 3),
+    tags=("similarity",),
+)
+def similarity_knn_join_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT filtered k-NN — the strict-recall serving answer SCALE.md
+    §Round 14 routes correlated-filter traffic to: when the metadata
+    predicate tracks the embedding geometry (excludes whole clusters),
+    the filtered ANN curve saturates below the identity-recall SLO at
+    any budget, and the right plan is the exact scan over the ELIGIBLE
+    stream. Same plan shape as ``similarity_knn_join`` with the filter
+    PUSHED INTO THE CORPUS SCAN (a parquet predicate on the label
+    column — `PushedFilters`, so the cross product is |eligible|·Q,
+    never |corpus|·Q), broadcast query batch, WindowGroupLimit top-k
+    before the one shuffle: O(|eligible|·Q) compute, O(k·Q) shuffle.
+    Admission-price it with ``probe_cost_report`` before choosing this
+    tier over the ANN index."""
+    return _knn_join(
+        _emb_base(spark, sf_dir, where=F.col("label") % 2 == 0),
+        _member_queries(_emb_base(spark, sf_dir)),
+    )
+
+
+# ---------------------------------------------------------------------------
+# IVF: exact re-rank inside the probed cells.
+# ---------------------------------------------------------------------------
+
+
+def _ivf_rerank(
+    spark: SparkSession, sf_dir: str, n_queries: int, large_batch: bool
+) -> DataFrame:
+    """Member-query IVF top-3: 16 medoid cells, nprobe 4, exact cosine
+    re-rank of the probed cells' rows. ``large_batch`` is the physical
+    tier switch: the probes stop being broadcast (the cell equi-join
+    shuffles both sides) and the embeddings frame is persisted, since
+    the corpus is then read by more subtrees than the small tier's 3."""
+    # NOT persisted in the small tier (round 16): only 3 references; the
+    # A/B read neutral and the cache breaks the pinned quantizer-fold
+    # ReusedExchange (test_plans.py).
+    e = _emb_base(spark, sf_dir, persist=large_batch)
+    seed_arr = _seed_array(_medoid_seeds(e))
+    # Norms hoisted out of the rerank kernel: a probed cell's rows meet
+    # every query probing that cell (in the large tier they ride the cell
+    # equi-join's shuffle, +8 bytes/row, instead of being re-folded per
+    # candidate pair).
+    assign = _ivf_assign(e, seed_arr).withColumn("enorm", _norm("emb"))
+    probes = _ivf_probes(
+        _member_queries(e, n_queries), seed_arr, nprobe=_IVF_NPROBE
+    ).withColumn("qnorm", _norm("qemb"))
+    if not large_batch:
+        probes = F.broadcast(probes)
+    return _cosine_topk(
+        assign.join(probes, "cell").filter(F.col("vec_id") != F.col("qid")), 3
+    )
+
+
+def _ivf_rerank_sql(n_queries: int) -> str:
+    return _with(
+        _E_CTE,
+        _seeds_cte(),
+        _ivf_cells_cte("assign", "e", "= 1", carry={"emb": "t.emb"}),
+        _member_probes_cte(
+            carry={"qemb": "t.emb"}, where=f"WHERE t.vec_id < {n_queries}"
+        ),
+    ) + "\n    " + _cosine_topk_sql(
+        "probes q JOIN assign c ON c.cell = q.cell WHERE c.vec_id <> q.qid", 3
+    )
+
+
+@register("similarity_ann_ivf", _ivf_rerank_sql(10), tags=("similarity",))
+def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN: 16 coarse cells (medoid seeds = vectors 0..15), nprobe=4,
+    top-3 exact re-rank inside the probed cells.
+
+    Scale shape: assignment is one MAP-ONLY pass over the corpus against a
+    broadcast one-row quantizer array (``_ivf_assign`` — inline argmax
+    fold, no per-cell row inflation, no Window, no shuffle); probing is a
+    BROADCAST equi-join of the small query batch's probe rows on cell, so
+    the corpus is never shuffled — apart from the one-row quantizer fold,
+    the only exchange is the per-query top-k window over the ~nprobe/ncells
+    of the corpus the probes select. Deterministic medoid
+    seeds (raw data vectors, not float averages) keep every dot product
+    bit-exact across engines, which is what makes this ANN tier fully
+    DuckDB-oracled (LSH's hyperplanes are engine-side constants, so that
+    tier is rows-only)."""
+    return _ivf_rerank(spark, sf_dir, n_queries=10, large_batch=False)
+
+
+@register("similarity_ann_ivf_join", _ivf_rerank_sql(100), tags=("similarity",))
 def similarity_ann_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-probed k-NN JOIN — the large-query-batch tier: top-3 neighbors
     for each of 100 query vectors, nprobe=4 over 16 medoid cells.
@@ -623,36 +815,13 @@ def similarity_ann_ivf_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a large table (e.g. dedup of a new crawl against the corpus).
     Deterministic medoid seeds keep it fully DuckDB-oracled; recall vs the
     exact k-NN join is asserted in tests/test_consistency.py."""
-    e = _emb_base(spark, sf_dir, persist=True)
-    seeds = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-    )
-    seed_arr = _seed_array(seeds)
-    assign = _ivf_assign(e, seed_arr)
-    q = e.filter(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    probes = _ivf_probes(q, seed_arr, nprobe=4).withColumn(
-        "qnorm", F.expr(f"sqrt({_dot_sql('qemb', 'qemb')})")
-    )
-    from pyspark.sql import Window as W
+    return _ivf_rerank(spark, sf_dir, n_queries=100, large_batch=True)
 
-    # Same norm hoist as similarity_ann_ivf — here BOTH sides are large,
-    # so the per-row norms ride the cell equi-join's shuffle (+8 bytes/row)
-    # instead of being re-folded per candidate pair.
-    assign = assign.withColumn("enorm", F.expr(f"sqrt({_dot_sql('emb', 'emb')})"))
-    rerank = F.expr(_dot_sql("emb", "qemb")) / (
-        F.col("enorm") * F.col("qnorm")
-    )
-    w_top = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
-    return (
-        assign.join(probes, "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", rerank.alias("__raw"))
-        .withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
-    )
+
+# ---------------------------------------------------------------------------
+# ANN-blocked near-dup pairs and SemDeDup: √N-cell assignment, pair work
+# confined to a cell.
+# ---------------------------------------------------------------------------
 
 
 def _collect_seed_matrix(e: DataFrame, k: int, what: str):
@@ -691,9 +860,7 @@ def _blas_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = _emb_base(spark, sf_dir)
     n_rows = e.count()
     k = math.ceil(math.sqrt(n_rows))
     S = _collect_seed_matrix(e, k, "IVF quantizer seed vec_ids")
@@ -723,26 +890,74 @@ def _blas_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.mapInPandas(assign, "vec_id bigint, cell bigint, emb array<double>")
 
 
+def _catalyst_cell_pairs(spark: SparkSession, sf_dir: str, what: str,
+                         headline: str):
+    """The Catalyst reference arms' shared pair stage: budget guard, √N
+    medoid assignment, same-cell pairs ``(cell, vec_a, vec_b, ...)`` with
+    ``vec_a < vec_b`` and cosine ≥ 0.4. Returns ``(assign, pairs, sim)``.
+
+    Per-row norm hoisted out of the per-pair kernel (bit-same value, ~3×
+    less pair arithmetic). ``repartition(cell)`` is a MATERIALIZATION
+    BARRIER for the assignment: every consumer (both pair-join sides, the
+    SemDeDup cell sizes) reads ``assign``, and without the barrier each
+    re-evaluates the argmin fold over every corpus row; the identical
+    exchange subtree is built once and reused (ReuseExchange), and it
+    doubles as the hash partitioning the cell equi-join needs anyway — so
+    it hoists a shuffle rather than adding one. The norm is wrapped in
+    ``coalesce`` (provably non-nullable — the simhash fp lesson): the
+    null-intolerant ``sim >= τ`` filter otherwise infers
+    isnotnull(norm), pushes it below the barrier, and re-materializes the
+    norm fold inside the pushed Filter. A null-embedding row's pair dot
+    is null either way, so the 0.0 sentinel can never create a pair."""
+    e = _emb_base(spark, sf_dir)
+    _check_catalyst_row_budget(
+        e, what, headline, _CATALYST_ROW_BUDGET_KERNEL, env_suffix="KERNEL"
+    )
+    norm = F.expr(f"coalesce(sqrt({_dot_sql('emb', 'emb')}), 0.0D)")
+    assign = (
+        _ivf_assign(e, _seed_array(_sqrt_n_seeds(e)))
+        .select("vec_id", "cell", "emb", norm.alias("norm"))
+        .repartition(F.col("cell"))
+    )
+    a, b = (
+        assign.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            "cell",
+            F.col("emb").alias(f"emb_{s}"),
+            F.col("norm").alias(f"norm_{s}"),
+        )
+        for s in "ab"
+    )
+    sim = F.expr(_dot_sql("emb_a", "emb_b")) / (
+        F.col("norm_a") * F.col("norm_b")
+    )
+    pairs = (
+        a.join(b, "cell")
+        .filter(F.col("vec_a") < F.col("vec_b"))
+        .filter(sim >= 0.4)
+    )
+    return assign, pairs, sim
+
+
+#: √N-seed IVF assignment CTE stack shared by the near-dup pair and
+#: SemDeDup oracles.
+_SQRT_N_ASSIGN_HEAD = (
+    _E_CTE,
+    _seeds_cte(where=_SQRT_N_SQL),
+    _ivf_cells_cte("assign", "e", "= 1", carry={"emb": "t.emb"}),
+)
+
+#: The same-cell pairs with cosine ≥ 0.4 (Spark: :func:`_catalyst_cell_pairs`).
+_CELL_PAIRS_SQL = f"""FROM assign a JOIN assign b
+      ON a.cell = b.cell AND a.vec_id < b.vec_id
+    WHERE {_IVF_COS.format(a="a.emb", b="b.emb")} >= 0.4"""
+
 #: shared oracle of the two ANN-blocked near-dup arms (Catalyst + BLAS):
 #: √N-seed IVF assignment, within-cell exact cosine ≥ 0.4.
-_ANN_PAIRS_SQL = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    seeds AS ({_SQRT_N_SEEDS_SQL}),
-    assign AS (
-        SELECT vec_id, emb, cell FROM (
-            SELECT e.vec_id, e.emb, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="e.emb", b="s.cemb")} DESC,
-                                s.cell
-                   ) AS rn
-            FROM e CROSS JOIN seeds s
-        ) WHERE rn = 1
-    )
+_ANN_PAIRS_SQL = _with(*_SQRT_N_ASSIGN_HEAD) + f"""
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            round({_IVF_COS.format(a="a.emb", b="b.emb")}, 6) AS cos_sim
-    FROM assign a JOIN assign b ON a.cell = b.cell AND a.vec_id < b.vec_id
-    WHERE {_IVF_COS.format(a="a.emb", b="b.emb")} >= 0.4
+    {_CELL_PAIRS_SQL}
     """
 
 
@@ -775,56 +990,10 @@ def dedup_embedding_ann_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered under the same oracle as the cross-engine bit-pin both
     engines can evaluate expression-for-expression. Guarded by
     :func:`_check_catalyst_row_budget` (VERDICT r10 #2)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    _, pairs, sim = _catalyst_cell_pairs(
+        spark, sf_dir, "dedup_embedding_ann_catalyst", "dedup_embedding_ann"
     )
-    _check_catalyst_row_budget(
-        e,
-        "dedup_embedding_ann_catalyst",
-        "dedup_embedding_ann",
-        _CATALYST_ROW_BUDGET_KERNEL,
-        env_suffix="KERNEL",
-    )
-    seeds = _sqrt_n_seeds(e)
-    # Per-row norm hoisted out of the per-pair kernel (see
-    # dedup_semdedup_prune): bit-same value, ~3× less pair arithmetic.
-    # repartition(cell) = the same materialization barrier as
-    # dedup_semdedup_prune: both pair-join sides read `assign`, and the
-    # barrier makes the argmin kernel evaluate once while supplying the
-    # hash partitioning the cell equi-join needed anyway.
-    # coalesce → provably non-nullable norm (the simhash fp lesson): the
-    # null-intolerant `sim >= τ` filter otherwise infers isnotnull(norm),
-    # pushes it below the barrier, and re-materializes the norm fold
-    # inside the pushed Filter (and desynchronizes the exchange subtrees).
-    # A null-embedding row keeps its pre-fix fate: its pair dot is null,
-    # so `sim >= τ` is never satisfied regardless of the 0.0 sentinel.
-    norm = F.expr(f"coalesce(sqrt({_dot_sql('emb', 'emb')}), 0.0D)")
-    assign = (
-        _ivf_assign(e, _seed_array(seeds))
-        .select("vec_id", "cell", "emb", norm.alias("norm"))
-        .repartition(F.col("cell"))
-    )
-    a = assign.select(
-        F.col("vec_id").alias("vec_a"),
-        "cell",
-        F.col("emb").alias("emb_a"),
-        F.col("norm").alias("norm_a"),
-    )
-    b = assign.select(
-        F.col("vec_id").alias("vec_b"),
-        "cell",
-        F.col("emb").alias("emb_b"),
-        F.col("norm").alias("norm_b"),
-    )
-    sim = F.expr(_dot_sql("emb_a", "emb_b")) / (
-        F.col("norm_a") * F.col("norm_b")
-    )
-    return (
-        a.join(b, "cell")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(sim >= 0.4)
-        .select("vec_a", "vec_b", F.round(sim, 6).alias("cos_sim"))
-    )
+    return pairs.select("vec_a", "vec_b", F.round(sim, 6).alias("cos_sim"))
 
 
 @register(
@@ -850,9 +1019,10 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
       broadcast-able). ``np.argmax`` returns the FIRST max = lowest cell,
       matching the fold's strictly-greater replace and the oracle's
       ``ORDER BY sim DESC, cell``.
-    - **verify** is the chunked per-cell Gram matrix of
-      ``dedup_embedding_cosine_blas``, keyed by cell instead of label —
-      one task per cell, O(chunk·n) transient, BLAS flops.
+    - **verify** is the chunked Gram kernel of
+      ``dedup_embedding_cosine_blas`` (``dedup._gram_pairs``), keyed by
+      cell instead of label — one task per cell, O(chunk·n) transient,
+      BLAS flops.
 
     The pure-Catalyst arm stays registered as
     ``dedup_embedding_ann_catalyst`` — the expression-level reference
@@ -862,47 +1032,148 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums in SIMD order, the fold sums sequentially — argmax/threshold
     decisions could differ on ~1-ulp ties, which healthy (jittered-real)
     margins never exhibit; the shared oracle hash-checks exactly that."""
-    import pandas as pd
-    import numpy as np
-
-    assigned = _blas_assignment(spark, sf_dir)
-
-    def gram(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf[pdf["emb"].notna()]
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"vec_a": pd.Series(dtype="int64"),
-                 "vec_b": pd.Series(dtype="int64"),
-                 "cos_sim": pd.Series(dtype="float64")}
-            )
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        E = np.array(pdf["emb"].to_numpy()[order].tolist(), dtype=np.float64)
-        nrm = np.sqrt((E * E).sum(axis=1))
-        cols = np.arange(n)
-        out_a, out_b, out_s = [], [], []
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for st in range(0, n, 2048):
-                en = min(st + 2048, n)
-                Sm = (E[st:en] @ E.T) / np.outer(nrm[st:en], nrm)
-                hit = (cols[None, :] > np.arange(st, en)[:, None]) & (Sm >= 0.4)
-                ii, jj = np.nonzero(hit)
-                out_a.append(ids[ii + st])
-                out_b.append(ids[jj])
-                out_s.append(Sm[ii, jj])
-        return pd.DataFrame(
-            {"vec_a": np.concatenate(out_a),
-             "vec_b": np.concatenate(out_b),
-             "cos_sim": np.concatenate(out_s)}
-        )
-
     # round Spark-side (F.round = HALF_UP, matching the DuckDB oracle);
     # np.round is half-to-even and can differ on exact-dyadic ties.
-    return assigned.groupBy("cell").applyInPandas(
-        gram, "vec_a bigint, vec_b bigint, cos_sim double"
+    return _blas_assignment(spark, sf_dir).groupBy("cell").applyInPandas(
+        _gram_pairs, "vec_a bigint, vec_b bigint, cos_sim double"
     ).withColumn("cos_sim", F.round("cos_sim", 6))
+
+
+#: shared oracle of the two SemDeDup arms (Catalyst + BLAS): √N-seed IVF
+#: assignment, per-cell drop of every vector covered by an earlier one.
+_SEMDEDUP_SQL = _with(
+    *_SQRT_N_ASSIGN_HEAD,
+    f"""dropped AS (
+        SELECT a.cell, b.vec_id
+        {_CELL_PAIRS_SQL}
+        GROUP BY a.cell, b.vec_id
+    )""",
+    "sizes AS (SELECT cell, count(*) AS n_vectors FROM assign GROUP BY cell)",
+    "drops AS (SELECT cell, count(*) AS n_dropped FROM dropped GROUP BY cell)",
+) + """
+    SELECT s.cell, s.n_vectors,
+           coalesce(d.n_dropped, 0) AS n_dropped,
+           s.n_vectors - coalesce(d.n_dropped, 0) AS n_kept
+    FROM sizes s LEFT JOIN drops d ON d.cell = s.cell
+    """
+
+
+@register(
+    "dedup_semdedup_prune_catalyst",
+    _SEMDEDUP_SQL,
+    tags=("dedup", "similarity"),
+)
+def dedup_semdedup_prune_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup (Abbas et al., arXiv:2303.09540) as a complete prune, not
+    just candidate pairs: cluster the corpus with the map-only IVF
+    assignment, compare cosine ONLY within a cluster, and for every pair
+    above the threshold drop the higher ``vec_id`` (the paper keeps one
+    arbitrary member per semantic-duplicate set; lowest-id is that policy
+    made deterministic). Output is the per-cell audit a curation run
+    records: cluster size, drops, and the surviving count.
+
+    vs ``dedup_embedding_ann`` (same blocking, emits the PAIRS): this is
+    the decision layer — a vector is dropped when ANY earlier same-cell
+    vector covers it, so the grouped-distinct over pair right-sides is the
+    set-cover step. Scale shape: Σ|cell|² cell-confined comparisons with
+    the cell count tracking √N (:func:`_sqrt_n_seeds`) — the r8
+    sf0.1→sf1 scaling run measured the FIXED 16-cell version at
+    exponent 1.28 (1.6 s→31 s; pair volume N²/16) and this √N sizing
+    brought it back subquadratic (N^1.5 kernel asymptote) — plus one
+    |pairs|-sized distinct and two tiny aggregates. The drop rate (the
+    paper's headline: ~50% of web corpora at τ≈0.95 with no quality
+    loss) is what this audit table measures per cell.
+
+    ROLE (r10): the expression-level REFERENCE arm (the
+    ``dedup_embedding_ann_catalyst`` rationale); the headline name
+    ``dedup_semdedup_prune`` routes to the BLAS kernel measured at
+    α=0.64 sf1→sf10. Guarded by :func:`_check_catalyst_row_budget`
+    (VERDICT r10 #2)."""
+    assign, pairs, _ = _catalyst_cell_pairs(
+        spark, sf_dir, "dedup_semdedup_prune_catalyst", "dedup_semdedup_prune"
+    )
+    dropped = (
+        pairs.select("cell", "vec_b")
+        .distinct()
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("n_dropped"))
+    )
+    sizes = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
+    return sizes.join(dropped, "cell", "left").select(
+        "cell",
+        "n_vectors",
+        F.coalesce(F.col("n_dropped"), F.lit(0)).alias("n_dropped"),
+        (
+            F.col("n_vectors") - F.coalesce(F.col("n_dropped"), F.lit(0))
+        ).alias("n_kept"),
+    )
+
+
+@register(
+    "dedup_semdedup_prune",
+    _SEMDEDUP_SQL,
+    tags=("dedup", "similarity"),
+)
+def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HEADLINE SemDeDup arm (r10: the name routes to the measured scale
+    tier; ``dedup_semdedup_prune_catalyst`` is the expression-level
+    reference under the same oracle). Both N^1.5·d stages in BLAS
+    (the ``dedup_embedding_ann`` rationale — interpreted
+    higher-order folds never codegen): numpy batch assignment via
+    :func:`_blas_assignment`, then ONE chunked Gram matrix per cell
+    (``dedup._gram_hits``) that marks every column covered by an earlier
+    row (``sim ≥ τ`` with a lower vec_id) and emits the per-cell audit
+    directly — the |pairs|-sized distinct of the Catalyst formulation
+    collapses into a boolean OR over the mask, so nothing pair-shaped is
+    ever materialized."""
+    import numpy as np
+    import pandas as pd
+
+    def prune(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        cell = int(pdf["cell"].iloc[0])
+        n_vec = len(pdf)
+        live = pdf[pdf["emb"].notna()]
+        n_dropped = 0
+        if len(live) >= 2:
+            order = np.argsort(live["vec_id"].to_numpy())
+            E = np.array(live["emb"].to_numpy()[order].tolist(), dtype=np.float64)
+            covered = np.zeros(len(E), dtype=bool)
+            for _, hit, _ in _gram_hits(E):
+                covered |= hit.any(axis=0)
+            n_dropped = int(covered.sum())
+        return pd.DataFrame(
+            {"cell": [cell], "n_vectors": [n_vec],
+             "n_dropped": [n_dropped], "n_kept": [n_vec - n_dropped]}
+        )
+
+    return _blas_assignment(spark, sf_dir).groupBy("cell").applyInPandas(
+        prune, "cell bigint, n_vectors bigint, n_dropped bigint, n_kept bigint"
+    )
+
+
+# ---------------------------------------------------------------------------
+# LSH.
+# ---------------------------------------------------------------------------
+
+
+def _hyperplanes(nbits: int = _NBITS, dim: int = _DIM) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes (fixed seed, engine-side
+    constants — broadcast as literals into the plan)."""
+    import numpy as np
+
+    rng = np.random.default_rng(42)
+    return rng.standard_normal((nbits, dim)).tolist()
+
+
+def _probe_masks(nbits: int = _NBITS, radius: int = _PROBE_RADIUS) -> list[int]:
+    """All XOR masks with ≤ radius bits set — the multi-probe neighborhood."""
+    from itertools import combinations
+
+    masks = [0]
+    for r in range(1, radius + 1):
+        for bits in combinations(range(nbits), r):
+            masks.append(sum(1 << b for b in bits))
+    return masks
 
 
 def _ann_lsh_oracle_sql() -> str:
@@ -911,30 +1182,22 @@ def _ann_lsh_oracle_sql() -> str:
     ``repr`` round-trips doubles exactly and both engines fold the dot
     product over the same element order, so sign bits, buckets, probes and
     re-rank all match bit-for-bit."""
-    planes = _hyperplanes()
-    masks = _probe_masks()
     bucket_expr = "\n         + ".join(
         f"(CASE WHEN list_dot_product(emb, [{', '.join(repr(v) for v in plane)}])"
         f" >= 0 THEN {1 << i} ELSE 0 END)"
-        for i, plane in enumerate(planes)
+        for i, plane in enumerate(_hyperplanes())
     )
-    cos = _IVF_COS.format(a="c.emb", b="q.qemb")
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    b AS (SELECT vec_id, emb, {bucket_expr} AS bucket FROM e),
-    q AS (
+    return _with(
+        _E_CTE,
+        f"b AS (SELECT vec_id, emb, {bucket_expr} AS bucket FROM e)",
+        f"""q AS (
         SELECT b.vec_id AS qid, b.emb AS qemb, xor(b.bucket, t.m) AS bucket
-        FROM b, unnest([{', '.join(str(m) for m in masks)}]) AS t(m)
-        WHERE b.vec_id < 10
+        FROM b, unnest([{', '.join(str(m) for m in _probe_masks())}]) AS t(m)
+        WHERE b.vec_id < {_N_QUERIES}
+    )""",
+    ) + "\n    " + _cosine_topk_sql(
+        "q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.qid", 3
     )
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim FROM (
-        SELECT q.qid, c.vec_id, {cos} AS sim,
-               row_number() OVER (
-                   PARTITION BY q.qid ORDER BY {cos} DESC, c.vec_id
-               ) AS rn
-        FROM q JOIN b c ON c.bucket = q.bucket AND c.vec_id <> q.qid
-    ) WHERE rn <= 3
-    """
 
 
 def _lsh_bucket_col() -> "F.Column":
@@ -943,18 +1206,9 @@ def _lsh_bucket_col() -> "F.Column":
     (tools/bench_ann_recall.py) buckets the corpus through the EXACT
     production expression rather than a numpy re-derivation whose sign
     bits could drift at |dot| ≈ ulp."""
-    planes = _hyperplanes()
     bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("emb"),
-                F.array(*[F.lit(v) for v in plane]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0.0),
-            lambda s, v: s + v,
-        )
+    for i, plane in enumerate(_hyperplanes()):
+        dot = _dot(F.col("emb"), F.array(*[F.lit(v) for v in plane]))
         bucket = bucket + F.when(dot >= 0, F.lit(1 << i)).otherwise(0)
     return bucket.cast("int")
 
@@ -973,41 +1227,28 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan literals, and the oracle inlines the same literals (see
     ``_ann_lsh_oracle_sql``), turning the whole index — bucketing,
     multi-probe, re-rank — into a hash-checked query."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
     bucketed = (
-        e.withColumn("bucket", _lsh_bucket_col())
+        _emb_base(spark, sf_dir)
+        .withColumn("bucket", _lsh_bucket_col())
         .repartition(F.col("bucket"))
         # Row norm computed once post-shuffle (not per candidate pair);
         # the query side inherits it as qnorm below. Bit-same value.
-        .withColumn("enorm", F.expr(f"sqrt({_dot_sql('emb', 'emb')})"))
+        .withColumn("enorm", _norm("emb"))
     )
     masks = F.array(*[F.lit(m) for m in _probe_masks()])
-    q = (
-        bucketed.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("emb").alias("qemb"),
-            F.col("enorm").alias("qnorm"),
-            F.explode(
-                F.transform(masks, lambda m: F.col("bucket").bitwiseXOR(m))
-            ).alias("bucket"),
-        )
+    q = bucketed.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("qid"),
+        F.col("emb").alias("qemb"),
+        F.col("enorm").alias("qnorm"),
+        F.explode(
+            F.transform(masks, lambda m: F.col("bucket").bitwiseXOR(m))
+        ).alias("bucket"),
     )
-    sim = F.expr(_dot_sql("emb", "qemb")) / (
-        F.col("enorm") * F.col("qnorm")
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
-    return (
-        bucketed.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", sim.alias("__raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
+    return _cosine_topk(
+        bucketed.join(F.broadcast(q), "bucket").filter(
+            F.col("vec_id") != F.col("qid")
+        ),
+        3,
     )
 
 
@@ -1019,82 +1260,8 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 # both engines evaluate the exact same float expression shapes.
 # ---------------------------------------------------------------------------
 
-_PQ_M = 8
-_PQ_SUBDIM = 8
-_PQ_K = 16
-
-_L2_SQL = (
-    "(list_dot_product({a}, {a}) - 2 * list_dot_product({a}, {b})"
-    " + list_dot_product({b}, {b}))"
-)
-
-
-def _pq_dist_union_sql() -> str:
-    """Per (vector, subspace, centroid): the SELECTION metric ``dsel`` =
-    ‖c‖² − 2a·c (the per-vector-constant ‖a‖² term cannot change the
-    argmin, and dropping it is a third of the arithmetic — the engine
-    precomputes ‖c‖² in the codebook) and the full squared L2 ``dist``
-    (ADC sums true distances). One SELECT per subspace — static slice
-    bounds, like the Spark side's unrolled loop."""
-    parts = []
-    for s in range(_PQ_M):
-        lo, hi = s * _PQ_SUBDIM + 1, (s + 1) * _PQ_SUBDIM
-        a, b = f"e.emb[{lo}:{hi}]", f"x.cemb[{lo}:{hi}]"
-        dsel = f"(list_dot_product({b}, {b}) - 2 * list_dot_product({a}, {b}))"
-        parts.append(
-            f"SELECT e.vec_id, {s} AS s, x.cent,"
-            f" {dsel} AS dsel,"
-            f" {_L2_SQL.format(a=a, b=b)} AS dist"
-            f" FROM e CROSS JOIN seeds x"
-        )
-    return "\n        UNION ALL\n        ".join(parts)
-
-
-_PQ_BASE_SQL = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    seeds AS (SELECT vec_id AS cent, emb AS cemb FROM e WHERE vec_id < {_PQ_K}),
-    d AS (
-        {{dist_union}}
-    ),
-    picked AS (
-        SELECT vec_id, s, cent FROM (
-            SELECT vec_id, s, cent, row_number() OVER (
-                PARTITION BY vec_id, s ORDER BY dsel, cent) AS rn
-            FROM d
-        ) WHERE rn = 1
-    )
-"""
-
-
-def _pq_encode_sql() -> str:
-    return (
-        _PQ_BASE_SQL.format(dist_union=_pq_dist_union_sql())
-        + """
-    SELECT vec_id, string_agg(cent::VARCHAR, ',' ORDER BY s) AS codes_csv
-    FROM picked GROUP BY vec_id
-    """
-    )
-
-
-def _pq_adc_sql() -> str:
-    # Fixed-order sum over subspaces (CASE-pivot): a plain sum() aggregates
-    # the 8 per-subspace doubles in nondeterministic order, and fp addition
-    # order must match Spark's static s=0..7 chain exactly.
-    pivot = " + ".join(
-        f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
-    )
-    return (
-        _PQ_BASE_SQL.format(dist_union=_pq_dist_union_sql())
-        + f"""
-    , qd AS (SELECT s, cent, dist FROM d WHERE vec_id = 0)
-    SELECT vec_id, round(adc, 6) AS adc_dist FROM (
-        SELECT p.vec_id, {pivot} AS adc
-        FROM picked p JOIN qd ON qd.s = p.s AND qd.cent = p.cent
-        WHERE p.vec_id <> 0
-        GROUP BY p.vec_id
-    ) ORDER BY adc, vec_id LIMIT 10
-    """
-    )
+#: The standalone-PQ oracle head: corpus, the k=16 medoid codebook, codes.
+_PQ_HEAD = (_E_CTE, _seeds_cte(where=f"vec_id < {_PQ_K}"), _pq_codes_ctes())
 
 
 def _pq_codebook(e: DataFrame) -> DataFrame:
@@ -1112,15 +1279,6 @@ def _pq_codebook(e: DataFrame) -> DataFrame:
     fails fast at the one-row codebook build (``assert_true`` is part of
     the ``__seeds`` expression itself, so it cannot be pruned and costs
     one k-element scan total, not per corpus row)."""
-    arr = (
-        e.filter(F.col("vec_id") < _PQ_K)
-        .select(
-            F.struct(
-                F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-            ).alias("s")
-        )
-        .agg(F.sort_array(F.collect_list("s")).alias("__raw"))
-    )
     bb_terms = ", ".join(
         _dot_sql(
             f"slice(c.cemb, {s * _PQ_SUBDIM + 1}, {_PQ_SUBDIM})",
@@ -1145,15 +1303,11 @@ def _pq_codebook(e: DataFrame) -> DataFrame:
         f"CASE WHEN assert_true({contiguous}, '{msg}') IS NULL "
         f"THEN {with_bb} END"
     )
-    return arr.select(checked.alias("__seeds"))
+    return _seed_fold(_medoid_seeds(e, _PQ_K)).select(checked.alias("__seeds"))
 
 
-def _l2(a, b):
-    return _dot(a, a) - 2 * _dot(a, b) + _dot(b, b)
-
-
-def _pq_code_sql(s: int, vec: str = "emb") -> str:
-    """SQL text for the argmin centroid id for subspace ``s`` of ``vec``
+def _pq_code_sql(s: int) -> str:
+    """SQL text for the argmin centroid id for subspace ``s`` of ``emb``
     against the broadcast ``__seeds`` — static slice bounds (the m=8 loop
     is unrolled in Python), strictly-less fold so the lowest centroid wins
     ties, ``coalesce`` keeps the code key non-nullable (the IVF round-5
@@ -1163,7 +1317,7 @@ def _pq_code_sql(s: int, vec: str = "emb") -> str:
     Text form for the same reason as :func:`_dot_sql` — the Column form
     of the unrolled folds dominated query BUILD time."""
     lo = s * _PQ_SUBDIM + 1
-    sub = f"slice({vec}, {lo}, {_PQ_SUBDIM})"
+    sub = f"slice(emb, {lo}, {_PQ_SUBDIM})"
     scored = (
         "transform(__seeds, c -> named_struct("
         f"'dist', element_at(c.bb, {s + 1})"
@@ -1182,13 +1336,130 @@ def _pq_code_sql(s: int, vec: str = "emb") -> str:
     return f"coalesce({best}, -1)"
 
 
-def _pq_code(s: int, vec: str = "emb") -> "F.Column":
-    """Column form of :func:`_pq_code_sql` (``vec`` is a SQL fragment)."""
-    return F.expr(_pq_code_sql(s, vec))
+def _pq_codes_col() -> "F.Column":
+    """``array<int>`` of the m=8 PQ codes for the ``emb`` column against
+    the broadcast ``__seeds`` codebook — the stored-index payload."""
+    return F.expr(
+        "array("
+        + ", ".join(f"cast({_pq_code_sql(s)} as int)" for s in range(_PQ_M))
+        + ")"
+    )
+
+
+def _pq_encode(assigned: DataFrame, cb: DataFrame) -> DataFrame:
+    """The IVFADC index rows ``(vec_id, cell, codes)``: a cell-assigned
+    stream (``vec_id, emb, cell``) PQ-encoded against the broadcast
+    one-row codebook — map-only, after which the raw embeddings are never
+    read again. Shared by every one-shot query and ``plans/ann_index.py``
+    (build and append) so the code layout can never drift between the
+    oracled query and the persisted path."""
+    return assigned.crossJoin(F.broadcast(cb)).select(
+        "vec_id", "cell", _pq_codes_col().alias("codes")
+    )
+
+
+def _pq_qtabs_col(qvec: str = "qemb") -> "F.Column":
+    """Per-query distance tables (m=8 × k=16 doubles) for the ``qvec``
+    column against the broadcast ``__seeds`` codebook."""
+
+    def _qtab(lo: int) -> str:
+        qsub = f"slice({qvec}, {lo}, {_PQ_SUBDIM})"
+        return (
+            "transform(__seeds, c -> "
+            f"{_l2_sql(qsub, f'slice(c.cemb, {lo}, {_PQ_SUBDIM})')})"
+        )
+
+    return F.expr(
+        "array("
+        + ", ".join(_qtab(s * _PQ_SUBDIM + 1) for s in range(_PQ_M))
+        + ")"
+    )
+
+
+def _pq_qtabs(
+    q: DataFrame, cb: DataFrame, qvec: str = "qemb", keys: tuple = ("qid",)
+) -> DataFrame:
+    """``(*keys, __qtabs)``: each query row's distance tables against the
+    broadcast codebook — computed once per query on the small side, never
+    per corpus row (oracle: :func:`_pq_dists_sql`)."""
+    return q.crossJoin(F.broadcast(cb)).select(
+        *keys, _pq_qtabs_col(qvec).alias("__qtabs")
+    )
+
+
+def _adc_sum(code_idx) -> "F.Column":
+    """The ADC distance: the FIXED s=0..7 sum of ``__qtabs`` lookups at
+    the 1-based positions ``code_idx(s)`` (fp addition order is
+    load-bearing for the oracle's :data:`_ADC_PIVOT_SQL` — do not
+    reorder). Position == centroid id: guaranteed by _pq_codebook's
+    contiguity assertion."""
+    return F.expr(
+        " + ".join(
+            f"element_at(element_at(__qtabs, {s + 1}), {code_idx(s)})"
+            for s in range(_PQ_M)
+        )
+    )
+
+
+def _adc_topk(
+    index_df: DataFrame,
+    probes: DataFrame,
+    qtabs: DataFrame,
+    k: int,
+    exclude_self: bool = True,
+    broadcast_queries: bool = True,
+    keys: tuple = ("qid",),
+) -> DataFrame:
+    """ADC ranking block shared by every one-shot query and the
+    persisted-index probe: candidates = index ⋈ probes on cell,
+    distance = :func:`_adc_sum` at the candidates' stored codes, top-``k``
+    per query by (adc, vec_id). ``qtabs`` attach on ``keys`` (``qid``, or
+    ``qid, cell`` for per-cell residual tables). ``exclude_self`` drops
+    index rows whose vec_id equals the qid — correct ONLY when the
+    queries are corpus vectors (self-match removal); external query
+    batches must pass False or a legitimate neighbor that happens to
+    share the numbering is silently lost.
+
+    ``broadcast_queries`` picks the probe-side physical tier, the same
+    small-vs-large split as ``similarity_ann_ivf`` vs ``_ivf_join``:
+
+    - True (serving default): probes and distance tables broadcast —
+      right while Q·nprobe and Q·m·k·8B fit the broadcast budget; the
+      index side is never exchanged.
+    - False (the LARGE-batch tier — nightly re-embedding scoring, bulk
+      backfill): the cell join becomes a sort-merge join the BUCKETED
+      index side enters Exchange-free (bucketing discipline paid at
+      build), and the qtabs attach on qid shuffles the candidate
+      stream against the query tables instead of broadcasting a
+      table set that no longer fits. Results are identical by
+      construction — both tiers share this one ranking expression."""
+    adc = _adc_sum(lambda s: f"element_at(codes, {s + 1}) + 1")
+    if broadcast_queries:
+        cand = index_df.join(F.broadcast(probes), "cell")
+        qt = F.broadcast(qtabs)
+    else:
+        cand = index_df.hint("merge").join(probes, "cell")
+        qt = qtabs
+    if exclude_self:
+        cand = cand.filter(F.col("vec_id") != F.col("qid"))
+    w = W.partitionBy("qid").orderBy(F.asc("__adc"), F.asc("vec_id"))
+    return (
+        cand.join(qt, list(keys))
+        .select("qid", "vec_id", adc.alias("__adc"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("qid", "vec_id", F.round(F.col("__adc"), 6).alias("adc_dist"))
+    )
+
+
+_PQ_ENCODE_SQL = _with(*_PQ_HEAD) + """
+    SELECT vec_id, string_agg(cent::VARCHAR, ',' ORDER BY s) AS codes_csv
+    FROM picked GROUP BY vec_id
+    """
 
 
 @register(
-    "vector_pq_encode_catalyst", _pq_encode_sql(), tags=("similarity", "vector")
+    "vector_pq_encode_catalyst", _PQ_ENCODE_SQL, tags=("similarity", "vector")
 )
 def vector_pq_encode_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encoding: each 64-dim vector → 8 centroid ids
@@ -1206,9 +1477,7 @@ def vector_pq_encode_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_embedding_ann_catalyst`` disease); the headline
     ``vector_pq_encode`` routes to the BLAS kernel. Guarded by
     :func:`_check_catalyst_row_budget` (VERDICT r10 #2)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = _emb_base(spark, sf_dir)
     _check_catalyst_row_budget(
         e,
         "vector_pq_encode_catalyst",
@@ -1216,7 +1485,6 @@ def vector_pq_encode_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
         _CATALYST_ROW_BUDGET_ENCODE,
         env_suffix="ENCODE",
     )
-    cb = _pq_codebook(e)
     codes_csv = F.expr(
         "concat_ws(','"
         + "".join(
@@ -1224,12 +1492,12 @@ def vector_pq_encode_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         + ")"
     )
-    return e.crossJoin(F.broadcast(cb)).select(
+    return e.crossJoin(F.broadcast(_pq_codebook(e))).select(
         "vec_id", codes_csv.alias("codes_csv")
     )
 
 
-@register("vector_pq_encode", _pq_encode_sql(), tags=("similarity", "vector"))
+@register("vector_pq_encode", _PQ_ENCODE_SQL, tags=("similarity", "vector"))
 def vector_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEADLINE PQ encode (r10: routes to the BLAS tier; the Catalyst
     fold formulation stays registered as ``vector_pq_encode_catalyst``
@@ -1248,9 +1516,7 @@ def vector_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = _emb_base(spark, sf_dir)
     C = _collect_seed_matrix(e, _PQ_K, "PQ codebook cells")
     bc = spark.sparkContext.broadcast(C)
 
@@ -1294,7 +1560,19 @@ def vector_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.mapInPandas(enc, "vec_id bigint, codes_csv string")
 
 
-@register("similarity_pq_adc", _pq_adc_sql(), tags=("similarity",))
+@register(
+    "similarity_pq_adc",
+    _with(*_PQ_HEAD, "qd AS (SELECT s, cent, dist FROM d WHERE vec_id = 0)")
+    + f"""
+    SELECT vec_id, round(adc, 6) AS adc_dist FROM (
+        SELECT p.vec_id, {_ADC_PIVOT_SQL} AS adc
+        FROM picked p JOIN qd ON qd.s = p.s AND qd.cent = p.cent
+        WHERE p.vec_id <> 0
+        GROUP BY p.vec_id
+    ) ORDER BY adc, vec_id LIMIT 10
+    """,
+    tags=("similarity",),
+)
 def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-10 for query vec_id=0: the query
     precomputes a (subspace × centroid) distance table against the
@@ -1306,25 +1584,14 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle). Oracle mirrors the lookup sum in the same fixed subspace
     order (fp addition order matters)."""
     e = _emb_base(spark, sf_dir, persist=True)
-    cb = _pq_codebook(e)
     q = e.filter(F.col("vec_id") == 0).select(F.col("emb").alias("qemb"))
-
     # The (subspace × centroid) query distance table is PER-QUERY state:
     # compute it ONCE on the one-row broadcast side (codebook × query),
-    # not per corpus row. Full L2 here — these are the values ADC sums.
-    adc_side = cb.crossJoin(q).select(
+    # not per corpus row; the corpus rows' codes are folded inline.
+    adc_side = _pq_codebook(e).crossJoin(q).select(
         "__seeds", _pq_qtabs_col("qemb").alias("__qtabs")
     )
-    # position == centroid id: guaranteed by _pq_codebook's contiguity
-    # assertion (a sparse seed set fails the build). Fixed s=0..7 sum
-    # order — fp addition order is load-bearing for the oracle.
-    adc = F.expr(
-        " + ".join(
-            f"element_at(element_at(__qtabs, {s + 1}),"
-            f" cast({_pq_code_sql(s)} + 1 as int))"
-            for s in range(_PQ_M)
-        )
-    )
+    adc = _adc_sum(lambda s: f"cast({_pq_code_sql(s)} + 1 as int)")
     return (
         e.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(adc_side))
@@ -1335,154 +1602,32 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_adc_sql(cand_pred: str = "") -> str:
-    """DuckDB mirror of IVFADC: the PQ CTEs (codebook distances + picked
-    codes) stacked with the IVF assign/probe CTEs — ``seeds`` doubles as
-    both the PQ codebook and the IVF quantizer (identical medoids), the
-    ADC sum is the same fixed s=0..7 CASE-pivot order as the Spark chain
-    (fp addition order matters).
+# ---------------------------------------------------------------------------
+# IVFADC: one-shot member-query chains.
+# ---------------------------------------------------------------------------
 
-    ``cand_pred``: optional extra SQL predicate (``AND ...``) on the
-    candidate side ``a`` of the ADC join — mirrors a probe-side
-    tombstone mask (``delete_from_ann_index``) or attribute
-    ``candidate_filter``; both apply BEFORE the top-k window, exactly
-    as the Spark plan does (pre-filtering)."""
-    scaled_a = _IVF_SCALED.format(a="e.emb", b="x.cemb")
-    scaled_q = _IVF_SCALED.format(a="q.emb", b="x.cemb")
-    pivot = " + ".join(
-        f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
+
+def _member_ivfadc(spark: SparkSession, sf_dir: str, k: int):
+    """The one-shot member-query IVFADC chain up to the ADC top-``k``:
+    one map-only corpus pass builds the index rows ``(vec_id, cell,
+    codes)`` (IVF argmax + 8 PQ argmin folds against two broadcast
+    one-row codebooks), the 10 member queries probe 4 of 16 cells and
+    rank candidates by their broadcast distance tables. Returns ``(e, q,
+    topk)`` so the refined tier can re-read the true vectors."""
+    e = _emb_base(spark, sf_dir, persist=True)
+    seed_arr = _seed_array(_medoid_seeds(e))
+    cb = _pq_codebook(e)
+    q = _member_queries(e)
+    probes = _ivf_probes(q, seed_arr, nprobe=_IVF_NPROBE).select("qid", "cell")
+    # queries ARE corpus vectors here → exclude the self-match
+    top = _adc_topk(
+        _pq_encode(_ivf_assign(e, seed_arr), cb),
+        probes,
+        _pq_qtabs(q, cb),
+        k=k,
+        exclude_self=True,
     )
-    return (
-        _PQ_BASE_SQL.format(dist_union=_pq_dist_union_sql())
-        + f"""
-    , assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, x.cent AS cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {scaled_a} DESC, x.cent
-                   ) AS rn
-            FROM e CROSS JOIN seeds x
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, cell FROM (
-            SELECT q.vec_id AS qid, x.cent AS cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {scaled_q} DESC, x.cent
-                   ) AS rn
-            FROM e q CROSS JOIN seeds x
-            WHERE q.vec_id < 10
-        ) WHERE rn <= 4
-    ),
-    qd AS (SELECT vec_id AS qid, s, cent, dist FROM d WHERE vec_id < 10)
-    SELECT qid, vec_id, round(adc, 6) AS adc_dist FROM (
-        SELECT qid, vec_id, adc,
-               row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
-        FROM (
-            SELECT p.qid, a.vec_id, {pivot} AS adc
-            FROM probes p
-            JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.qid
-                 {cand_pred}
-            JOIN picked pk ON pk.vec_id = a.vec_id
-            JOIN qd ON qd.qid = p.qid AND qd.s = pk.s AND qd.cent = pk.cent
-            GROUP BY p.qid, a.vec_id
-        )
-    ) WHERE rn <= 3
-    """
-    )
-
-
-def _pq_codes_col() -> "F.Column":
-    """``array<int>`` of the m=8 PQ codes for the ``emb`` column against
-    the broadcast ``__seeds`` codebook — the stored-index payload. Shared
-    by the one-shot IVFADC query and ``plans/ann_index.py`` so the code
-    layout can never drift between the oracled query and the persisted
-    path."""
-    return F.expr(
-        "array("
-        + ", ".join(f"cast({_pq_code_sql(s)} as int)" for s in range(_PQ_M))
-        + ")"
-    )
-
-
-def _pq_qtabs_col(qvec: str = "qemb") -> "F.Column":
-    """Per-query distance tables (m=8 × k=16 doubles) for the ``qvec``
-    column against the broadcast ``__seeds`` codebook."""
-
-    def _qtab(lo: int) -> str:
-        qsub = f"slice({qvec}, {lo}, {_PQ_SUBDIM})"
-        return (
-            "transform(__seeds, c -> "
-            f"{_l2_sql(qsub, f'slice(c.cemb, {lo}, {_PQ_SUBDIM})')})"
-        )
-
-    return F.expr(
-        "array("
-        + ", ".join(_qtab(s * _PQ_SUBDIM + 1) for s in range(_PQ_M))
-        + ")"
-    )
-
-
-def _adc_topk(
-    index_df: DataFrame,
-    probes: DataFrame,
-    qtabs: DataFrame,
-    k: int,
-    exclude_self: bool = True,
-    broadcast_queries: bool = True,
-) -> DataFrame:
-    """ADC ranking block shared by the oracled one-shot query and the
-    persisted-index probe: candidates = index ⋈ probes on cell,
-    distance = the FIXED s=0..7 table-lookup sum (fp addition order is
-    load-bearing for the DuckDB oracle — do not reorder), top-``k`` per
-    query by (adc, vec_id). ``exclude_self`` drops index rows whose
-    vec_id equals the qid — correct ONLY when the queries are corpus
-    vectors (self-match removal); external query batches must pass False
-    or a legitimate neighbor that happens to share the numbering is
-    silently lost.
-
-    ``broadcast_queries`` picks the probe-side physical tier, the same
-    small-vs-large split as ``similarity_ann_ivf`` vs ``_ivf_join``:
-
-    - True (serving default): probes and distance tables broadcast —
-      right while Q·nprobe and Q·m·k·8B fit the broadcast budget; the
-      index side is never exchanged.
-    - False (the LARGE-batch tier — nightly re-embedding scoring, bulk
-      backfill): the cell join becomes a sort-merge join the BUCKETED
-      index side enters Exchange-free (bucketing discipline paid at
-      build), and the qtabs attach on qid shuffles the candidate
-      stream against the query tables instead of broadcasting a
-      table set that no longer fits. Results are identical by
-      construction — both tiers share this one ranking expression."""
-    from pyspark.sql import Window as W
-
-    # position == centroid id — _pq_codebook asserts contiguity; fixed
-    # s=0..7 addition order is load-bearing for the DuckDB oracle
-    adc = F.expr(
-        " + ".join(
-            f"element_at(element_at(__qtabs, {s + 1}),"
-            f" element_at(codes, {s + 1}) + 1)"
-            for s in range(_PQ_M)
-        )
-    )
-    if broadcast_queries:
-        cand = index_df.join(F.broadcast(probes), "cell")
-        qt = F.broadcast(qtabs)
-    else:
-        cand = index_df.hint("merge").join(probes, "cell")
-        qt = qtabs
-    if exclude_self:
-        cand = cand.filter(F.col("vec_id") != F.col("qid"))
-    w = W.partitionBy("qid").orderBy(F.asc("__adc"), F.asc("vec_id"))
-    return (
-        cand.join(qt, "qid")
-        .select("qid", "vec_id", adc.alias("__adc"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", F.round(F.col("__adc"), 6).alias("adc_dist"))
-    )
+    return e, q, top
 
 
 @register("similarity_ann_ivf_adc", _ivf_adc_sql(), tags=("similarity",))
@@ -1507,10 +1652,10 @@ def similarity_ann_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine over full vectors (right when the probed slice still fits the
     I/O budget); this one never de-references the vector — the 100 TB
     memory math (100 TB of floats → 1.6 TB of codes) only works here.
-    Production refinement not modeled: FAISS encodes the RESIDUAL
-    (emb − centroid) for tighter cells; raw-vector PQ keeps every distance
-    bit-exact across engines, which is what makes this tier fully
-    DuckDB-oracled. Recall vs exact L2 asserted in tests/test_consistency.py.
+    Raw-vector PQ keeps every distance bit-exact across engines, which is
+    what makes this tier fully DuckDB-oracled; the RESIDUAL encoding
+    FAISS uses is ``similarity_ann_ivf_adc_residual``. Recall vs exact L2
+    asserted in tests/test_consistency.py.
 
     Bench-scale caveat: much of the toy-SF wall time is CONSTANT cost —
     plan build + codegen compile; per-row execution is 8 dim-8 dots + 1
@@ -1518,127 +1663,7 @@ def similarity_ann_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and parsed JVM-side in one call (``_dot_sql`` rationale), which cut
     the build constant ~4× vs composing them through the py4j Column
     API; what remains amortizes to zero at any real corpus size."""
-    e = _emb_base(spark, sf_dir, persist=True)
-    seeds = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-    )
-    seed_arr = _seed_array(seeds)
-    cb = _pq_codebook(e)
-    # The persisted index: (vec_id, cell, codes) — map-only, one pass.
-    encoded = (
-        _ivf_assign(e, seed_arr)
-        .crossJoin(F.broadcast(cb))
-        .select("vec_id", "cell", _pq_codes_col().alias("codes"))
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    probes = _ivf_probes(q, seed_arr, nprobe=4).select("qid", "cell")
-    qtabs = q.crossJoin(F.broadcast(cb)).select(
-        "qid", _pq_qtabs_col().alias("__qtabs")
-    )
-    # queries ARE corpus vectors here → exclude the self-match
-    return _adc_topk(encoded, probes, qtabs, k=3, exclude_self=True)
-
-
-@register("similarity_ann_index_adc", _ivf_adc_sql(), tags=("similarity",))
-def similarity_ann_index_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PERSISTED-INDEX tier of IVFADC under the hash gate: build the
-    stored index + codebooks via ``plans/ann_index.build_ann_index``
-    (n_cells=16 to match the oracled one-shot query's quantizer), then
-    serve the same 10-query batch from the STORED tables via
-    ``probe_ann_index`` — the embeddings are never read at probe time.
-    Must equal ``similarity_ann_ivf_adc`` exactly (same oracle SQL): the
-    persisted path's drift risk (torn index/codebook pair, stale
-    quantizer, probe recomputing instead of reading) is exactly what a
-    driver-checked registered arm catches. The incremental
-    ``append_to_ann_index`` equivalence is pinned separately in
-    tests/test_ann_index.py::test_incremental_append_equals_full_build."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index
-
-    build_ann_index(
-        spark, sf_dir, table="ann_ivfadc_index_q", n_buckets=8, n_cells=16
-    )
-    q = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).filter(F.col("qid") < 10)
-    return probe_ann_index(
-        spark, q, table="ann_ivfadc_index_q", nprobe=4, k=3, exclude_self=True
-    )
-
-
-def _ivf_adc_refined_sql(
-    refine_depth: int = 100, k: int = 3, cand_pred: str = ""
-) -> str:
-    """DuckDB mirror of IVFADC + the FAISS refine stage: the `_ivf_adc_sql`
-    CTE stack kept to the ADC top-``refine_depth`` per query, then an
-    exact-cosine re-rank over the candidates' TRUE vectors keeps
-    top-``k``. The r12 recall ledger measured why this stage exists: on a
-    corpus with near-duplicates, whole sibling clusters share one PQ code
-    and ADC ties across them (recall@10 floor 0.14 at sf10); re-scoring
-    the top-R true vectors recovers 0.999 at <1% of the corpus scanned
-    (SCALE.md §Round 12)."""
-    scaled_a = _IVF_SCALED.format(a="e.emb", b="x.cemb")
-    scaled_q = _IVF_SCALED.format(a="q.emb", b="x.cemb")
-    pivot = " + ".join(
-        f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
-    )
-    cos = _IVF_COS.format(a="c.emb", b="qe.emb")
-    return (
-        _PQ_BASE_SQL.format(dist_union=_pq_dist_union_sql())
-        + f"""
-    , assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, x.cent AS cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {scaled_a} DESC, x.cent
-                   ) AS rn
-            FROM e CROSS JOIN seeds x
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, cell FROM (
-            SELECT q.vec_id AS qid, x.cent AS cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {scaled_q} DESC, x.cent
-                   ) AS rn
-            FROM e q CROSS JOIN seeds x
-            WHERE q.vec_id < 10
-        ) WHERE rn <= 4
-    ),
-    qd AS (SELECT vec_id AS qid, s, cent, dist FROM d WHERE vec_id < 10),
-    topr AS (
-        SELECT qid, vec_id FROM (
-            SELECT qid, vec_id,
-                   row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
-            FROM (
-                SELECT p.qid, a.vec_id, {pivot} AS adc
-                FROM probes p
-                JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.qid
-                     {cand_pred}
-                JOIN picked pk ON pk.vec_id = a.vec_id
-                JOIN qd ON qd.qid = p.qid AND qd.s = pk.s AND qd.cent = pk.cent
-                GROUP BY p.qid, a.vec_id
-            )
-        ) WHERE rn <= {int(refine_depth)}
-    )
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim FROM (
-        SELECT t.qid, t.vec_id, sim,
-               row_number() OVER (
-                   PARTITION BY t.qid ORDER BY sim DESC, t.vec_id
-               ) AS rn2
-        FROM (
-            SELECT t.qid, t.vec_id, {cos} AS sim
-            FROM topr t
-            JOIN e c ON c.vec_id = t.vec_id
-            JOIN e qe ON qe.vec_id = t.qid
-        ) t
-    ) WHERE rn2 <= {int(k)}
-    """
-    )
+    return _member_ivfadc(spark, sf_dir, k=3)[2]
 
 
 @register(
@@ -1664,54 +1689,189 @@ def similarity_ann_ivf_adc_refined(spark: SparkSession, sf_dir: str) -> DataFram
     read touches only the shortlist's row groups via the vec_id
     equi-join, and a production layout would make it a point-lookup
     table (the persisted-index twin below serves from stored tables)."""
-    e = _emb_base(spark, sf_dir, persist=True)
-    seeds = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-    )
+    e, q, top = _member_ivfadc(spark, sf_dir, k=100)
+    return _refine_topk(e, q, top.select("qid", "vec_id"), k=3)
+
+
+def _ivf_adc_residual_sql() -> str:
+    """DuckDB mirror of RESIDUAL IVFADC: the raw corpus is ``e0``; the
+    residual CTE SHADOWS the corpus name ``e`` so the shared PQ stages
+    (:func:`_pq_codes_ctes`, the ADC shortlist) apply verbatim to
+    residuals; query distance tables become per-(qid, probed-cell),
+    since the query's residual differs per cell. All arithmetic stays
+    elementwise IEEE (subtract, dot, sqrt) — which is what lets the
+    production residual refinement be fully hash-checked cross-engine,
+    unlike k-means-trained codebooks."""
+    resid = "list_transform(v.emb, (x, i) -> x - s.cemb[i]) AS emb"
+    return _with(
+        f"e0 AS ({_E_SQL})",
+        _seeds_cte("ivfseeds", "e0"),
+        _ivf_cells_cte("assign", "e0", "= 1", seeds="ivfseeds"),
+        f"""e AS (
+        SELECT a.vec_id, {resid}
+        FROM assign a
+        JOIN e0 v ON v.vec_id = a.vec_id
+        JOIN ivfseeds s ON s.cell = a.cell
+    )""",
+        _seeds_cte(
+            where=f"vec_id >= {_PQ_K} AND vec_id < {2 * _PQ_K}",
+            cell=f"vec_id - {_PQ_K}",
+        ),
+        _pq_codes_ctes(),
+        _member_probes_cte(src="e0", seeds="ivfseeds"),
+        f"""qres AS (
+        SELECT p.qid, p.cell, {resid}
+        FROM probes p
+        JOIN e0 v ON v.vec_id = p.qid
+        JOIN ivfseeds s ON s.cell = p.cell
+    )""",
+        f"qd AS ({_pq_dists_sql('qres t', 't.qid, t.cell', 't.emb')})",
+    ) + _adc_select_sql(3, per_cell=True)
+
+
+@register(
+    "similarity_ann_ivf_adc_residual",
+    _ivf_adc_residual_sql(),
+    tags=("similarity",),
+)
+def similarity_ann_ivf_adc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RESIDUAL IVFADC — the production FAISS encoding the plain tier's
+    docstring names as "not modeled" (until r13): PQ quantizes
+    ``emb − centroid(cell)`` instead of the raw vector, with the query
+    distance tables computed per-(query, probed cell) since the query's
+    residual differs per cell. Why production does it: re-centering
+    each cell's population on the origin lets all 8·16 codebook entries
+    resolve within-cell structure instead of re-encoding where the cell
+    is.
+
+    MEASURED VERDICT on this corpus (r13 ledger, SCALING.json
+    ``ann_recall_residual``; numpy kernels test-pinned to this query):
+    with the repo's DETERMINISTIC MEDOID codebooks the residual tier
+    LOSES recall vs raw ADC — 0.655/0.696/0.681/0.654 vs
+    0.664/0.811/0.886/0.899 at nprobe 1/2/4/8 on identical candidate
+    sets — and the raw tier stays the registered default. The honest
+    reading: residual PQ's gains in FAISS come from K-MEANS-TRAINED
+    codebooks (training re-tiles the genuinely re-centered residual
+    distribution); a 16-point sampled residual codebook mis-tiles it,
+    while raw medoids benefit from corpus-points-as-codewords
+    alignment, and scoring MORE candidates through the poorer residual
+    geometry actively displaces true neighbors (recall falls as nprobe
+    grows). Recall recovery at scale is already owned by the refine
+    stage (0.999 at <1 % scanned, SCALE.md §Round 12) — not by a
+    trained codebook this engine deliberately does not model, because
+    training would break cross-engine bit-exactness.
+
+    Composition trap the build guards against: the "first-k rows" medoid
+    rule that is fine for raw vectors DEGENERATES for residuals — the
+    first 16 vectors ARE the IVF seeds, each its own nearest cell, so
+    their residuals are identically zero and the codebook collapses
+    (measured recall 0.0). The codebook therefore samples vectors
+    16..31's residuals, remapped to the contiguous ids the ADC lookup
+    asserts. Cost structure vs the raw tier: one extra broadcast 16-row
+    join + elementwise subtract on the (still map-only) index pass;
+    nprobe× the per-query table arithmetic, tables still
+    broadcast-sized. Fully DuckDB-oracled — deterministic arithmetic
+    end to end."""
+    e = _emb_base(spark, sf_dir)
+    seeds = _medoid_seeds(e)
     seed_arr = _seed_array(seeds)
-    cb = _pq_codebook(e)
-    encoded = (
+    res = (
         _ivf_assign(e, seed_arr)
-        .crossJoin(F.broadcast(cb))
-        .select("vec_id", "cell", _pq_codes_col().alias("codes"))
+        .join(F.broadcast(seeds), "cell")
+        .select(
+            "vec_id",
+            "cell",
+            F.expr("zip_with(emb, cemb, (x, y) -> x - y)").alias("emb"),
+        )
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
+    # residual codebook from vectors 16..31's residuals, remapped to the
+    # contiguous ids _pq_codebook asserts — NOT 0..15: those ARE the IVF
+    # seeds, each its own nearest cell, so their residuals are
+    # identically ZERO and the medoid rule would hand PQ an all-zero
+    # codebook (every code 0, every ADC distance equal — measured
+    # recall 0.0 before this guard; the first-k rule that is fine for
+    # raw vectors degenerates exactly when composed with IVF residuals)
+    cb = _pq_codebook(
+        res.filter(
+            (F.col("vec_id") >= _PQ_K) & (F.col("vec_id") < 2 * _PQ_K)
+        ).select((F.col("vec_id") - _PQ_K).alias("vec_id"), "emb")
     )
-    probes = _ivf_probes(q, seed_arr, nprobe=4).select("qid", "cell")
-    qtabs = q.crossJoin(F.broadcast(cb)).select(
-        "qid", _pq_qtabs_col().alias("__qtabs")
+    q = _member_queries(e)
+    probes = _ivf_probes(q, seed_arr, nprobe=_IVF_NPROBE).select("qid", "cell")
+    qres = (
+        probes.join(F.broadcast(seeds), "cell")
+        .join(F.broadcast(q), "qid")
+        .select(
+            "qid",
+            "cell",
+            F.expr("zip_with(qemb, cemb, (x, y) -> x - y)").alias("qres"),
+        )
     )
-    topr = _adc_topk(encoded, probes, qtabs, k=100, exclude_self=True)
-    return _refine_topk(e, q, topr.select("qid", "vec_id"), k=3)
+    return _adc_topk(
+        _pq_encode(res, cb),
+        probes,
+        _pq_qtabs(qres, cb, qvec="qres", keys=("qid", "cell")),
+        k=3,
+        exclude_self=True,
+        keys=("qid", "cell"),
+    )
 
 
-def _refine_topk(
-    e: DataFrame, q: DataFrame, shortlist: DataFrame, k: int
+# ---------------------------------------------------------------------------
+# IVFADC served from the persisted index (plans/ann_index.py).
+# ---------------------------------------------------------------------------
+
+#: Probe knobs of the member-query index tiers (the one-shot chains' too).
+_MEMBER_PROBE = {"nprobe": _IVF_NPROBE, "k": 3, "exclude_self": True}
+#: The attribute predicate the filtered tiers serve, and its oracle twin
+#: on the ADC candidate side.
+_LABEL_FILTER = "label % 2 = 0"
+_LABEL_PRED_SQL = (
+    f"AND a.vec_id IN (SELECT vec_id FROM embeddings WHERE {_LABEL_FILTER})"
+)
+
+
+def _build_index(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    n_cells: "int | None" = _IVF_CELLS,
+    labels: bool = False,
 ) -> DataFrame:
-    """Exact-cosine re-rank of a per-query ``(qid, vec_id)`` shortlist
-    against the true vectors: broadcast the shortlist onto the embeddings
-    scan, attach the (broadcast) query vectors, window top-``k`` by
-    (cosine DESC, vec_id). Shared by the one-shot refined query and the
-    persisted-index ``probe_ann_index_refined`` path so the rerank
-    semantics cannot drift. Norms hoisted as in ``similarity_knn_join``."""
-    from pyspark.sql import Window as W
+    """Build the stored IVFADC index ``table`` over the whole corpus (8
+    buckets; ``n_cells=None`` sizes the quantizer √N; ``labels`` stores
+    the ``label`` attribute for ``candidate_filter``) and return the
+    corpus frame the probes read their queries and true vectors from."""
+    from ..plans.ann_index import build_ann_index
 
-    norm = F.expr(f"sqrt({_dot_sql('emb', 'emb')})")
-    qn = q.select(
-        "qid", "qemb", F.expr(f"sqrt({_dot_sql('qemb', 'qemb')})").alias("qnorm")
+    build_ann_index(
+        spark, sf_dir, table=table, n_buckets=8, n_cells=n_cells,
+        attributes=(
+            load(spark, sf_dir, "embeddings").select("vec_id", "label")
+            if labels else None
+        ),
     )
-    sim = F.expr(_dot_sql("emb", "qemb")) / (F.col("enorm") * F.col("qnorm"))
-    w = W.partitionBy("qid").orderBy(F.desc("__raw"), F.asc("vec_id"))
-    return (
-        e.join(F.broadcast(shortlist), "vec_id")
-        .withColumn("enorm", norm)
-        .join(F.broadcast(qn), "qid")
-        .select("qid", "vec_id", sim.alias("__raw"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("qid", "vec_id", F.round(F.col("__raw"), 6).alias("cos_sim"))
-    )
+    return _emb_base(spark, sf_dir)
+
+
+@register("similarity_ann_index_adc", _ivf_adc_sql(), tags=("similarity",))
+def similarity_ann_index_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PERSISTED-INDEX tier of IVFADC under the hash gate: build the
+    stored index + codebooks via ``plans/ann_index.build_ann_index``
+    (n_cells=16 to match the oracled one-shot query's quantizer), then
+    serve the same 10-query batch from the STORED tables via
+    ``probe_ann_index`` — the embeddings are never read at probe time.
+    Must equal ``similarity_ann_ivf_adc`` exactly (same oracle SQL): the
+    persisted path's drift risk (torn index/codebook pair, stale
+    quantizer, probe recomputing instead of reading) is exactly what a
+    driver-checked registered arm catches. The incremental
+    ``append_to_ann_index`` equivalence is pinned separately in
+    tests/test_ann_index.py::test_incremental_append_equals_full_build."""
+    from ..plans.ann_index import probe_ann_index
+
+    table = "ann_ivfadc_index_q"
+    e = _build_index(spark, sf_dir, table)
+    return probe_ann_index(spark, _member_queries(e), table=table, **_MEMBER_PROBE)
 
 
 @register(
@@ -1725,19 +1885,13 @@ def similarity_ann_index_adc_refined(spark: SparkSession, sf_dir: str) -> DataFr
     top-R shortlist from the persisted codes table, then re-ranks it
     against a vectors frame — the production shape where the index serves
     the shortlist and only R true vectors per query are ever read."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index_refined
+    from ..plans.ann_index import probe_ann_index_refined
 
     table = "ann_ivfadc_index_rq"
-    build_ann_index(spark, sf_dir, table=table, n_buckets=8, n_cells=16)
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
+    e = _build_index(spark, sf_dir, table)
     return probe_ann_index_refined(
-        spark, q, e, table=table, nprobe=4, k=3, refine_depth=100,
-        exclude_self=True,
+        spark, _member_queries(e), e, table=table, refine_depth=100,
+        **_MEMBER_PROBE,
     )
 
 
@@ -1767,7 +1921,7 @@ def _external_queries(e: DataFrame, n_queries: int = _EXT_N_QUERIES) -> DataFram
       ``md5(cast(vec_id as string))`` — a pseudo-random spread both
       engines order identically; ``qid`` keeps the base ``vec_id``.
     - jitter: per (query, dim) an integer-LCG uniform
-      ``((qid+1)·1000003 + dim·7919) mod 97 / 97 − ½`` scaled by 0.3 —
+      ``((qid+1)·1000003 + dim·7919) mod 97 / 97 − ½`` scaled by 0.13 —
       integer ops are exact and +,×,/ are correctly rounded IEEE, so the
       perturbed vectors are BIT-identical in Spark and DuckDB (unlike the
       recall ledger's numpy-RNG jitter, which certifies recall but cannot
@@ -1814,98 +1968,49 @@ def _external_queries_sql(n_queries: int = _EXT_N_QUERIES) -> str:
     )"""
 
 
-def _external_refined_sql(
-    nprobe: int = _EXT_NPROBE,
-    refine_depth: int = _EXT_REFINE_DEPTH,
-    k: int = _EXT_TOPK,
-    cand_pred: str = "",
-) -> str:
+def _external_refined_sql(cand_pred: str = "") -> str:
     """DuckDB mirror of the EXTERNAL-query serving configuration: the
     held-out batch (``_external_queries_sql``) probed through the
-    √N-cell IVFADC index (scalar-subquery seed rule, as
-    ``_SQRT_N_SEEDS_SQL``) with per-query PQ distance tables computed
-    from the SYNTHESIZED vectors, ADC top-``refine_depth`` with NO
-    self-exclusion, then the exact-cosine refine to top-``k``.
+    √N-cell IVFADC index with per-query PQ distance tables computed
+    from the SYNTHESIZED vectors, ADC top-``_EXT_REFINE_DEPTH`` with NO
+    self-exclusion, then the exact-cosine refine to top-``_EXT_TOPK``.
     ``cand_pred``: extra SQL predicate on the candidate stream
     (``a.vec_id``), applied BEFORE the ADC shortlist forms — the
     pre-filter composition the filtered arms pin."""
-    pivot = " + ".join(
-        f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
+    return _with(
+        _E_CTE,
+        _seeds_cte(),
+        _pq_codes_ctes(),
+        _seeds_cte("ivfseeds", where=_SQRT_N_SQL),
+        _external_queries_sql(),
+        f"qd AS ({_pq_dists_sql('qx t', 't.qid', 't.qemb')})",
+        _ivf_cells_cte("assign", "e", "= 1", seeds="ivfseeds"),
+        _ivf_cells_cte(
+            "probes", "qx", f"<= {_EXT_NPROBE}", seeds="ivfseeds",
+            key="qid", out_key="qid", vec="qemb",
+        ),
+        "topr AS ("
+        + _adc_shortlist_sql(_EXT_REFINE_DEPTH, cand_pred, exclude_self=False)
+        + ")",
+    ) + "\n    " + _cosine_topk_sql(
+        "topr t JOIN e c ON c.vec_id = t.vec_id JOIN qx q ON q.qid = t.qid",
+        _EXT_TOPK,
     )
-    cos = _IVF_COS.format(a="c.emb", b="qe.qemb")
-    qd_parts = []
-    for s in range(_PQ_M):
-        lo, hi = s * _PQ_SUBDIM + 1, (s + 1) * _PQ_SUBDIM
-        a, b = f"q.qemb[{lo}:{hi}]", f"x.cemb[{lo}:{hi}]"
-        qd_parts.append(
-            f"SELECT q.qid, {s} AS s, x.cent,"
-            f" {_L2_SQL.format(a=a, b=b)} AS dist"
-            f" FROM qx q CROSS JOIN seeds x"
-        )
-    qd_union = "\n        UNION ALL\n        ".join(qd_parts)
-    return (
-        _PQ_BASE_SQL.format(dist_union=_pq_dist_union_sql())
-        + f"""
-    , ivfseeds AS (
-        SELECT vec_id AS cell, emb AS cemb FROM e
-        WHERE vec_id < (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM e)
-    ),
-    {_external_queries_sql().lstrip()},
-    qd2 AS (
-        {qd_union}
-    ),
-    assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, x.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="e.emb", b="x.cemb")}
-                                DESC, x.cell
-                   ) AS rn
-            FROM e CROSS JOIN ivfseeds x
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, cell FROM (
-            SELECT q.qid, x.cell,
-                   row_number() OVER (
-                       PARTITION BY q.qid
-                       ORDER BY {_IVF_SCALED.format(a="q.qemb", b="x.cemb")}
-                                DESC, x.cell
-                   ) AS rn
-            FROM qx q CROSS JOIN ivfseeds x
-        ) WHERE rn <= {int(nprobe)}
-    ),
-    topr AS (
-        SELECT qid, vec_id FROM (
-            SELECT qid, vec_id,
-                   row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id)
-                       AS rn
-            FROM (
-                SELECT p.qid, a.vec_id, {pivot} AS adc
-                FROM probes p
-                JOIN assign a ON a.cell = p.cell
-                     {cand_pred}
-                JOIN picked pk ON pk.vec_id = a.vec_id
-                JOIN qd2 qd ON qd.qid = p.qid AND qd.s = pk.s
-                           AND qd.cent = pk.cent
-                GROUP BY p.qid, a.vec_id
-            )
-        ) WHERE rn <= {int(refine_depth)}
-    )
-    SELECT qid, vec_id, round(sim, 6) AS cos_sim FROM (
-        SELECT t.qid, t.vec_id, sim,
-               row_number() OVER (
-                   PARTITION BY t.qid ORDER BY sim DESC, t.vec_id
-               ) AS rn2
-        FROM (
-            SELECT t.qid, t.vec_id, {cos} AS sim
-            FROM topr t
-            JOIN e c ON c.vec_id = t.vec_id
-            JOIN qx qe ON qe.qid = t.qid
-        ) t
-    ) WHERE rn2 <= {int(k)}
-    """
+
+
+def _external_serving(
+    spark: SparkSession, sf_dir: str, table: str, filtered: bool
+) -> DataFrame:
+    """The certified external-query serving path end to end: √N-cell
+    index, held-out batch, refine at nprobe 16 / R 300, no self-exclusion
+    (``filtered``: label attribute stored and pre-filtered)."""
+    from ..plans.ann_index import probe_ann_index_refined
+
+    e = _build_index(spark, sf_dir, table, n_cells=None, labels=filtered)
+    return probe_ann_index_refined(
+        spark, _external_queries(e), e, table=table, nprobe=_EXT_NPROBE,
+        k=_EXT_TOPK, refine_depth=_EXT_REFINE_DEPTH, exclude_self=False,
+        candidate_filter=_LABEL_FILTER if filtered else None,
     )
 
 
@@ -1938,28 +2043,12 @@ def similarity_ann_index_external_refined(
     row a query was jittered from is a legitimate (usually top-1)
     neighbor. Fully DuckDB-oracled end to end; recall at these knobs is
     pinned ≥0.97 at sf1 in tests/test_ann_recall_tool.py."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index_refined
-
-    table = "ann_ivfadc_index_ext"
-    build_ann_index(spark, sf_dir, table=table, n_buckets=8)
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    q = _external_queries(e)
-    return probe_ann_index_refined(
-        spark, q, e, table=table, nprobe=_EXT_NPROBE, k=_EXT_TOPK,
-        refine_depth=_EXT_REFINE_DEPTH, exclude_self=False,
-    )
+    return _external_serving(spark, sf_dir, "ann_ivfadc_index_ext", False)
 
 
 @register(
     "similarity_ann_index_external_filtered_refined",
-    _external_refined_sql(
-        cand_pred=(
-            "AND a.vec_id IN "
-            "(SELECT vec_id FROM embeddings WHERE label % 2 = 0)"
-        )
-    ),
+    _external_refined_sql(_LABEL_PRED_SQL),
     tags=("similarity",),
 )
 def similarity_ann_index_external_filtered_refined(
@@ -1991,23 +2080,7 @@ def similarity_ann_index_external_filtered_refined(
     shared-index pre-filter; strict-identity correlated-filter traffic
     should take the exact filtered scan instead. Fully DuckDB-oracled
     end to end."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index_refined
-
-    table = "ann_ivfadc_index_extf"
-    emb = load(spark, sf_dir, "embeddings")
-    build_ann_index(
-        spark, sf_dir, table=table, n_buckets=8,
-        attributes=emb.select("vec_id", "label"),
-    )
-    e = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    q = _external_queries(e)
-    return probe_ann_index_refined(
-        spark, q, e, table=table, nprobe=_EXT_NPROBE, k=_EXT_TOPK,
-        refine_depth=_EXT_REFINE_DEPTH, exclude_self=False,
-        candidate_filter="label % 2 = 0",
-    )
+    return _external_serving(spark, sf_dir, "ann_ivfadc_index_extf", True)
 
 
 @register("similarity_ann_index_vacuum_adc", _ivf_adc_sql(), tags=("similarity",))
@@ -2029,22 +2102,14 @@ def similarity_ann_index_vacuum_adc(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     table = "ann_ivfadc_index_vq"
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = _emb_base(spark, sf_dir)
     build_ann_index(
-        spark, sf_dir, table=table, n_buckets=8, n_cells=16,
+        spark, sf_dir, table=table, n_buckets=8, n_cells=_IVF_CELLS,
         vectors=e.filter(F.col("vec_id") < 250),
     )
     append_to_ann_index(spark, e.filter(F.col("vec_id") >= 250), table=table)
     vacuum_ann_index(spark, table=table)
-    q = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).filter(F.col("qid") < 10)
-    return probe_ann_index(
-        spark, q, table=table, nprobe=4, k=3, exclude_self=True
-    )
+    return probe_ann_index(spark, _member_queries(e), table=table, **_MEMBER_PROBE)
 
 
 @register(
@@ -2065,36 +2130,19 @@ def similarity_ann_index_delete_adc(spark: SparkSession, sf_dir: str) -> DataFra
     the deleted ids from the candidate side. The physical-reclaim half
     (vacuum applies tombstones to the layout, probe unchanged) is
     pinned in tests/test_ann_index.py."""
-    from ..plans.ann_index import (
-        build_ann_index,
-        delete_from_ann_index,
-        probe_ann_index,
-    )
+    from ..plans.ann_index import delete_from_ann_index, probe_ann_index
 
     table = "ann_ivfadc_index_dq"
-    build_ann_index(spark, sf_dir, table=table, n_buckets=8, n_cells=16)
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = _build_index(spark, sf_dir, table)
     delete_from_ann_index(
         spark, e.filter(F.col("vec_id") % 7 == 3).select("vec_id"), table=table
     )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    return probe_ann_index(
-        spark, q, table=table, nprobe=4, k=3, exclude_self=True
-    )
+    return probe_ann_index(spark, _member_queries(e), table=table, **_MEMBER_PROBE)
 
 
 @register(
     "similarity_ann_index_filtered_adc",
-    _ivf_adc_sql(
-        cand_pred=(
-            "AND a.vec_id IN "
-            "(SELECT vec_id FROM embeddings WHERE label % 2 = 0)"
-        )
-    ),
+    _ivf_adc_sql(cand_pred=_LABEL_PRED_SQL),
     tags=("similarity",),
 )
 def similarity_ann_index_filtered_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2111,32 +2159,19 @@ def similarity_ann_index_filtered_adc(spark: SparkSession, sf_dir: str) -> DataF
     neighbor that ranked below an ineligible one — with a selective
     predicate it returns nothing; the oracle computes the pre-filter
     semantics, so a post-filter implementation hash-fails here."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index
+    from ..plans.ann_index import probe_ann_index
 
     table = "ann_ivfadc_index_fq"
-    emb = load(spark, sf_dir, "embeddings")
-    build_ann_index(
-        spark, sf_dir, table=table, n_buckets=8, n_cells=16,
-        attributes=emb.select("vec_id", "label"),
-    )
-    q = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).filter(F.col("qid") < 10)
+    e = _build_index(spark, sf_dir, table, labels=True)
     return probe_ann_index(
-        spark, q, table=table, nprobe=4, k=3, exclude_self=True,
-        candidate_filter="label % 2 = 0",
+        spark, _member_queries(e), table=table,
+        candidate_filter=_LABEL_FILTER, **_MEMBER_PROBE,
     )
 
 
 @register(
     "similarity_ann_index_filtered_refined",
-    _ivf_adc_refined_sql(
-        cand_pred=(
-            "AND a.vec_id IN "
-            "(SELECT vec_id FROM embeddings WHERE label % 2 = 0)"
-        )
-    ),
+    _ivf_adc_refined_sql(cand_pred=_LABEL_PRED_SQL),
     tags=("similarity",),
 )
 def similarity_ann_index_filtered_refined(
@@ -2154,23 +2189,13 @@ def similarity_ann_index_filtered_refined(
     under a 50 % predicate and loses recall exactly the way the
     refine-depth ledger measured (R=30's 0.39); the oracle computes
     the pre-filter order, so the wrong composition hash-fails."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index_refined
+    from ..plans.ann_index import probe_ann_index_refined
 
     table = "ann_ivfadc_index_frq"
-    emb = load(spark, sf_dir, "embeddings")
-    build_ann_index(
-        spark, sf_dir, table=table, n_buckets=8, n_cells=16,
-        attributes=emb.select("vec_id", "label"),
-    )
-    e = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
+    e = _build_index(spark, sf_dir, table, labels=True)
     return probe_ann_index_refined(
-        spark, q, e, table=table, nprobe=4, k=3, refine_depth=100,
-        exclude_self=True, candidate_filter="label % 2 = 0",
+        spark, _member_queries(e), e, table=table, refine_depth=100,
+        candidate_filter=_LABEL_FILTER, **_MEMBER_PROBE,
     )
 
 
@@ -2188,53 +2213,46 @@ def similarity_ann_index_join_adc(spark: SparkSession, sf_dir: str) -> DataFrame
     and this registration is what catches a drift between them. The
     Exchange-free-index-side claim is plan-asserted in
     tests/test_ann_index.py."""
-    from ..plans.ann_index import build_ann_index, probe_ann_index
+    from ..plans.ann_index import probe_ann_index
 
     table = "ann_ivfadc_index_jq"
-    build_ann_index(spark, sf_dir, table=table, n_buckets=8, n_cells=16)
-    q = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).filter(F.col("qid") < 10)
+    e = _build_index(spark, sf_dir, table)
     return probe_ann_index(
-        spark, q, table=table, nprobe=4, k=3, exclude_self=True,
-        broadcast_queries=False,
+        spark, _member_queries(e), table=table, broadcast_queries=False,
+        **_MEMBER_PROBE,
     )
 
 
-def _probe_cost_sql() -> str:
+def _probe_cost_sql(filtered: bool = False) -> str:
     """DuckDB mirror of the probe-cost report: the IVF assign/probe CTEs
     (16-cell quantizer, nprobe 4, 10 queries) aggregated to per-query
-    probed-cell count + contained candidate rows — no ADC, no codes."""
-    scaled_a = _IVF_SCALED.format(a="e.emb", b="x.cemb")
-    scaled_q = _IVF_SCALED.format(a="q.emb", b="x.cemb")
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    seeds AS (SELECT vec_id AS cell, emb AS cemb FROM e WHERE vec_id < 16),
-    assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, x.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {scaled_a} DESC, x.cell
-                   ) AS rn
-            FROM e CROSS JOIN seeds x
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, cell FROM (
-            SELECT q.vec_id AS qid, x.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {scaled_q} DESC, x.cell
-                   ) AS rn
-            FROM e q CROSS JOIN seeds x
-            WHERE q.vec_id < 10
-        ) WHERE rn <= 4
+    probed-cell count + contained candidate rows — no ADC, no codes.
+    ``filtered``: each candidate is tagged eligible by the label
+    predicate — candidate_rows counts ELIGIBLE rows only and
+    eligible_fraction is the per-query selectivity over the probed
+    cells."""
+    head = _with(
+        _E_CTE,
+        _seeds_cte(),
+        _ivf_cells_cte("assign", "e", "= 1"),
+        _member_probes_cte(),
     )
+    if not filtered:
+        return head + """
     SELECT p.qid, CAST(count(DISTINCT p.cell) AS BIGINT) AS cells_probed,
            CAST(count(a.vec_id) AS BIGINT) AS candidate_rows
     FROM probes p LEFT JOIN assign a ON a.cell = p.cell
+    GROUP BY p.qid
+    """
+    hit = f"count(a.vec_id) FILTER (WHERE l.{_LABEL_FILTER})"
+    return head + f"""
+    SELECT p.qid, CAST(count(DISTINCT p.cell) AS BIGINT) AS cells_probed,
+           CAST({hit} AS BIGINT) AS candidate_rows,
+           round({hit} * 1.0 / greatest(count(a.vec_id), 1), 6)
+               AS eligible_fraction
+    FROM probes p
+    LEFT JOIN assign a ON a.cell = p.cell
+    LEFT JOIN embeddings l ON l.vec_id = a.vec_id
     GROUP BY p.qid
     """
 
@@ -2255,43 +2273,18 @@ def similarity_ann_index_probe_cost(spark: SparkSession, sf_dir: str) -> DataFra
     Plan: query batch quantizes against the broadcast stored seeds
     (map-only) → equi-join against the cell-population aggregate —
     corpus codes are never read."""
-    from ..plans.ann_index import build_ann_index, probe_cost_report
+    from ..plans.ann_index import probe_cost_report
 
     table = "ann_ivfadc_index_pc"
-    build_ann_index(spark, sf_dir, table=table, n_buckets=8, n_cells=16)
-    q = load(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).filter(F.col("qid") < 10)
-    return probe_cost_report(spark, q, table=table, nprobe=4)
-
-
-def _probe_cost_filtered_sql() -> str:
-    """DuckDB mirror of the FILTERED probe-cost report: the same
-    assign/probe CTEs with each candidate tagged eligible by the label
-    predicate — candidate_rows counts ELIGIBLE rows only and
-    eligible_fraction is the per-query selectivity over the probed
-    cells."""
-    base = _probe_cost_sql()
-    head, _, _ = base.rpartition("SELECT p.qid,")
-    return (
-        head
-        + """SELECT p.qid, CAST(count(DISTINCT p.cell) AS BIGINT) AS cells_probed,
-           CAST(count(a.vec_id) FILTER (WHERE l.label % 2 = 0) AS BIGINT)
-               AS candidate_rows,
-           round(count(a.vec_id) FILTER (WHERE l.label % 2 = 0) * 1.0
-                 / greatest(count(a.vec_id), 1), 6) AS eligible_fraction
-    FROM probes p
-    LEFT JOIN assign a ON a.cell = p.cell
-    LEFT JOIN embeddings l ON l.vec_id = a.vec_id
-    GROUP BY p.qid
-    """
+    e = _build_index(spark, sf_dir, table)
+    return probe_cost_report(
+        spark, _member_queries(e), table=table, nprobe=_IVF_NPROBE
     )
 
 
 @register(
     "similarity_ann_index_probe_cost_filtered",
-    _probe_cost_filtered_sql(),
+    _probe_cost_sql(filtered=True),
     tags=("similarity",),
 )
 def similarity_ann_index_probe_cost_filtered(
@@ -2308,416 +2301,11 @@ def similarity_ann_index_probe_cost_filtered(
     burning an unbounded refine budget. Same column-pruned plan as the
     unfiltered report: the predicate rides the attribute column of the
     cell-population aggregate; codes are never read."""
-    from ..plans.ann_index import build_ann_index, probe_cost_report
+    from ..plans.ann_index import probe_cost_report
 
     table = "ann_ivfadc_index_pcf"
-    emb = load(spark, sf_dir, "embeddings")
-    build_ann_index(
-        spark, sf_dir, table=table, n_buckets=8, n_cells=16,
-        attributes=emb.select("vec_id", "label"),
-    )
-    q = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").cast("array<double>").alias("qemb"),
-    ).filter(F.col("qid") < 10)
+    e = _build_index(spark, sf_dir, table, labels=True)
     return probe_cost_report(
-        spark, q, table=table, nprobe=4, candidate_filter="label % 2 = 0"
-    )
-
-
-def _ivf_adc_residual_sql() -> str:
-    """DuckDB mirror of RESIDUAL IVFADC: identical CTE layering to
-    ``_ivf_adc_sql`` but PQ operates on ``emb − centroid(cell)`` — the
-    residual CTE SHADOWS the corpus name ``e`` so the shared PQ
-    fragments (``_pq_dist_union_sql``, the picked argmin, the CASE
-    pivot) apply verbatim to residuals; query distance tables become
-    per-(qid, probed-cell), since the query's residual differs per cell.
-    All arithmetic stays elementwise IEEE (subtract, dot, sqrt) — which
-    is what lets the production residual refinement be fully
-    hash-checked cross-engine, unlike k-means-trained codebooks."""
-    scaled_a = _IVF_SCALED.format(a="e0.emb", b="x.cemb")
-    scaled_q = _IVF_SCALED.format(a="q.emb", b="x.cemb")
-    pivot = " + ".join(
-        f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
-    )
-    qd_parts = []
-    for s in range(_PQ_M):
-        lo, hi = s * _PQ_SUBDIM + 1, (s + 1) * _PQ_SUBDIM
-        a, b = f"qr.emb[{lo}:{hi}]", f"x.cemb[{lo}:{hi}]"
-        qd_parts.append(
-            f"SELECT qr.qid, qr.cell, {s} AS s, x.cent,"
-            f" {_L2_SQL.format(a=a, b=b)} AS dist"
-            f" FROM qres qr CROSS JOIN seeds x"
-        )
-    qd_union = "\n        UNION ALL\n        ".join(qd_parts)
-    return f"""
-    WITH e0 AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    ivfseeds AS (SELECT vec_id AS cell, emb AS cemb FROM e0 WHERE vec_id < 16),
-    assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT e0.vec_id, x.cell,
-                   row_number() OVER (
-                       PARTITION BY e0.vec_id
-                       ORDER BY {scaled_a} DESC, x.cell
-                   ) AS rn
-            FROM e0 CROSS JOIN ivfseeds x
-        ) WHERE rn = 1
-    ),
-    e AS (
-        SELECT a.vec_id,
-               list_transform(v.emb, (x, i) -> x - s.cemb[i]) AS emb
-        FROM assign a
-        JOIN e0 v ON v.vec_id = a.vec_id
-        JOIN ivfseeds s ON s.cell = a.cell
-    ),
-    seeds AS (
-        SELECT vec_id - {_PQ_K} AS cent, emb AS cemb FROM e
-        WHERE vec_id >= {_PQ_K} AND vec_id < {2 * _PQ_K}
-    ),
-    d AS (
-        {_pq_dist_union_sql()}
-    ),
-    picked AS (
-        SELECT vec_id, s, cent FROM (
-            SELECT vec_id, s, cent, row_number() OVER (
-                PARTITION BY vec_id, s ORDER BY dsel, cent) AS rn
-            FROM d
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, cell FROM (
-            SELECT q.vec_id AS qid, x.cell,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {scaled_q} DESC, x.cell
-                   ) AS rn
-            FROM e0 q CROSS JOIN ivfseeds x
-            WHERE q.vec_id < 10
-        ) WHERE rn <= 4
-    ),
-    qres AS (
-        SELECT p.qid, p.cell,
-               list_transform(v.emb, (x, i) -> x - s.cemb[i]) AS emb
-        FROM probes p
-        JOIN e0 v ON v.vec_id = p.qid
-        JOIN ivfseeds s ON s.cell = p.cell
-    ),
-    qd AS (
-        {qd_union}
-    )
-    SELECT qid, vec_id, round(adc, 6) AS adc_dist FROM (
-        SELECT qid, vec_id, adc,
-               row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
-        FROM (
-            SELECT p.qid, a.vec_id, {pivot} AS adc
-            FROM probes p
-            JOIN assign a ON a.cell = p.cell AND a.vec_id <> p.qid
-            JOIN picked pk ON pk.vec_id = a.vec_id
-            JOIN qd ON qd.qid = p.qid AND qd.cell = p.cell
-                   AND qd.s = pk.s AND qd.cent = pk.cent
-            GROUP BY p.qid, a.vec_id
-        )
-    ) WHERE rn <= 3
-    """
-
-
-@register(
-    "similarity_ann_ivf_adc_residual",
-    _ivf_adc_residual_sql(),
-    tags=("similarity",),
-)
-def similarity_ann_ivf_adc_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RESIDUAL IVFADC — the production FAISS encoding the plain tier's
-    docstring names as "not modeled" (until r13): PQ quantizes
-    ``emb − centroid(cell)`` instead of the raw vector, with the query
-    distance tables computed per-(query, probed cell) since the query's
-    residual differs per cell. Why production does it: re-centering
-    each cell's population on the origin lets all 8·16 codebook entries
-    resolve within-cell structure instead of re-encoding where the cell
-    is.
-
-    MEASURED VERDICT on this corpus (r13 ledger, SCALING.json
-    ``ann_recall_residual``; numpy kernels test-pinned to this query):
-    with the repo's DETERMINISTIC MEDOID codebooks the residual tier
-    LOSES recall vs raw ADC — 0.655/0.696/0.681/0.654 vs
-    0.664/0.811/0.886/0.899 at nprobe 1/2/4/8 on identical candidate
-    sets — and the raw tier stays the registered default. The honest
-    reading: residual PQ's gains in FAISS come from K-MEANS-TRAINED
-    codebooks (training re-tiles the genuinely re-centered residual
-    distribution); a 16-point sampled residual codebook mis-tiles it,
-    while raw medoids benefit from corpus-points-as-codewords
-    alignment, and scoring MORE candidates through the poorer residual
-    geometry actively displaces true neighbors (recall falls as nprobe
-    grows). Recall recovery at scale is already owned by the refine
-    stage (0.999 at <1 % scanned, SCALE.md §Round 12) — not by a
-    trained codebook this engine deliberately does not model, because
-    training would break cross-engine bit-exactness.
-
-    Composition trap the build guards against: the "first-k rows" medoid
-    rule that is fine for raw vectors DEGENERATES for residuals — the
-    first 16 vectors ARE the IVF seeds, each its own nearest cell, so
-    their residuals are identically zero and the codebook collapses
-    (measured recall 0.0). The codebook therefore samples vectors
-    16..31's residuals, remapped to the contiguous ids the ADC lookup
-    asserts. Cost structure vs the raw tier: one extra broadcast 16-row
-    join + elementwise subtract on the (still map-only) index pass;
-    nprobe× the per-query table arithmetic, tables still
-    broadcast-sized. Fully DuckDB-oracled — deterministic arithmetic
-    end to end."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    seeds = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-    )
-    seed_arr = _seed_array(seeds)
-    res = (
-        _ivf_assign(e, seed_arr)
-        .join(F.broadcast(seeds), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.expr("zip_with(emb, cemb, (x, y) -> x - y)").alias("emb"),
-        )
-    )
-    # residual codebook from vectors 16..31's residuals, remapped to the
-    # contiguous ids _pq_codebook asserts — NOT 0..15: those ARE the IVF
-    # seeds, each its own nearest cell, so their residuals are
-    # identically ZERO and the medoid rule would hand PQ an all-zero
-    # codebook (every code 0, every ADC distance equal — measured
-    # recall 0.0 before this guard; the first-k rule that is fine for
-    # raw vectors degenerates exactly when composed with IVF residuals)
-    cb = _pq_codebook(
-        res.filter(
-            (F.col("vec_id") >= _PQ_K) & (F.col("vec_id") < 2 * _PQ_K)
-        ).select((F.col("vec_id") - _PQ_K).alias("vec_id"), "emb")
-    )
-    encoded = res.crossJoin(F.broadcast(cb)).select(
-        "vec_id", "cell", _pq_codes_col().alias("codes")
-    )
-    q = e.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qemb")
-    )
-    probes = _ivf_probes(q, seed_arr, nprobe=4).select("qid", "cell")
-    qres = (
-        probes.join(F.broadcast(seeds), "cell")
-        .join(F.broadcast(q), "qid")
-        .select(
-            "qid",
-            "cell",
-            F.expr("zip_with(qemb, cemb, (x, y) -> x - y)").alias("qres"),
-        )
-    )
-    qtabs = qres.crossJoin(F.broadcast(cb)).select(
-        "qid", "cell", _pq_qtabs_col("qres").alias("__qtabs")
-    )
-    from pyspark.sql import Window as W
-
-    adc = F.expr(
-        " + ".join(
-            f"element_at(element_at(__qtabs, {s + 1}),"
-            f" element_at(codes, {s + 1}) + 1)"
-            for s in range(_PQ_M)
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.asc("__adc"), F.asc("vec_id"))
-    return (
-        encoded.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(F.broadcast(qtabs), ["qid", "cell"])
-        .select("qid", "vec_id", adc.alias("__adc"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "vec_id", F.round(F.col("__adc"), 6).alias("adc_dist"))
-    )
-
-
-#: shared oracle of the two SemDeDup arms (Catalyst + BLAS): √N-seed IVF
-#: assignment, per-cell drop of every vector covered by an earlier one.
-_SEMDEDUP_SQL = f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    seeds AS ({_SQRT_N_SEEDS_SQL}),
-    assign AS (
-        SELECT vec_id, emb, cell FROM (
-            SELECT e.vec_id, e.emb, s.cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {_IVF_SCALED.format(a="e.emb", b="s.cemb")} DESC,
-                                s.cell
-                   ) AS rn
-            FROM e CROSS JOIN seeds s
-        ) WHERE rn = 1
-    ),
-    dropped AS (
-        SELECT a.cell, b.vec_id
-        FROM assign a JOIN assign b
-          ON a.cell = b.cell AND a.vec_id < b.vec_id
-        WHERE {_IVF_COS.format(a="a.emb", b="b.emb")} >= 0.4
-        GROUP BY a.cell, b.vec_id
-    ),
-    sizes AS (SELECT cell, count(*) AS n_vectors FROM assign GROUP BY cell),
-    drops AS (SELECT cell, count(*) AS n_dropped FROM dropped GROUP BY cell)
-    SELECT s.cell, s.n_vectors,
-           coalesce(d.n_dropped, 0) AS n_dropped,
-           s.n_vectors - coalesce(d.n_dropped, 0) AS n_kept
-    FROM sizes s LEFT JOIN drops d ON d.cell = s.cell
-    """
-
-
-@register(
-    "dedup_semdedup_prune_catalyst",
-    _SEMDEDUP_SQL,
-    tags=("dedup", "similarity"),
-)
-def dedup_semdedup_prune_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al., arXiv:2303.09540) as a complete prune, not
-    just candidate pairs: cluster the corpus with the map-only IVF
-    assignment, compare cosine ONLY within a cluster, and for every pair
-    above the threshold drop the higher ``vec_id`` (the paper keeps one
-    arbitrary member per semantic-duplicate set; lowest-id is that policy
-    made deterministic). Output is the per-cell audit a curation run
-    records: cluster size, drops, and the surviving count.
-
-    vs ``dedup_embedding_ann`` (same blocking, emits the PAIRS): this is
-    the decision layer — a vector is dropped when ANY earlier same-cell
-    vector covers it, so the grouped-distinct over pair right-sides is the
-    set-cover step. Scale shape: Σ|cell|² cell-confined comparisons with
-    the cell count tracking √N (:func:`_sqrt_n_seeds`) — the r8
-    sf0.1→sf1 scaling run measured the FIXED 16-cell version at
-    exponent 1.28 (1.6 s→31 s; pair volume N²/16) and this √N sizing
-    brought it back subquadratic (N^1.5 kernel asymptote) — plus one
-    |pairs|-sized distinct and two tiny aggregates. The drop rate (the
-    paper's headline: ~50% of web corpora at τ≈0.95 with no quality
-    loss) is what this audit table measures per cell.
-
-    ROLE (r10): the expression-level REFERENCE arm (the
-    ``dedup_embedding_ann_catalyst`` rationale); the headline name
-    ``dedup_semdedup_prune`` routes to the BLAS kernel measured at
-    α=0.64 sf1→sf10. Guarded by :func:`_check_catalyst_row_budget`
-    (VERDICT r10 #2)."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    _check_catalyst_row_budget(
-        e,
-        "dedup_semdedup_prune_catalyst",
-        "dedup_semdedup_prune",
-        _CATALYST_ROW_BUDGET_KERNEL,
-        env_suffix="KERNEL",
-    )
-    seeds = _sqrt_n_seeds(e)
-    # Per-ROW norm, computed once per row: cosine's denominator factors
-    # sqrt(Σx²) depend on one vector each, so hoisting them out of the
-    # per-PAIR expression cuts the Σ|cell|² kernel's arithmetic ~3× (one
-    # dot per pair instead of three) while producing the bit-same value —
-    # the norm fold is the identical expression, just evaluated |cell|
-    # times instead of |cell|² times. coalesce → provably non-nullable
-    # (the simhash fp lesson): the null-intolerant `sim >= τ` filter
-    # otherwise infers isnotnull(norm) and re-materializes the fold inside
-    # a Filter pushed below the barrier; a null-embedding row's pair dot
-    # is null either way, so the 0.0 sentinel can never create a pair.
-    norm = F.expr(
-        f"coalesce(sqrt({_dot_sql('emb', 'emb')}), 0.0D)"
-    )
-    # repartition(cell) = a MATERIALIZATION BARRIER for the assignment:
-    # three consumers read `assign` (both pair-join sides and the cell
-    # sizes), and without the barrier each re-evaluates the argmin fold
-    # over every corpus row (3× the quantizer kernel; with a real √N-cell
-    # quantizer at 100 TB that triples the most expensive map stage). The
-    # identical exchange subtree is built once and reused (ReuseExchange),
-    # and it doubles as the hash partitioning the pair equi-join and the
-    # sizes aggregate need on `cell` — so the barrier does not add a
-    # shuffle, it hoists the one the join already required.
-    assign = (
-        _ivf_assign(e, _seed_array(seeds))
-        .select("vec_id", "cell", "emb", norm.alias("norm"))
-        .repartition(F.col("cell"))
-    )
-    a = assign.select(
-        F.col("vec_id").alias("vec_a"),
-        "cell",
-        F.col("emb").alias("emb_a"),
-        F.col("norm").alias("norm_a"),
-    )
-    b = assign.select(
-        F.col("vec_id").alias("vec_b"),
-        "cell",
-        F.col("emb").alias("emb_b"),
-        F.col("norm").alias("norm_b"),
-    )
-    sim = F.expr(_dot_sql("emb_a", "emb_b")) / (
-        F.col("norm_a") * F.col("norm_b")
-    )
-    dropped = (
-        a.join(b, "cell")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(sim >= 0.4)
-        .select("cell", "vec_b")
-        .distinct()
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_dropped"))
-    )
-    sizes = assign.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
-    return sizes.join(dropped, "cell", "left").select(
-        "cell",
-        "n_vectors",
-        F.coalesce(F.col("n_dropped"), F.lit(0)).alias("n_dropped"),
-        (
-            F.col("n_vectors") - F.coalesce(F.col("n_dropped"), F.lit(0))
-        ).alias("n_kept"),
-    )
-
-
-@register(
-    "dedup_semdedup_prune",
-    _SEMDEDUP_SQL,
-    tags=("dedup", "similarity"),
-)
-def dedup_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HEADLINE SemDeDup arm (r10: the name routes to the measured scale
-    tier; ``dedup_semdedup_prune_catalyst`` is the expression-level
-    reference under the same oracle). Both N^1.5·d stages in BLAS
-    (the ``dedup_embedding_ann`` rationale — interpreted
-    higher-order folds never codegen): numpy batch assignment via
-    :func:`_blas_assignment`, then ONE chunked Gram matrix per cell that
-    marks every column covered by an earlier row (``sim ≥ τ`` with a
-    lower vec_id) and emits the per-cell audit directly — the
-    |pairs|-sized distinct of the Catalyst formulation collapses into a
-    boolean OR over the mask, so nothing pair-shaped is ever
-    materialized."""
-    import numpy as np
-    import pandas as pd
-
-    assigned = _blas_assignment(spark, sf_dir)
-
-    def prune(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        cell = int(pdf["cell"].iloc[0])
-        n_vec = len(pdf)
-        live = pdf[pdf["emb"].notna()]
-        n = len(live)
-        if n < 2:
-            return pd.DataFrame(
-                {"cell": [cell], "n_vectors": [n_vec],
-                 "n_dropped": [0], "n_kept": [n_vec]}
-            )
-        ids = live["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        E = np.array(live["emb"].to_numpy()[order].tolist(), dtype=np.float64)
-        nrm = np.sqrt((E * E).sum(axis=1))
-        cols = np.arange(n)
-        covered = np.zeros(n, dtype=bool)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for st in range(0, n, 2048):
-                en = min(st + 2048, n)
-                Sm = (E[st:en] @ E.T) / np.outer(nrm[st:en], nrm)
-                hit = (cols[None, :] > np.arange(st, en)[:, None]) & (Sm >= 0.4)
-                covered |= hit.any(axis=0)
-        n_dropped = int(covered.sum())
-        return pd.DataFrame(
-            {"cell": [cell], "n_vectors": [n_vec],
-             "n_dropped": [n_dropped], "n_kept": [n_vec - n_dropped]}
-        )
-
-    return assigned.groupBy("cell").applyInPandas(
-        prune, "cell bigint, n_vectors bigint, n_dropped bigint, n_kept bigint"
+        spark, _member_queries(e), table=table, nprobe=_IVF_NPROBE,
+        candidate_filter=_LABEL_FILTER,
     )

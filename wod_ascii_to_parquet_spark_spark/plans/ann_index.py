@@ -20,7 +20,7 @@ index. This module is that split:
   what the live one-shot query returns (equality asserted in
   tests/test_ann_index.py — the persisted path must not drift from the
   DuckDB-oracled one; the expression-level pieces are SHARED with the
-  live query via ``_pq_codes_col``/``_pq_qtabs_col``/``_adc_topk``, so
+  live query via ``_pq_encode``/``_pq_qtabs``/``_adc_topk``, so
   drift is structurally impossible).
 
 The codebooks (IVF quantizer + PQ codebook, both one broadcast row) are
@@ -42,14 +42,16 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import (
     _adc_topk,
+    _emb_base,
     _ivf_assign,
     _ivf_probes,
+    _medoid_seeds,
     _pq_codebook,
-    _pq_codes_col,
-    _pq_qtabs_col,
+    _pq_encode,
+    _pq_qtabs,
     _seed_array,
+    _sqrt_n_seeds,
 )
-from ..registry import load
 
 INDEX_TABLE = "ann_ivfadc_index"
 
@@ -140,9 +142,7 @@ def build_ann_index(
             "freezing sqrt(|slice|) cells for a larger corpus silently "
             "under-partitions every probe"
         )
-    e = vectors if vectors is not None else load(
-        spark, sf_dir, "embeddings"
-    ).select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
+    e = vectors if vectors is not None else _emb_base(spark, sf_dir)
     # ``pq_codebook_vectors`` (columns vec_id 0..k-1, emb) overrides the
     # PQ medoid rule's low-vec_id dependency — the requantize path
     # passes the first 16 LIVE vectors remapped to contiguous ids,
@@ -157,27 +157,13 @@ def build_ann_index(
     # contiguous: assignment and probing match on the struct's cell
     # field, never on position (unlike the PQ codebook).
     if seeds is None:
-        if n_cells is None:
-            from ..operators.similarity import _sqrt_n_seeds
-
-            seeds = _sqrt_n_seeds(e)
-        else:
-            seeds = e.filter(F.col("vec_id") < n_cells).select(
-                F.col("vec_id").alias("cell"), F.col("emb").alias("cemb")
-            )
+        seeds = _sqrt_n_seeds(e) if n_cells is None else _medoid_seeds(e, n_cells)
     seed_arr = _seed_array(seeds)
     cb = _pq_codebook(
         e if pq_codebook_vectors is None else pq_codebook_vectors
     )
-    encoded = (
-        _ivf_assign(e, seed_arr)
-        .crossJoin(F.broadcast(cb))
-        .select(
-            "vec_id",
-            "cell",
-            _pq_codes_col().alias("codes"),
-            F.lit(build_id).alias("build_id"),
-        )
+    encoded = _pq_encode(_ivf_assign(e, seed_arr), cb).withColumn(
+        "build_id", F.lit(build_id)
     )
     if attributes is not None:
         bad = {"cell", "codes", "build_id"} & set(attributes.columns)
@@ -280,9 +266,7 @@ def probe_ann_index(
     probes = _ivf_probes(
         queries.select("qid", "qemb"), ivf_row, nprobe=nprobe
     ).select("qid", "cell")
-    qtabs = queries.crossJoin(F.broadcast(pq_row)).select(
-        "qid", _pq_qtabs_col().alias("__qtabs")
-    )
+    qtabs = _pq_qtabs(queries, pq_row)
     cand = index
     if candidate_filter is not None:
         cand = cand.filter(F.expr(candidate_filter))
@@ -467,16 +451,9 @@ def append_to_ann_index(
         build_id = books.select("build_id").first()[0]
         ivf_row = books.select("__seeds")
         pq_row = books.select(F.col("__pq_seeds").alias("__seeds"))
-        encoded = (
-            _ivf_assign(new_vectors.select("vec_id", "emb"), ivf_row)
-            .crossJoin(F.broadcast(pq_row))
-            .select(
-                "vec_id",
-                "cell",
-                _pq_codes_col().alias("codes"),
-                F.lit(build_id).alias("build_id"),
-            )
-        )
+        encoded = _pq_encode(
+            _ivf_assign(new_vectors.select("vec_id", "emb"), ivf_row), pq_row
+        ).withColumn("build_id", F.lit(build_id))
         # an index built with attributes stores them per row — the delta
         # must carry them too or the appended rows would NULL out of
         # every candidate_filter (silently unfindable under filters)

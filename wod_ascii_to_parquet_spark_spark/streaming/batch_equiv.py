@@ -687,60 +687,16 @@ def _stream_ann_ingest_sql() -> str:
     history cutoff (250 for the first micro-batch, 375 for the second)
     carried through the probe CTE and applied to the candidate stream,
     exactly where the live run's append-between-batches draws the line.
-    Same 16-medoid quantizer/codebook CTEs and fixed-order ADC pivot as
-    ``_ivf_adc_sql``; no self-exclusion (batch and history are
-    disjoint by construction)."""
-    from ..operators.similarity import (
-        _IVF_SCALED,
-        _PQ_BASE_SQL,
-        _PQ_M,
-        _pq_dist_union_sql,
-    )
+    Built from the same oracle stages as ``similarity._ivf_adc_sql``
+    (16-medoid quantizer/codebook, fixed-order ADC pivot); no
+    self-exclusion (batch and history are disjoint by construction)."""
+    from ..operators.similarity import _adc_select_sql, _member_adc_head
 
-    scaled_a = _IVF_SCALED.format(a="e.emb", b="x.cemb")
-    scaled_q = _IVF_SCALED.format(a="q.emb", b="x.cemb")
-    pivot = " + ".join(
-        f"max(CASE WHEN qd.s = {s} THEN qd.dist END)" for s in range(_PQ_M)
-    )
-    return (
-        _PQ_BASE_SQL.format(dist_union=_pq_dist_union_sql())
-        + f"""
-    , assign AS (
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, x.cent AS cell,
-                   row_number() OVER (
-                       PARTITION BY e.vec_id
-                       ORDER BY {scaled_a} DESC, x.cent
-                   ) AS rn
-            FROM e CROSS JOIN seeds x
-        ) WHERE rn = 1
-    ),
-    probes AS (
-        SELECT qid, cell, cutoff FROM (
-            SELECT q.vec_id AS qid, x.cent AS cell,
-                   CASE WHEN q.vec_id < 375 THEN 250 ELSE 375 END AS cutoff,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {scaled_q} DESC, x.cent
-                   ) AS rn
-            FROM e q CROSS JOIN seeds x
-            WHERE q.vec_id >= 250
-        ) WHERE rn <= 4
-    ),
-    qd AS (SELECT vec_id AS qid, s, cent, dist FROM d WHERE vec_id >= 250)
-    SELECT qid, vec_id, round(adc, 6) AS adc_dist FROM (
-        SELECT qid, vec_id, adc,
-               row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
-        FROM (
-            SELECT p.qid, a.vec_id, {pivot} AS adc
-            FROM probes p
-            JOIN assign a ON a.cell = p.cell AND a.vec_id < p.cutoff
-            JOIN picked pk ON pk.vec_id = a.vec_id
-            JOIN qd ON qd.qid = p.qid AND qd.s = pk.s AND qd.cent = pk.cent
-            GROUP BY p.qid, a.vec_id
-        )
-    ) WHERE rn <= 3
-    """
+    return _member_adc_head(
+        queries="vec_id >= 250",
+        carry={"cutoff": "CASE WHEN t.vec_id < 375 THEN 250 ELSE 375 END"},
+    ) + _adc_select_sql(
+        3, cand_pred="AND a.vec_id < p.cutoff", exclude_self=False
     )
 
 
@@ -775,9 +731,9 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..plans.minhash_index import _clear_table
 
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    from ..operators.similarity import _emb_base
+
+    e = _emb_base(spark, sf_dir)
     table = "ann_ivfadc_index_sq"
     sink = f"{table}__pairs"
     build_ann_index(
