@@ -14,7 +14,6 @@ the marker checks):
 from __future__ import annotations
 
 import glob
-import gzip
 import json
 import os
 import shutil
@@ -29,7 +28,25 @@ from wod_ascii_to_parquet_spark_spark.plans.convert import (
     convert_file,
 )
 
+from .wod_encode import make_casts, wod_text, write_wod_file
+
 WOD = "/root/reference/src/test/resources/wod"
+
+#: The generated stand-in for XBTO1967: seeded casts spread over many
+#: geohash3 cells, cast numbers from FIRST_CAST.
+GEN_CASTS, GEN_SEED, FIRST_CAST = 150, 1967, 3411100
+
+
+def _generated_task(tmp_path, dataset="XBT", name="XBTO1967.gz", malformed=frozenset()):
+    """A FileTask over a generated WOD file of GEN_CASTS casts, the casts
+    at the ``malformed`` indices written malformed."""
+    casts = make_casts(GEN_CASTS, GEN_SEED, first_cast=FIRST_CAST)
+    src = write_wod_file(
+        str(tmp_path / "src" / dataset / "OBS" / name),
+        wod_text(casts, malformed=malformed),
+    )
+    out = str(tmp_path / "out")
+    return FileTask(dataset, "OBS", src, out, out)
 
 
 @pytest.fixture(scope="module")
@@ -112,8 +129,7 @@ def test_footer_rewrite_preserves_spark_readability(spark, converted):
 def test_sidecar_heals_on_resume(spark, tmp_path):
     """_SUCCESS present but sidecar missing (crash between the two
     writes) → resume rewrites the sidecar without rebuilding."""
-    out = str(tmp_path / "out")
-    task = FileTask("CTD", "OBS", f"{WOD}/CTD/OBS/CTDO1971.gz", out, out)
+    task = _generated_task(tmp_path, "CTD", "CTDO1971.gz")
     assert convert_file(spark, task) == "converted"
     sidecar = os.path.join(task.output_path, "_geo_metadata.json")
     os.remove(sidecar)
@@ -158,16 +174,14 @@ def test_nested_depths_queryable(spark, converted):
 
 
 def test_skip_then_overwrite(spark, tmp_path):
-    out = str(tmp_path / "out")
-    task = FileTask("CTD", "OBS", f"{WOD}/CTD/OBS/CTDO1971.gz", out, out)
+    task = _generated_task(tmp_path, "CTD", "CTDO1971.gz")
     assert convert_file(spark, task) == "converted"
     assert convert_file(spark, task) == "skipped"  # _SUCCESS present
     assert convert_file(spark, task, overwrite=True) == "converted"
 
 
 def test_stale_temporary_triggers_rebuild(spark, tmp_path):
-    out = str(tmp_path / "out")
-    task = FileTask("CTD", "OBS", f"{WOD}/CTD/OBS/CTDO1971.gz", out, out)
+    task = _generated_task(tmp_path, "CTD", "CTDO1971.gz")
     convert_file(spark, task)
     # simulate a crashed write: remove _SUCCESS, add _temporary
     os.remove(os.path.join(task.output_path, "_SUCCESS"))
@@ -177,23 +191,15 @@ def test_stale_temporary_triggers_rebuild(spark, tmp_path):
 
 
 def test_error_channel(spark, tmp_path):
-    # corrupt copy of a real file → parse errors land in error/<DS>/<LEVEL>/
-    src = tmp_path / "src" / "XBT" / "OBS"
-    src.mkdir(parents=True)
-    raw = gzip.open(f"{WOD}/XBT/OBS/XBTO1967.gz", "rt").read()
-    lines = raw.splitlines()
-    lines[1] = "X" * 80  # corrupt the middle of cast 1's record
-    with gzip.open(src / "XBTO1967.gz", "wt") as f:
-        f.write("\n".join(lines))
-    out = str(tmp_path / "out")
-    task = FileTask("XBT", "OBS", str(src / "XBTO1967.gz"), out, out)
+    # one malformed cast → its parse error lands in error/<DS>/<LEVEL>/
+    task = _generated_task(tmp_path, malformed={1})
     convert_file(spark, task)
     ok = spark.read.parquet(task.output_path)
     errs = spark.read.parquet(task.error_path)
-    assert ok.count() == 9389
+    assert ok.count() == GEN_CASTS - 1
     assert errs.count() == 1
     row = errs.first()
-    assert row.dataset == "XBT" and row.castNumber == 3411247 and row.error
+    assert row.dataset == "XBT" and row.castNumber == FIRST_CAST + 1 and row.error
 
 
 def test_converted_output_prunes_spatially(spark, converted):
@@ -239,14 +245,11 @@ def test_wkb_geometry_arm_geoparquet_10(spark, tmp_path):
 
     from wod_ascii_to_parquet_spark_spark.functions.wkb import parse_wkb_point
 
-    out = str(tmp_path / "wkb_out")
-    task = FileTask(
-        "XBT", "OBS", os.path.join(WOD, "XBT/OBS/XBTO1967.gz"), out, out
-    )
+    task = _generated_task(tmp_path)
     assert convert_file(spark, task, geometry_encoding="wkb") == "converted"
-    base = os.path.join(out, "yearly/XBT/OBS/XBTO1967.parquet")
+    base = task.output_path
     files = sorted(glob.glob(os.path.join(base, "geohash3=*", "*.parquet")))
-    assert files
+    assert len(files) > 4
     checked = 0
     for f in files[:3] + files[-1:]:
         md = pq.read_schema(f).metadata
@@ -263,7 +266,8 @@ def test_wkb_geometry_arm_geoparquet_10(spark, tmp_path):
             checked += 1
     assert checked > 0
     # sidecar advertises the 1.0 footer too
-    meta = json.loads(open(os.path.join(base, "_geo_metadata.json")).read())
+    with open(os.path.join(base, "_geo_metadata.json")) as fh:
+        meta = json.loads(fh.read())
     assert meta["geoparquet_version"] == "1.0.0"
     # Spark reads the binary column back unharmed
     df = spark.read.parquet(base)
@@ -320,3 +324,125 @@ def test_convert_run_leaves_cache_empty(spark, tmp_path, monkeypatch):
     )
     assert len(result.converted) == 2
     assert cm.isEmpty(), "convert() leaked persisted frames after the run"
+
+
+# -- the one-pass GeoParquet writer ------------------------------------------
+
+
+def _data_files(dataset_dir: str) -> list[str]:
+    return sorted(glob.glob(os.path.join(dataset_dir, "geohash3=*", "*.parquet")))
+
+
+def _rows(spark, path: str) -> list[str]:
+    df = spark.read.parquet(path)
+    return sorted(r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect())
+
+
+def _assert_published(spark, task) -> None:
+    """A complete output: markers, no ``_temporary``, one geo-stamped,
+    geohash-sorted file per geohash3 dir, and every ok cast exactly once."""
+    import pyarrow.parquet as pq
+
+    out = task.output_path
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert os.path.exists(os.path.join(out, "_geo_metadata.json"))
+    assert not os.path.exists(os.path.join(out, "_temporary"))
+    files = _data_files(out)
+    cells = glob.glob(os.path.join(out, "geohash3=*"))
+    assert files and len(files) == len(cells)
+    for f in files:
+        assert b"geo" in pq.read_schema(f).metadata, f
+        ghs = pq.read_table(f, columns=["geohash"])["geohash"].to_pylist()
+        assert ghs == sorted(ghs), f
+    assert spark.read.parquet(out).count() == GEN_CASTS
+
+
+def test_crash_before_publish_rename_rebuilds(spark, tmp_path, monkeypatch):
+    """A crash after the writer tasks but before any rename leaves task
+    files under ``_temporary/<job>/`` and no ``_SUCCESS``: the next run
+    rebuilds from scratch."""
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import FsClient
+
+    task = _generated_task(tmp_path)
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crash before the publish renames")
+
+    with monkeypatch.context() as m:
+        m.setattr(FsClient, "rename_all", crash)
+        with pytest.raises(RuntimeError, match="publish renames"):
+            convert_file(spark, task)
+    out = task.output_path
+    left = glob.glob(os.path.join(out, "_temporary", "*", "geohash3=*", "part-*.parquet"))
+    assert left and not os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert not glob.glob(os.path.join(out, "geohash3=*"))
+    assert convert_file(spark, task) == "converted"
+    _assert_published(spark, task)
+
+
+def test_crash_before_success_marker_rebuilds(spark, tmp_path, monkeypatch):
+    """A crash after every rename and the ``_temporary`` delete but before
+    ``_SUCCESS`` leaves published-looking cells with no marker: the next
+    run rebuilds, and no cast is kept twice."""
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import FsClient
+
+    task = _generated_task(tmp_path)
+    real_write = FsClient.write_bytes
+
+    def crash_on_success(self, path, data):
+        if path.endswith("/_SUCCESS"):
+            raise RuntimeError("crash before _SUCCESS")
+        return real_write(self, path, data)
+
+    with monkeypatch.context() as m:
+        m.setattr(FsClient, "write_bytes", crash_on_success)
+        with pytest.raises(RuntimeError, match="before _SUCCESS"):
+            convert_file(spark, task)
+    out = task.output_path
+    assert _data_files(out)
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+    assert not os.path.exists(os.path.join(out, "_temporary"))
+    assert convert_file(spark, task) == "converted"
+    _assert_published(spark, task)
+
+
+def test_fallback_arm_matches_one_pass_writer(spark, tmp_path, monkeypatch):
+    """Where no executor-side store can open the output's scheme, the file
+    job falls back to Spark's partitioned writer plus the footer attach:
+    same rows, same cells, and every file still carries ``geo``."""
+    import wod_ascii_to_parquet_spark_spark.plans.convert as C
+
+    one_pass = _generated_task(tmp_path / "a")
+    assert convert_file(spark, one_pass) == "converted"
+    fallback = _generated_task(tmp_path / "b")
+    monkeypatch.setattr(C, "_resolve_executor_store", lambda *_a: None)
+    assert convert_file(spark, fallback) == "converted"
+    _assert_published(spark, one_pass)
+    _assert_published(spark, fallback)
+    assert [os.path.basename(os.path.dirname(f)) for f in _data_files(one_pass.output_path)] == [
+        os.path.basename(os.path.dirname(f)) for f in _data_files(fallback.output_path)
+    ]
+    assert _rows(spark, one_pass.output_path) == _rows(spark, fallback.output_path)
+
+
+def test_converted_file_job_launches_no_footer_attach_job(spark, tmp_path):
+    """The writer tasks put ``geo`` in every footer as they write, so a
+    converted file-job runs no footer-attach job: no stage of the job
+    group comes from ``geo_metadata``."""
+    task = _generated_task(tmp_path)
+    sc = spark.sparkContext
+    group = f"convert-census-{tmp_path.name}"
+    sc.setJobGroup(group, "convert file-job census")
+    try:
+        assert convert_file(spark, task) == "converted"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    names = [
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert names
+    assert not [n for n in names if "geo_metadata" in n], names
+    _assert_published(spark, task)

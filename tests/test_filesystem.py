@@ -100,10 +100,12 @@ def test_convert_end_to_end_over_file_uris(spark, tmp_path):
     """Full pipeline with BOTH endpoints as URIs: plan/list, parse, write,
     _SUCCESS detection, skip-on-resume, overwrite — all through the Hadoop
     FileSystem layer (the exact code path an s3a:// run takes)."""
+    from .wod_encode import make_casts, wod_text, write_wod_file
+
+    src = f"file://{tmp_path}/src"
+    write_wod_file(f"{tmp_path}/src/APB/OBS/APBO1997.gz", wod_text(make_casts(1, 1997)))
     out = f"file://{tmp_path}/converted"
-    res = convert(
-        spark, f"file://{WOD_FIXTURES}", out, datasets=("APB",), max_concurrent=1
-    )
+    res = convert(spark, src, out, datasets=("APB",), max_concurrent=1)
     assert len(res.converted) == 1 and not res.failed
     produced = res.converted[0]
     assert produced.startswith("file://")
@@ -111,14 +113,12 @@ def test_convert_end_to_end_over_file_uris(spark, tmp_path):
     assert os.path.exists(os.path.join(local_dir, "_SUCCESS"))
     assert glob.glob(os.path.join(local_dir, "geohash3=*"))
     # resume skips through the FS layer
-    res2 = convert(
-        spark, f"file://{WOD_FIXTURES}", out, datasets=("APB",), max_concurrent=1
-    )
+    res2 = convert(spark, src, out, datasets=("APB",), max_concurrent=1)
     assert res2.skipped == [produced] and not res2.converted
     # overwrite rebuilds
     res3 = convert(
         spark,
-        f"file://{WOD_FIXTURES}",
+        src,
         out,
         datasets=("APB",),
         max_concurrent=1,
@@ -126,10 +126,25 @@ def test_convert_end_to_end_over_file_uris(spark, tmp_path):
     )
     assert res3.converted == [produced]
     df = spark.read.parquet(produced)
-    assert df.count() == 1  # APB fixture has one cast
+    assert df.count() == 1  # one generated cast
 
 
 def test_s3a_probe_is_honest(spark):
     """No hadoop-aws in this environment — the probe must say so (and a
     deployment THAT HAS the jars flips this to True with no code change)."""
     assert s3a_available(spark) is False
+
+
+def test_rename_all_moves_dirs_and_raises_on_a_refused_rename(spark, tmp_path):
+    """The convert publish renames every cell dir with ``rename_all``; a
+    rename the filesystem refuses (Hadoop returns false, here a dir onto
+    an existing file) must raise, not leave the cell unpublished."""
+    fs = FsClient(spark)
+    for d in ("a", "b"):
+        (tmp_path / "t" / d).mkdir(parents=True)
+    fs.rename_all([(f"file:{tmp_path}/t/{d}", f"file:{tmp_path}/{d}") for d in ("a", "b")])
+    assert (tmp_path / "a").is_dir() and (tmp_path / "b").is_dir()
+    assert not list((tmp_path / "t").iterdir())
+    (tmp_path / "file").write_text("x")
+    with pytest.raises(OSError, match="refused"):
+        fs.rename_all([(f"file:{tmp_path}/a", f"file:{tmp_path}/file")])

@@ -9,8 +9,9 @@ through the Hadoop FileSystem API, exactly like s3a would be. Every remote
 branch the s3a deployment exercises runs for real here:
 
 - source discovery + paged listing through ``FsClient`` on remote URIs,
-- executor reads (gunzip) and the partitioned parquet write + ``_SUCCESS``
-  commit through the Hadoop connector,
+- executor reads (gunzip), the one-pass GeoParquet writer's tasks
+  writing through the executor store (the viewfs mount map), and the
+  driver's rename publish + ``_SUCCESS`` through the Hadoop connector,
 - the remote GeoParquet footer attach via the byte API (sibling-temp +
   delete + rename crash protocol, incl. its recovery pre-pass),
 - skip/resume and sidecar healing keyed on remote marker objects.
@@ -22,6 +23,7 @@ leaks between tests.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import uuid
 
@@ -40,7 +42,7 @@ from wod_ascii_to_parquet_spark_spark.sources.filesystem import (
     local_os_path,
 )
 
-WOD = "/root/reference/src/test/resources/wod"
+from .wod_encode import make_casts, wod_text, write_wod_file
 
 
 @pytest.fixture()
@@ -65,14 +67,29 @@ def _upload(fs: FsClient, local: str, remote: str) -> None:
         fs.write_bytes(remote, fh.read())
 
 
-def test_simple_mirror(spark, mock_store):
+def _upload_generated(fs: FsClient, tmp_path, rel: str, remote: str) -> None:
+    """Upload a generated WOD file (its seed taken from ``rel``) to
+    ``remote`` — the stand-in for one reference fixture."""
+    local = str(tmp_path / "gen" / rel)
+    casts = make_casts(40, sum(map(ord, rel)), first_cast=1000)
+    _upload(fs, write_wod_file(local, wod_text(casts)), remote)
+
+
+def _generated_xbt(tmp_path) -> str:
+    """A local generated XBT file whose casts span many geohash3 cells."""
+    return write_wod_file(
+        str(tmp_path / "gen" / "XBTO1967.gz"), wod_text(make_casts(120, 1967))
+    )
+
+
+def test_simple_mirror(spark, mock_store, tmp_path):
     """testSimple (SparklerExecutorTest.java:78-113): three fixtures in a
     source bucket, two datasets × two levels, output bucket gains the
     three ``_SUCCESS``-marked yearly datasets."""
     fs = FsClient(spark)
     src, out = mock_store + "/wod-ascii", mock_store + "/wod-parquet"
     for rel in ("APB/OBS/APBO1997.gz", "CTD/OBS/CTDO1971.gz", "CTD/STD/CTDS1967.gz"):
-        _upload(fs, f"{WOD}/{rel}", f"{src}/{rel}")
+        _upload_generated(fs, tmp_path, rel, f"{src}/{rel}")
     assert fs.file_sizes(out) == {}  # output bucket starts empty
 
     result = convert(
@@ -92,8 +109,8 @@ def test_simple_mirror(spark, mock_store):
     ):
         assert f"{out}/{marker}" in keys, marker
 
-    # the REMOTE footer-attach branch ran: a data file read back through
-    # the byte API carries the geo footer, and Spark reads the dataset
+    # the executor-store writer ran: a data file read back through the
+    # byte API carries the geo footer, and Spark reads the dataset
     apb = f"{out}/yearly/APB/OBS/APBO1997.parquet"
     data_files = [p for p in fs.file_sizes(apb) if p.endswith(".parquet")]
     assert data_files
@@ -121,16 +138,15 @@ def test_simple_mirror(spark, mock_store):
     assert healed.skipped and fs.exists(f"{apb}/{SIDECAR_NAME}")
 
 
-def test_prefix_and_sur_rename_mirror(spark, mock_store):
+def test_prefix_and_sur_rename_mirror(spark, mock_store, tmp_path):
     """testPrefix + testPrefixSUR (SparklerExecutorTest.java:115-170):
     source and output share one bucket under distinct prefixes, and the
     SURF_ALL input publishes as SUR_ALL (DatasetYearTrain.java:39-40)."""
     fs = FsClient(spark)
     src = mock_store + "/test-bucket/wod-ascii"
     out = mock_store + "/test-bucket/wod-parquet"
-    _upload(fs, f"{WOD}/APB/OBS/APBO1997.gz", f"{src}/APB/OBS/APBO1997.gz")
-    _upload(fs, f"{WOD}/CTD/OBS/CTDO1971.gz", f"{src}/CTD/OBS/CTDO1971.gz")
-    _upload(fs, f"{WOD}/SUR/OBS/SURF_ALL.gz", f"{src}/SUR/OBS/SURF_ALL.gz")
+    for rel in ("APB/OBS/APBO1997.gz", "CTD/OBS/CTDO1971.gz", "SUR/OBS/SURF_ALL.gz"):
+        _upload_generated(fs, tmp_path, rel, f"{src}/{rel}")
 
     result = convert(
         spark, source=src, output=out, datasets=("APB", "SUR"), levels=("OBS",)
@@ -147,16 +163,14 @@ def test_prefix_and_sur_rename_mirror(spark, mock_store):
     assert not any("/yearly/CTD/" in k for k in keys)
 
 
-def test_remote_attach_crash_heal_on_store(spark, mock_store):
+def test_remote_attach_crash_heal_on_store(spark, mock_store, tmp_path):
     """The remote attach's crash protocol on a real Hadoop scheme: an
     orphaned sibling temp (crash between delete and rename) is promoted
     by the recovery pre-pass; a temp alongside its base is dropped."""
     fs = FsClient(spark)
-    out = mock_store + "/heal/XBTO1967.parquet"
-    task = FileTask("XBT", "OBS", f"{WOD}/XBT/OBS/XBTO1967.gz", "", "")
-    # build a real output remotely first (small path: one file)
+    # build a real output remotely first
     local_task = FileTask(
-        "XBT", "OBS", f"{WOD}/XBT/OBS/XBTO1967.gz",
+        "XBT", "OBS", _generated_xbt(tmp_path),
         mock_store + "/heal-root", mock_store + "/heal-root",
     )
     assert convert_file(spark, local_task) == "converted"
@@ -209,7 +223,7 @@ class _CountingFs:
         return self._inner.rename(src, dst)
 
 
-def test_remote_attach_runs_as_spark_job(spark, mock_store):
+def test_remote_attach_runs_as_spark_job(spark, mock_store, tmp_path):
     """The remote footer attach with a live session is a SPARK JOB: the
     driver issues one listing RPC and zero per-file byte RPCs — executors
     resolve the store themselves (viewfs mount map shipped as data) and
@@ -217,7 +231,7 @@ def test_remote_attach_runs_as_spark_job(spark, mock_store):
     work scales with executors, not with driver py4j round-trips."""
     fs = FsClient(spark)
     task = FileTask(
-        "XBT", "OBS", f"{WOD}/XBT/OBS/XBTO1967.gz",
+        "XBT", "OBS", _generated_xbt(tmp_path),
         mock_store + "/dist-root", mock_store + "/dist-root",
     )
     assert convert_file(spark, task) == "converted"
@@ -226,8 +240,8 @@ def test_remote_attach_runs_as_spark_job(spark, mock_store):
         p for p in fs.file_sizes(base_dir) if p.endswith(".parquet")
     ]
     assert data_files
-    # convert_file already attached (distributed); verify every file is
-    # stamped, then re-run the attach through a counting proxy: the
+    # convert_file's writer tasks wrote every file with `geo`; verify
+    # that, then run the attach through a counting proxy: the
     # Spark-job arm must touch ZERO file bytes via the driver client
     # (the idempotency re-check happens executor-side too).
     for p in data_files:
@@ -305,3 +319,31 @@ def test_pyarrow_store_rewrite(tmp_path):
 
     clone = pickle.loads(pickle.dumps(store))
     assert clone.read_bytes(f"{base}/d.parquet") == stamped
+
+
+def test_scheme_less_output_resolves_against_default_fs(spark, mock_store, tmp_path):
+    """A plain output path means ``fs.defaultFS``, as it does to Spark's
+    writers. With the default filesystem pointed at the mock store (for
+    this test only), ``convert_file`` must qualify the path before it
+    picks where tasks write: the data lands in the store, not on local
+    disk, with ``geo`` in every footer."""
+    authority = mock_store.split("/")[2]
+    backing = tmp_path / "backing"
+    src = "file://" + _generated_xbt(tmp_path)
+    hconf = spark._jsc.hadoopConfiguration()
+    old = hconf.get("fs.defaultFS")
+    hconf.set("fs.defaultFS", f"viewfs://{authority}/")
+    try:
+        fs = FsClient(spark)
+        assert fs.qualify("/store/out") == f"{mock_store}/out"
+        task = FileTask("XBT", "OBS", src, "/store/out", "/store/out")
+        assert convert_file(spark, task) == "converted"
+        assert fs.exists(f"{mock_store}/out/yearly/XBT/OBS/XBTO1967.parquet/_SUCCESS")
+    finally:
+        hconf.set("fs.defaultFS", old)
+    assert not (tmp_path / "store").exists() and not os.path.exists("/store/out")
+    ds = backing / "out" / "yearly" / "XBT" / "OBS" / "XBTO1967.parquet"
+    files = sorted(ds.glob("geohash3=*/part-*.parquet"))
+    assert files and (ds / "_SUCCESS").exists() and (ds / SIDECAR_NAME).exists()
+    for f in files:
+        assert b"geo" in pq.read_metadata(f).metadata, f

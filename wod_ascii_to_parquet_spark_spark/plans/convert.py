@@ -9,17 +9,27 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
   or ``overwrite`` → clean first (``DatasetYearTrain.java:89-94``).
 - **convert one file**: distributed parse → split ok/err →
   geohash + geohash3 → ``repartition("geohash3")`` →
-  ``sortWithinPartitions("geohash")`` → ``write.partitionBy("geohash3")``
-  (``DatasetYearTrain.java:128-139``) + error store append
+  ``sortWithinPartitions("geohash3", "geohash")`` → one-pass GeoParquet
+  write (``DatasetYearTrain.java:128-139``) + error store append
   (``TransformationErrorHandler.java:42-52``).
 - The reference's dead global ``orderBy(asc("geohash"))``
   (``DatasetYearTrain.java:130``) — a full range shuffle destroyed by the
   following repartition — is intentionally omitted.
+- **The write is one pass**, as the reference's Sedona writer is (it takes
+  the footer as writer options, ``DatasetYearTrain.java:132-134``): each
+  ``mapInArrow`` writer task writes its geohash3 cells with pyarrow,
+  through the executor-side store of ``geo_metadata`` (local disk, viewfs
+  mounts, s3/s3a, gs), each file with the ``geo`` key already in its
+  footer. The driver publishes: it renames each cell dir out of
+  ``_temporary/<job>/``, deletes ``_temporary``, writes ``_SUCCESS``, the
+  error channel and the sidecar, in that order. That is the
+  ``_temporary`` → rename + ``_SUCCESS`` protocol the reference managed by
+  hand and Spark's FileOutputCommitter ran before. A scheme no executor
+  store can open (``hdfs://`` without libhdfs) keeps Spark's partitioned
+  writer followed by the footer attach.
 - The staging ``<out>_temp`` store (``DatasetYearTrain.java:82-83,211-222``)
-  existed only because the driver-side parse fed batches; a single
-  distributed write replaces it, and Spark's FileOutputCommitter provides
-  the ``_temporary`` → rename atomicity + ``_SUCCESS`` marker the reference
-  managed by hand.
+  existed only because the driver-side parse fed batches; the single
+  distributed write replaces it.
 - The reference's remote-input staging (download each S3 object to a local
   temp dir before parsing, clean up after — ``DatasetYearTrain.java:99-109``)
   is obsolete by design: ``wod_scan`` reads through ``spark.read.format
@@ -52,7 +62,13 @@ from ..functions.geohash import geohash_col
 from ..registry import cached_frames
 from ..sources.filesystem import FsClient
 from ..sources.wod_ascii import errors, ok_casts, wod_scan
-from .geo_metadata import SIDECAR_NAME, attach_geo_footer, geo_sidecar_bytes
+from .geo_metadata import (
+    SIDECAR_NAME,
+    _resolve_executor_store,
+    attach_geo_footer,
+    geo_footer_dict,
+    geo_sidecar_bytes,
+)
 
 
 def _join(base: str, *parts: str) -> str:
@@ -176,6 +192,176 @@ def _write_error_channel(
         errs.coalesce(1).write.mode("overwrite").parquet(task.error_path)
 
 
+#: Spark's ``parquet.block.size``: a writer task buffers up to this many
+#: bytes of Arrow data for its current cell before writing a row group.
+_ROW_GROUP_BYTES = 128 << 20
+
+#: Spark's directory name for a null partition value.
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+class _CellFile:
+    """One geohash3 cell's parquet file, open in a writer task: batches
+    are buffered and written as row groups of about ``_ROW_GROUP_BYTES``
+    (pyarrow starts a new row group on every write)."""
+
+    def __init__(self, store, path: str, schema):
+        import pyarrow.parquet as pq
+
+        self.path, self.rows, self._pending, self._bytes = path, 0, [], 0
+        self._schema = schema
+        self._sink = store.open_output(path)
+        self._writer = pq.ParquetWriter(
+            self._sink,
+            schema,
+            compression="snappy",
+            use_deprecated_int96_timestamps=True,
+        )
+
+    def add(self, batch) -> None:
+        self._pending.append(batch)
+        self.rows += batch.num_rows
+        self._bytes += batch.nbytes
+        if self._bytes >= _ROW_GROUP_BYTES:
+            self._flush()
+
+    def _flush(self) -> None:
+        import pyarrow as pa
+
+        if self._pending:
+            table = pa.Table.from_batches(self._pending).cast(self._schema)
+            self._writer.write_table(table)
+            self._pending, self._bytes = [], 0
+
+    def close(self) -> tuple[str, int, int]:
+        """Finish the file; ``(path, rows, bytes)``."""
+        try:
+            self._flush()
+            self._writer.close()
+            size = self._sink.tell()
+        finally:
+            self._sink.close()
+        return self.path, self.rows, size
+
+
+def _file_schema(schema, metadata: dict):
+    """The Arrow schema a cell file is written with: ``schema`` with
+    ``metadata``, and timestamps as ``timestamp[ns]`` — the type pyarrow
+    reads INT96 back as — so the ``ARROW:schema`` key pyarrow stores
+    describes the file as pyarrow readers see Spark-written INT96 files,
+    not in the writing session's time zone."""
+    import pyarrow as pa
+
+    return pa.schema(
+        [
+            pa.field(f.name, pa.timestamp("ns"), f.nullable)
+            if pa.types.is_timestamp(f.type)
+            else f
+            for f in schema
+        ],
+        metadata=metadata,
+    )
+
+
+def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
+    """The ``mapInArrow`` body of the one-pass writer. Each task gets its
+    rows sorted by ``(geohash3, geohash)``, writes each geohash3 run as
+    ``<tmp_root>/geohash3=<v>/part-<partition>-<job>.c000.snappy.parquet``
+    (without the ``geohash3`` column, ``metadata`` in the footer) through
+    ``store``, and returns one ``(path, rows, bytes)`` row per file. A
+    retried or speculative attempt writes under ``attempt-<n>/``, so the
+    driver publishes only the files of the attempt that succeeded."""
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        root = tmp_root
+        if ctx.attemptNumber():
+            root = f"{tmp_root}/attempt-{ctx.attemptNumber()}"
+        name = f"part-{ctx.partitionId():05d}-{job}.c000.snappy.parquet"
+        done: list[tuple[str, int, int]] = []
+        cell, current, schema = None, None, None
+        try:
+            for batch in batches:
+                data = batch.drop_columns(["geohash3"])
+                if schema is None:
+                    schema = _file_schema(data.schema, metadata)
+                runs = pc.run_end_encode(batch.column("geohash3"))
+                start = 0
+                for end, value in zip(
+                    runs.run_ends.to_pylist(), runs.values.to_pylist()
+                ):
+                    if current is None or value != cell:
+                        if current is not None:
+                            done.append(current.close())
+                        cell = value
+                        part = _NULL_PARTITION if value is None else value
+                        current = _CellFile(
+                            store,
+                            f"{root}/geohash3={part}/{name}",
+                            schema,
+                        )
+                    current.add(data.slice(start, end - start))
+                    start = end
+            if current is not None:
+                done.append(current.close())
+                current = None
+        finally:
+            if current is not None:  # a failed task: release the stream
+                current._sink.close()
+        if done:
+            paths, rows, sizes = zip(*done)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(paths), pa.array(rows, pa.int64()), pa.array(sizes, pa.int64())],
+                ["path", "rows", "bytes"],
+            )
+
+    return write
+
+
+def _write_geoparquet(
+    spark: SparkSession, fs: FsClient, store, frame, out: str, encoding: str
+) -> None:
+    """Write ``frame`` (hash-partitioned and sorted by geohash3) to ``out``
+    as geohash3-partitioned GeoParquet in one pass, and publish it.
+
+    Writer tasks write every file under ``<out>/_temporary/<job>/`` with
+    the ``geo`` key, and Spark's row-schema and version keys, already in
+    the footer (:func:`_cell_writer`). The driver then renames each
+    geohash3 dir into ``out`` (one rename per cell: the hash repartition
+    gives every cell to one task), deletes ``_temporary`` and writes
+    ``_SUCCESS``. A crash before ``_SUCCESS`` leaves either ``_temporary``
+    or no marker at all, and the next run rebuilds."""
+    import json
+    import uuid
+
+    from pyspark.sql.types import StructType
+
+    fs.delete(out)  # the job owns the directory, as a static overwrite does
+    job = str(uuid.uuid4())
+    schema = StructType([f for f in frame.schema.fields if f.name != "geohash3"])
+    metadata = {
+        b"geo": json.dumps(geo_footer_dict(encoding)).encode(),
+        b"org.apache.spark.version": spark.version.encode(),
+        # Spark's own key order, as its writer serializes the row schema
+        b"org.apache.spark.sql.parquet.row.metadata": json.dumps(
+            schema.jsonValue(), separators=(",", ":")
+        ).encode(),
+    }
+    tmp = _join(out, "_temporary")
+    written = frame.mapInArrow(
+        _cell_writer(store, _join(tmp, job), job, metadata),
+        "path string, rows bigint, bytes bigint",
+    ).collect()
+    cell_dirs = [posixpath.dirname(row.path) for row in written]
+    fs.rename_all([(d, _join(out, posixpath.basename(d))) for d in cell_dirs])
+    fs.delete(tmp)
+    fs.write_bytes(_join(out, "_SUCCESS"), b"")
+
+
 def convert_file(
     spark: SparkSession,
     task: FileTask,
@@ -196,17 +382,19 @@ def convert_file(
     encode needs an Arrow round-trip (``functions/wkb.py``).
     """
     fs = FsClient(spark)
-    out = task.output_path
+    out = fs.qualify(task.output_path)
     if overwrite or _has_stale_temp(fs, out):
         fs.delete(out)
         fs.delete(task.error_path)
     if _has_success(fs, out):
-        # The sidecar is written LAST, after the error channel and the
-        # GeoParquet footer attach, so it is the publish-completion
-        # marker: a crash after the main commit but before publish
-        # completed heals here (every step is idempotent — the error
-        # channel is rebuilt from one re-decode, the footer attach and
-        # sidecar rewrite are restartable) instead of forcing a rebuild.
+        # The sidecar is written LAST, after _SUCCESS and the error
+        # channel, so it is the publish-completion marker: a crash after
+        # _SUCCESS but before publish completed heals here (every step is
+        # idempotent — the error channel is rebuilt from one re-decode,
+        # the sidecar rewrite is restartable) instead of forcing a
+        # rebuild. The footer attach is a no-op on files the one-pass
+        # writer made; it stamps outputs of the fallback arm and of
+        # versions that attached `geo` after the commit.
         sidecar = _join(out, SIDECAR_NAME)
         if not fs.exists(sidecar):
             _write_error_channel(spark, fs, task)
@@ -255,33 +443,24 @@ def convert_file(
                 F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), seconds),
             ),
         )
-        # pure-Catalyst geohash: the write path stays entirely JVM-side
+        # pure-Catalyst geohash: computed in the JVM ahead of the sort
         # (the numpy pandas_udf variant is equivalent — parity asserted
-        # in tests/test_geohash.py — but costs an Arrow round-trip).
+        # in tests/test_geohash.py — but costs an extra Arrow round-trip).
         # String-name form = generated-SQL build path (one JVM parse,
         # ~0.4 s/py4j-build saved PER FILE JOB; see geohash_spark_sql).
         .withColumn("geohash", geohash_col("latitude", "longitude"))
         .withColumn("geohash3", F.substring("geohash", 1, 3))
-        # geometry, declared in the `geo` footer attached at publish:
+        # geometry, declared in the `geo` footer each file is written with:
         # default GeoParquet 1.1 native point (struct<x=lon, y=lat>, pure
         # Catalyst); opt-in 1.0 WKB bytes for pre-native readers.
         .withColumn("geometry", _geometry_col(geometry_encoding))
     )
     # Writer-task count: capped at 16 per file-job. Beyond that, many
-    # concurrently-open parquet writers in one JVM contend (local[32]
-    # measured: 32 tasks ≈ 10 s vs 16 tasks ≈ 4 s for 1652 partition
-    # dirs); cluster-wide parallelism comes from running file-jobs
-    # concurrently, not from more writers per file. Re-measured after the
-    # .crc sidecar removal halved file creations (r7s3): 8/16/24/32 tasks
-    # → 3.6/2.8/2.7/2.9 s — the curve flattened but 16 remains on the
-    # plateau; not worth retuning into host noise.
-    # Committer: FileOutputCommitter v1 (default) measured BEST here —
-    # v2's direct-to-destination task commit was no faster at any task
-    # count (16 tasks: 2.79 s v1 vs 2.91 s v2; 32: 2.83 vs 3.23) because
-    # local-FS directory renames are O(1) — v1's job-commit rename batch
-    # is cheap, and v2 only trades it for weaker failure atomicity. The
-    # residual write cost is the floor: 1,652 parquet file creations
-    # (header + nested-schema footer each), which IS the layout contract.
+    # concurrently open parquet writers in one file-job contend (local[32]
+    # measured 32 tasks ≈ 10 s vs 16 tasks ≈ 4 s for 1652 cells under
+    # Spark's writer, and the curve was flat from 16 to 32); cluster-wide
+    # parallelism comes from running file-jobs concurrently, not from more
+    # writers per file.
     n_write_tasks = min(16, spark.sparkContext.defaultParallelism)
     # Writer distribution: geohash3-hash. Real WOD occupancy
     # is coastal-skewed, and a hash repartition routes a hot geohash3
@@ -290,35 +469,42 @@ def convert_file(
     # SCALING.json convert.skew_x16), i.e. the straggler does NOT
     # dominate at file-job scale (the single-gzip decode bound does), so
     # the writer exchange stays static and per-file skew remains bounded
-    # by file size as the module docstring argues.
-    (
-        # Sort by (geohash3, geohash): the partitioned writer requires
-        # ordering by the partition column and would insert its own
-        # non-stable sort (destroying the geohash order) unless the
-        # existing sort order starts with it. Equivalent row order to
-        # the reference's sortWithinPartitions("geohash") since
-        # geohash3 is a prefix of geohash.
-        casts.repartition(n_write_tasks, F.col("geohash3"))
-        .sortWithinPartitions("geohash3", "geohash")
-        .write.mode("overwrite")
-        # static overwrite: the job owns the whole directory, and the
-        # dynamic committer would skip the _SUCCESS marker the
-        # skip/resume contract keys on (DatasetYearTrain.java:92).
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("geohash3")
-        .parquet(out)
+    # by file size as the module docstring argues. It also makes every
+    # cell one task's, so each geohash3 dir holds one file and the
+    # publish is one rename per cell.
+    # Sort by (geohash3, geohash): each task's cells arrive as contiguous
+    # runs (one file each), and within a cell rows are in the reference's
+    # sortWithinPartitions("geohash") order, since geohash3 is a prefix of
+    # geohash. Spark's partitioned writer (the fallback below) keeps this
+    # order only because it starts with the partition column; otherwise it
+    # inserts its own non-stable sort.
+    frame = casts.repartition(n_write_tasks, F.col("geohash3")).sortWithinPartitions(
+        "geohash3", "geohash"
     )
+    enc = _footer_encoding(geometry_encoding)
+    store = _resolve_executor_store(spark, out)
+    if store is not None:
+        _write_geoparquet(spark, fs, store, frame, out, enc)
+    else:
+        # No executor-side client for this scheme: Spark's partitioned
+        # writer, then the footer attach stamps `geo` into every file.
+        (
+            frame.write.mode("overwrite")
+            # static overwrite: the job owns the whole directory, and the
+            # dynamic committer would skip the _SUCCESS marker the
+            # skip/resume contract keys on (DatasetYearTrain.java:92).
+            .option("partitionOverwriteMode", "static")
+            .partitionBy("geohash3")
+            .parquet(out)
+        )
+        attach_geo_footer(fs, out, spark=spark, encoding=enc)
     if int(obs.get["n_err"] or 0) > 0:
         # Rare path: re-decode to materialize the error channel (a fresh
         # scan — the observed frame's metric is already consumed; the
         # Observation already proved errors exist, so no probe).
         _write_error_channel(spark, fs, task, known_has_errors=True)
-    # Real GeoParquet: attach the `geo` footer key to every data file
-    # (the Sedona-free mirror of the reference's geoparquet.version/crs
-    # writer options, DatasetYearTrain.java:132-134), THEN the sidecar —
-    # its presence marks the footer pass complete for crash-healing.
-    enc = _footer_encoding(geometry_encoding)
-    attach_geo_footer(fs, out, spark=spark, encoding=enc)
+    # The sidecar goes last: its presence marks the publish complete for
+    # crash-healing.
     fs.write_bytes(_join(out, SIDECAR_NAME), geo_sidecar_bytes(enc))
     return "converted"
 
@@ -468,6 +654,7 @@ def compact_convert_output(
     from .compact import _is_data_file
 
     fs = FsClient(spark)
+    output = fs.qualify(output)
     yearly = _join(output, "yearly")
     stats: dict = {}
     infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"

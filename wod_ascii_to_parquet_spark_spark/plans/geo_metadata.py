@@ -5,17 +5,23 @@ baked into the parquet footer (``DatasetYearTrain.java:41-42`` defines the
 PROJJSON; ``:132-134`` passes ``geoparquet.version``/``geoparquet.crs`` to
 the writer). The Sedona-free equivalent here is two-layered:
 
-- **Real GeoParquet footers** (:func:`attach_geo_footer`): at publish time
-  every data file gets the spec's ``geo`` key-value footer entry attached
-  via pyarrow. The geometry column is the ``struct<x, y>`` the convert
-  pipeline adds, declared with GeoParquet 1.1's native ``point`` encoding
-  — expressible in pure Catalyst (``F.struct(lon, lat)``), unlike WKB,
-  which would need a byte-assembling UDF in the write path. GeoParquet-
-  aware readers (GDAL ≥ 3.8, GeoPandas) recognize the output directly.
+- **Real GeoParquet footers**: every data file carries the spec's ``geo``
+  key-value footer entry (:func:`geo_footer_dict`). The geometry column is
+  the ``struct<x, y>`` the convert pipeline adds, declared with GeoParquet
+  1.1's native ``point`` encoding — expressible in pure Catalyst
+  (``F.struct(lon, lat)``) — or, opt-in, WKB bytes under a 1.0 footer.
+  GeoParquet-aware readers (GDAL ≥ 3.8, GeoPandas) recognize the output
+  directly. Convert's writer tasks put the key in each footer as they
+  write the file, through the executor-side stores defined here
+  (:func:`_resolve_executor_store`: local disk, viewfs mount maps,
+  ``pyarrow.fs`` for s3/s3a/gs). :func:`attach_geo_footer` stamps files a
+  JVM writer already wrote — compaction output, outputs healed on resume,
+  and the Spark-writer fallback for schemes no executor store can open —
+  by appending a superseding footer.
 - A ``_geo_metadata.json`` sidecar carrying the same information at the
   dataset level (SURVEY §4.3) — kept because it is readable without a
-  parquet parser and doubles as the publish-completion marker for the
-  footer attach (see ``plans/convert.py``).
+  parquet parser and doubles as the publish-completion marker (see
+  ``plans/convert.py``).
 
 The CRS is the standard EPSG 4326 definition published at proj.org.
 """
@@ -392,6 +398,15 @@ class _PyArrowStore:
         with self._resolve().open_output_stream(self._inner(path)) as fh:
             fh.write(data)
 
+    def open_output(self, path: str):
+        """A writable stream for a new object at ``path``. Only the local
+        filesystem needs its parent directories made first; object stores
+        have none, and HDFS creates them."""
+        fs, inner = self._resolve(), self._inner(path)
+        if fs.type_name == "local":
+            fs.create_dir(inner.rsplit("/", 1)[0], recursive=True)
+        return fs.open_output_stream(inner)
+
     def delete(self, path: str) -> None:
         self._resolve().delete_file(self._inner(path))
 
@@ -467,6 +482,19 @@ class _MountStore:
             _drop_stale_crc(local)
             return
         store.write_bytes(t, data)
+
+    def open_output(self, path: str):
+        """A writable stream for a new file at ``path`` (a fresh name, so
+        no JVM writer left a ``.crc`` for it)."""
+        local, store, t = self._local_or_store(path)
+        if local is None:
+            return store.open_output(t)
+        import os
+
+        import pyarrow as pa
+
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        return pa.OSFile(local, "wb")
 
     def delete(self, path: str) -> None:
         local, store, t = self._local_or_store(path)
