@@ -338,9 +338,10 @@ def _rows(spark, path: str) -> list[str]:
     return sorted(r[0] for r in df.select(F.to_json(F.struct(*df.columns))).collect())
 
 
-def _assert_published(spark, task) -> None:
+def _assert_published(spark, task, casts: int = GEN_CASTS) -> None:
     """A complete output: markers, no ``_temporary``, one geo-stamped,
-    geohash-sorted file per geohash3 dir, and every ok cast exactly once."""
+    geohash-sorted file per geohash3 dir, and ``casts`` ok casts, each
+    exactly once."""
     import pyarrow.parquet as pq
 
     out = task.output_path
@@ -354,7 +355,7 @@ def _assert_published(spark, task) -> None:
         assert b"geo" in pq.read_schema(f).metadata, f
         ghs = pq.read_table(f, columns=["geohash"])["geohash"].to_pylist()
         assert ghs == sorted(ghs), f
-    assert spark.read.parquet(out).count() == GEN_CASTS
+    assert spark.read.parquet(out).count() == casts
 
 
 def test_crash_before_publish_rename_rebuilds(spark, tmp_path, monkeypatch):
@@ -373,7 +374,7 @@ def test_crash_before_publish_rename_rebuilds(spark, tmp_path, monkeypatch):
         with pytest.raises(RuntimeError, match="publish renames"):
             convert_file(spark, task)
     out = task.output_path
-    left = glob.glob(os.path.join(out, "_temporary", "*", "geohash3=*", "part-*.parquet"))
+    left = glob.glob(os.path.join(out, "_temporary", "*", "*", "geohash3=*", "part-*.parquet"))
     assert left and not os.path.exists(os.path.join(out, "_SUCCESS"))
     assert not glob.glob(os.path.join(out, "geohash3=*"))
     assert convert_file(spark, task) == "converted"
@@ -407,9 +408,9 @@ def test_crash_before_success_marker_rebuilds(spark, tmp_path, monkeypatch):
 
 
 def test_fallback_arm_matches_one_pass_writer(spark, tmp_path, monkeypatch):
-    """Where no executor-side store can open the output's scheme, the file
-    job falls back to Spark's partitioned writer plus the footer attach:
-    same rows, same cells, and every file still carries ``geo``."""
+    """Where no executor-side store can open the output's scheme, the
+    writer tasks write each file to memory and the driver writes the
+    bytes: same rows, same cells, and every file still carries ``geo``."""
     import wod_ascii_to_parquet_spark_spark.plans.convert as C
 
     one_pass = _generated_task(tmp_path / "a")
@@ -425,24 +426,175 @@ def test_fallback_arm_matches_one_pass_writer(spark, tmp_path, monkeypatch):
     assert _rows(spark, one_pass.output_path) == _rows(spark, fallback.output_path)
 
 
-def test_converted_file_job_launches_no_footer_attach_job(spark, tmp_path):
-    """The writer tasks put ``geo`` in every footer as they write, so a
-    converted file-job runs no footer-attach job: no stage of the job
-    group comes from ``geo_metadata``."""
-    task = _generated_task(tmp_path)
+def test_fallback_arm_streams_one_partition_per_job(spark, tmp_path, monkeypatch):
+    """With no executor store, the driver streams the writer's result one
+    partition per job, so it holds one writer task's files at a time: the
+    result stage of every streaming job has one task, there is one such job
+    per writer partition, and more than one partition wrote files. A file
+    bigger than one returned row arrives in several rows, reassembled in
+    order, and the error channel is still written."""
+    import wod_ascii_to_parquet_spark_spark.plans.convert as C
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import FsClient
+
+    task = _generated_task(tmp_path, malformed={1})
+    monkeypatch.setattr(C, "_resolve_executor_store", lambda *_a: None)
+    monkeypatch.setattr(C, "_CHUNK_BYTES", 1024)
+    chunks: dict[str, int] = {}
+    real_write = FsClient.write_chunks
+
+    def counting(self, path, parts):
+        def each():
+            for part in parts:
+                chunks[path] = chunks.get(path, 0) + 1
+                yield part
+
+        return real_write(self, path, each())
+
+    monkeypatch.setattr(FsClient, "write_chunks", counting)
     sc = spark.sparkContext
-    group = f"convert-census-{tmp_path.name}"
-    sc.setJobGroup(group, "convert file-job census")
+    group = f"stream-census-{tmp_path.name}"
+    sc.setJobGroup(group, group)
     try:
         assert convert_file(spark, task) == "converted"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
-    names = [
+    # A streaming job's result stage reads the writer exchange, so the job
+    # has a parent stage; the job AQE runs to materialize that exchange
+    # has none.
+    result_stages = [
+        tracker.getStageInfo(max(stages))
+        for stages in (
+            tracker.getJobInfo(j).stageIds for j in tracker.getJobIdsForGroup(group)
+        )
+        if len(stages) > 1
+    ]
+    streamed = [s for s in result_stages if s.name.startswith("toLocalIterator")]
+    assert len(streamed) == min(16, sc.defaultParallelism)
+    assert all(s.numTasks == 1 for s in streamed), [(s.name, s.numTasks) for s in streamed]
+    data = {p: n for p, n in chunks.items() if "/_temporary/" in p}
+    assert len({p.split("/_temporary/")[1].split("/")[1] for p in data}) > 1
+    assert max(data.values()) > 1
+    _assert_published(spark, task, casts=GEN_CASTS - 1)
+    assert len(data) == len(_data_files(task.output_path))
+    assert spark.read.parquet(task.error_path).count() == 1
+
+
+def _stage_names(spark, group: str, fn) -> list[str]:
+    """Names of every stage the jobs of ``fn()`` ran, under job group
+    ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    return [
         tracker.getStageInfo(s).name
         for j in tracker.getJobIdsForGroup(group)
         for s in tracker.getJobInfo(j).stageIds
     ]
+
+
+def test_converted_file_job_launches_no_footer_attach_job(spark, tmp_path):
+    """The writer tasks put ``geo`` in every footer as they write, so a
+    converted file-job runs no footer-attach job: no stage of the job
+    group comes from ``geo_metadata``."""
+    task = _generated_task(tmp_path)
+    names = _stage_names(
+        spark,
+        f"convert-census-{tmp_path.name}",
+        lambda: convert_file(spark, task),
+    )
     assert names
     assert not [n for n in names if "geo_metadata" in n], names
     _assert_published(spark, task)
+
+
+def _footer_geo(files: list[str]) -> set[tuple[str, str]]:
+    """The ``(version, encoding)`` pairs of the files' ``geo`` footers."""
+    import pyarrow.parquet as pq
+
+    pairs = set()
+    for f in files:
+        geo = json.loads(pq.read_schema(f).metadata[b"geo"])
+        pairs.add((geo["version"], geo["columns"]["geometry"]["encoding"]))
+    return pairs
+
+
+def test_heal_keeps_the_written_encoding(spark, tmp_path):
+    """A sidecar heal keeps the encoding the files were written with, not
+    the resuming call's: WKB files stay 1.0.0/WKB, and the healed sidecar
+    says WKB."""
+    task = _generated_task(tmp_path)
+    assert convert_file(spark, task, geometry_encoding="wkb") == "converted"
+    sidecar = os.path.join(task.output_path, "_geo_metadata.json")
+    os.remove(sidecar)
+    assert convert_file(spark, task) == "skipped"
+    assert _footer_geo(_data_files(task.output_path)) == {("1.0.0", "WKB")}
+    with open(sidecar) as fh:
+        meta = json.load(fh)
+    assert meta["geoparquet_version"] == "1.0.0"
+    assert meta["geo_footer"]["columns"]["geometry"]["encoding"] == "WKB"
+
+
+def test_empty_success_marker_rebuilds(spark, tmp_path):
+    """An empty ``_SUCCESS`` (Spark's committer wrote it) with no sidecar
+    says nothing about the files' footers: the resume rebuilds, and every
+    file carries ``geo``."""
+    task = _generated_task(tmp_path)
+    assert convert_file(spark, task) == "converted"
+    open(os.path.join(task.output_path, "_SUCCESS"), "wb").close()
+    os.remove(os.path.join(task.output_path, "_geo_metadata.json"))
+    assert convert_file(spark, task) == "converted"
+    _assert_published(spark, task)
+
+
+def _compaction_input(spark, tmp_path, encoding: str) -> str:
+    """A convert output root with two converted files in one
+    (dataset, level), written with ``encoding``."""
+    for name in ("XBTO1967.gz", "XBTO1968.gz"):
+        task = _generated_task(tmp_path, name=name)
+        assert convert_file(spark, task, geometry_encoding=encoding) == "converted"
+    return str(tmp_path / "out")
+
+
+def test_compaction_keeps_wkb_footer(spark, tmp_path):
+    """Compacting a WKB output, with no encoding given, writes every
+    compacted file with the 1.0.0/WKB footer its geometry holds."""
+    from wod_ascii_to_parquet_spark_spark.plans.convert import compact_convert_output
+
+    out = _compaction_input(spark, tmp_path, "wkb")
+    stats = compact_convert_output(spark, out)
+    files = _data_files(os.path.join(out, "compacted", "XBT", "OBS"))
+    assert files and len(files) == stats["XBT/OBS"]["files_after"]
+    assert _footer_geo(files) == {("1.0.0", "WKB")}
+
+
+def test_compaction_runs_no_footer_job(spark, tmp_path):
+    """Compaction writes every file with ``geo`` in its footer: no stage
+    of its jobs comes from ``geo_metadata``, every compacted file carries
+    the 1.1.0/point footer, and every row is kept once."""
+    from wod_ascii_to_parquet_spark_spark.plans.convert import compact_convert_output
+
+    import pyarrow.parquet as pq
+
+    out = _compaction_input(spark, tmp_path, "point")
+    stats = {}
+    names = _stage_names(
+        spark,
+        f"compact-census-{tmp_path.name}",
+        lambda: stats.update(compact_convert_output(spark, out)),
+    )
+    assert names
+    assert not [n for n in names if "geo_metadata" in n], names
+    dest = os.path.join(out, "compacted", "XBT", "OBS")
+    files = _data_files(dest)
+    assert files and len(files) == stats["XBT/OBS"]["files_after"]
+    assert _footer_geo(files) == {("1.1.0", "point")}
+    for f in files:
+        cell = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
+        ghs = pq.read_table(f, columns=["geohash"])["geohash"].to_pylist()
+        assert ghs == sorted(ghs) and all(g.startswith(cell) for g in ghs), f
+    assert spark.read.parquet(dest).count() == 2 * GEN_CASTS

@@ -12,8 +12,7 @@ branch the s3a deployment exercises runs for real here:
 - executor reads (gunzip), the one-pass GeoParquet writer's tasks
   writing through the executor store (the viewfs mount map), and the
   driver's rename publish + ``_SUCCESS`` through the Hadoop connector,
-- the remote GeoParquet footer attach via the byte API (sibling-temp +
-  delete + rename crash protocol, incl. its recovery pre-pass),
+  with no data bytes passing through the driver,
 - skip/resume and sidecar healing keyed on remote marker objects.
 
 Each test mounts fresh viewfs authorities so no FileSystem-cache state
@@ -32,11 +31,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from wod_ascii_to_parquet_spark_spark.plans.convert import FileTask, convert, convert_file
-from wod_ascii_to_parquet_spark_spark.plans.geo_metadata import (
-    _REMOTE_TMP_SUFFIX,
-    SIDECAR_NAME,
-    attach_geo_footer,
-)
+from wod_ascii_to_parquet_spark_spark.plans.geo_metadata import SIDECAR_NAME
 from wod_ascii_to_parquet_spark_spark.sources.filesystem import (
     FsClient,
     local_os_path,
@@ -130,7 +125,7 @@ def test_simple_mirror(spark, mock_store, tmp_path):
     assert not again.failed and not again.converted
     assert len(again.skipped) == 3
 
-    # sidecar heal: dropping the publish marker re-runs attach + sidecar
+    # sidecar heal: dropping the publish marker rewrites the sidecar
     fs.delete(f"{apb}/{SIDECAR_NAME}")
     healed = convert(
         spark, source=src, output=out, datasets=("APB",), levels=("OBS",)
@@ -163,95 +158,33 @@ def test_prefix_and_sur_rename_mirror(spark, mock_store, tmp_path):
     assert not any("/yearly/CTD/" in k for k in keys)
 
 
-def test_remote_attach_crash_heal_on_store(spark, mock_store, tmp_path):
-    """The remote attach's crash protocol on a real Hadoop scheme: an
-    orphaned sibling temp (crash between delete and rename) is promoted
-    by the recovery pre-pass; a temp alongside its base is dropped."""
-    fs = FsClient(spark)
-    # build a real output remotely first
-    local_task = FileTask(
-        "XBT", "OBS", _generated_xbt(tmp_path),
-        mock_store + "/heal-root", mock_store + "/heal-root",
-    )
-    assert convert_file(spark, local_task) == "converted"
-    base_dir = local_task.output_path
-    data_files = sorted(
-        p for p in fs.file_sizes(base_dir) if p.endswith(".parquet")
-    )
-    victim = data_files[0]
-    original = fs.read_bytes(victim)
+def test_convert_moves_no_data_bytes_through_the_driver(spark, mock_store, tmp_path, monkeypatch):
+    """On a remote scheme with an executor store, the writer tasks write
+    every data file themselves: the driver's FsClient reads no file and
+    writes only the ``_SUCCESS`` marker and the sidecar, and every data
+    file in the store carries ``geo``."""
+    calls: list[str] = []
+    for meth in ("read_bytes", "write_bytes"):
+        real = getattr(FsClient, meth)
 
-    # crash shape 1: temp exists, base deleted → pre-pass must PROMOTE
-    fs.write_bytes(victim + _REMOTE_TMP_SUFFIX, original)
-    fs.delete(victim)
-    n = attach_geo_footer(fs, base_dir)
-    assert n == len(data_files)
-    assert fs.exists(victim) and not fs.exists(victim + _REMOTE_TMP_SUFFIX)
-    md = pq.read_metadata(pa.BufferReader(fs.read_bytes(victim)))
-    assert b"geo" in md.metadata
+        def recording(self, path, *a, _real=real, **k):
+            calls.append(path)
+            return _real(self, path, *a, **k)
 
-    # crash shape 2: stale temp alongside a live base → pre-pass DROPS it
-    fs.write_bytes(victim + _REMOTE_TMP_SUFFIX, b"torn half-write")
-    attach_geo_footer(fs, base_dir)
-    assert not fs.exists(victim + _REMOTE_TMP_SUFFIX)
-    assert spark.read.parquet(base_dir).count() > 0
-
-
-class _CountingFs:
-    """FsClient proxy recording per-file BYTE traffic through the driver —
-    the distributed attach must do none (listing + temp healing only)."""
-
-    def __init__(self, inner):
-        self._inner = inner
-        self.byte_calls: list[tuple[str, str]] = []
-
-    def file_sizes(self, *a, **k):
-        return self._inner.file_sizes(*a, **k)
-
-    def read_bytes(self, path, *a):
-        self.byte_calls.append(("read", path))
-        return self._inner.read_bytes(path, *a)
-
-    def write_bytes(self, path, data):
-        self.byte_calls.append(("write", path))
-        return self._inner.write_bytes(path, data)
-
-    def delete(self, path):
-        return self._inner.delete(path)
-
-    def rename(self, src, dst):
-        return self._inner.rename(src, dst)
-
-
-def test_remote_attach_runs_as_spark_job(spark, mock_store, tmp_path):
-    """The remote footer attach with a live session is a SPARK JOB: the
-    driver issues one listing RPC and zero per-file byte RPCs — executors
-    resolve the store themselves (viewfs mount map shipped as data) and
-    do all read/rewrite/rename I/O. This is the 100 TB shape: per-file
-    work scales with executors, not with driver py4j round-trips."""
-    fs = FsClient(spark)
+        monkeypatch.setattr(FsClient, meth, recording)
     task = FileTask(
         "XBT", "OBS", _generated_xbt(tmp_path),
         mock_store + "/dist-root", mock_store + "/dist-root",
     )
     assert convert_file(spark, task) == "converted"
-    base_dir = task.output_path
-    data_files = [
-        p for p in fs.file_sizes(base_dir) if p.endswith(".parquet")
-    ]
-    assert data_files
-    # convert_file's writer tasks wrote every file with `geo`; verify
-    # that, then run the attach through a counting proxy: the
-    # Spark-job arm must touch ZERO file bytes via the driver client
-    # (the idempotency re-check happens executor-side too).
-    for p in data_files:
-        md = pq.read_metadata(pa.BufferReader(fs.read_bytes(p)))
-        assert b"geo" in md.metadata, p
-    counting = _CountingFs(fs)
-    n = attach_geo_footer(counting, base_dir, spark=spark)
-    assert n == len(data_files)
-    assert counting.byte_calls == []
-    assert spark.read.parquet(base_dir).count() > 0
+    base = task.output_path
+    assert sorted(calls) == [f"{base}/_SUCCESS", f"{base}/{SIDECAR_NAME}"]
+    ds = tmp_path / "backing" / "dist-root" / "yearly" / "XBT" / "OBS" / "XBTO1967.parquet"
+    files = sorted(ds.glob("geohash3=*/part-*.parquet"))
+    assert files and not (ds / "_temporary").exists()
+    for f in files:
+        assert b"geo" in pq.read_metadata(f).metadata, f
+    assert spark.read.parquet(base).count() > 0
 
 
 def test_conditional_create_probe_degrades_on_mock_store(spark, mock_store):
@@ -279,46 +212,25 @@ def test_conditional_create_probe_degrades_on_mock_store(spark, mock_store):
 
 
 def test_pyarrow_store_rewrite(tmp_path):
-    """_PyArrowStore (the production s3/gs executor arm) exercised over a
-    pyarrow-resolvable base URI: byte round-trip, rename, and the full
-    _rewrite_with_geo protocol — superseding footer appended in memory,
-    original data pages byte-identical, idempotent on re-run."""
-    import pandas as pd
+    """_PyArrowStore (the production s3/gs executor arm) over a
+    pyarrow-resolvable base URI: ``open_output`` makes the parent
+    directories a local target needs, and pickling ships only the URI
+    (executors re-resolve the client lazily)."""
+    import pickle
 
-    from wod_ascii_to_parquet_spark_spark.plans.geo_metadata import (
-        _PyArrowStore,
-        _rewrite_with_geo,
-        geo_footer_dict,
-    )
+    from wod_ascii_to_parquet_spark_spark.plans.geo_metadata import _PyArrowStore
 
     base = f"file://{tmp_path}"
     store = _PyArrowStore(base)
-    store.write_bytes(f"{base}/a.bin", b"hello")
-    assert store.read_bytes(f"{base}/a.bin") == b"hello"
-    store.rename(f"{base}/a.bin", f"{base}/b.bin")
-    assert store.read_bytes(f"{base}/b.bin") == b"hello"
-    store.delete(f"{base}/b.bin")
-
-    pq.write_table(
-        pa.Table.from_pandas(pd.DataFrame({"x": [1, 2, 3]})),
-        tmp_path / "d.parquet",
-    )
-    original = (tmp_path / "d.parquet").read_bytes()
-    geo = json.dumps(geo_footer_dict()).encode()
-    _rewrite_with_geo(store, f"{base}/d.parquet", geo)
-    stamped = (tmp_path / "d.parquet").read_bytes()
-    assert stamped[: len(original)] == original  # pages + old footer intact
-    md = pq.read_metadata(tmp_path / "d.parquet")
-    assert md.metadata[b"geo"] == geo
-    assert pq.read_table(tmp_path / "d.parquet").column("x").to_pylist() == [1, 2, 3]
-    _rewrite_with_geo(store, f"{base}/d.parquet", geo)  # idempotent
-    assert (tmp_path / "d.parquet").read_bytes() == stamped
-
-    # pickling ships only the URI (executors re-resolve lazily)
-    import pickle
-
+    with store.open_output(f"{base}/a/b/c.bin") as fh:
+        fh.write(b"hello")
+    assert (tmp_path / "a" / "b" / "c.bin").read_bytes() == b"hello"
+    assert store._fs is not None
     clone = pickle.loads(pickle.dumps(store))
-    assert clone.read_bytes(f"{base}/d.parquet") == stamped
+    assert clone._fs is None and clone._base_uri == base
+    with clone.open_output(f"{base}/d.bin") as fh:
+        fh.write(b"again")
+    assert (tmp_path / "d.bin").read_bytes() == b"again"
 
 
 def test_scheme_less_output_resolves_against_default_fs(spark, mock_store, tmp_path):

@@ -1,9 +1,12 @@
 """Row-identity digest of a convert output tree.
 
-For every dataset under ``<out_root>/yearly/<DS>/<LEVEL>/`` and every error
-store under ``<out_root>/error/<DS>/<LEVEL>/``, prints one JSON line with
+For every dataset under ``<out_root>/yearly/<DS>/<LEVEL>/``, every error
+store under ``<out_root>/error/<DS>/<LEVEL>/`` and every compacted dataset
+``<out_root>/compacted/<DS>/<LEVEL>``, prints one JSON line with
 
 - ``files``: data files (``part-*.parquet``) and ``dirs``: geohash3 dirs,
+- ``geo``: the sorted set of the data files' GeoParquet footer
+  ``version/encoding`` pairs (``none`` for a file without ``geo``),
 - ``rows`` and ``schema``: the row count and schema JSON of a Spark read
   of the dataset (partition columns included),
 - ``digest``: a SHA-256 over the sorted per-row SHA-256s of each row's
@@ -29,15 +32,35 @@ sys.path.insert(0, REPO)
 
 
 def dataset_dirs(fs, out_root: str) -> list[tuple[str, str]]:
-    """``(relative name, path)`` of every dataset and error store."""
+    """``(relative name, path)`` of every dataset, error store and
+    compacted dataset."""
     found = []
-    for kind in ("yearly", "error"):
+    for kind in ("yearly", "error", "compacted"):
         base = f"{out_root}/{kind}"
         for ds in fs.list_names(base):
             for lvl in fs.list_names(f"{base}/{ds}"):
+                if kind == "compacted":
+                    found.append((f"{kind}/{ds}/{lvl}", f"{base}/{ds}/{lvl}"))
+                    continue
                 for name in fs.list_names(f"{base}/{ds}/{lvl}"):
                     found.append((f"{kind}/{ds}/{lvl}/{name}", f"{base}/{ds}/{lvl}/{name}"))
     return found
+
+
+def footer_geo(fs, path: str) -> str:
+    """``version/encoding`` of a data file's ``geo`` footer, or ``none``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import local_os_path
+
+    local = local_os_path(path)
+    source = local if local is not None else pa.BufferReader(fs.read_bytes(path))
+    geo = (pq.read_metadata(source).metadata or {}).get(b"geo")
+    if geo is None:
+        return "none"
+    geo = json.loads(geo)
+    return f"{geo['version']}/{geo['columns'][geo['primary_column']]['encoding']}"
 
 
 def digest(spark, fs, path: str) -> dict:
@@ -58,6 +81,7 @@ def digest(spark, fs, path: str) -> dict:
     return {
         "files": len(data),
         "dirs": len(dirs),
+        "geo": sorted({footer_geo(fs, p) for p in data}),
         "rows": len(row_hashes),
         "schema": df.schema.json(),
         "digest": hashlib.sha256("\n".join(row_hashes).encode()).hexdigest(),

@@ -145,7 +145,6 @@ def main(argv: list[str] | None = None) -> int:
             spark,
             output=_with_scheme(args.output, args.output_file_system),
             target_bytes=args.compact_target_bytes,
-            geometry_encoding=args.geo_encoding,
         )
     print(json.dumps(doc))
     return 0

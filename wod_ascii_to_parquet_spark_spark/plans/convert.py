@@ -21,12 +21,14 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
   through the executor-side store of ``geo_metadata`` (local disk, viewfs
   mounts, s3/s3a, gs), each file with the ``geo`` key already in its
   footer. The driver publishes: it renames each cell dir out of
-  ``_temporary/<job>/``, deletes ``_temporary``, writes ``_SUCCESS``, the
-  error channel and the sidecar, in that order. That is the
-  ``_temporary`` → rename + ``_SUCCESS`` protocol the reference managed by
-  hand and Spark's FileOutputCommitter ran before. A scheme no executor
-  store can open (``hdfs://`` without libhdfs) keeps Spark's partitioned
-  writer followed by the footer attach.
+  ``_temporary/<job>/``, deletes ``_temporary``, writes ``_SUCCESS``
+  (holding the ``geo`` value), the error channel and the sidecar, in that
+  order. That is the ``_temporary`` → rename + ``_SUCCESS`` protocol the
+  reference managed by hand and Spark's FileOutputCommitter ran before.
+  For a scheme no executor store can open (``hdfs://`` without libhdfs)
+  the same tasks write each file to memory and the driver streams the
+  bytes into ``_temporary``, one writer partition at a time. Compaction
+  uses the same writer.
 - The staging ``<out>_temp`` store (``DatasetYearTrain.java:82-83,211-222``)
   existed only because the driver-side parse fed batches; the single
   distributed write replaces it.
@@ -50,10 +52,12 @@ bucket by (geohash3, salt) instead.
 
 from __future__ import annotations
 
+import json
 import os
 import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from itertools import groupby
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -63,9 +67,9 @@ from ..registry import cached_frames
 from ..sources.filesystem import FsClient
 from ..sources.wod_ascii import errors, ok_casts, wod_scan
 from .geo_metadata import (
+    GEOMETRY_COLUMN,
     SIDECAR_NAME,
     _resolve_executor_store,
-    attach_geo_footer,
     geo_footer_dict,
     geo_sidecar_bytes,
 )
@@ -185,8 +189,9 @@ def _write_error_channel(
     any malformed records; idempotent (overwrite). Called on the rare
     errors-present path of :func:`convert_file` (which already KNOWS the
     count from the in-flight Observation — ``known_has_errors=True``
-    skips the existence probe, saving a decode) and on sidecar heals,
-    where nothing is known and the probe runs."""
+    skips the existence probe, saving a decode), after a write with no
+    executor store (no Observation) and on sidecar heals, where nothing
+    is known and the probe runs."""
     errs = errors(_scan(spark, fs, task))
     if known_has_errors or errs.limit(1).count() > 0:
         errs.coalesce(1).write.mode("overwrite").parquet(task.error_path)
@@ -200,17 +205,25 @@ _ROW_GROUP_BYTES = 128 << 20
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
 
+#: The most bytes of an in-memory file one returned row carries; a larger
+#: file is returned as several rows, in order.
+_CHUNK_BYTES = 64 << 20
+
+
 class _CellFile:
     """One geohash3 cell's parquet file, open in a writer task: batches
     are buffered and written as row groups of about ``_ROW_GROUP_BYTES``
-    (pyarrow starts a new row group on every write)."""
+    (pyarrow starts a new row group on every write). With no ``store``
+    the file is written to memory, and :meth:`close` returns its bytes."""
 
     def __init__(self, store, path: str, schema):
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        self.path, self.rows, self._pending, self._bytes = path, 0, [], 0
+        self.path, self._pending, self._bytes = path, [], 0
         self._schema = schema
-        self._sink = store.open_output(path)
+        self._in_memory = store is None
+        self._sink = pa.BufferOutputStream() if store is None else store.open_output(path)
         self._writer = pq.ParquetWriter(
             self._sink,
             schema,
@@ -220,7 +233,6 @@ class _CellFile:
 
     def add(self, batch) -> None:
         self._pending.append(batch)
-        self.rows += batch.num_rows
         self._bytes += batch.nbytes
         if self._bytes >= _ROW_GROUP_BYTES:
             self._flush()
@@ -233,15 +245,15 @@ class _CellFile:
             self._writer.write_table(table)
             self._pending, self._bytes = [], 0
 
-    def close(self) -> tuple[str, int, int]:
-        """Finish the file; ``(path, rows, bytes)``."""
+    def close(self):
+        """Finish the file; its bytes as a pyarrow ``Buffer`` when it was
+        written to memory, else None."""
         try:
             self._flush()
             self._writer.close()
-            size = self._sink.tell()
+            return self._sink.getvalue() if self._in_memory else None
         finally:
             self._sink.close()
-        return self.path, self.rows, size
 
 
 def _file_schema(schema, metadata: dict):
@@ -263,26 +275,48 @@ def _file_schema(schema, metadata: dict):
     )
 
 
+#: The rows a writer task returns: one per file it wrote through a store,
+#: ``data`` null; one per ``_CHUNK_BYTES`` of a file it wrote to memory.
+_WRITTEN_SCHEMA = "path string, data binary"
+
+
 def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
     """The ``mapInArrow`` body of the one-pass writer. Each task gets its
-    rows sorted by ``(geohash3, geohash)``, writes each geohash3 run as
-    ``<tmp_root>/geohash3=<v>/part-<partition>-<job>.c000.snappy.parquet``
-    (without the ``geohash3`` column, ``metadata`` in the footer) through
-    ``store``, and returns one ``(path, rows, bytes)`` row per file. A
-    retried or speculative attempt writes under ``attempt-<n>/``, so the
-    driver publishes only the files of the attempt that succeeded."""
+    rows sorted by ``(geohash3, geohash)`` and writes each geohash3 run as
+    ``<tmp_root>/<partition>-<attempt>/geohash3=<v>/part-<partition>-<job>
+    .c000.snappy.parquet`` (without the ``geohash3`` column, ``metadata``
+    in the footer) through ``store``, or to memory when ``store`` is None.
+    It returns ``_WRITTEN_SCHEMA`` rows as each file closes, so a task
+    holds at most one in-memory file. ``<attempt>`` is the task attempt's
+    id, unique in the application, so a failed or speculative attempt's
+    files never share a directory with the files the driver publishes:
+    those of the attempt whose rows it received."""
+    chunk_bytes = _CHUNK_BYTES
+
+    def returned(cell_file):
+        import pyarrow as pa
+
+        data = cell_file.close()
+        if data is None:
+            chunks = [None]
+        else:
+            chunks = [
+                data.slice(at, min(chunk_bytes, data.size - at)).to_pybytes()
+                for at in range(0, data.size, chunk_bytes)
+            ]
+        for chunk in chunks:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([cell_file.path]), pa.array([chunk], pa.binary())],
+                ["path", "data"],
+            )
 
     def write(batches):
-        import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        root = tmp_root
-        if ctx.attemptNumber():
-            root = f"{tmp_root}/attempt-{ctx.attemptNumber()}"
+        root = f"{tmp_root}/{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
         name = f"part-{ctx.partitionId():05d}-{job}.c000.snappy.parquet"
-        done: list[tuple[str, int, int]] = []
         cell, current, schema = None, None, None
         try:
             for batch in batches:
@@ -296,7 +330,7 @@ def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
                 ):
                     if current is None or value != cell:
                         if current is not None:
-                            done.append(current.close())
+                            yield from returned(current)
                         cell = value
                         part = _NULL_PARTITION if value is None else value
                         current = _CellFile(
@@ -307,35 +341,65 @@ def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
                     current.add(data.slice(start, end - start))
                     start = end
             if current is not None:
-                done.append(current.close())
-                current = None
+                last, current = current, None
+                yield from returned(last)
         finally:
             if current is not None:  # a failed task: release the stream
                 current._sink.close()
-        if done:
-            paths, rows, sizes = zip(*done)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(paths), pa.array(rows, pa.int64()), pa.array(sizes, pa.int64())],
-                ["path", "rows", "bytes"],
-            )
 
     return write
 
 
+def _publish_plan(paths: list[str], out: str) -> list[tuple[str, str]]:
+    """The ``(src, dst)`` renames that publish the files at ``paths`` —
+    the rows the writer tasks returned, each under
+    ``<out>/_temporary/<job>/<task>/geohash3=<v>/`` — into ``out``, in
+    order. A cell's first task directory is renamed to
+    ``<out>/geohash3=<v>``: one rename per cell when every cell is one
+    task's, as in convert. The files of a cell's other task directories (a
+    cell split over tasks by compaction's rebalance) are renamed into it.
+    Files not in ``paths``, such as a failed attempt's, are not moved."""
+    first: dict[str, str] = {}
+    renames: list[tuple[str, str]] = []
+    for path in paths:
+        task_cell = posixpath.dirname(path)
+        cell = posixpath.basename(task_cell)
+        if cell not in first:
+            first[cell] = task_cell
+            renames.append((task_cell, _join(out, cell)))
+        elif first[cell] != task_cell:
+            renames.append((path, _join(out, cell, posixpath.basename(path))))
+    return renames
+
+
+def _geo_value(encoding: str) -> bytes:
+    """The ``geo`` footer value for ``encoding``, as files and ``_SUCCESS``
+    store it."""
+    return json.dumps(geo_footer_dict(encoding)).encode()
+
+
 def _write_geoparquet(
     spark: SparkSession, fs: FsClient, store, frame, out: str, encoding: str
-) -> None:
-    """Write ``frame`` (hash-partitioned and sorted by geohash3) to ``out``
-    as geohash3-partitioned GeoParquet in one pass, and publish it.
+) -> int:
+    """Write ``frame`` (sorted by ``(geohash3, geohash)`` within each
+    partition) to ``out`` as geohash3-partitioned GeoParquet in one pass,
+    and publish it; returns the number of files written.
 
     Writer tasks write every file under ``<out>/_temporary/<job>/`` with
     the ``geo`` key, and Spark's row-schema and version keys, already in
-    the footer (:func:`_cell_writer`). The driver then renames each
-    geohash3 dir into ``out`` (one rename per cell: the hash repartition
-    gives every cell to one task), deletes ``_temporary`` and writes
-    ``_SUCCESS``. A crash before ``_SUCCESS`` leaves either ``_temporary``
-    or no marker at all, and the next run rebuilds."""
-    import json
+    the footer (:func:`_cell_writer`), through ``store``, and the driver
+    collects the returned paths. Where no executor-side store opens the
+    scheme (``store`` is None, e.g. ``hdfs://`` without libhdfs), the
+    tasks return each file's bytes instead, and the driver streams them
+    (``toLocalIterator``: one job per writer partition, so the driver
+    holds one task's output at a time) into the same paths. Only the
+    collect completes an ``Observation`` upstream of ``frame``; the
+    stream leaves it pending. The driver then renames the
+    files into ``out`` (:func:`_publish_plan`), deletes ``_temporary`` and
+    writes ``_SUCCESS`` holding the ``geo`` value every file was written
+    with, which a resume reads to heal a missing sidecar. A crash before
+    ``_SUCCESS`` leaves either ``_temporary`` or no marker at all, and the
+    next run rebuilds."""
     import uuid
 
     from pyspark.sql.types import StructType
@@ -343,8 +407,9 @@ def _write_geoparquet(
     fs.delete(out)  # the job owns the directory, as a static overwrite does
     job = str(uuid.uuid4())
     schema = StructType([f for f in frame.schema.fields if f.name != "geohash3"])
+    geo = _geo_value(encoding)
     metadata = {
-        b"geo": json.dumps(geo_footer_dict(encoding)).encode(),
+        b"geo": geo,
         b"org.apache.spark.version": spark.version.encode(),
         # Spark's own key order, as its writer serializes the row schema
         b"org.apache.spark.sql.parquet.row.metadata": json.dumps(
@@ -353,13 +418,40 @@ def _write_geoparquet(
     }
     tmp = _join(out, "_temporary")
     written = frame.mapInArrow(
-        _cell_writer(store, _join(tmp, job), job, metadata),
-        "path string, rows bigint, bytes bigint",
-    ).collect()
-    cell_dirs = [posixpath.dirname(row.path) for row in written]
-    fs.rename_all([(d, _join(out, posixpath.basename(d))) for d in cell_dirs])
+        _cell_writer(store, _join(tmp, job), job, metadata), _WRITTEN_SCHEMA
+    )
+    if store is not None:
+        paths = [row.path for row in written.collect()]
+    else:
+        paths = []
+        # a file's chunks arrive as consecutive rows, in order
+        for path, rows in groupby(written.toLocalIterator(), lambda r: r.path):
+            fs.write_chunks(path, (row.data for row in rows))
+            paths.append(path)
+    fs.rename_all(_publish_plan(paths, out))
     fs.delete(tmp)
-    fs.write_bytes(_join(out, "_SUCCESS"), b"")
+    fs.write_bytes(_join(out, "_SUCCESS"), geo)
+    return len(paths)
+
+
+def _published_encoding(fs: FsClient, out: str) -> str | None:
+    """The footer encoding ``out``'s ``_SUCCESS`` records, or None when the
+    marker holds no ``geo`` value of this writer (Spark's committer wrote
+    it, e.g. an earlier version of this pipeline or the reference's
+    job)."""
+    marker = fs.read_bytes(_join(out, "_SUCCESS"))
+    for encoding in ("point", "WKB"):
+        if marker == _geo_value(encoding):
+            return encoding
+    return None
+
+
+def attach_geo_footer(*_args, **_kwargs) -> int:
+    """Does nothing; returns 0. Every GeoParquet file is written with its
+    ``geo`` footer (:func:`_write_geoparquet`). The name remains only
+    because ``perfbench/spans.py`` wraps it by attribute for its
+    ``geo_metadata.attach`` span; it goes when that span does."""
+    return 0
 
 
 def convert_file(
@@ -383,25 +475,29 @@ def convert_file(
     """
     fs = FsClient(spark)
     out = fs.qualify(task.output_path)
-    if overwrite or _has_stale_temp(fs, out):
-        fs.delete(out)
-        fs.delete(task.error_path)
-    if _has_success(fs, out):
+    rebuild = overwrite or _has_stale_temp(fs, out)
+    if not rebuild and _has_success(fs, out):
         # The sidecar is written LAST, after _SUCCESS and the error
         # channel, so it is the publish-completion marker: a crash after
-        # _SUCCESS but before publish completed heals here (every step is
-        # idempotent — the error channel is rebuilt from one re-decode,
-        # the sidecar rewrite is restartable) instead of forcing a
-        # rebuild. The footer attach is a no-op on files the one-pass
-        # writer made; it stamps outputs of the fallback arm and of
-        # versions that attached `geo` after the commit.
+        # _SUCCESS but before publish completed heals here (the error
+        # channel is rebuilt from one re-decode, the sidecar rewrite is
+        # restartable) instead of forcing a rebuild. The heal writes the
+        # sidecar for the encoding _SUCCESS records, the one the files
+        # were written with, not this call's.
         sidecar = _join(out, SIDECAR_NAME)
-        if not fs.exists(sidecar):
+        if fs.exists(sidecar):
+            return "skipped"
+        enc = _published_encoding(fs, out)
+        if enc is not None:
             _write_error_channel(spark, fs, task)
-            enc = _footer_encoding(geometry_encoding)
-            attach_geo_footer(fs, out, spark=spark, encoding=enc)
             fs.write_bytes(sidecar, geo_sidecar_bytes(enc))
-        return "skipped"
+            return "skipped"
+        # Spark's committer wrote this marker, so nothing says the files
+        # carry `geo` or which encoding they hold: rebuild.
+        rebuild = True
+    if rebuild:
+        fs.delete(out)
+        fs.delete(task.error_path)
 
     # No cache: the scattered parse is cheap enough that recomputing it for
     # the rare error-channel job beats paying the in-memory columnar encode
@@ -420,13 +516,19 @@ def convert_file(
     # _SUCCESS alone no longer implies the error channel exists — the
     # SIDECAR is the completion marker, and the skip path above rebuilds
     # the channel whenever it heals a missing sidecar.
+    # The Observation completes only when the write collects its result,
+    # which it does through an executor store; with none, the write
+    # streams its result, and the error channel probes for errors itself.
     from pyspark.sql import Observation
 
-    obs = Observation("wod_convert_errors")
-    parsed = parsed.observe(
-        obs,
-        F.sum(F.when(F.col("err").isNotNull(), 1).otherwise(0)).alias("n_err"),
-    )
+    store = _resolve_executor_store(spark, out)
+    obs = None
+    if store is not None:
+        obs = Observation("wod_convert_errors")
+        parsed = parsed.observe(
+            obs,
+            F.sum(F.when(F.col("err").isNotNull(), 1).otherwise(0)).alias("n_err"),
+        )
     # castTimestamp: assembled from Y/M/D + fractional-hour time
     # (SURVEY §1.2); try_* variants — invalid header dates yield null,
     # not a job failure, under ANSI mode.
@@ -475,30 +577,15 @@ def convert_file(
     # Sort by (geohash3, geohash): each task's cells arrive as contiguous
     # runs (one file each), and within a cell rows are in the reference's
     # sortWithinPartitions("geohash") order, since geohash3 is a prefix of
-    # geohash. Spark's partitioned writer (the fallback below) keeps this
-    # order only because it starts with the partition column; otherwise it
-    # inserts its own non-stable sort.
+    # geohash.
     frame = casts.repartition(n_write_tasks, F.col("geohash3")).sortWithinPartitions(
         "geohash3", "geohash"
     )
     enc = _footer_encoding(geometry_encoding)
-    store = _resolve_executor_store(spark, out)
-    if store is not None:
-        _write_geoparquet(spark, fs, store, frame, out, enc)
-    else:
-        # No executor-side client for this scheme: Spark's partitioned
-        # writer, then the footer attach stamps `geo` into every file.
-        (
-            frame.write.mode("overwrite")
-            # static overwrite: the job owns the whole directory, and the
-            # dynamic committer would skip the _SUCCESS marker the
-            # skip/resume contract keys on (DatasetYearTrain.java:92).
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("geohash3")
-            .parquet(out)
-        )
-        attach_geo_footer(fs, out, spark=spark, encoding=enc)
-    if int(obs.get["n_err"] or 0) > 0:
+    _write_geoparquet(spark, fs, store, frame, out, enc)
+    if obs is None:
+        _write_error_channel(spark, fs, task)
+    elif int(obs.get["n_err"] or 0) > 0:
         # Rare path: re-decode to materialize the error channel (a fresh
         # scan — the observed frame's metric is already consumed; the
         # Observation already proved errors exist, so no probe).
@@ -605,7 +692,6 @@ def compact_convert_output(
     spark: SparkSession,
     output: str,
     target_bytes: int = 128 * 1024 * 1024,
-    geometry_encoding: str = "point",
 ) -> dict:
     """Consolidate a finished convert run's per-input-file datasets into
     one geohash3-partitioned dataset per ``(dataset, level)`` under
@@ -624,23 +710,26 @@ def compact_convert_output(
     documented compact-then-flip-the-pointer pattern (see
     ``plans/compact.py``), which is also the only safe shape on s3a
     where in-place publish renames are copy+delete. Re-running this
-    function is idempotent (static overwrite of ``compacted/``).
+    function is idempotent (each destination is deleted and rewritten).
 
     Layout: a ``REBALANCE(geohash3)`` exchange (ADVICE r12: the previous
     ``repartition(n, geohash3)`` routed each geohash3 WHOLLY to one
     task, so the output was always exactly one file per geohash3 dir and
     ``target_bytes`` was inert — a hot coastal cell could not be split)
-    + within-partition ``(geohash3, geohash)`` sort + ``partitionBy
-    (geohash3)``, with AQE's advisory partition size conf-scoped to
-    ``target_bytes`` so the rebalance actually aims at it: cold cells
-    coalesce into shared tasks (still one file each — the writer splits
-    by value), an oversized hot cell splits into several ~``target_
-    bytes`` geohash-sorted files in its dir. Same clustering contract as
-    the per-file jobs (zorder-compatible: the sort key is pluggable the
-    way ``plans/zorder.py`` layers on ``plans/compact.py``); the
-    geohash-prefix dir invariant is enforced by the partitioned writer
-    itself, independent of task layout. The GeoParquet footer + sidecar
-    are re-attached (compaction must not demote the dataset). Returns
+    + within-partition ``(geohash3, geohash)`` sort + the one-pass
+    GeoParquet writer (:func:`_write_geoparquet`), with AQE's advisory
+    partition size conf-scoped to ``target_bytes`` so the rebalance
+    actually aims at it: cold cells coalesce into shared tasks (still one
+    file each — the writer starts a file at every geohash3 run), an
+    oversized hot cell splits into several ~``target_bytes``
+    geohash-sorted files in its dir. Same clustering contract as the
+    per-file jobs (zorder-compatible: the sort key is pluggable the way
+    ``plans/zorder.py`` layers on ``plans/compact.py``); the
+    geohash-prefix dir invariant is enforced by the writer itself,
+    independent of task layout. Every file is written with the ``geo``
+    footer the input's ``geometry`` column calls for (binary: 1.0.0 WKB;
+    otherwise 1.1.0 point), and the sidecar follows, so compaction never
+    demotes the dataset or mislabels its geometry. Returns
     per-(dataset, level) stats.
 
     Reads run with partition-column TYPE INFERENCE DISABLED (ADVICE r12
@@ -651,6 +740,8 @@ def compact_convert_output(
     and breaking the geohash-prefix invariant. The corruption happens AT
     READ (partition-value parse), so a post-read cast cannot repair it;
     only inference-off reads can."""
+    from pyspark.sql.types import BinaryType
+
     from .compact import _is_data_file
 
     fs = FsClient(spark)
@@ -694,25 +785,27 @@ def compact_convert_output(
                     (spark.read.parquet(d) for d in dirs),
                 )
                 dest = _join(output, "compacted", ds, lvl)
-                (
-                    df.hint("rebalance", F.col("geohash3"))
-                    .sortWithinPartitions("geohash3", "geohash")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "static")
-                    .partitionBy("geohash3")
-                    .parquet(dest)
+                # the footer the input's geometry column calls for: binary
+                # is WKB; a struct, or no geometry at all, the point footer
+                types = {f.name: f.dataType for f in df.schema.fields}
+                enc = "WKB" if isinstance(types.get(GEOMETRY_COLUMN), BinaryType) else "point"
+                files_after = _write_geoparquet(
+                    spark,
+                    fs,
+                    _resolve_executor_store(spark, dest),
+                    df.hint("rebalance", F.col("geohash3")).sortWithinPartitions(
+                        "geohash3", "geohash"
+                    ),
+                    dest,
+                    enc,
                 )
-                enc = _footer_encoding(geometry_encoding)
-                attach_geo_footer(fs, dest, spark=spark, encoding=enc)
                 fs.write_bytes(
                     _join(dest, SIDECAR_NAME), geo_sidecar_bytes(enc)
                 )
                 stats[f"{ds}/{lvl}"] = {
                     "inputs": len(dirs),
                     "files_before": len(sizes),
-                    "files_after": sum(
-                        1 for p in fs.file_sizes(dest) if _is_data_file(p)
-                    ),
+                    "files_after": files_after,
                     "bytes_total": total,
                     "dest": dest,
                 }
