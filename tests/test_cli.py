@@ -5,8 +5,7 @@ from __future__ import annotations
 import json
 
 from wod_ascii_to_parquet_spark_spark.cli import build_parser, main
-
-WOD = "/root/reference/src/test/resources/wod"
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import wod_fixtures_dir
 
 
 def test_cli_help_lists_reference_flags():
@@ -17,9 +16,10 @@ def test_cli_help_lists_reference_flags():
 
 
 def test_cli_convert_subset(spark, tmp_path, capsys):
+    wod = wod_fixtures_dir()
     out = str(tmp_path / "out")
     rc = main([
-        "--source", WOD, "--output", out,
+        "--source", wod, "--output", out,
         "-d", "CTD", "-p", "OBS", "-p", "STD",
     ])
     assert rc == 0
@@ -27,7 +27,7 @@ def test_cli_convert_subset(spark, tmp_path, capsys):
     assert len(payload["converted"]) == 2  # OBS + STD CTD fixtures
     assert not payload["failed"]
     # second run: everything skips (idempotent)
-    rc = main(["--source", WOD, "--output", out, "-d", "CTD", "-p", "OBS", "-p", "STD"])
+    rc = main(["--source", wod, "--output", out, "-d", "CTD", "-p", "OBS", "-p", "STD"])
     assert rc == 0
     payload = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert len(payload["skipped"]) == 2 and not payload["converted"]
@@ -43,7 +43,7 @@ def test_cli_compact_target_bytes_consolidates_datasets(spark, tmp_path, capsys)
 
     src = tmp_path / "src" / "CTD" / "OBS"
     src.mkdir(parents=True)
-    fixture = WOD + "/CTD/OBS/CTDO1971.gz"
+    fixture = wod_fixtures_dir() + "/CTD/OBS/CTDO1971.gz"
     # two input files in one (dataset, level): the consolidation case —
     # the same geohash3 dirs appear once per input dataset
     shutil.copy(fixture, src / "CTDO1971.gz")

@@ -179,11 +179,13 @@ def test_cast_timestamp_assembly(spark, tmp_path):
         convert_file,
     )
 
+    from wod_ascii_to_parquet_spark_spark.sources.wod_encode import wod_fixtures_dir
+
     out = str(tmp_path / "out")
     task = FileTask(
         "XBT",
         "OBS",
-        "/root/reference/src/test/resources/wod/XBT/OBS/XBTO1967.gz",
+        f"{wod_fixtures_dir()}/XBT/OBS/XBTO1967.gz",
         out,
         out,
     )

@@ -27,10 +27,12 @@ from wod_ascii_to_parquet_spark_spark.plans.convert import (
     convert,
     convert_file,
 )
-
-from .wod_encode import make_casts, wod_text, write_wod_file
-
-WOD = "/root/reference/src/test/resources/wod"
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+    make_casts,
+    wod_fixtures_dir,
+    wod_text,
+    write_wod_file,
+)
 
 #: The generated stand-in for XBTO1967: seeded casts spread over many
 #: geohash3 cells, cast numbers from FIRST_CAST.
@@ -54,7 +56,7 @@ def converted(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("wod_out"))
     result = convert(
         spark,
-        source=WOD,
+        source=wod_fixtures_dir(),
         output=out,
         datasets=("APB", "CTD", "SUR", "XBT"),
         levels=("OBS", "STD"),
@@ -316,7 +318,7 @@ def test_convert_run_leaves_cache_empty(spark, tmp_path, monkeypatch):
     spark.catalog.clearCache()
     result = C.convert(
         spark,
-        source=WOD,
+        source=wod_fixtures_dir(),
         output=str(tmp_path / "out"),
         datasets=("CTD",),
         levels=("OBS", "STD"),

@@ -23,8 +23,12 @@ from wod_ascii_to_parquet_spark_spark.sources.filesystem import (
     s3a_available,
     s3a_confs,
 )
-
-WOD_FIXTURES = "/root/reference/src/test/resources/wod"
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+    make_casts,
+    wod_fixtures_dir,
+    wod_text,
+    write_wod_file,
+)
 
 
 def test_fs_prefix_mirrors_reference():
@@ -86,9 +90,11 @@ def test_fsclient_roundtrip_file_uri(spark, tmp_path):
 
 
 def test_plan_tasks_file_uri_matches_local(spark):
-    local = plan_tasks(WOD_FIXTURES, "/tmp/out", datasets=("CTD", "XBT"))
+    wod = wod_fixtures_dir()
+    local = plan_tasks(wod, "/tmp/out", datasets=("CTD", "XBT"))
+    assert local  # compares real task lists, not two empty listings
     uri = plan_tasks(
-        f"file://{WOD_FIXTURES}", "/tmp/out", datasets=("CTD", "XBT"), spark=spark
+        f"file://{wod}", "/tmp/out", datasets=("CTD", "XBT"), spark=spark
     )
     assert [t.input_path.removeprefix("file://") for t in uri] == [
         t.input_path for t in local
@@ -100,8 +106,6 @@ def test_convert_end_to_end_over_file_uris(spark, tmp_path):
     """Full pipeline with BOTH endpoints as URIs: plan/list, parse, write,
     _SUCCESS detection, skip-on-resume, overwrite — all through the Hadoop
     FileSystem layer (the exact code path an s3a:// run takes)."""
-    from .wod_encode import make_casts, wod_text, write_wod_file
-
     src = f"file://{tmp_path}/src"
     write_wod_file(f"{tmp_path}/src/APB/OBS/APBO1997.gz", wod_text(make_casts(1, 1997)))
     out = f"file://{tmp_path}/converted"

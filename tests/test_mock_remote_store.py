@@ -36,8 +36,11 @@ from wod_ascii_to_parquet_spark_spark.sources.filesystem import (
     FsClient,
     local_os_path,
 )
-
-from .wod_encode import make_casts, wod_text, write_wod_file
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+    make_casts,
+    wod_text,
+    write_wod_file,
+)
 
 
 @pytest.fixture()

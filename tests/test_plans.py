@@ -267,6 +267,7 @@ def test_convert_schedules_largest_files_first(spark, tmp_path, monkeypatch):
     import os
 
     from wod_ascii_to_parquet_spark_spark.plans import convert as C
+    from wod_ascii_to_parquet_spark_spark.sources.wod_encode import wod_fixtures_dir
 
     seen = []
     real = C.convert_file
@@ -278,7 +279,7 @@ def test_convert_schedules_largest_files_first(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(C, "convert_file", spy)
     C.convert(
         spark,
-        "/root/reference/src/test/resources/wod",
+        wod_fixtures_dir(),
         str(tmp_path / "out"),
         datasets=("APB", "CTD", "XBT"),
         levels=("OBS", "STD"),

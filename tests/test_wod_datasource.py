@@ -15,8 +15,11 @@ from wod_ascii_to_parquet_spark_spark.sources.wod_datasource import (
     WodAsciiReader,
     register_wod_datasource,
 )
-
-from .wod_encode import make_casts, wod_text, write_wod_file
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+    make_casts,
+    wod_text,
+    write_wod_file,
+)
 
 #: relative path -> (casts, malformed indices, framing failure before index)
 FILES = {

@@ -18,8 +18,12 @@ from wod_ascii_to_parquet_spark_spark.sources.wod_format import (
     parse_cast,
     split_records,
 )
-
-from .wod_encode import encode_cast, make_casts, wod_text, write_wod_file
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+    encode_cast,
+    make_casts,
+    wod_text,
+    write_wod_file,
+)
 
 FIXTURES = sorted(glob.glob("/root/reference/src/test/resources/wod/*/*/*.gz"))
 

@@ -1,6 +1,6 @@
 """Property-based round-trip fuzzing of the WOD decoder.
 
-The test-only WOD *encoder* (``tests/wod_encode.py``) renders random casts
+The WOD *encoder* (``sources/wod_encode.py``) renders random casts
 in the WOD native variable-length encoding (including 80-char line
 framing), and the production decoder must recover every field exactly. This covers encode
 paths the six fixtures never exercise (missing values everywhere, extreme
@@ -22,8 +22,7 @@ from wod_ascii_to_parquet_spark_spark.sources.wod_format import (
     parse_cast,
     split_records,
 )
-
-from .wod_encode import dec_of, encode_cast
+from wod_ascii_to_parquet_spark_spark.sources.wod_encode import dec_of, encode_cast
 
 
 # --- strategies ------------------------------------------------------------

@@ -105,7 +105,11 @@ def test_get_spark_from_outside_the_repo(tmp_path):
     script.write_text(textwrap.dedent(f"""
         import os, sys
         sys.path.insert(0, {_IMPORT_ROOT!r})
-        from tests.wod_encode import make_casts, wod_text, write_wod_file
+        from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+            make_casts,
+            wod_text,
+            write_wod_file,
+        )
         from wod_ascii_to_parquet_spark_spark.session import get_spark
         from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import wod_scan
 

@@ -8,10 +8,13 @@ the pipeline itself is scheme-agnostic through Hadoop's FileSystem API
 hadoop-aws + AWS SDK jars on the classpath (not bundled here; the CLI
 fails fast with a clear message when asked for s3 without them).
 
-Usage:
+Usage, over the WOD fixture tree ``sources.wod_encode.wod_fixtures_dir()``
+resolves (the reference's bundled files where present, else a generated
+tree of the same paths):
+    WOD="$(python -c 'from wod_ascii_to_parquet_spark_spark.sources.wod_encode \
+        import wod_fixtures_dir; print(wod_fixtures_dir())')"
     python -m wod_ascii_to_parquet_spark_spark.cli \
-        --source /root/reference/src/test/resources/wod \
-        --output /tmp/wod_out -d CTD -d XBT -p OBS
+        --source "$WOD" --output /tmp/wod_out -d CTD -d XBT -p OBS
 """
 
 from __future__ import annotations

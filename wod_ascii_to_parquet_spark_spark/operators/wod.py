@@ -1,10 +1,13 @@
-"""WOD-domain operator queries (registry entries over the reference's bundled
-fixtures — read-only at /root/reference/src/test/resources/wod).
+"""WOD-domain operator queries (registry entries over the WOD fixture tree
+that ``sources.wod_encode.wod_fixtures_dir()`` resolves when a query runs:
+the reference's bundled files where present, else a generated tree of the
+same paths and shapes).
 
 Most are rows-only (no SQL oracle: the WOD decode runs over fixture files
 the oracle's table views cannot see); their correctness is covered by
-tests/test_wod_format.py (byte-exact framing invariant on all 34k fixture
-casts) and tests/test_geohash.py (canonical-bisection property check).
+tests/test_wod_format.py (byte-exact framing invariant on the fixture
+casts and on generated records), tests/test_convert_e2e.py and
+tests/test_geohash.py (canonical-bisection property check).
 ``udf_geohash_oracle`` additionally puts the geohash kernel itself under
 the hash-checked gate via a generated DuckDB mirror over testdata-derived
 coordinates.
@@ -18,12 +21,11 @@ from pyspark.sql import functions as F
 from ..functions.geohash import geohash_col, geohash_sql_parts, geohash_udf
 from ..registry import load, local_df, register
 from ..sources.wod_ascii import ok_casts, wod_scan
-
-WOD_FIXTURES = "/root/reference/src/test/resources/wod"
+from ..sources.wod_encode import wod_fixtures_dir
 
 
 def _casts(spark: SparkSession, rel: str, dataset: str) -> DataFrame:
-    return ok_casts(wod_scan(spark, f"{WOD_FIXTURES}/{rel}", dataset=dataset))
+    return ok_casts(wod_scan(spark, f"{wod_fixtures_dir()}/{rel}", dataset=dataset))
 
 
 @register("source_discovery", None, tags=("wod", "rows-only"))
@@ -35,7 +37,7 @@ def source_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.convert import plan_tasks
 
     tasks = plan_tasks(
-        WOD_FIXTURES, "/tmp/__discovery__",
+        wod_fixtures_dir(), "/tmp/__discovery__",
         datasets=("APB", "CTD", "DRB", "SUR", "XBT"), levels=("OBS", "STD"),
     )
     rows = [
@@ -63,7 +65,7 @@ def wod_convert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.convert import FileTask, convert_file
 
     out = tempfile.mkdtemp(prefix="wod_pipeline_q_")
-    task = FileTask("CTD", "OBS", f"{WOD_FIXTURES}/CTD/OBS/CTDO1971.gz", out, out)
+    task = FileTask("CTD", "OBS", f"{wod_fixtures_dir()}/CTD/OBS/CTDO1971.gz", out, out)
     convert_file(spark, task)
     df = spark.read.parquet(task.output_path)
     return df.select(
@@ -290,7 +292,7 @@ def wod_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_wod_datasource(spark)
     df = spark.read.format("wod_ascii").load(
-        f"{WOD_FIXTURES}/XBT/OBS/XBTO1967.gz"
+        f"{wod_fixtures_dir()}/XBT/OBS/XBTO1967.gz"
     )
     return (
         df.filter(F.col("ok").isNotNull())
