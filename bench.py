@@ -5,8 +5,10 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 Each query is materialized with the noop sink (full execution, no driver
 collect cost). The WOD conversion job (the reference's actual workload —
-largest bundled fixture, 9,390 casts / 68,915 lines) is benched alongside
-the relational/LLM-ops headliners.
+``XBTO1967``, 9,390 casts, from ``sources.wod_encode.wod_fixtures_dir()``:
+the reference's bundled file where its checkout sits next to the repo,
+else the generated stand-in) is benched alongside the relational/LLM-ops
+headliners.
 """
 
 from __future__ import annotations
@@ -248,17 +250,18 @@ def main() -> None:
     # min-of-2 reported mid-warmup numbers — the r7 driver-vs-warm gap
     # (5.82 vs 3.24 s) was warmup, not plan cost.
     from wod_ascii_to_parquet_spark_spark.plans.convert import FileTask, convert_file
+    from wod_ascii_to_parquet_spark_spark.sources.wod_encode import (
+        _reference_tree,
+        wod_fixtures_dir,
+    )
+
+    wod_root = wod_fixtures_dir()
+    xbt = os.path.join(wod_root, "XBT", "OBS", "XBTO1967.gz")
 
     def _wod_run() -> float:
         out = tempfile.mkdtemp(prefix="bench_wod_")
         try:
-            task = FileTask(
-                "XBT",
-                "OBS",
-                "/root/reference/src/test/resources/wod/XBT/OBS/XBTO1967.gz",
-                out,
-                out,
-            )
+            task = FileTask("XBT", "OBS", xbt, out, out)
             t0 = time.perf_counter()
             convert_file(spark, task)
             return time.perf_counter() - t0
@@ -349,6 +352,14 @@ def main() -> None:
     detail = dict(
         out_doc,
         cold_runs=cold,
+        # what wod_convert_xbt measured: the generated stand-in has the
+        # real file's 9,390 casts in 260 geohash3 cells, the real one 1,652
+        wod_convert_xbt_input=(
+            f"{xbt} (the reference's file)"
+            if wod_root == _reference_tree()
+            else f"{xbt} (generated by sources/wod_encode.py: 9,390 casts in "
+            "260 geohash3 cells; the reference's file has 1,652 cells)"
+        ),
         # start/end probe pairs behind the recorded max — the spread IS
         # the ambient-volatility measurement for the run's window
         cpu_probe_before_sec=probe_before,

@@ -482,21 +482,27 @@ def test_fallback_arm_streams_one_partition_per_job(spark, tmp_path, monkeypatch
     assert spark.read.parquet(task.error_path).count() == 1
 
 
-def _stage_names(spark, group: str, fn) -> list[str]:
-    """Names of every stage the jobs of ``fn()`` ran, under job group
-    ``group``."""
+def _stage_ids(spark, group: str, fn) -> list[int]:
+    """Ids of every stage the jobs of ``fn()`` ran, under job group
+    ``group``, in job order."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is fed from the bus
     tracker = sc.statusTracker()
     return [
-        tracker.getStageInfo(s).name
-        for j in tracker.getJobIdsForGroup(group)
-        for s in tracker.getJobInfo(j).stageIds
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
     ]
+
+
+def _stage_names(spark, group: str, fn) -> list[str]:
+    """Names of every stage the jobs of ``fn()`` ran, under job group
+    ``group``."""
+    tracker = spark.sparkContext.statusTracker()
+    return [tracker.getStageInfo(s).name for s in _stage_ids(spark, group, fn)]
 
 
 def test_converted_file_job_launches_no_footer_attach_job(spark, tmp_path):
@@ -600,3 +606,116 @@ def test_compaction_runs_no_footer_job(spark, tmp_path):
         ghs = pq.read_table(f, columns=["geohash"])["geohash"].to_pylist()
         assert ghs == sorted(ghs) and all(g.startswith(cell) for g in ghs), f
     assert spark.read.parquet(dest).count() == 2 * GEN_CASTS
+
+
+# -- decode in the writer tasks ----------------------------------------------
+
+
+def _shuffle_map_stages(spark, group: str, fn) -> list[int]:
+    """Ids of the stages that wrote shuffle output in the jobs ``fn()``
+    ran under job group ``group``."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    shuffled = []
+    for s in sorted(set(_stage_ids(spark, group, fn))):
+        attempts = store.stageData(s, False, None, False, None)
+        if any(attempts.apply(i).shuffleWriteRecords() > 0 for i in range(attempts.size())):
+            shuffled.append(s)
+    return shuffled
+
+
+def test_deep_file_job_runs_one_shuffle_map_stage(spark, tmp_path):
+    """A deep file of at least 256 KiB is framed in one task and decoded
+    in the writer tasks: the file-job's only exchange is the writer's, of
+    flat record rows, so one stage writes shuffle output."""
+    import random
+
+    casts = make_casts(200, GEN_SEED, first_cast=FIRST_CAST)
+    rng = random.Random(GEN_SEED)
+    for c in casts:
+        c["depths"] = [
+            (i * 5.0, [rng.uniform(-2, 30) for _ in c["variables"]])
+            for i in range(rng.randint(150, 300))
+        ]
+    src = write_wod_file(str(tmp_path / "src" / "CTD" / "OBS" / "CTDO1971.gz"), wod_text(casts))
+    assert os.path.getsize(src) >= 256 * 1024
+    task = FileTask("CTD", "OBS", src, str(tmp_path / "out"), str(tmp_path / "out"))
+    stages = _shuffle_map_stages(
+        spark, f"deep-census-{tmp_path.name}", lambda: convert_file(spark, task)
+    )
+    assert len(stages) == 1, stages
+    _assert_published(spark, task, casts=200)
+
+
+#: Spark's row-schema footer key of an error store: ``CAST_ERROR`` with
+#: every field nullable, as Spark's parquet writer stores it.
+ERROR_ROW_METADATA = (
+    '{"type":"struct","fields":['
+    '{"name":"dataset","type":"string","nullable":true,"metadata":{}},'
+    '{"name":"castNumber","type":"integer","nullable":true,"metadata":{}},'
+    '{"name":"error","type":"string","nullable":true,"metadata":{}}]}'
+)
+
+
+def _error_task(tmp_path):
+    """A FileTask over a generated file with every kind of error row:
+    casts whose profile fails in three different geohash3 cells, one cast
+    whose year holds a non-digit and one whose cruise number is malformed
+    (both fail in the header, so their sort keys are null), and a garbage
+    line that ends the framing before the last casts."""
+    from wod_ascii_to_parquet_spark_spark.functions.geohash import geohash_encode_numpy
+    from wod_ascii_to_parquet_spark_spark.sources.wod_encode import GARBAGE_LINE, encode_cast
+
+    casts = make_casts(GEN_CASTS, GEN_SEED, first_cast=FIRST_CAST)
+    deep = [
+        i for i, c in enumerate(casts)
+        if len(c["depths"]) >= 2 and c["depths"][-1][1][0] is not None
+    ]
+    kinds = {**dict.fromkeys(deep[:3], "profile"), deep[3] + 1: "year", deep[3] + 2: "header"}
+    cells = geohash_encode_numpy(
+        [casts[i]["lat"] for i in deep[:3]], [casts[i]["lon"] for i in deep[:3]], 3
+    )
+    assert len(set(cells)) == 3
+    records = [encode_cast(c, kinds.get(i, False)) for i, c in enumerate(casts)]
+    records.insert(GEN_CASTS - 5, GARBAGE_LINE)
+    src = write_wod_file(
+        str(tmp_path / "src" / "XBT" / "OBS" / "XBTO1967.gz"), "\n".join(records) + "\n"
+    )
+    out = str(tmp_path / "out")
+    return FileTask("XBT", "OBS", src, out, out)
+
+
+@pytest.mark.parametrize("arm", ["store", "streamed"])
+def test_error_store_matches_scan_errors(spark, tmp_path, monkeypatch, arm):
+    """The error rows the writer tasks return are the file's error rows,
+    on the store arm and on the streamed no-store arm alike, and no
+    ``Observation`` counts them: the error store holds exactly the rows of
+    ``errors(wod_scan(...))``, in Spark's error-store layout, with Spark's
+    row-schema footer key."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import DataFrame, Observation
+
+    import wod_ascii_to_parquet_spark_spark.plans.convert as C
+    from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import errors, wod_scan
+
+    task = _error_task(tmp_path)
+    expected = sorted(tuple(r) for r in errors(wod_scan(spark, task.input_path, "XBT")).collect())
+    assert len(expected) == 6  # three profiles, two headers, one framing failure
+    assert sum(1 for r in expected if r[1] == -1) == 1
+
+    def no_observation(*_a, **_k):
+        raise AssertionError("convert_file used an Observation")
+
+    monkeypatch.setattr(DataFrame, "observe", no_observation)
+    monkeypatch.setattr(Observation, "__init__", no_observation)
+    if arm == "streamed":
+        monkeypatch.setattr(C, "_resolve_executor_store", lambda *_a: None)
+    assert convert_file(spark, task) == "converted"
+    got = sorted(tuple(r) for r in spark.read.parquet(task.error_path).collect())
+    assert got == expected
+    names = sorted(n for n in os.listdir(task.error_path) if not n.startswith("."))
+    assert len(names) == 2 and names[0] == "_SUCCESS", names
+    assert os.path.getsize(os.path.join(task.error_path, "_SUCCESS")) == 0
+    assert names[1].startswith("part-00000-") and names[1].endswith("-c000.snappy.parquet")
+    md = pq.read_metadata(os.path.join(task.error_path, names[1])).metadata
+    assert md[b"org.apache.spark.sql.parquet.row.metadata"].decode() == ERROR_ROW_METADATA
+    _assert_published(spark, task, casts=GEN_CASTS - 5 - 5)

@@ -137,3 +137,34 @@ def test_get_spark_from_outside_the_repo(tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert proc.stdout.splitlines()[-2:] == ["lambda [11, 12]", "scan 3 1"], proc.stdout
+
+
+def test_forked_workers_start_with_convert_imported(tmp_path):
+    """The daemon imports ``pyarrow.parquet`` and the convert plan before
+    it forks: the first task of a fresh session, a function pickled by
+    value that imports nothing before it looks, finds both loaded."""
+    script = tmp_path / "driver.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {_IMPORT_ROOT!r})
+        from wod_ascii_to_parquet_spark_spark.session import get_spark
+
+        MODULES = ("pyarrow.parquet", "wod_ascii_to_parquet_spark_spark.plans.convert")
+
+        def loaded(_):
+            yield sorted(m for m in MODULES if m in sys.modules)
+
+        spark = get_spark(master="local[1]", extra_confs={{"spark.driver.memory": "1g"}})
+        try:
+            print("loaded", spark.sparkContext.parallelize([0], 1).mapPartitions(loaded).collect())
+        finally:
+            spark.stop()
+    """))
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert proc.stdout.splitlines()[-1] == (
+        "loaded [['pyarrow.parquet', 'wod_ascii_to_parquet_spark_spark.plans.convert']]"
+    ), proc.stdout

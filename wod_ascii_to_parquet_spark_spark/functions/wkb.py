@@ -14,27 +14,24 @@ WKB point layout (OGC 06-103r4 §8.2.3, 21 bytes):
     bytes 5-12  : x (longitude), IEEE-754 float64 LE
     bytes 13-20 : y (latitude),  IEEE-754 float64 LE
 
-Catalyst has no double→IEEE-bits expression, so this is one of the rare
-places a Pandas UDF is genuinely required — kept off the default write
-path (opt-in via ``--geo-encoding wkb``) and fully vectorized: the bit
-reinterpretation is a numpy ``view(uint8)`` over the Arrow batch, never
-per-row ``struct.pack``.
+Catalyst has no double→IEEE-bits expression, so the encode runs in
+Python: convert's writer tasks call :func:`wkb_point_bytes` on each
+batch's decoded coordinates (opt-in via ``--geo-encoding wkb``). It is
+fully vectorized: the bit reinterpretation is a numpy ``view(uint8)``
+over the batch, never per-row ``struct.pack``.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 #: byte-order marker + uint32 geometry type (Point) — the 5-byte WKB header.
 _WKB_POINT_HEADER = bytes([0x01, 0x01, 0x00, 0x00, 0x00])
 
 
 def wkb_point_bytes(lon: pd.Series, lat: pd.Series) -> pd.Series:
-    """Vectorized WKB point encode of two float64 series (pandas-level
-    kernel, shared by the UDF and the numpy-oracle parity test)."""
+    """Vectorized WKB point encode of two float64 series; a null
+    coordinate gives a null geometry (matches SQL geometry constructors)."""
     import numpy as np
 
     x = lon.to_numpy(dtype="<f8", copy=False)
@@ -50,21 +47,6 @@ def wkb_point_bytes(lon: pd.Series, lat: pd.Series) -> pd.Series:
         [None if null[i] else flat[i * 21 : (i + 1) * 21] for i in range(n)],
         dtype=object,
     )
-
-
-def wkb_point_col(lon: Column, lat: Column) -> Column:
-    """WKB point geometry column from longitude/latitude doubles; null
-    when either coordinate is null (matches SQL geometry constructors).
-    The UDF is constructed per call, not at import: ``pandas_udf``
-    resolves its return type against the ACTIVE session, so a
-    module-level decorator would bind whichever session imported this
-    module first (or fail when none exists yet on an executor)."""
-
-    @pandas_udf("binary")
-    def _wkb_point_udf(lo: pd.Series, la: pd.Series) -> pd.Series:
-        return wkb_point_bytes(lo, la)
-
-    return _wkb_point_udf(lon.cast("double"), lat.cast("double"))
 
 
 def parse_wkb_point(wkb: bytes) -> tuple[float, float]:

@@ -52,6 +52,7 @@ from ..operators.similarity import (
     _seed_array,
     _sqrt_n_seeds,
 )
+from ..sources.filesystem import hadoop_path_class
 
 INDEX_TABLE = "ann_ivfadc_index"
 
@@ -585,9 +586,8 @@ def _locks_dir(spark: SparkSession, table: str):
     — deliberately NOT inside the table location, which vacuum's
     drop+rename replaces mid-operation. Resolvable without touching the
     catalog, so a refusal can be issued before any table read."""
-    jvm = spark._jvm
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    return jvm.org.apache.hadoop.fs.Path(warehouse, f"{table}__locks")
+    return hadoop_path_class(spark._jvm)(warehouse, f"{table}__locks")
 
 
 @contextmanager
@@ -649,7 +649,6 @@ def _maintenance_lock(spark: SparkSession, table: str, op: str):
     # so mutators need only ever check one prefix)
     others = _MUTATORS if op in _EXCLUSIVE else ("vacuum",)
     other = "/".join(others)
-    jvm = spark._jvm
     d = _locks_dir(spark, table)
     fs = d.getFileSystem(spark._jsc.hadoopConfiguration())
     fs.mkdirs(d)
@@ -725,7 +724,7 @@ def _maintenance_lock(spark: SparkSession, table: str, op: str):
         "vacuum.lock" if op in _EXCLUSIVE
         else f"{op}.{_uuid.uuid4().hex}.lock"
     )
-    own = jvm.org.apache.hadoop.fs.Path(d, own_name)
+    own = hadoop_path_class(spark._jvm)(d, own_name)
     payload = _json.dumps(
         {"pid": os.getpid(), "host": host, "op": op}
     ).encode("utf-8")
@@ -766,8 +765,7 @@ def _table_data_file_count(spark: SparkSession, table: str) -> int:
     """Number of regular data files under the table location — the
     small-file health metric vacuum exists to bound (every bucketed
     append adds a full n_buckets file set)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(_table_location(spark, table))
+    path = hadoop_path_class(spark._jvm)(_table_location(spark, table))
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     n = 0
     it = fs.listFiles(path, True)

@@ -7,11 +7,14 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
   per-file tasks (``DatasetTrain.java:51-86``).
 - **skip/resume**: output ``_SUCCESS`` exists → skip; stale ``_temporary``
   or ``overwrite`` → clean first (``DatasetYearTrain.java:89-94``).
-- **convert one file**: distributed parse → split ok/err →
-  geohash + geohash3 → ``repartition("geohash3")`` →
-  ``sortWithinPartitions("geohash3", "geohash")`` → one-pass GeoParquet
-  write (``DatasetYearTrain.java:128-139``) + error store append
-  (``TransformationErrorHandler.java:42-52``).
+- **convert one file**: gunzip + frame records in one task, each record
+  with its header fields (``wod_ascii.frame_headers``) → castTimestamp +
+  geohash + geohash3 in the JVM → ``repartition("geohash3")`` →
+  ``sortWithinPartitions("geohash3", "geohash")`` → decode + one-pass
+  GeoParquet write in the writer tasks (``DatasetYearTrain.java:128-139``)
+  → error store (``TransformationErrorHandler.java:42-52``) from the error
+  rows the writer tasks return. The JVM moves flat rows only, record text
+  and sort keys: the nested cast rows exist only inside the writer tasks.
 - The reference's dead global ``orderBy(asc("geohash"))``
   (``DatasetYearTrain.java:130``) — a full range shuffle destroyed by the
   following repartition — is intentionally omitted.
@@ -20,21 +23,23 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
   ``mapInArrow`` writer task writes its geohash3 cells with pyarrow,
   through the executor-side store of ``geo_metadata`` (local disk, viewfs
   mounts, s3/s3a, gs), each file with the ``geo`` key already in its
-  footer. The driver publishes: it renames each cell dir out of
+  footer, and returns the paths it wrote and the error rows it decoded.
+  The driver publishes: it renames each cell dir out of
   ``_temporary/<job>/``, deletes ``_temporary``, writes ``_SUCCESS``
-  (holding the ``geo`` value), the error channel and the sidecar, in that
-  order. That is the ``_temporary`` → rename + ``_SUCCESS`` protocol the
-  reference managed by hand and Spark's FileOutputCommitter ran before.
-  For a scheme no executor store can open (``hdfs://`` without libhdfs)
-  the same tasks write each file to memory and the driver streams the
-  bytes into ``_temporary``, one writer partition at a time. Compaction
-  uses the same writer.
+  (holding the ``geo`` value), the error channel (with pyarrow, from the
+  returned error rows) and the sidecar, in that order. That is the
+  ``_temporary`` → rename + ``_SUCCESS`` protocol the reference managed by
+  hand and Spark's FileOutputCommitter ran before. For a scheme no
+  executor store can open (``hdfs://`` without libhdfs) the same tasks
+  write each file to memory and the driver streams the bytes and the
+  error rows, one writer partition at a time. Compaction uses the same
+  writer, without the decode.
 - The staging ``<out>_temp`` store (``DatasetYearTrain.java:82-83,211-222``)
   existed only because the driver-side parse fed batches; the single
   distributed write replaces it.
 - The reference's remote-input staging (download each S3 object to a local
   temp dir before parsing, clean up after — ``DatasetYearTrain.java:99-109``)
-  is obsolete by design: ``wod_scan`` reads through ``spark.read.format
+  is obsolete by design: the frame task reads through ``spark.read.format
   ("binaryFile")``, which streams any supported URI scheme directly on the
   executors — no driver-side download, no temp-dir lifecycle, and the read
   parallelizes across files instead of serializing through one staging disk.
@@ -45,13 +50,14 @@ Scale notes (100 TB): file tasks are independent → driver submits them to a
 thread pool (Spark schedules fairly); per-file output partitioning is by
 ``geohash3`` (max 32768 partitions; real oceans ≈ low thousands) with
 within-partition geohash sort giving parquet row-group min/max locality for
-spatial readers. A skewed geohash3 (coastal hot cells) only skews the WRITE
-of one file-job, bounded by file size; cross-file global compaction would
-bucket by (geohash3, salt) instead.
+spatial readers. A skewed geohash3 (coastal hot cells) only skews the
+decode and WRITE of one file-job, bounded by file size; cross-file global
+compaction would bucket by (geohash3, salt) instead.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import posixpath
@@ -64,8 +70,9 @@ from pyspark.sql import functions as F
 
 from ..functions.geohash import geohash_col
 from ..registry import cached_frames
+from ..schemas import CAST, CAST_ERROR
 from ..sources.filesystem import FsClient
-from ..sources.wod_ascii import errors, ok_casts, wod_scan
+from ..sources.wod_ascii import encode_batches, errors, frame_headers, wod_scan
 from .geo_metadata import (
     GEOMETRY_COLUMN,
     SIDECAR_NAME,
@@ -84,11 +91,6 @@ DEFAULT_DATASETS = (
     "APB", "CTD", "DRB", "GLD", "MBT", "MRB", "OSD", "PFL", "SUR", "UOR", "XBT",
 )
 DEFAULT_LEVELS = ("OBS",)
-
-#: Compressed-size threshold above which a file's parse is scattered across
-#: the cluster (``wod_scan(scatter=True)``); below it, the record exchange
-#: costs more than the single-task decode it would parallelize.
-_SCATTER_MIN_BYTES = 256 * 1024
 
 
 @dataclass
@@ -170,31 +172,36 @@ def _has_stale_temp(fs: FsClient, path: str) -> bool:
     return fs.is_dir(path) and fs.exists(_join(path, "_temporary"))
 
 
-def _scan(spark: SparkSession, fs: FsClient, task: FileTask):
-    """``wod_scan`` of one file task. Scatter-parse (gunzip+frame in the
-    file task, field-decode fanned out across all cores) for files big
-    enough that decode width matters; tiny files stay single-stage — their
-    record exchange would cost more than it balances."""
-    scatter = fs.size(task.input_path) >= _SCATTER_MIN_BYTES
-    return wod_scan(spark, task.input_path, dataset=task.dataset, scatter=scatter)
-
-
 def _write_error_channel(
-    spark: SparkSession,
-    fs: FsClient,
-    task: FileTask,
-    known_has_errors: bool = False,
+    spark: SparkSession, fs: FsClient, task: FileTask, rows: list
 ) -> None:
-    """Materialize the per-file error store (one re-decode) if the file has
-    any malformed records; idempotent (overwrite). Called on the rare
-    errors-present path of :func:`convert_file` (which already KNOWS the
-    count from the in-flight Observation — ``known_has_errors=True``
-    skips the existence probe, saving a decode), after a write with no
-    executor store (no Observation) and on sidecar heals, where nothing
-    is known and the probe runs."""
-    errs = errors(_scan(spark, fs, task))
-    if known_has_errors or errs.limit(1).count() > 0:
-        errs.coalesce(1).write.mode("overwrite").parquet(task.error_path)
+    """Write ``rows``, the file's ``(dataset, castNumber, error)`` error
+    rows, as its error store, replacing any earlier one; no rows, no store.
+    The driver writes it with pyarrow through ``fs``, in the layout Spark's
+    ``coalesce(1)`` parquet write gave it: one
+    ``part-00000-<uuid>-c000.snappy.parquet`` with Spark's row-schema and
+    version keys (every field nullable, as Spark writes it) and an empty
+    ``_SUCCESS``."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructField, StructType
+
+    if not rows:
+        return
+    schema = StructType([StructField(f.name, f.dataType) for f in CAST_ERROR.fields])
+    arrow = to_arrow_schema(schema).with_metadata(_spark_footer(spark, schema))
+    table = pa.Table.from_arrays(list(zip(*rows)), schema=arrow)
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink, compression="snappy")
+    fs.delete(task.error_path)
+    fs.write_bytes(
+        _join(task.error_path, f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"),
+        sink.getvalue().to_pybytes(),
+    )
+    fs.write_bytes(_join(task.error_path, "_SUCCESS"), b"")
 
 
 #: Spark's ``parquet.block.size``: a writer task buffers up to this many
@@ -257,40 +264,66 @@ class _CellFile:
 
 
 def _file_schema(schema, metadata: dict):
-    """The Arrow schema a cell file is written with: ``schema`` with
-    ``metadata``, and timestamps as ``timestamp[ns]`` — the type pyarrow
-    reads INT96 back as — so the ``ARROW:schema`` key pyarrow stores
-    describes the file as pyarrow readers see Spark-written INT96 files,
-    not in the writing session's time zone."""
+    """The Arrow schema a cell file is written with, from its Spark
+    ``schema``: with ``metadata``, and timestamps as ``timestamp[ns]`` —
+    the type pyarrow reads INT96 back as — so the ``ARROW:schema`` key
+    pyarrow stores describes the file as pyarrow readers see Spark-written
+    INT96 files, not in the writing session's time zone."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     return pa.schema(
         [
             pa.field(f.name, pa.timestamp("ns"), f.nullable)
             if pa.types.is_timestamp(f.type)
             else f
-            for f in schema
+            for f in to_arrow_schema(schema)
         ],
         metadata=metadata,
     )
 
 
 #: The rows a writer task returns: one per file it wrote through a store,
-#: ``data`` null; one per ``_CHUNK_BYTES`` of a file it wrote to memory.
-_WRITTEN_SCHEMA = "path string, data binary"
+#: ``data`` null; one per ``_CHUNK_BYTES`` of a file it wrote to memory;
+#: one per error row its decode found, ``path`` and ``data`` null.
+_WRITTEN_SCHEMA = (
+    "path string, data binary, dataset string, castNumber int, error string"
+)
 
 
-def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
+def _written(n: int, path=None, data=None, err=None):
+    """``n`` ``_WRITTEN_SCHEMA`` rows: file rows from the ``path`` and
+    ``data`` arrays, or error rows from ``err``, a ``CAST_ERROR``
+    StructArray."""
+    import pyarrow as pa
+
+    cols = [path, data, *(err.flatten() if err is not None else (None,) * 3)]
+    types = (pa.string(), pa.binary(), pa.string(), pa.int32(), pa.string())
+    return pa.RecordBatch.from_arrays(
+        [pa.nulls(n, t) if c is None else c for c, t in zip(cols, types)],
+        ["path", "data", "dataset", "castNumber", "error"],
+    )
+
+
+def _split_cells(batch):
+    """A sorted frame batch as the writer takes it: ``(cells, data,
+    errors)`` — its ``geohash3`` column, the rest, and no error rows."""
+    yield batch.column("geohash3"), batch.drop_columns(["geohash3"]), None
+
+
+def _cell_writer(store, tmp_root: str, job: str, schema, prepare=_split_cells):
     """The ``mapInArrow`` body of the one-pass writer. Each task gets its
-    rows sorted by ``(geohash3, geohash)`` and writes each geohash3 run as
-    ``<tmp_root>/<partition>-<attempt>/geohash3=<v>/part-<partition>-<job>
-    .c000.snappy.parquet`` (without the ``geohash3`` column, ``metadata``
-    in the footer) through ``store``, or to memory when ``store`` is None.
-    It returns ``_WRITTEN_SCHEMA`` rows as each file closes, so a task
-    holds at most one in-memory file. ``<attempt>`` is the task attempt's
-    id, unique in the application, so a failed or speculative attempt's
-    files never share a directory with the files the driver publishes:
-    those of the attempt whose rows it received."""
+    rows sorted by ``(geohash3, geohash)``; ``prepare`` turns each input
+    batch into ``(cells, data, errors)`` triples, in order. The task
+    writes each geohash3 run of ``cells`` as ``<tmp_root>/<partition>-
+    <attempt>/geohash3=<v>/part-<partition>-<job>.c000.snappy.parquet``
+    (``data``'s rows, Arrow ``schema``, its metadata in the footer) through
+    ``store``, or to memory when ``store`` is None. It returns
+    ``_WRITTEN_SCHEMA`` rows as each file closes, so a task holds at most
+    one in-memory file, and the ``errors`` rows as they come. ``<attempt>``
+    is the task attempt's id, unique in the application, so a failed or
+    speculative attempt's files never share a directory with the files the
+    driver publishes: those of the attempt whose rows it received."""
     chunk_bytes = _CHUNK_BYTES
 
     def returned(cell_file):
@@ -304,11 +337,11 @@ def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
                 data.slice(at, min(chunk_bytes, data.size - at)).to_pybytes()
                 for at in range(0, data.size, chunk_bytes)
             ]
-        for chunk in chunks:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([cell_file.path]), pa.array([chunk], pa.binary())],
-                ["path", "data"],
-            )
+        yield _written(
+            len(chunks),
+            path=pa.array([cell_file.path] * len(chunks)),
+            data=pa.array(chunks, pa.binary()),
+        )
 
     def write(batches):
         import pyarrow.compute as pc
@@ -317,29 +350,29 @@ def _cell_writer(store, tmp_root: str, job: str, metadata: dict):
         ctx = TaskContext.get()
         root = f"{tmp_root}/{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
         name = f"part-{ctx.partitionId():05d}-{job}.c000.snappy.parquet"
-        cell, current, schema = None, None, None
+        cell, current = None, None
         try:
             for batch in batches:
-                data = batch.drop_columns(["geohash3"])
-                if schema is None:
-                    schema = _file_schema(data.schema, metadata)
-                runs = pc.run_end_encode(batch.column("geohash3"))
-                start = 0
-                for end, value in zip(
-                    runs.run_ends.to_pylist(), runs.values.to_pylist()
-                ):
-                    if current is None or value != cell:
-                        if current is not None:
-                            yield from returned(current)
-                        cell = value
-                        part = _NULL_PARTITION if value is None else value
-                        current = _CellFile(
-                            store,
-                            f"{root}/geohash3={part}/{name}",
-                            schema,
-                        )
-                    current.add(data.slice(start, end - start))
-                    start = end
+                for cells, data, errs in prepare(batch):
+                    if errs is not None and len(errs):
+                        yield _written(len(errs), err=errs)
+                    runs = pc.run_end_encode(cells)
+                    start = 0
+                    for end, value in zip(
+                        runs.run_ends.to_pylist(), runs.values.to_pylist()
+                    ):
+                        if current is None or value != cell:
+                            if current is not None:
+                                yield from returned(current)
+                            cell = value
+                            part = _NULL_PARTITION if value is None else value
+                            current = _CellFile(
+                                store,
+                                f"{root}/geohash3={part}/{name}",
+                                schema,
+                            )
+                        current.add(data.slice(start, end - start))
+                        start = end
             if current is not None:
                 last, current = current, None
                 yield from returned(last)
@@ -378,60 +411,77 @@ def _geo_value(encoding: str) -> bytes:
     return json.dumps(geo_footer_dict(encoding)).encode()
 
 
-def _write_geoparquet(
-    spark: SparkSession, fs: FsClient, store, frame, out: str, encoding: str
-) -> int:
-    """Write ``frame`` (sorted by ``(geohash3, geohash)`` within each
-    partition) to ``out`` as geohash3-partitioned GeoParquet in one pass,
-    and publish it; returns the number of files written.
-
-    Writer tasks write every file under ``<out>/_temporary/<job>/`` with
-    the ``geo`` key, and Spark's row-schema and version keys, already in
-    the footer (:func:`_cell_writer`), through ``store``, and the driver
-    collects the returned paths. Where no executor-side store opens the
-    scheme (``store`` is None, e.g. ``hdfs://`` without libhdfs), the
-    tasks return each file's bytes instead, and the driver streams them
-    (``toLocalIterator``: one job per writer partition, so the driver
-    holds one task's output at a time) into the same paths. Only the
-    collect completes an ``Observation`` upstream of ``frame``; the
-    stream leaves it pending. The driver then renames the
-    files into ``out`` (:func:`_publish_plan`), deletes ``_temporary`` and
-    writes ``_SUCCESS`` holding the ``geo`` value every file was written
-    with, which a resume reads to heal a missing sidecar. A crash before
-    ``_SUCCESS`` leaves either ``_temporary`` or no marker at all, and the
-    next run rebuilds."""
-    import uuid
-
-    from pyspark.sql.types import StructType
-
-    fs.delete(out)  # the job owns the directory, as a static overwrite does
-    job = str(uuid.uuid4())
-    schema = StructType([f for f in frame.schema.fields if f.name != "geohash3"])
-    geo = _geo_value(encoding)
-    metadata = {
-        b"geo": geo,
+def _spark_footer(spark: SparkSession, schema) -> dict:
+    """The footer keys Spark's parquet writer stamps on a file of rows of
+    ``schema``: its version and the row schema, in Spark's own JSON key
+    order."""
+    return {
         b"org.apache.spark.version": spark.version.encode(),
-        # Spark's own key order, as its writer serializes the row schema
         b"org.apache.spark.sql.parquet.row.metadata": json.dumps(
             schema.jsonValue(), separators=(",", ":")
         ).encode(),
     }
+
+
+def _write_geoparquet(
+    spark: SparkSession,
+    fs: FsClient,
+    store,
+    frame,
+    out: str,
+    encoding: str,
+    schema,
+    prepare=_split_cells,
+) -> tuple[int, list]:
+    """Write ``frame`` (sorted by ``(geohash3, geohash)`` within each
+    partition) to ``out`` as geohash3-partitioned GeoParquet in one pass,
+    with rows of the Spark ``schema`` as ``prepare`` makes them (see
+    :func:`_cell_writer`), and publish it; returns the number of files
+    written and the error rows ``prepare`` found, as
+    ``(dataset, castNumber, error)`` rows.
+
+    Writer tasks write every file under ``<out>/_temporary/<job>/`` with
+    the ``geo`` key, and Spark's row-schema and version keys, already in
+    the footer, through ``store``, and the driver collects the returned
+    rows. Where no executor-side store opens the scheme (``store`` is None,
+    e.g. ``hdfs://`` without libhdfs), the tasks return each file's bytes
+    instead, and the driver streams them (``toLocalIterator``: one job per
+    writer partition, so the driver holds one task's output at a time) into
+    the same paths. The driver then renames the files into ``out``
+    (:func:`_publish_plan`), deletes ``_temporary`` and writes ``_SUCCESS``
+    holding the ``geo`` value every file was written with, which a resume
+    reads to heal a missing sidecar. A crash before ``_SUCCESS`` leaves
+    either ``_temporary`` or no marker at all, and the next run rebuilds."""
+    import uuid
+
+    fs.delete(out)  # the job owns the directory, as a static overwrite does
+    job = str(uuid.uuid4())
+    geo = _geo_value(encoding)
+    file_schema = _file_schema(schema, {b"geo": geo, **_spark_footer(spark, schema)})
     tmp = _join(out, "_temporary")
     written = frame.mapInArrow(
-        _cell_writer(store, _join(tmp, job), job, metadata), _WRITTEN_SCHEMA
+        _cell_writer(store, _join(tmp, job), job, file_schema, prepare),
+        _WRITTEN_SCHEMA,
     )
+    paths, errs = [], []
     if store is not None:
-        paths = [row.path for row in written.collect()]
+        for row in written.collect():
+            if row.path is None:
+                errs.append(row[2:])
+            else:
+                paths.append(row.path)
     else:
-        paths = []
         # a file's chunks arrive as consecutive rows, in order
         for path, rows in groupby(written.toLocalIterator(), lambda r: r.path):
-            fs.write_chunks(path, (row.data for row in rows))
-            paths.append(path)
+            if path is None:
+                errs.extend(row[2:] for row in rows)
+            else:
+                fs.write_chunks(path, (row.data for row in rows))
+                paths.append(path)
     fs.rename_all(_publish_plan(paths, out))
     fs.delete(tmp)
     fs.write_bytes(_join(out, "_SUCCESS"), geo)
-    return len(paths)
+    return len(paths), errs
 
 
 def _published_encoding(fs: FsClient, out: str) -> str | None:
@@ -467,12 +517,12 @@ def convert_file(
     (stale ``_temporary``) is removed and rebuilt.
 
     ``geometry_encoding``: ``"point"`` (default) writes GeoParquet 1.1
-    native-point geometry (``struct<x=lon, y=lat>`` — pure Catalyst);
-    ``"wkb"`` writes spec WKB bytes with a 1.0 footer for readers that
-    predate native encoding (the byte-level shape of the reference's
-    Sedona output, ``DatasetYearTrain.java:41-43``) — opt-in because the
-    encode needs an Arrow round-trip (``functions/wkb.py``).
+    native-point geometry (``struct<x=lon, y=lat>``); ``"wkb"`` writes
+    spec WKB bytes (``functions/wkb.py``) with a 1.0 footer for readers
+    that predate native encoding (the byte-level shape of the reference's
+    Sedona output, ``DatasetYearTrain.java:41-43``).
     """
+    enc = _footer_encoding(geometry_encoding)  # validate before any I/O
     fs = FsClient(spark)
     out = fs.qualify(task.output_path)
     rebuild = overwrite or _has_stale_temp(fs, out)
@@ -487,10 +537,11 @@ def convert_file(
         sidecar = _join(out, SIDECAR_NAME)
         if fs.exists(sidecar):
             return "skipped"
-        enc = _published_encoding(fs, out)
-        if enc is not None:
-            _write_error_channel(spark, fs, task)
-            fs.write_bytes(sidecar, geo_sidecar_bytes(enc))
+        published = _published_encoding(fs, out)
+        if published is not None:
+            scan = wod_scan(spark, task.input_path, dataset=task.dataset)
+            _write_error_channel(spark, fs, task, errors(scan).collect())
+            fs.write_bytes(sidecar, geo_sidecar_bytes(published))
             return "skipped"
         # Spark's committer wrote this marker, so nothing says the files
         # carry `geo` or which encoding they hold: rebuild.
@@ -499,42 +550,16 @@ def convert_file(
         fs.delete(out)
         fs.delete(task.error_path)
 
-    # No cache: the scattered parse is cheap enough that recomputing it for
-    # the rare error-channel job beats paying the in-memory columnar encode
-    # of deeply nested cast structs.
-    parsed = _scan(spark, fs, task)
-    # Error DETECTION is free: an Observation above the ok-filter counts
-    # error rows while the main write's single decode streams by (the
-    # filter is not pushed through CollectMetrics), so the happy path
-    # decodes each file ONCE — the previous always-on error-check job was
-    # a second full decode per file, the dominant duplicated cost at real
-    # file sizes. Only files that actually contain errors pay a second
-    # decode to materialize the channel (overwrite, not append — the
-    # reference's TransformationErrorHandler.java:42-52 appends
-    # incrementally; one overwrite per file is equivalent and retry-safe).
-    # Crash contract: the error write now lands AFTER the main commit, so
-    # _SUCCESS alone no longer implies the error channel exists — the
-    # SIDECAR is the completion marker, and the skip path above rebuilds
-    # the channel whenever it heals a missing sidecar.
-    # The Observation completes only when the write collects its result,
-    # which it does through an executor store; with none, the write
-    # streams its result, and the error channel probes for errors itself.
-    from pyspark.sql import Observation
-
-    store = _resolve_executor_store(spark, out)
-    obs = None
-    if store is not None:
-        obs = Observation("wod_convert_errors")
-        parsed = parsed.observe(
-            obs,
-            F.sum(F.when(F.col("err").isNotNull(), 1).otherwise(0)).alias("n_err"),
-        )
+    # The JVM moves flat rows only: each record's text and the sort keys
+    # computed from its header. The writer tasks decode the records
+    # (:func:`_cast_decoder`), so the nested cast rows never cross into
+    # the JVM, and return the error rows with their results.
     # castTimestamp: assembled from Y/M/D + fractional-hour time
     # (SURVEY §1.2); try_* variants — invalid header dates yield null,
     # not a job failure, under ANSI mode.
     seconds = (F.col("time") * 3600).cast("int")
-    casts = (
-        ok_casts(parsed)
+    keyed = (
+        frame_headers(spark, task.input_path)
         .withColumn(
             "castTimestamp",
             F.try_add(
@@ -545,24 +570,20 @@ def convert_file(
                 F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), seconds),
             ),
         )
-        # pure-Catalyst geohash: computed in the JVM ahead of the sort
-        # (the numpy pandas_udf variant is equivalent — parity asserted
-        # in tests/test_geohash.py — but costs an extra Arrow round-trip).
+        # pure-Catalyst geohash: computed in the JVM ahead of the sort.
         # String-name form = generated-SQL build path (one JVM parse,
         # ~0.4 s/py4j-build saved PER FILE JOB; see geohash_spark_sql).
         .withColumn("geohash", geohash_col("latitude", "longitude"))
         .withColumn("geohash3", F.substring("geohash", 1, 3))
-        # geometry, declared in the `geo` footer each file is written with:
-        # default GeoParquet 1.1 native point (struct<x=lon, y=lat>, pure
-        # Catalyst); opt-in 1.0 WKB bytes for pre-native readers.
-        .withColumn("geometry", _geometry_col(geometry_encoding))
+        .select("rec", "ferr", "castTimestamp", "geohash", "geohash3")
     )
     # Writer-task count: capped at 16 per file-job. Beyond that, many
     # concurrently open parquet writers in one file-job contend (local[32]
     # measured 32 tasks ≈ 10 s vs 16 tasks ≈ 4 s for 1652 cells under
     # Spark's writer, and the curve was flat from 16 to 32); cluster-wide
     # parallelism comes from running file-jobs concurrently, not from more
-    # writers per file.
+    # writers per file. It is also the decode width: a file's records
+    # decode in the writer tasks of their cells.
     n_write_tasks = min(16, spark.sparkContext.defaultParallelism)
     # Writer distribution: geohash3-hash. Real WOD occupancy
     # is coastal-skewed, and a hash repartition routes a hot geohash3
@@ -573,27 +594,119 @@ def convert_file(
     # the writer exchange stays static and per-file skew remains bounded
     # by file size as the module docstring argues. It also makes every
     # cell one task's, so each geohash3 dir holds one file and the
-    # publish is one rename per cell.
+    # publish is one rename per cell. The cost: a hot cell's records also
+    # decode in its one task (1,200 deep casts in one cell converted in
+    # 1.7-2.7 s warm at local[4], against 1.8-2.3 s with a round-robin
+    # decode exchange; in 8 cells, 1.2-1.5 s against 1.4-2.0 s).
+    # Records whose header fails have a null key and decode to error
+    # rows in one task.
     # Sort by (geohash3, geohash): each task's cells arrive as contiguous
     # runs (one file each), and within a cell rows are in the reference's
     # sortWithinPartitions("geohash") order, since geohash3 is a prefix of
     # geohash.
-    frame = casts.repartition(n_write_tasks, F.col("geohash3")).sortWithinPartitions(
+    frame = keyed.repartition(n_write_tasks, F.col("geohash3")).sortWithinPartitions(
         "geohash3", "geohash"
     )
-    enc = _footer_encoding(geometry_encoding)
-    _write_geoparquet(spark, fs, store, frame, out, enc)
-    if obs is None:
-        _write_error_channel(spark, fs, task)
-    elif int(obs.get["n_err"] or 0) > 0:
-        # Rare path: re-decode to materialize the error channel (a fresh
-        # scan — the observed frame's metric is already consumed; the
-        # Observation already proved errors exist, so no probe).
-        _write_error_channel(spark, fs, task, known_has_errors=True)
+    _, errs = _write_geoparquet(
+        spark,
+        fs,
+        _resolve_executor_store(spark, out),
+        frame,
+        out,
+        enc,
+        _cast_schema(enc),
+        _cast_decoder(task.dataset, enc),
+    )
+    # Error rows: one overwrite per file, after the main commit (the
+    # reference's TransformationErrorHandler.java:42-52 appends
+    # incrementally; one overwrite per file is equivalent and retry-safe).
+    # So _SUCCESS alone does not imply the error channel exists — the
+    # SIDECAR is the completion marker, and the skip path above rebuilds
+    # the channel whenever it heals a missing sidecar.
+    _write_error_channel(spark, fs, task, errs)
     # The sidecar goes last: its presence marks the publish complete for
     # crash-healing.
     fs.write_bytes(_join(out, SIDECAR_NAME), geo_sidecar_bytes(enc))
     return "converted"
+
+
+def _cast_schema(encoding: str):
+    """The Spark schema of convert's data files: the ``CAST`` fields, all
+    nullable, as a select of the fields of the parse's nullable ``ok``
+    struct makes them, then ``castTimestamp``, ``geohash`` and
+    ``geometry`` — a non-null ``struct<x=lon, y=lat>`` for the ``point``
+    footer encoding, nullable WKB bytes for ``WKB``."""
+    from pyspark.sql import types as T
+
+    point = T.StructType(
+        [T.StructField("x", T.DoubleType()), T.StructField("y", T.DoubleType())]
+    )
+    return T.StructType(
+        [
+            *(T.StructField(f.name, f.dataType) for f in CAST.fields),
+            T.StructField("castTimestamp", T.TimestampType()),
+            T.StructField("geohash", T.StringType()),
+            T.StructField(
+                GEOMETRY_COLUMN,
+                point if encoding == "point" else T.BinaryType(),
+                nullable=encoding != "point",
+            ),
+        ]
+    )
+
+
+def _cast_decoder(dataset: str, encoding: str):
+    """The writer tasks' ``prepare`` for convert (see :func:`_cell_writer`):
+    each sorted batch of ``rec``, ``ferr``, ``castTimestamp``, ``geohash``
+    and ``geohash3`` rows is decoded with ``wod_ascii.encode_batches`` into
+    ``(cells, data, errors)`` per at most ``_ARROW_BATCH_ROWS`` records:
+    ``data`` holds the ok casts in :func:`_cast_schema` column order,
+    ``cells`` their geohash3, ``errors`` the error rows. ``geometry`` is
+    built from each cast's decoded longitude and latitude: a struct for
+    ``point``, the ``functions/wkb.py`` kernel's bytes for ``WKB``."""
+
+    def geometry(lon, lat):
+        import pyarrow as pa
+
+        if encoding == "point":
+            return pa.StructArray.from_arrays([lon, lat], ["x", "y"])
+        from ..functions.wkb import wkb_point_bytes
+
+        return pa.array(wkb_point_bytes(lon.to_pandas(), lat.to_pandas()), pa.binary())
+
+    def decode(batch):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        recs = zip(
+            itertools.repeat(dataset),
+            batch.column("rec").to_pylist(),
+            batch.column("ferr").to_pylist(),
+        )
+        at = 0
+        for parsed in encode_batches(recs):
+            n = parsed.num_rows
+            keys = batch.slice(at, n)
+            at += n
+            ok, err = parsed.column("ok"), parsed.column("err")
+            cast = [ok.field(i) for i in range(ok.type.num_fields)]
+            data = pa.RecordBatch.from_arrays(
+                [
+                    *cast,
+                    keys.column("castTimestamp"),
+                    keys.column("geohash"),
+                    geometry(ok.field("longitude"), ok.field("latitude")),
+                ],
+                [*(f.name for f in ok.type), "castTimestamp", "geohash", GEOMETRY_COLUMN],
+            )
+            cells = keys.column("geohash3")
+            if not ok.null_count:
+                yield cells, data, None
+            else:
+                kept = ok.is_valid()
+                yield cells.filter(kept), data.filter(kept), err.filter(pc.invert(kept))
+
+    return decode
 
 
 def _footer_encoding(geometry_encoding: str) -> str:
@@ -606,18 +719,6 @@ def _footer_encoding(geometry_encoding: str) -> str:
     raise ValueError(
         f"geometry_encoding must be 'point' or 'wkb', got {geometry_encoding!r}"
     )
-
-
-def _geometry_col(geometry_encoding: str):
-    """The geometry column expression for the chosen encoding."""
-    _footer_encoding(geometry_encoding)  # validate early, before any job runs
-    if geometry_encoding == "point":
-        return F.struct(
-            F.col("longitude").alias("x"), F.col("latitude").alias("y")
-        )
-    from ..functions.wkb import wkb_point_col
-
-    return wkb_point_col(F.col("longitude"), F.col("latitude"))
 
 
 def convert(
@@ -740,7 +841,7 @@ def compact_convert_output(
     and breaking the geohash-prefix invariant. The corruption happens AT
     READ (partition-value parse), so a post-read cast cannot repair it;
     only inference-off reads can."""
-    from pyspark.sql.types import BinaryType
+    from pyspark.sql.types import BinaryType, StructType
 
     from .compact import _is_data_file
 
@@ -789,7 +890,7 @@ def compact_convert_output(
                 # is WKB; a struct, or no geometry at all, the point footer
                 types = {f.name: f.dataType for f in df.schema.fields}
                 enc = "WKB" if isinstance(types.get(GEOMETRY_COLUMN), BinaryType) else "point"
-                files_after = _write_geoparquet(
+                files_after, _ = _write_geoparquet(
                     spark,
                     fs,
                     _resolve_executor_store(spark, dest),
@@ -798,6 +899,7 @@ def compact_convert_output(
                     ),
                     dest,
                     enc,
+                    StructType([f for f in df.schema.fields if f.name != "geohash3"]),
                 )
                 fs.write_bytes(
                     _join(dest, SIDECAR_NAME), geo_sidecar_bytes(enc)

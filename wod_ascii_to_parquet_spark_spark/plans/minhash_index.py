@@ -59,6 +59,7 @@ from ..operators.dedup import (
     with_sh,
 )
 from ..registry import local_df
+from ..sources.filesystem import hadoop_path_class
 from .ann_index import _table_num_buckets
 
 INDEX_TABLE = "minhash_lsh_index"
@@ -78,8 +79,7 @@ def _clear_table(spark: SparkSession, table: str) -> None:
     re-running this query in a fresh session would hit."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     wh = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(wh + "/" + table)
+    path = hadoop_path_class(spark._jvm)(wh + "/" + table)
     fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(path):
         return

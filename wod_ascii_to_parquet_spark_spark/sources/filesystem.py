@@ -22,6 +22,7 @@ the same through its mock client).
 
 from __future__ import annotations
 
+import functools
 import logging
 from collections.abc import Iterable
 
@@ -170,6 +171,15 @@ def s3a_available(spark: SparkSession) -> bool:
 _CONDITIONAL_CREATE_OPT = "fs.option.create.conditional.overwrite"
 
 
+@functools.cache
+def hadoop_path_class(jvm):
+    """``org.apache.hadoop.fs.Path`` of the py4j JVM view ``jvm``, looked
+    up once per view: a lookup through the view costs about 2 ms (several
+    gateway round trips); constructing from the class object costs about
+    0.2 ms."""
+    return jvm.org.apache.hadoop.fs.Path
+
+
 class ConditionalCreateUnsupported(Exception):
     """The path's filesystem rejected the conditional-create builder
     option — the caller must fall back to the plain-create protocol."""
@@ -188,10 +198,7 @@ class FsClient:
     def __init__(self, spark: SparkSession):
         self._jvm = spark.sparkContext._jvm
         self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        # Looking a class up through the py4j JVM view costs about 2 ms
-        # (several gateway round trips); constructing from the class
-        # object costs about 0.2 ms.
-        self._path_class = self._jvm.org.apache.hadoop.fs.Path
+        self._path_class = hadoop_path_class(self._jvm)
         #: filesystem URI -> whether it accepted _CONDITIONAL_CREATE_OPT
         #: (probed on first exclusive create; a rejection is permanent for
         #: the session, so later commits skip the doomed builder attempt)

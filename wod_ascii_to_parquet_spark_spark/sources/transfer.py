@@ -246,7 +246,6 @@ def upload_dir(spark, source_dir: str, dest_url: str) -> list[str]:
     from .filesystem import FsClient
 
     fs = FsClient(spark)
-    jvm = fs._jvm
     dest_root = dest_url.rstrip("/")
     uploaded: list[str] = []
     for dirpath, _, files in os.walk(source_dir):
@@ -258,7 +257,7 @@ def upload_dir(spark, source_dir: str, dest_url: str) -> list[str]:
             tfs.copyFromLocalFile(
                 False,  # keep the source
                 True,  # overwrite
-                jvm.org.apache.hadoop.fs.Path(local),
+                fs._path_class(local),
                 tpath,
             )
             uploaded.append(target)

@@ -17,19 +17,25 @@ bottleneck in its design. Here one decode kernel runs on the executors:
   ``StructArray.from_arrays`` (no per-cast dict or tuple), and
   :func:`decode_file` is that encoder over one whole file.
 
-Three surfaces share the kernel: ``wod_scan(scatter=False)`` runs
+Four surfaces share the kernel: ``wod_scan(scatter=False)`` runs
 :func:`decode_file` per ``binaryFile`` row; ``wod_scan(scatter=True)`` (the
 default) only gunzips and FRAMES records in the file task, then a
 round-robin exchange of record strings scatters the field decode across
-every core; and the ``wod_ascii`` DataSource (``wod_datasource.py``) yields
-:func:`decode_file` batches per file.
+every core; the ``wod_ascii`` DataSource (``wod_datasource.py``) yields
+:func:`decode_file` batches per file; and the convert plan frames with
+:func:`frame_headers`, whose rows carry each record's text and header
+fields (read by ``wod_format.read_header``, the walk's own first step),
+and decodes with :func:`encode_batches` inside its writer tasks, after its
+one exchange.
 
-100 TB note: scatter decouples decode width from file count, so one giant
-yearly file parses at cluster width; for files too big to hold decompressed
-in one task the right fix remains upstream re-compression to a splittable
-codec. Batches are capped at ``_ARROW_BATCH_ROWS`` casts so multi-GB casts
-files stream through a 3g executor (the reference's cluster-mode executor
-size, ``src/spark/job.sh:11-14``).
+100 TB note: scatter, and convert's writer-side decode, decouple decode
+width from file count, so one giant yearly file parses at cluster width
+(convert's at the width of its occupied geohash3 cells); for files too
+big to hold decompressed in one task the right fix remains upstream
+re-compression to a splittable codec. Batches are capped at
+``_ARROW_BATCH_ROWS`` casts so multi-GB casts files stream through a 3g
+executor (the reference's cluster-mode executor size,
+``src/spark/job.sh:11-14``).
 """
 
 from __future__ import annotations
@@ -44,7 +50,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import PARSED
-from .wod_format import CastColumns, frame_records, stream_error
+from .wod_format import (
+    HEADER_KEYS,
+    CastColumns,
+    WodFormatError,
+    frame_records,
+    read_header,
+    stream_error,
+)
 
 
 def _dataset_of(path: str) -> str:
@@ -154,6 +167,68 @@ def _file_rows(batches) -> Iterator[tuple[str, bytes]]:
             yield paths[i].as_py(), contents[i].as_py()
 
 
+def _framed(batches, dataset: str | None) -> Iterator[tuple[str, list]]:
+    """Gunzip and frame each ``binaryFile`` row: ``(dataset, records)``
+    per at most ``_ARROW_BATCH_ROWS`` records, each ``(record, framing
+    error)`` as :func:`wod_format.frame_records` yields them."""
+    for path, content in _file_rows(batches):
+        ds = dataset or _dataset_of(path)
+        for chunk in _chunks(frame_records(_decompress(path, content))):
+            yield ds, chunk
+
+
+#: :func:`frame_headers` rows: one framed record, or a file's framing
+#: error, with the header fields the convert plan's sort keys come from.
+FRAMED = (
+    "rec string, ferr string, year int, month int, day int, time double, "
+    "latitude double, longitude double"
+)
+
+_NO_KEYS = (None,) * 6
+
+
+def _header_keys(record: str | None) -> tuple:
+    """``wod_format.read_header``'s key fields of ``record``; all None for
+    a framing error, or a header that fails to parse (then the full
+    decode fails on the same bytes and the record is an error row)."""
+    if record is None:
+        return _NO_KEYS
+    try:
+        return read_header(record)[HEADER_KEYS]
+    except WodFormatError:
+        return _NO_KEYS
+
+
+def frame_headers(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+    """Gunzip and frame WOD file(s), one task per file, into flat
+    ``FRAMED`` rows: each record's text and its header fields, read with
+    the decode kernel's own header read. No field past the header is
+    decoded; :func:`encode_batches` decodes the ``(dataset, rec, ferr)``
+    triples wherever the rows end up."""
+    import pyarrow as pa
+
+    files = spark.read.format("binaryFile").load(paths).select("path", "content")
+
+    def frame(batches):
+        text, i32, f64 = pa.string(), pa.int32(), pa.float64()
+        for _ds, chunk in _framed(batches, None):
+            recs, ferrs = zip(*chunk)
+            year, month, day, time, lat, lon = zip(*map(_header_keys, recs))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(recs, text), pa.array(ferrs, text),
+                    pa.array(year, i32), pa.array(month, i32), pa.array(day, i32),
+                    pa.array(time, f64), pa.array(lat, f64), pa.array(lon, f64),
+                ],
+                names=[
+                    "rec", "ferr", "year", "month", "day", "time",
+                    "latitude", "longitude",
+                ],
+            )
+
+    return files.mapInArrow(frame, FRAMED)
+
+
 def wod_scan(
     spark: SparkSession,
     paths: list[str] | str,
@@ -191,18 +266,16 @@ def wod_scan(
         return files.mapInArrow(decode, PARSED)
 
     def frame(batches):
-        for path, content in _file_rows(batches):
-            ds = dataset or _dataset_of(path)
-            for chunk in _chunks(frame_records(_decompress(path, content))):
-                recs, ferrs = zip(*chunk)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([ds] * len(chunk), type=pa.string()),
-                        pa.array(recs, type=pa.string()),
-                        pa.array(ferrs, type=pa.string()),
-                    ],
-                    names=["ds", "rec", "ferr"],
-                )
+        for ds, chunk in _framed(batches, dataset):
+            recs, ferrs = zip(*chunk)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([ds] * len(chunk), type=pa.string()),
+                    pa.array(recs, type=pa.string()),
+                    pa.array(ferrs, type=pa.string()),
+                ],
+                names=["ds", "rec", "ferr"],
+            )
 
     def decode_records(batches):
         return encode_batches(

@@ -9,10 +9,11 @@ exposed through the DataSource V2 Python API: one InputPartition per file
 partition's reader yields the ``schemas.PARSED`` Arrow RecordBatches the
 kernel builds, which Spark takes as they are.
 
-When to use which: ``wod_scan(scatter=True)`` remains the conversion
-pipeline's path — its record-scatter exchange decouples decode width from
-file count, which the one-partition-per-file DataSource cannot do. The
-DataSource is the ergonomic surface (``spark.read.format``) for ad-hoc
+When to use which: ``wod_scan(scatter=True)`` is the parallel scan — its
+record-scatter exchange decouples decode width from file count, which the
+one-partition-per-file DataSource cannot do (the conversion pipeline gets
+the same decoupling by decoding in its writer tasks,
+``plans/convert.py``). The DataSource is the ergonomic surface (``spark.read.format``) for ad-hoc
 exploration and for integration with catalogs/readers that speak formats,
 and the parity test pins all three paths to identical rows.
 

@@ -26,7 +26,9 @@ appended straight onto a :class:`CastColumns` buffer (header scalars,
 per-cast lists, and the profile flattened into depth and datum columns with
 offsets), so a batch becomes nested Arrow arrays (``wod_ascii``) without a
 Python object per cast, level or datum. A record that fails to parse is
-truncated back out of the buffers and becomes an error row.
+truncated back out of the buffers and becomes an error row. The walk
+starts with :func:`read_header`, which convert's frame task also calls
+alone to key each record for the sort.
 :func:`parse_cast`, :func:`decode_record` and :func:`iter_casts` are thin
 wrappers over the same walk that read one row back as a :class:`RawCast`.
 
@@ -134,6 +136,89 @@ def _bad_float_head(buf: str, pos: int) -> None:
     if pos + 2 >= len(buf):
         raise WodFormatError(f"record truncated at byte {pos + 1} of {len(buf)}")
     raise WodFormatError(f"bad WOD-float total/prec {buf[pos + 1]!r}{buf[pos + 2]!r}")
+
+
+def _int_at(buf: str, pos: int) -> tuple[int | None, int]:
+    """The WOD int at ``pos`` and the offset after it."""
+    c = buf[pos]
+    pos += 1
+    if c == "-" or c == " ":
+        return None, pos
+    if not "0" <= c <= "9":
+        raise WodFormatError(f"bad WOD-int length byte {c!r} at {pos - 1}")
+    n = ord(c) - 48
+    if n == 0:
+        return None, pos
+    s = buf[pos : pos + n]
+    try:
+        return int(s), pos + n
+    except ValueError as e:
+        raise WodFormatError(f"bad WOD-int digits {s!r}") from e
+
+
+def _float_at(buf: str, pos: int) -> tuple[float | None, int]:
+    """The WOD float at ``pos`` and the offset after it."""
+    c = buf[pos]
+    if c == "-" or c == " ":
+        return None, pos + 1
+    head = _FLOAT_HEAD.get(buf[pos : pos + 3])
+    if head is None:
+        _bad_float_head(buf, pos)
+    t, div = head
+    pos += 3
+    raw = buf[pos : pos + t]
+    try:
+        return int(raw) / div, pos + t
+    except ValueError as e:
+        raise WodFormatError(f"bad WOD-float digits {raw!r}") from e
+
+
+def _fixed_int_at(buf: str, pos: int, n: int) -> tuple[int | None, int]:
+    """The ``n``-character fixed-width int at ``pos`` (blank → None) and
+    the offset after it."""
+    s = buf[pos : pos + n].strip()
+    try:
+        return (int(s) if s else None), pos + n
+    except ValueError as e:
+        raise WodFormatError(f"bad fixed-width digits {s!r} at {pos}") from e
+
+
+#: ``read_header(record)[HEADER_KEYS]``: the header fields convert's sort
+#: keys come from — year, month, day, time, latitude, longitude.
+HEADER_KEYS = slice(4, 10)
+
+
+def read_header(buf: str) -> tuple:
+    """The primary header of a record, version byte through longitude:
+    ``(pos, castNumber, country, cruiseNumber, year, month, day, time,
+    latitude, longitude)``, ``pos`` the offset of the field after it.
+
+    :func:`_walk` starts with this call, so a record whose header fails
+    here fails with the same error in the full decode."""
+    pos = 0
+    try:
+        version = buf[0:1]
+        pos = 1
+        if not version.isalpha():
+            raise WodFormatError(f"bad version byte {version!r}")
+        _, pos = _int_at(buf, pos)  # declared byte count (framing applied upstream)
+        cast_number, pos = _int_at(buf, pos)
+        if cast_number is None:
+            raise WodFormatError("missing cast number")
+        country = buf[pos : pos + 2]
+        pos += 2
+        cruise, pos = _int_at(buf, pos)
+        year, pos = _fixed_int_at(buf, pos, 4)
+        month, pos = _fixed_int_at(buf, pos, 2)
+        day, pos = _fixed_int_at(buf, pos, 2)
+        time, pos = _float_at(buf, pos)
+        lat, pos = _float_at(buf, pos)
+        lon, pos = _float_at(buf, pos)
+    except IndexError:
+        raise WodFormatError(
+            f"record truncated at byte {pos} of {len(buf)}"
+        ) from None
+    return pos, cast_number, country, cruise, year, month, day, time, lat, lon
 
 
 class CastColumns:
@@ -294,54 +379,23 @@ def _walk(record: str, dataset: str, cols: CastColumns) -> None:
     and per-cast offsets go on last, once nothing can fail."""
     buf = record
     blen = len(buf)
-    pos = 0
     head_of = _FLOAT_HEAD.get
     flag_of = _FLAG.get
 
     def wod_int() -> int | None:
         nonlocal pos
-        c = buf[pos]
-        pos += 1
-        if c == "-" or c == " ":
-            return None
-        if not "0" <= c <= "9":
-            raise WodFormatError(f"bad WOD-int length byte {c!r} at {pos - 1}")
-        n = ord(c) - 48
-        if n == 0:
-            return None
-        s = buf[pos : pos + n]
-        pos += n
-        try:
-            return int(s)
-        except ValueError as e:
-            raise WodFormatError(f"bad WOD-int digits {s!r}") from e
+        v, pos = _int_at(buf, pos)
+        return v
 
     def wod_float() -> float | None:
         nonlocal pos
-        c = buf[pos]
-        if c == "-" or c == " ":
-            pos += 1
-            return None
-        head = head_of(buf[pos : pos + 3])
-        if head is None:
-            _bad_float_head(buf, pos)
-        t, div = head
-        pos += 3
-        raw = buf[pos : pos + t]
-        pos += t
-        try:
-            return int(raw) / div
-        except ValueError as e:
-            raise WodFormatError(f"bad WOD-float digits {raw!r}") from e
+        v, pos = _float_at(buf, pos)
+        return v
 
     def int_chars(n: int) -> int | None:
         nonlocal pos
-        s = buf[pos : pos + n].strip()
-        pos += n
-        try:
-            return int(s) if s else None
-        except ValueError as e:
-            raise WodFormatError(f"bad fixed-width digits {s!r} at {pos - n}") from e
+        v, pos = _fixed_int_at(buf, pos, n)
+        return v
 
     def flag() -> int | None:
         nonlocal pos
@@ -354,24 +408,10 @@ def _walk(record: str, dataset: str, cols: CastColumns) -> None:
             codes.append(wod_int())
             values.append(wod_float())
 
+    pos, cast_number, country, cruise, year, month, day, time, lat, lon = (
+        read_header(buf)
+    )
     try:
-        version = buf[0:1]
-        pos = 1
-        if not version.isalpha():
-            raise WodFormatError(f"bad version byte {version!r}")
-        wod_int()  # declared total byte count (framing applied upstream)
-        cast_number = wod_int()
-        if cast_number is None:
-            raise WodFormatError("missing cast number")
-        country = buf[pos : pos + 2]
-        pos += 2
-        cruise = wod_int()
-        year = int_chars(4)
-        month = int_chars(2)
-        day = int_chars(2)
-        time = wod_float()
-        lat = wod_float()
-        lon = wod_float()
         n_levels = wod_int() or 0
         profile_type = flag()
         n_vars = int_chars(2) or 0

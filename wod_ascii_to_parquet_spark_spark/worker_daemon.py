@@ -11,6 +11,11 @@ directory: about 0.13 s of CPU per task in a reused worker, for
 the daemon's launch ``PYTHONPATH`` and cannot change while it runs, so their
 re-read is skipped; any other archive is still re-read. Python 3.12 made the
 invalidation lazy, and there this module changes nothing.
+
+It also imports ``pyarrow.parquet`` and the convert plan before the first
+fork, so every forked worker starts with them loaded: unpickling a convert
+task's closure in a fresh worker otherwise imports ``functions/geohash.py``
+and with it pandas, about 0.45 s of CPU per worker.
 """
 
 import os
@@ -39,6 +44,9 @@ def pin_launch_archives() -> None:
 
 if __name__ == "__main__":
     pin_launch_archives()
+    import pyarrow.parquet  # noqa: F401
     from pyspark import daemon
+
+    import wod_ascii_to_parquet_spark_spark.plans.convert  # noqa: F401
 
     daemon.manager()
