@@ -816,7 +816,7 @@ def test_bot_regularity_flags_are_the_low_variance_tail(spark):
     assert all(r.gap_cv >= 0 for r in rows)
 
 
-def test_prefix_filter_kernels_equal_naive_all_pairs(spark):
+def test_prefix_filter_kernels_equal_naive_all_pairs(spark, tmp_path):
     """The r8 prefix-filter candidate step (SSJoin theorem) must return
     EXACTLY the naive blocked all-pairs kernels' results — it is an
     exactness-preserving plan change, not an approximation. Brute force
@@ -880,9 +880,7 @@ def test_prefix_filter_kernels_equal_naive_all_pairs(spark):
     # Route the registered queries over the synthetic frame by swapping
     # the loader input: both kernels read documents via spread(load(...)),
     # so write the frame as a parquet 'documents' table in a temp sf dir.
-    import tempfile
-
-    sf_dir = tempfile.mkdtemp(prefix="prefix_filter_sf_")
+    sf_dir = str(tmp_path / "prefix_filter_sf")
     d.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
     got_jac = {
         (r.doc_a, r.doc_b, r.jac)
@@ -896,7 +894,7 @@ def test_prefix_filter_kernels_equal_naive_all_pairs(spark):
     assert got_cont == naive_cont
 
 
-def test_containment_prefix_boundary_multiples_of_five(spark):
+def test_containment_prefix_boundary_multiples_of_five(spark, tmp_path):
     """Regression for the float prefix-length bug: ``1.0 − 0.8`` is
     0.19999999999999996 in doubles, so ``⌊n·(1−t)⌋+1`` was one element
     short of the SSJoin requirement for every shingle count that is a
@@ -911,8 +909,6 @@ def test_containment_prefix_boundary_multiples_of_five(spark):
     role's buggy prefix hits and the pair vanishes entirely under the
     old arithmetic. Asserts the registered query equals the naive
     blocked kernel AND that each boundary pair is present at 0.8."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from wod_ascii_to_parquet_spark_spark.operators.dedup import shingles
@@ -965,7 +961,7 @@ def test_containment_prefix_boundary_multiples_of_five(spark):
     }
     assert {(0, 1, 0.8), (2, 3, 0.8), (4, 5, 0.8)} <= naive, naive
 
-    sf_dir = tempfile.mkdtemp(prefix="containment_boundary_sf_")
+    sf_dir = str(tmp_path / "containment_boundary_sf")
     d.write.mode("overwrite").parquet(f"{sf_dir}/documents.parquet")
     got = {
         (r.doc_a, r.doc_b, r.containment)

@@ -301,19 +301,21 @@ def test_wkb_kernel_matches_independent_decoder():
 def test_convert_run_leaves_cache_empty(spark, tmp_path, monkeypatch):
     """VERDICT r9 #4: a multi-file convert run is the long-lived shape
     cached_frames() was built for — a stage that persist()s (simulated by
-    wrapping convert_file, since no stage persists today) must have its
-    frames released when convert() returns, not accumulate one
-    InMemoryRelation per file."""
+    wrapping _convert_batch, which every conversion runs through, since
+    no stage persists today) must have its frames released when convert()
+    returns, not accumulate one InMemoryRelation per job."""
     import wod_ascii_to_parquet_spark_spark.plans.convert as C
 
-    real = C.convert_file
+    real = C._convert_batch
+    persisted = []
 
-    def persisting(spark_, task, **kw):
+    def persisting(spark_, tasks, *a, **kw):
         df = spark_.range(10).persist()
         df.count()
-        return real(spark_, task, **kw)
+        persisted.append(df)
+        yield from real(spark_, tasks, *a, **kw)
 
-    monkeypatch.setattr(C, "convert_file", persisting)
+    monkeypatch.setattr(C, "_convert_batch", persisting)
     cm = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     result = C.convert(
@@ -325,6 +327,7 @@ def test_convert_run_leaves_cache_empty(spark, tmp_path, monkeypatch):
         max_concurrent=2,
     )
     assert len(result.converted) == 2
+    assert persisted, "the persisting wrapper never ran"
     assert cm.isEmpty(), "convert() leaked persisted frames after the run"
 
 
@@ -719,3 +722,171 @@ def test_error_store_matches_scan_errors(spark, tmp_path, monkeypatch, arm):
     md = pq.read_metadata(os.path.join(task.error_path, names[1])).metadata
     assert md[b"org.apache.spark.sql.parquet.row.metadata"].decode() == ERROR_ROW_METADATA
     _assert_published(spark, task, casts=GEN_CASTS - 5 - 5)
+
+
+# -- small files share a job -------------------------------------------------
+
+
+def _small_files(tmp_path, counts, malformed=None):
+    """Small generated XBT files, file ``i`` holding ``counts[i]`` casts of
+    one seed (so the files share their geohash3 cells), from cast number
+    ``FIRST_CAST + 1000 * i``, the casts at ``malformed[i]`` written
+    malformed (a bad cruise number). Returns the source root and the files'
+    tasks, largest file first."""
+    from wod_ascii_to_parquet_spark_spark.plans.convert import plan_tasks
+
+    src = str(tmp_path / "src")
+    for i, n in enumerate(counts):
+        casts = make_casts(n, GEN_SEED, first_cast=FIRST_CAST + 1000 * i)
+        bad = (malformed or {}).get(i, frozenset())
+        write_wod_file(
+            f"{src}/XBT/OBS/XBTO{1960 + i}.gz", wod_text(casts, malformed=bad)
+        )
+    tasks = plan_tasks(src, str(tmp_path / "out"), ("XBT",), ("OBS",))
+    return src, sorted(tasks, key=lambda t: -os.path.getsize(t.input_path))
+
+
+def _index(task) -> int:
+    """The ``i`` of a :func:`_small_files` task."""
+    return int(os.path.basename(task.input_path)[4:8]) - 1960
+
+
+def _convert_small(spark, src, tmp_path, **kw):
+    return convert(
+        spark, src, str(tmp_path / "out"), datasets=("XBT",), levels=("OBS",), **kw
+    )
+
+
+def test_small_files_share_one_exchange(spark, tmp_path):
+    """Six small files convert in one shared job: one stage writes
+    shuffle output, not one per file, and every file publishes on its own
+    with its own markers and rows."""
+    counts = [10, 20, 30, 40, 50, 60]
+    src, tasks = _small_files(tmp_path, counts)
+    assert all(os.path.getsize(t.input_path) < 256 * 1024 for t in tasks)
+    result = {}
+    stages = _shuffle_map_stages(
+        spark,
+        f"batch-census-{tmp_path.name}",
+        lambda: result.update(r=_convert_small(spark, src, tmp_path, max_concurrent=1)),
+    )
+    assert len(stages) == 1, stages
+    assert sorted(result["r"].converted) == sorted(t.output_path for t in tasks)
+    for task in tasks:
+        _assert_published(spark, task, casts=counts[_index(task)])
+    assert sorted(_convert_small(spark, src, tmp_path).skipped) == sorted(
+        t.output_path for t in tasks
+    )
+
+
+@pytest.mark.parametrize("arm", ["store", "streamed"])
+def test_batch_routes_error_rows_to_their_files(spark, tmp_path, monkeypatch, arm):
+    """Two files with malformed casts and a clean one, in one batch: each
+    file's error store holds exactly its own ``errors(wod_scan(...))``
+    rows, on the store arm and on the streamed no-store arm, and the clean
+    file gets no error store."""
+    import wod_ascii_to_parquet_spark_spark.plans.convert as C
+    from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import errors, wod_scan
+
+    src, tasks = _small_files(
+        tmp_path, [40, 40, 40], malformed={0: {1, 7, 30}, 2: {3}}
+    )
+    batches = []
+    real = C._convert_batch
+
+    def spy(spark_, batch, *a, **kw):
+        batches.append(len(batch))
+        yield from real(spark_, batch, *a, **kw)
+
+    monkeypatch.setattr(C, "_convert_batch", spy)
+    if arm == "streamed":
+        monkeypatch.setattr(C, "_resolve_executor_store", lambda *_a: None)
+    result = _convert_small(spark, src, tmp_path, max_concurrent=1)
+    assert batches == [3] and len(result.converted) == 3
+    clean = 0
+    for task in tasks:
+        expected = sorted(
+            tuple(r) for r in errors(wod_scan(spark, task.input_path, "XBT")).collect()
+        )
+        if not expected:
+            clean += 1
+            assert not os.path.exists(task.error_path)
+        else:
+            got = sorted(tuple(r) for r in spark.read.parquet(task.error_path).collect())
+            assert got == expected
+        _assert_published(spark, task, casts=40 - len(expected))
+    assert clean == 1
+
+
+def test_corrupt_small_file_fails_only_itself(spark, tmp_path):
+    """A truncated ``.gz`` among small files fails its batch's job; the
+    other files are retried alone and publish, and ``convert()`` raises
+    naming only the corrupt file."""
+    counts = [20, 30, 40, 50]
+    src, tasks = _small_files(tmp_path, counts)
+    bad = tasks[1].input_path
+    with open(bad, "rb") as fh:
+        data = fh.read()
+    with open(bad, "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    with pytest.raises(RuntimeError, match="conversion failures") as e:
+        _convert_small(spark, src, tmp_path, max_concurrent=2, retries=0)
+    assert bad in str(e.value)
+    for task in tasks:
+        if task.input_path != bad:
+            assert task.input_path not in str(e.value)
+            _assert_published(spark, task, casts=counts[_index(task)])
+    assert not os.path.exists(os.path.join(tasks[1].output_path, "_SUCCESS"))
+
+
+def test_crash_inside_a_batch_resumes(spark, tmp_path, monkeypatch):
+    """A crash at the second file's publish renames leaves the first file
+    published and the others with only ``_temporary``; the next
+    ``convert()`` skips the first, rebuilds the others, and leaves every
+    output complete with no ``_temporary``."""
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import FsClient
+
+    counts = [20, 30, 40]
+    src, tasks = _small_files(tmp_path, counts)
+    real = FsClient.rename_all
+    calls = []
+
+    def crash_after_first(self, pairs):
+        calls.append(pairs)
+        if len(calls) > 1:
+            raise RuntimeError("crash in the publish renames")
+        return real(self, pairs)
+
+    with monkeypatch.context() as m:
+        m.setattr(FsClient, "rename_all", crash_after_first)
+        with pytest.raises(RuntimeError, match="publish renames"):
+            _convert_small(spark, src, tmp_path, max_concurrent=1, retries=0)
+    first, *rest = tasks
+    assert os.path.exists(os.path.join(first.output_path, "_geo_metadata.json"))
+    for task in rest:
+        assert os.path.exists(os.path.join(task.output_path, "_temporary"))
+        assert not os.path.exists(os.path.join(task.output_path, "_SUCCESS"))
+    result = _convert_small(spark, src, tmp_path)
+    assert result.skipped == [first.output_path]
+    assert sorted(result.converted) == sorted(t.output_path for t in rest)
+    for task in tasks:
+        _assert_published(spark, task, casts=counts[_index(task)])
+    assert not glob.glob(str(tmp_path / "out" / "**" / "_temporary"), recursive=True)
+
+
+def test_frame_headers_tags_rows_with_their_file(spark, tmp_path):
+    """``frame_headers`` tags every record with the index its path maps
+    to, for the path as ``FsClient.qualify`` spells it (here one with a
+    space), and fails on a listed file it has no index for rather than
+    give it one."""
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import FsClient
+    from wod_ascii_to_parquet_spark_spark.sources.wod_ascii import frame_headers
+
+    src = write_wod_file(
+        str(tmp_path / "a b" / "XBTO1960.gz"), wod_text(make_casts(3, GEN_SEED))
+    )
+    fs = FsClient(spark)
+    rows = frame_headers(spark, {fs.qualify(src): 7}).groupBy("file").count().collect()
+    assert [tuple(r) for r in rows] == [(7, 3)]
+    with pytest.raises(Exception, match="is not one of the files framed"):
+        frame_headers(spark, {fs.qualify(str(tmp_path / "a b")): 0}).collect()

@@ -262,21 +262,24 @@ def test_no_unbounded_cartesian_in_any_registered_plan(spark):
 
 
 def test_convert_schedules_largest_files_first(spark, tmp_path, monkeypatch):
-    """The thread pool must receive tasks largest-first (LPT): the biggest
-    file starting last is what stretches the makespan."""
+    """The thread pool must receive the work largest-first (LPT): the
+    biggest file starting last is what stretches the makespan. Every
+    conversion runs through ``_convert_batch`` (a large file as a batch of
+    one), so its calls, in order, are the units as they start, and within
+    a batch the files are in the order they were packed."""
     import os
 
     from wod_ascii_to_parquet_spark_spark.plans import convert as C
     from wod_ascii_to_parquet_spark_spark.sources.wod_encode import wod_fixtures_dir
 
     seen = []
-    real = C.convert_file
+    real = C._convert_batch
 
-    def spy(spark_, task, overwrite=False, **kw):
-        seen.append(os.path.getsize(task.input_path))
-        return real(spark_, task, overwrite=overwrite, **kw)
+    def spy(spark_, tasks, *a, **kw):
+        seen.extend(os.path.getsize(t.input_path) for t in tasks)
+        yield from real(spark_, tasks, *a, **kw)
 
-    monkeypatch.setattr(C, "convert_file", spy)
+    monkeypatch.setattr(C, "_convert_batch", spy)
     C.convert(
         spark,
         wod_fixtures_dir(),

@@ -4,36 +4,43 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
 ``DatasetYearTrain.java:86-139``), rebuilt Spark-first:
 
 - **plan**: enumerate ``<source>/<DS>/<LEVEL>/*.gz`` (× subset filter) into
-  per-file tasks (``DatasetTrain.java:51-86``).
+  per-file tasks, each with its size from the same listing
+  (``DatasetTrain.java:51-86``).
 - **skip/resume**: output ``_SUCCESS`` exists → skip; stale ``_temporary``
   or ``overwrite`` → clean first (``DatasetYearTrain.java:89-94``).
-- **convert one file**: gunzip + frame records in one task, each record
-  with its header fields (``wod_ascii.frame_headers``) → castTimestamp +
-  geohash + geohash3 in the JVM → ``repartition("geohash3")`` →
-  ``sortWithinPartitions("geohash3", "geohash")`` → decode + one-pass
-  GeoParquet write in the writer tasks (``DatasetYearTrain.java:128-139``)
-  → error store (``TransformationErrorHandler.java:42-52``) from the error
-  rows the writer tasks return. The JVM moves flat rows only, record text
-  and sort keys: the nested cast rows exist only inside the writer tasks.
+- **convert**: one Spark job converts one input file, or a batch of small
+  ones (``convert`` runs inputs under ``_SHARED_JOB_BYTES`` up to
+  ``_SHARED_JOB_FILES`` to a job, where the reference runs one job per
+  file): gunzip + frame each file's records in one task, each record
+  with its file's index in the batch and its header fields
+  (``wod_ascii.frame_headers``) → castTimestamp + geohash + geohash3 in
+  the JVM → ``repartition("file", "geohash3")`` →
+  ``sortWithinPartitions("file", "geohash3", "geohash")`` → decode +
+  one-pass GeoParquet write in the writer tasks
+  (``DatasetYearTrain.java:128-139``) → per file, publish and the error
+  store (``TransformationErrorHandler.java:42-52``) from the error rows
+  the writer tasks return. The JVM moves flat rows only, record text and
+  sort keys: the nested cast rows exist only inside the writer tasks.
 - The reference's dead global ``orderBy(asc("geohash"))``
   (``DatasetYearTrain.java:130``) — a full range shuffle destroyed by the
   following repartition — is intentionally omitted.
 - **The write is one pass**, as the reference's Sedona writer is (it takes
   the footer as writer options, ``DatasetYearTrain.java:132-134``): each
-  ``mapInArrow`` writer task writes its geohash3 cells with pyarrow,
-  through the executor-side store of ``geo_metadata`` (local disk, viewfs
-  mounts, s3/s3a, gs), each file with the ``geo`` key already in its
-  footer, and returns the paths it wrote and the error rows it decoded.
-  The driver publishes: it renames each cell dir out of
-  ``_temporary/<job>/``, deletes ``_temporary``, writes ``_SUCCESS``
-  (holding the ``geo`` value), the error channel (with pyarrow, from the
-  returned error rows) and the sidecar, in that order. That is the
-  ``_temporary`` → rename + ``_SUCCESS`` protocol the reference managed by
-  hand and Spark's FileOutputCommitter ran before. For a scheme no
-  executor store can open (``hdfs://`` without libhdfs) the same tasks
-  write each file to memory and the driver streams the bytes and the
-  error rows, one writer partition at a time. Compaction uses the same
-  writer, without the decode.
+  ``mapInArrow`` writer task writes its ``(file, geohash3)`` cells with
+  pyarrow, through the executor-side store of ``geo_metadata`` (local
+  disk, viewfs mounts, s3/s3a, gs), each file with the ``geo`` key
+  already in its footer, and returns the paths it wrote and the error
+  rows it decoded. The driver publishes each input's output in turn: it
+  renames each cell dir out of the output's ``_temporary/<job>/``,
+  deletes ``_temporary``, writes ``_SUCCESS`` (holding the ``geo``
+  value), the error channel (with pyarrow, from the returned error rows)
+  and the sidecar, in that order, so every output keeps its own markers.
+  That is the ``_temporary`` → rename + ``_SUCCESS`` protocol the
+  reference managed by hand and Spark's FileOutputCommitter ran before.
+  For a scheme no executor store can open (``hdfs://`` without libhdfs)
+  the same tasks write each file to memory and the driver streams the
+  bytes and the error rows, one writer partition at a time. Compaction
+  uses the same writer, without the decode.
 - The staging ``<out>_temp`` store (``DatasetYearTrain.java:82-83,211-222``)
   existed only because the driver-side parse fed batches; the single
   distributed write replaces it.
@@ -47,22 +54,23 @@ Reference lifecycle (``SparklerExecutor.java:48-69`` +
   (``DatasetYearTrain.java:39-40,231-233``).
 
 Scale notes (100 TB): file tasks are independent → driver submits them to a
-thread pool (Spark schedules fairly); per-file output partitioning is by
-``geohash3`` (max 32768 partitions; real oceans ≈ low thousands) with
-within-partition geohash sort giving parquet row-group min/max locality for
-spatial readers. A skewed geohash3 (coastal hot cells) only skews the
-decode and WRITE of one file-job, bounded by file size; cross-file global
-compaction would bucket by (geohash3, salt) instead.
+thread pool (Spark schedules fairly), each large file alone and the small
+ones in shared jobs; per-file output partitioning is by ``geohash3`` (max
+32768 partitions; real oceans ≈ low thousands) with within-partition
+geohash sort giving parquet row-group min/max locality for spatial
+readers. A skewed geohash3 (coastal hot cells) only skews the decode and
+WRITE of one job, bounded by file size (a batch's by its few MiB);
+cross-file global compaction would bucket by (geohash3, salt) instead.
 """
 
 from __future__ import annotations
 
-import itertools
 import json
 import os
 import posixpath
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from itertools import groupby
 
 from pyspark.sql import SparkSession
@@ -96,13 +104,15 @@ DEFAULT_LEVELS = ("OBS",)
 @dataclass
 class FileTask:
     """One input file → one output parquet dataset (the reference's
-    ``DatasetYearTrain``)."""
+    ``DatasetYearTrain``). ``size`` is the input's length in bytes, as
+    :func:`plan_tasks` lists it (0 when not given)."""
 
     dataset: str
     level: str
     input_path: str
     output_dir: str
     error_dir: str
+    size: int = 0
 
     @property
     def out_name(self) -> str:
@@ -143,24 +153,26 @@ def plan_tasks(
     path's scheme — ``s3a://`` sources page ListObjectsV2 inside the
     connector, the mirror of ``S3Actions.listObjects``'s paginator
     (``S3Actions.java:59-71``). Without it, plain ``os.listdir`` (pure
-    local, keeps planning importable without a JVM)."""
+    local, keeps planning importable without a JVM). Each task's ``size``
+    comes from the same listing (``os.path.getsize`` without ``spark``)."""
     fs = FsClient(spark) if spark is not None else None
     tasks: list[FileTask] = []
     for ds in sorted(set(datasets)):
         for lvl in sorted(set(levels)):
             prefix = _join(source, ds, lvl)
             if fs is not None:
-                names = fs.list_names(prefix)
+                listing = fs.list_sizes(prefix)
             elif os.path.isdir(prefix):
-                names = sorted(os.listdir(prefix))
+                listing = [(name, None) for name in sorted(os.listdir(prefix))]
             else:
-                names = []
-            for name in names:
+                listing = []
+            for name, size in listing:
                 keep = name.endswith(".gz") if not subset else name in subset
                 if keep:
-                    tasks.append(
-                        FileTask(ds, lvl, _join(prefix, name), output, output)
-                    )
+                    path = _join(prefix, name)
+                    if size is None:
+                        size = os.path.getsize(path)
+                    tasks.append(FileTask(ds, lvl, path, output, output, size))
     return tasks
 
 
@@ -283,50 +295,74 @@ def _file_schema(schema, metadata: dict):
     )
 
 
-#: The rows a writer task returns: one per file it wrote through a store,
-#: ``data`` null; one per ``_CHUNK_BYTES`` of a file it wrote to memory;
-#: one per error row its decode found, ``path`` and ``data`` null.
+#: The rows a writer task returns, each with the index of the output it
+#: belongs to: one per file it wrote through a store, ``data`` null; one
+#: per ``_CHUNK_BYTES`` of a file it wrote to memory; one per error row its
+#: decode found, ``path`` and ``data`` null.
 _WRITTEN_SCHEMA = (
-    "path string, data binary, dataset string, castNumber int, error string"
+    "file int, path string, data binary, dataset string, castNumber int, "
+    "error string"
 )
 
 
-def _written(n: int, path=None, data=None, err=None):
-    """``n`` ``_WRITTEN_SCHEMA`` rows: file rows from the ``path`` and
-    ``data`` arrays, or error rows from ``err``, a ``CAST_ERROR``
-    StructArray."""
+def _written(file, path=None, data=None, err=None):
+    """``_WRITTEN_SCHEMA`` rows, one per entry of ``file``, an int32 array
+    of output indexes: file rows from the ``path`` and ``data`` arrays, or
+    error rows from ``err``, a ``CAST_ERROR`` StructArray."""
     import pyarrow as pa
 
-    cols = [path, data, *(err.flatten() if err is not None else (None,) * 3)]
-    types = (pa.string(), pa.binary(), pa.string(), pa.int32(), pa.string())
+    cols = [file, path, data, *(err.flatten() if err is not None else (None,) * 3)]
+    types = (pa.int32(), pa.string(), pa.binary(), pa.string(), pa.int32(), pa.string())
     return pa.RecordBatch.from_arrays(
-        [pa.nulls(n, t) if c is None else c for c, t in zip(cols, types)],
-        ["path", "data", "dataset", "castNumber", "error"],
+        [pa.nulls(len(file), t) if c is None else c for c, t in zip(cols, types)],
+        ["file", "path", "data", "dataset", "castNumber", "error"],
     )
 
 
 def _split_cells(batch):
-    """A sorted frame batch as the writer takes it: ``(cells, data,
-    errors)`` — its ``geohash3`` column, the rest, and no error rows."""
-    yield batch.column("geohash3"), batch.drop_columns(["geohash3"]), None
+    """A sorted frame batch of one output, as the writer takes it:
+    ``(files, cells, data, errors)`` — output 0 for every row, its
+    ``geohash3`` column, the rest, and no error rows."""
+    import pyarrow as pa
+
+    files = pa.repeat(pa.scalar(0, pa.int32()), batch.num_rows)
+    yield files, batch.column("geohash3"), batch.drop_columns(["geohash3"]), None
 
 
-def _cell_writer(store, tmp_root: str, job: str, schema, prepare=_split_cells):
+def _runs(files, cells):
+    """``(end, file, cell)`` per run of equal ``(file, cell)`` pairs of the
+    equal-length arrays ``files`` and ``cells``, in order."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ends = sorted(
+        {
+            *pc.run_end_encode(files).run_ends.to_pylist(),
+            *pc.run_end_encode(cells).run_ends.to_pylist(),
+        }
+    )
+    last = pa.array([end - 1 for end in ends], pa.int64())
+    return zip(ends, files.take(last).to_pylist(), cells.take(last).to_pylist())
+
+
+def _cell_writer(store, tmp_roots: list[str], job: str, schema, prepare=_split_cells):
     """The ``mapInArrow`` body of the one-pass writer. Each task gets its
-    rows sorted by ``(geohash3, geohash)``; ``prepare`` turns each input
-    batch into ``(cells, data, errors)`` triples, in order. The task
-    writes each geohash3 run of ``cells`` as ``<tmp_root>/<partition>-
-    <attempt>/geohash3=<v>/part-<partition>-<job>.c000.snappy.parquet``
-    (``data``'s rows, Arrow ``schema``, its metadata in the footer) through
-    ``store``, or to memory when ``store`` is None. It returns
-    ``_WRITTEN_SCHEMA`` rows as each file closes, so a task holds at most
-    one in-memory file, and the ``errors`` rows as they come. ``<attempt>``
-    is the task attempt's id, unique in the application, so a failed or
-    speculative attempt's files never share a directory with the files the
-    driver publishes: those of the attempt whose rows it received."""
+    rows sorted by ``(file, geohash3, geohash)``, ``file`` an index into
+    ``tmp_roots``; ``prepare`` turns each input batch into ``(files,
+    cells, data, errors)`` tuples, in order. The task writes each run of
+    equal ``(files, cells)`` values ``(f, v)`` as ``<tmp_roots[f]>/
+    <partition>-<attempt>/geohash3=<v>/part-<partition>-<job>.c000.snappy.
+    parquet`` (``data``'s rows, Arrow ``schema``, its metadata in the
+    footer) through ``store``, or to memory when ``store`` is None. It
+    returns ``_WRITTEN_SCHEMA`` rows as each file closes, so a task holds at
+    most one in-memory file, and the ``errors`` rows, already
+    ``_WRITTEN_SCHEMA`` rows, as they come. ``<attempt>`` is the task
+    attempt's id, unique in the application, so a failed or speculative
+    attempt's files never share a directory with the files the driver
+    publishes: those of the attempt whose rows it received."""
     chunk_bytes = _CHUNK_BYTES
 
-    def returned(cell_file):
+    def returned(cell_file, file):
         import pyarrow as pa
 
         data = cell_file.close()
@@ -338,44 +374,40 @@ def _cell_writer(store, tmp_root: str, job: str, schema, prepare=_split_cells):
                 for at in range(0, data.size, chunk_bytes)
             ]
         yield _written(
-            len(chunks),
+            pa.array([file] * len(chunks), pa.int32()),
             path=pa.array([cell_file.path] * len(chunks)),
             data=pa.array(chunks, pa.binary()),
         )
 
     def write(batches):
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
-        root = f"{tmp_root}/{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
+        task_dir = f"{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
         name = f"part-{ctx.partitionId():05d}-{job}.c000.snappy.parquet"
-        cell, current = None, None
+        key, current = None, None
         try:
             for batch in batches:
-                for cells, data, errs in prepare(batch):
-                    if errs is not None and len(errs):
-                        yield _written(len(errs), err=errs)
-                    runs = pc.run_end_encode(cells)
+                for files, cells, data, errs in prepare(batch):
+                    if errs is not None and errs.num_rows:
+                        yield errs
                     start = 0
-                    for end, value in zip(
-                        runs.run_ends.to_pylist(), runs.values.to_pylist()
-                    ):
-                        if current is None or value != cell:
+                    for end, file, cell in _runs(files, cells):
+                        if current is None or (file, cell) != key:
                             if current is not None:
-                                yield from returned(current)
-                            cell = value
-                            part = _NULL_PARTITION if value is None else value
+                                yield from returned(current, key[0])
+                            key = (file, cell)
+                            part = _NULL_PARTITION if cell is None else cell
                             current = _CellFile(
                                 store,
-                                f"{root}/geohash3={part}/{name}",
+                                f"{tmp_roots[file]}/{task_dir}/geohash3={part}/{name}",
                                 schema,
                             )
                         current.add(data.slice(start, end - start))
                         start = end
             if current is not None:
                 last, current = current, None
-                yield from returned(last)
+                yield from returned(last, key[0])
         finally:
             if current is not None:  # a failed task: release the stream
                 current._sink.close()
@@ -428,60 +460,72 @@ def _write_geoparquet(
     fs: FsClient,
     store,
     frame,
-    out: str,
+    outs: list[str],
     encoding: str,
     schema,
     prepare=_split_cells,
-) -> tuple[int, list]:
-    """Write ``frame`` (sorted by ``(geohash3, geohash)`` within each
-    partition) to ``out`` as geohash3-partitioned GeoParquet in one pass,
-    with rows of the Spark ``schema`` as ``prepare`` makes them (see
-    :func:`_cell_writer`), and publish it; returns the number of files
-    written and the error rows ``prepare`` found, as
-    ``(dataset, castNumber, error)`` rows.
+) -> list[tuple[list[str], list]]:
+    """Write ``frame`` (sorted by ``(file, geohash3, geohash)`` within each
+    partition, ``file`` an index into ``outs``; see :func:`_cell_writer`)
+    as geohash3-partitioned GeoParquet in one pass, with rows of the Spark
+    ``schema`` as ``prepare`` makes them. Returns, per output, the paths of
+    the files written for it and the error rows ``prepare`` found, as
+    ``(dataset, castNumber, error)`` rows; :func:`_publish_geoparquet`
+    then publishes each output.
 
-    Writer tasks write every file under ``<out>/_temporary/<job>/`` with
-    the ``geo`` key, and Spark's row-schema and version keys, already in
-    the footer, through ``store``, and the driver collects the returned
-    rows. Where no executor-side store opens the scheme (``store`` is None,
-    e.g. ``hdfs://`` without libhdfs), the tasks return each file's bytes
-    instead, and the driver streams them (``toLocalIterator``: one job per
-    writer partition, so the driver holds one task's output at a time) into
-    the same paths. The driver then renames the files into ``out``
-    (:func:`_publish_plan`), deletes ``_temporary`` and writes ``_SUCCESS``
-    holding the ``geo`` value every file was written with, which a resume
-    reads to heal a missing sidecar. A crash before ``_SUCCESS`` leaves
-    either ``_temporary`` or no marker at all, and the next run rebuilds."""
+    The job owns every output, as a static overwrite does: each is deleted
+    first. Writer tasks write every file under its output's
+    ``_temporary/<job>/`` with the ``geo`` key, and Spark's row-schema and
+    version keys, already in the footer, through ``store``, and the driver
+    collects the returned rows. Where no executor-side store opens the
+    scheme (``store`` is None, e.g. ``hdfs://`` without libhdfs), the tasks
+    return each file's bytes instead, and the driver streams them
+    (``toLocalIterator``: one job per writer partition, so the driver holds
+    one task's output at a time) into the same paths."""
     import uuid
 
-    fs.delete(out)  # the job owns the directory, as a static overwrite does
+    for out in outs:
+        fs.delete(out)
     job = str(uuid.uuid4())
-    geo = _geo_value(encoding)
-    file_schema = _file_schema(schema, {b"geo": geo, **_spark_footer(spark, schema)})
-    tmp = _join(out, "_temporary")
-    written = frame.mapInArrow(
-        _cell_writer(store, _join(tmp, job), job, file_schema, prepare),
-        _WRITTEN_SCHEMA,
+    file_schema = _file_schema(
+        schema, {b"geo": _geo_value(encoding), **_spark_footer(spark, schema)}
     )
-    paths, errs = [], []
+    tmp_roots = [_join(out, "_temporary", job) for out in outs]
+    written = frame.mapInArrow(
+        _cell_writer(store, tmp_roots, job, file_schema, prepare), _WRITTEN_SCHEMA
+    )
+    results: list[tuple[list[str], list]] = [([], []) for _ in outs]
     if store is not None:
         for row in written.collect():
+            paths, errs = results[row.file]
             if row.path is None:
-                errs.append(row[2:])
+                errs.append(row[3:])
             else:
                 paths.append(row.path)
     else:
         # a file's chunks arrive as consecutive rows, in order
-        for path, rows in groupby(written.toLocalIterator(), lambda r: r.path):
+        for (file, path), rows in groupby(
+            written.toLocalIterator(), lambda r: (r.file, r.path)
+        ):
+            paths, errs = results[file]
             if path is None:
-                errs.extend(row[2:] for row in rows)
+                errs.extend(row[3:] for row in rows)
             else:
                 fs.write_chunks(path, (row.data for row in rows))
                 paths.append(path)
+    return results
+
+
+def _publish_geoparquet(fs: FsClient, out: str, paths: list[str], encoding: str) -> None:
+    """Publish the files :func:`_write_geoparquet` wrote at ``paths`` for
+    ``out``: rename them into ``out`` (:func:`_publish_plan`), delete
+    ``_temporary`` and write ``_SUCCESS`` holding the ``geo`` value every
+    file was written with, which a resume reads to heal a missing sidecar.
+    A crash before ``_SUCCESS`` leaves either ``_temporary`` or no marker
+    at all, and the next run rebuilds."""
     fs.rename_all(_publish_plan(paths, out))
-    fs.delete(tmp)
-    fs.write_bytes(_join(out, "_SUCCESS"), geo)
-    return len(paths), errs
+    fs.delete(_join(out, "_temporary"))
+    fs.write_bytes(_join(out, "_SUCCESS"), _geo_value(encoding))
 
 
 def _published_encoding(fs: FsClient, out: str) -> str | None:
@@ -504,26 +548,15 @@ def attach_geo_footer(*_args, **_kwargs) -> int:
     return 0
 
 
-def convert_file(
-    spark: SparkSession,
-    task: FileTask,
-    overwrite: bool = False,
-    geometry_encoding: str = "point",
-) -> str:
-    """Convert one WOD file; returns 'converted' or 'skipped'.
+def _prepare(spark: SparkSession, fs: FsClient, task: FileTask, overwrite: bool) -> bool:
+    """The skip/resume head of a file's conversion; True when the output
+    is complete and the file is skipped, False when it is to be converted
+    (a partial output, or any output under ``overwrite``, is removed
+    first).
 
     Idempotence contract (``DatasetYearTrain.java:89-94``): a complete
     output (``_SUCCESS``) is skipped unless ``overwrite``; a partial output
-    (stale ``_temporary``) is removed and rebuilt.
-
-    ``geometry_encoding``: ``"point"`` (default) writes GeoParquet 1.1
-    native-point geometry (``struct<x=lon, y=lat>``); ``"wkb"`` writes
-    spec WKB bytes (``functions/wkb.py``) with a 1.0 footer for readers
-    that predate native encoding (the byte-level shape of the reference's
-    Sedona output, ``DatasetYearTrain.java:41-43``).
-    """
-    enc = _footer_encoding(geometry_encoding)  # validate before any I/O
-    fs = FsClient(spark)
+    (stale ``_temporary``) is removed and rebuilt."""
     out = fs.qualify(task.output_path)
     rebuild = overwrite or _has_stale_temp(fs, out)
     if not rebuild and _has_success(fs, out):
@@ -536,20 +569,61 @@ def convert_file(
         # were written with, not this call's.
         sidecar = _join(out, SIDECAR_NAME)
         if fs.exists(sidecar):
-            return "skipped"
+            return True
         published = _published_encoding(fs, out)
         if published is not None:
             scan = wod_scan(spark, task.input_path, dataset=task.dataset)
             _write_error_channel(spark, fs, task, errors(scan).collect())
             fs.write_bytes(sidecar, geo_sidecar_bytes(published))
-            return "skipped"
+            return True
         # Spark's committer wrote this marker, so nothing says the files
         # carry `geo` or which encoding they hold: rebuild.
         rebuild = True
     if rebuild:
         fs.delete(out)
         fs.delete(task.error_path)
+    return False
 
+
+def convert_file(
+    spark: SparkSession,
+    task: FileTask,
+    overwrite: bool = False,
+    geometry_encoding: str = "point",
+) -> str:
+    """Convert one WOD file in a Spark job of its own (a batch of one, see
+    :func:`_convert_batch`); returns 'converted' or 'skipped'. A complete
+    output is skipped unless ``overwrite`` (see :func:`_prepare`).
+
+    ``geometry_encoding``: ``"point"`` (default) writes GeoParquet 1.1
+    native-point geometry (``struct<x=lon, y=lat>``); ``"wkb"`` writes
+    spec WKB bytes (``functions/wkb.py``) with a 1.0 footer for readers
+    that predate native encoding (the byte-level shape of the reference's
+    Sedona output, ``DatasetYearTrain.java:41-43``).
+    """
+    enc = _footer_encoding(geometry_encoding)  # validate before any I/O
+    if _prepare(spark, FsClient(spark), task, overwrite):
+        return "skipped"
+    for _ in _convert_batch(spark, [task], enc):
+        pass
+    return "converted"
+
+
+def _convert_batch(spark: SparkSession, tasks: list[FileTask], encoding: str):
+    """Convert ``tasks``, files :func:`_prepare` found to convert, in one
+    Spark job, with footer ``encoding``, and publish each output in task
+    order; yields each task once its output is published. Every task's
+    output must lie under the same ``<output_dir>/yearly``.
+
+    One ``binaryFile`` scan frames every file (each in one task), one
+    exchange keyed on ``(file, geohash3)`` feeds the writer tasks, which
+    decode and write every cell of every file, and the driver then
+    publishes each file as a job of its own would: renames, ``_temporary``
+    delete, ``_SUCCESS``, error channel, sidecar. A failure stops the
+    batch; the outputs yielded so far are complete."""
+    fs = FsClient(spark)
+    outs = [fs.qualify(t.output_path) for t in tasks]
+    files = {fs.qualify(t.input_path): i for i, t in enumerate(tasks)}
     # The JVM moves flat rows only: each record's text and the sort keys
     # computed from its header. The writer tasks decode the records
     # (:func:`_cast_decoder`), so the nested cast rows never cross into
@@ -559,7 +633,7 @@ def convert_file(
     # not a job failure, under ANSI mode.
     seconds = (F.col("time") * 3600).cast("int")
     keyed = (
-        frame_headers(spark, task.input_path)
+        frame_headers(spark, files)
         .withColumn(
             "castTimestamp",
             F.try_add(
@@ -575,17 +649,17 @@ def convert_file(
         # ~0.4 s/py4j-build saved PER FILE JOB; see geohash_spark_sql).
         .withColumn("geohash", geohash_col("latitude", "longitude"))
         .withColumn("geohash3", F.substring("geohash", 1, 3))
-        .select("rec", "ferr", "castTimestamp", "geohash", "geohash3")
+        .select("file", "rec", "ferr", "castTimestamp", "geohash", "geohash3")
     )
-    # Writer-task count: capped at 16 per file-job. Beyond that, many
-    # concurrently open parquet writers in one file-job contend (local[32]
+    # Writer-task count: capped at 16 per job. Beyond that, many
+    # concurrently open parquet writers in one job contend (local[32]
     # measured 32 tasks ≈ 10 s vs 16 tasks ≈ 4 s for 1652 cells under
     # Spark's writer, and the curve was flat from 16 to 32); cluster-wide
-    # parallelism comes from running file-jobs concurrently, not from more
-    # writers per file. It is also the decode width: a file's records
+    # parallelism comes from running jobs concurrently, not from more
+    # writers per job. It is also the decode width: a file's records
     # decode in the writer tasks of their cells.
     n_write_tasks = min(16, spark.sparkContext.defaultParallelism)
-    # Writer distribution: geohash3-hash. Real WOD occupancy
+    # Writer distribution: (file, geohash3)-hash. Real WOD occupancy
     # is coastal-skewed, and a hash repartition routes a hot geohash3
     # ENTIRELY to one writer task — measured on byte-matched arms at a
     # 50% hot cell: 1.13x the uniform arm (tools/bench_convert_skew.py,
@@ -593,41 +667,45 @@ def convert_file(
     # dominate at file-job scale (the single-gzip decode bound does), so
     # the writer exchange stays static and per-file skew remains bounded
     # by file size as the module docstring argues. It also makes every
-    # cell one task's, so each geohash3 dir holds one file and the
-    # publish is one rename per cell. The cost: a hot cell's records also
-    # decode in its one task (1,200 deep casts in one cell converted in
-    # 1.7-2.7 s warm at local[4], against 1.8-2.3 s with a round-robin
-    # decode exchange; in 8 cells, 1.2-1.5 s against 1.4-2.0 s).
-    # Records whose header fails have a null key and decode to error
-    # rows in one task.
-    # Sort by (geohash3, geohash): each task's cells arrive as contiguous
-    # runs (one file each), and within a cell rows are in the reference's
-    # sortWithinPartitions("geohash") order, since geohash3 is a prefix of
-    # geohash.
-    frame = keyed.repartition(n_write_tasks, F.col("geohash3")).sortWithinPartitions(
-        "geohash3", "geohash"
-    )
-    _, errs = _write_geoparquet(
+    # (file, cell) pair one task's, so each geohash3 dir holds one file
+    # and the publish is one rename per cell. The cost: a hot cell's
+    # records also decode in its one task (1,200 deep casts in one cell
+    # converted in 1.7-2.7 s warm at local[4], against 1.8-2.3 s with a
+    # round-robin decode exchange; in 8 cells, 1.2-1.5 s against
+    # 1.4-2.0 s). Records whose header fails have a null key and decode
+    # to error rows in one task per file.
+    # Sort by (file, geohash3, geohash): each task's cells arrive as
+    # contiguous runs (one file each), and within a cell rows are in the
+    # reference's sortWithinPartitions("geohash") order, since geohash3 is
+    # a prefix of geohash.
+    frame = keyed.repartition(
+        n_write_tasks, F.col("file"), F.col("geohash3")
+    ).sortWithinPartitions("file", "geohash3", "geohash")
+    # One executor store for the batch, on the root every output shares.
+    root = fs.qualify(_join(tasks[0].output_dir, "yearly"))
+    written = _write_geoparquet(
         spark,
         fs,
-        _resolve_executor_store(spark, out),
+        _resolve_executor_store(spark, root),
         frame,
-        out,
-        enc,
-        _cast_schema(enc),
-        _cast_decoder(task.dataset, enc),
+        outs,
+        encoding,
+        _cast_schema(encoding),
+        _cast_decoder([t.dataset for t in tasks], encoding),
     )
-    # Error rows: one overwrite per file, after the main commit (the
-    # reference's TransformationErrorHandler.java:42-52 appends
-    # incrementally; one overwrite per file is equivalent and retry-safe).
-    # So _SUCCESS alone does not imply the error channel exists — the
-    # SIDECAR is the completion marker, and the skip path above rebuilds
-    # the channel whenever it heals a missing sidecar.
-    _write_error_channel(spark, fs, task, errs)
-    # The sidecar goes last: its presence marks the publish complete for
-    # crash-healing.
-    fs.write_bytes(_join(out, SIDECAR_NAME), geo_sidecar_bytes(enc))
-    return "converted"
+    for task, out, (paths, errs) in zip(tasks, outs, written):
+        _publish_geoparquet(fs, out, paths, encoding)
+        # Error rows: one overwrite per file, after the main commit (the
+        # reference's TransformationErrorHandler.java:42-52 appends
+        # incrementally; one overwrite per file is equivalent and
+        # retry-safe). So _SUCCESS alone does not imply the error channel
+        # exists — the SIDECAR is the completion marker, and _prepare
+        # rebuilds the channel whenever it heals a missing sidecar.
+        _write_error_channel(spark, fs, task, errs)
+        # The sidecar goes last: its presence marks the publish complete
+        # for crash-healing.
+        fs.write_bytes(_join(out, SIDECAR_NAME), geo_sidecar_bytes(encoding))
+        yield task
 
 
 def _cast_schema(encoding: str):
@@ -655,15 +733,18 @@ def _cast_schema(encoding: str):
     )
 
 
-def _cast_decoder(dataset: str, encoding: str):
+def _cast_decoder(datasets: list[str], encoding: str):
     """The writer tasks' ``prepare`` for convert (see :func:`_cell_writer`):
-    each sorted batch of ``rec``, ``ferr``, ``castTimestamp``, ``geohash``
-    and ``geohash3`` rows is decoded with ``wod_ascii.encode_batches`` into
-    ``(cells, data, errors)`` per at most ``_ARROW_BATCH_ROWS`` records:
-    ``data`` holds the ok casts in :func:`_cast_schema` column order,
-    ``cells`` their geohash3, ``errors`` the error rows. ``geometry`` is
-    built from each cast's decoded longitude and latitude: a struct for
-    ``point``, the ``functions/wkb.py`` kernel's bytes for ``WKB``."""
+    each sorted batch of ``file``, ``rec``, ``ferr``, ``castTimestamp``,
+    ``geohash`` and ``geohash3`` rows is decoded with
+    ``wod_ascii.encode_batches``, each record as a cast of
+    ``datasets[file]``, into ``(files, cells, data, errors)`` per at most
+    ``_ARROW_BATCH_ROWS`` records: ``data`` holds the ok casts in
+    :func:`_cast_schema` column order, ``files`` and ``cells`` their file
+    index and geohash3, ``errors`` the error rows as ``_WRITTEN_SCHEMA``
+    rows. ``geometry`` is built from each cast's decoded longitude and
+    latitude: a struct for ``point``, the ``functions/wkb.py`` kernel's
+    bytes for ``WKB``."""
 
     def geometry(lon, lat):
         import pyarrow as pa
@@ -679,7 +760,7 @@ def _cast_decoder(dataset: str, encoding: str):
         import pyarrow.compute as pc
 
         recs = zip(
-            itertools.repeat(dataset),
+            map(datasets.__getitem__, batch.column("file").to_pylist()),
             batch.column("rec").to_pylist(),
             batch.column("ferr").to_pylist(),
         )
@@ -699,12 +780,18 @@ def _cast_decoder(dataset: str, encoding: str):
                 ],
                 [*(f.name for f in ok.type), "castTimestamp", "geohash", GEOMETRY_COLUMN],
             )
-            cells = keys.column("geohash3")
+            files, cells = keys.column("file"), keys.column("geohash3")
             if not ok.null_count:
-                yield cells, data, None
+                yield files, cells, data, None
             else:
                 kept = ok.is_valid()
-                yield cells.filter(kept), data.filter(kept), err.filter(pc.invert(kept))
+                lost = pc.invert(kept)
+                yield (
+                    files.filter(kept),
+                    cells.filter(kept),
+                    data.filter(kept),
+                    _written(files.filter(lost), err=err.filter(lost)),
+                )
 
     return decode
 
@@ -719,6 +806,24 @@ def _footer_encoding(geometry_encoding: str) -> str:
     raise ValueError(
         f"geometry_encoding must be 'point' or 'wkb', got {geometry_encoding!r}"
     )
+
+
+#: Inputs smaller than this many bytes share Spark jobs (a batch); larger
+#: ones run a job each. Warm at local[4], a one-cast file-job costs
+#: 0.54-0.63 s of CPU: about 0.33 s in the JVM outside the JIT (plan
+#: build, scheduling two stages and the exchange), 0.19 s in the Python
+#: workers and 0.035 s in the driver. Below 256 KiB of gzip that fixed
+#: cost is most of a file's job; above it the decode and the writes
+#: dominate, and a job of its own costs little more. Keeping large files
+#: alone also means a corrupt large file never makes small files re-run,
+#: and a batch never waits on a large file.
+_SHARED_JOB_BYTES = 256 << 10
+
+#: The most inputs one batch converts. Above 32 paths
+#: (``spark.sql.sources.parallelPartitionDiscovery.threshold``) the
+#: ``binaryFile`` listing launches a Spark job of its own; with
+#: ``_SHARED_JOB_BYTES`` it also keeps a batch under 8 MiB of input.
+_SHARED_JOB_FILES = 32
 
 
 def convert(
@@ -736,21 +841,37 @@ def convert(
     """Run the full conversion job (the ``SparklerExecutor.execute`` mirror,
     test-facing API per ``SparklerExecutorLocalTest.java:56-74``).
 
-    File jobs are independent; they run on a small thread pool so Spark can
-    pipeline scheduling gaps (the reference runs them strictly sequentially,
-    ``SparklerExecutor.java:52``). Each task retries ``retries`` times —
-    the driver-level mirror of the reference's Condor retry policy
-    (``wod-ascii-to-parquet-spark.submit:15-16``); a retried task resumes
+    The work runs in units on a pool of ``max_concurrent`` threads, so
+    Spark can pipeline scheduling gaps (the reference runs one file at a
+    time, ``SparklerExecutor.java:52``), largest input bytes first. An
+    input of ``_SHARED_JOB_BYTES`` or more is a unit of its own, through
+    :func:`convert_file`. The smaller ones first get their skip/resume
+    checks (:func:`_prepare`, on the pool: on an object store each check
+    is a round trip per file); those left to convert are packed, largest
+    first, into batches of at most ``_SHARED_JOB_FILES``, each converted
+    in one Spark job (:func:`_convert_batch`) and published file by file.
+
+    Each file retries ``retries`` times — the driver-level mirror of the
+    reference's Condor retry policy
+    (``wod-ascii-to-parquet-spark.submit:15-16``); a retried file resumes
     from the stale-``_temporary`` cleanup path, so partial outputs of the
-    failed attempt are rebuilt, not appended to."""
+    failed attempt are rebuilt, not appended to. When a batch fails, the
+    files it already published count as converted, and each other file
+    is retried alone through :func:`convert_file` with the whole
+    ``retries`` budget, so a corrupt file fails only itself. Every file is
+    listed once in the result; any failure raises after the run."""
     result = ConvertResult()
     tasks = plan_tasks(source, output, datasets, levels, subset, spark=spark)
     # Largest file first (LPT scheduling): with a bounded worker pool, the
     # biggest job starting last is what stretches the makespan — the
     # reference processes in listing order and routinely tail-waits on one
-    # giant yearly file. Ties/missing sizes keep listing order (stable sort).
-    fs = FsClient(spark)
-    tasks.sort(key=lambda t: -fs.size(t.input_path))
+    # giant yearly file. Ties keep listing order (stable sort).
+    tasks.sort(key=lambda t: -t.size)
+
+    def record(task: FileTask, status: str) -> None:
+        (result.converted if status == "converted" else result.skipped).append(
+            task.output_path
+        )
 
     def run(task: FileTask) -> None:
         last_err: Exception | None = None
@@ -762,13 +883,30 @@ def convert(
                     overwrite=overwrite,
                     geometry_encoding=geometry_encoding,
                 )
-                (result.converted if status == "converted" else result.skipped).append(
-                    task.output_path
-                )
+                record(task, status)
                 return
             except Exception as e:  # per-file fail-fast, Sparkler.java:90-100
                 last_err = e
         result.failed.append((task.input_path, str(last_err)))
+
+    def check(task: FileTask) -> bool | None:
+        """:func:`_prepare`; None when it fails (the file is then retried
+        alone)."""
+        try:
+            return _prepare(spark, FsClient(spark), task, overwrite)
+        except Exception:
+            return None
+
+    def run_batch(batch: list[FileTask]) -> None:
+        published = 0
+        try:
+            enc = _footer_encoding(geometry_encoding)
+            for task in _convert_batch(spark, batch, enc):
+                record(task, "converted")
+                published += 1
+        except Exception:
+            for task in batch[published:]:
+                run(task)
 
     # cached_frames: a multi-file run is exactly the long-lived-session
     # shape the registry documents — any persist() a composed stage does
@@ -777,13 +915,23 @@ def convert(
     # InMemoryRelation per file in the CacheManager. One scope around the
     # WHOLE run (not per task): tasks share the session and the scope's
     # release happens after every task's terminal write.
-    with cached_frames():
-        if max_concurrent > 1:
-            with ThreadPoolExecutor(max_workers=max_concurrent) as pool:
-                list(pool.map(run, tasks))
-        else:
-            for t in tasks:
-                run(t)
+    with cached_frames(), ThreadPoolExecutor(max_workers=max(1, max_concurrent)) as pool:
+        each = pool.map if max_concurrent > 1 else map
+        small = [t for t in tasks if t.size < _SHARED_JOB_BYTES]
+        units = [(t.size, partial(run, t)) for t in tasks if t.size >= _SHARED_JOB_BYTES]
+        pending = []
+        for task, skipped in zip(small, each(check, small)):
+            if skipped:
+                record(task, "skipped")
+            elif skipped is None:
+                units.append((task.size, partial(run, task)))
+            else:
+                pending.append(task)
+        for at in range(0, len(pending), _SHARED_JOB_FILES):
+            batch = pending[at : at + _SHARED_JOB_FILES]
+            units.append((sum(t.size for t in batch), partial(run_batch, batch)))
+        units.sort(key=lambda unit: -unit[0])
+        list(each(lambda unit: unit[1](), units))
     if result.failed:
         raise RuntimeError(f"conversion failures: {result.failed}")
     return result
@@ -890,24 +1038,25 @@ def compact_convert_output(
                 # is WKB; a struct, or no geometry at all, the point footer
                 types = {f.name: f.dataType for f in df.schema.fields}
                 enc = "WKB" if isinstance(types.get(GEOMETRY_COLUMN), BinaryType) else "point"
-                files_after, _ = _write_geoparquet(
+                ((paths, _),) = _write_geoparquet(
                     spark,
                     fs,
                     _resolve_executor_store(spark, dest),
                     df.hint("rebalance", F.col("geohash3")).sortWithinPartitions(
                         "geohash3", "geohash"
                     ),
-                    dest,
+                    [dest],
                     enc,
                     StructType([f for f in df.schema.fields if f.name != "geohash3"]),
                 )
+                _publish_geoparquet(fs, dest, paths, enc)
                 fs.write_bytes(
                     _join(dest, SIDECAR_NAME), geo_sidecar_bytes(enc)
                 )
                 stats[f"{ds}/{lvl}"] = {
                     "inputs": len(dirs),
                     "files_before": len(sizes),
-                    "files_after": files_after,
+                    "files_after": len(paths),
                     "bytes_total": total,
                     "dest": dest,
                 }

@@ -23,10 +23,10 @@ default) only gunzips and FRAMES records in the file task, then a
 round-robin exchange of record strings scatters the field decode across
 every core; the ``wod_ascii`` DataSource (``wod_datasource.py``) yields
 :func:`decode_file` batches per file; and the convert plan frames with
-:func:`frame_headers`, whose rows carry each record's text and header
-fields (read by ``wod_format.read_header``, the walk's own first step),
-and decodes with :func:`encode_batches` inside its writer tasks, after its
-one exchange.
+:func:`frame_headers`, whose rows carry each record's text, its file's
+index in the job and its header fields (read by
+``wod_format.read_header``, the walk's own first step), and decodes with
+:func:`encode_batches` inside its writer tasks, after its one exchange.
 
 100 TB note: scatter, and convert's writer-side decode, decouple decode
 width from file count, so one giant yearly file parses at cluster width
@@ -167,21 +167,22 @@ def _file_rows(batches) -> Iterator[tuple[str, bytes]]:
             yield paths[i].as_py(), contents[i].as_py()
 
 
-def _framed(batches, dataset: str | None) -> Iterator[tuple[str, list]]:
-    """Gunzip and frame each ``binaryFile`` row: ``(dataset, records)``
-    per at most ``_ARROW_BATCH_ROWS`` records, each ``(record, framing
-    error)`` as :func:`wod_format.frame_records` yields them."""
+def _framed(batches, dataset: str | None) -> Iterator[tuple[str, str, list]]:
+    """Gunzip and frame each ``binaryFile`` row: ``(path, dataset,
+    records)`` per at most ``_ARROW_BATCH_ROWS`` records, each ``(record,
+    framing error)`` as :func:`wod_format.frame_records` yields them."""
     for path, content in _file_rows(batches):
         ds = dataset or _dataset_of(path)
         for chunk in _chunks(frame_records(_decompress(path, content))):
-            yield ds, chunk
+            yield path, ds, chunk
 
 
 #: :func:`frame_headers` rows: one framed record, or a file's framing
-#: error, with the header fields the convert plan's sort keys come from.
+#: error, with the index of its file and the header fields the convert
+#: plan's sort keys come from.
 FRAMED = (
-    "rec string, ferr string, year int, month int, day int, time double, "
-    "latitude double, longitude double"
+    "file int, rec string, ferr string, year int, month int, day int, "
+    "time double, latitude double, longitude double"
 )
 
 _NO_KEYS = (None,) * 6
@@ -199,34 +200,40 @@ def _header_keys(record: str | None) -> tuple:
         return _NO_KEYS
 
 
-def frame_headers(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Gunzip and frame WOD file(s), one task per file, into flat
-    ``FRAMED`` rows: each record's text and its header fields, read with
-    the decode kernel's own header read. No field past the header is
+def frame_headers(spark: SparkSession, files: dict[str, int]) -> DataFrame:
+    """Gunzip and frame the WOD files ``files`` maps to their indexes,
+    each file in one task, into flat ``FRAMED`` rows: each record's text, the
+    index of its file and its header fields, read with the decode
+    kernel's own header read. The keys must be the paths as
+    ``binaryFile`` lists them (``FsClient.qualify``'s form); a listed path
+    that is not a key fails the task. No field past the header is
     decoded; :func:`encode_batches` decodes the ``(dataset, rec, ferr)``
     triples wherever the rows end up."""
     import pyarrow as pa
 
-    files = spark.read.format("binaryFile").load(paths).select("path", "content")
+    rows = spark.read.format("binaryFile").load(list(files)).select("path", "content")
 
     def frame(batches):
         text, i32, f64 = pa.string(), pa.int32(), pa.float64()
-        for _ds, chunk in _framed(batches, None):
+        for path, _ds, chunk in _framed(batches, None):
+            if path not in files:
+                raise ValueError(f"{path!r} is not one of the files framed: {sorted(files)}")
             recs, ferrs = zip(*chunk)
             year, month, day, time, lat, lon = zip(*map(_header_keys, recs))
             yield pa.RecordBatch.from_arrays(
                 [
+                    pa.array([files[path]] * len(recs), i32),
                     pa.array(recs, text), pa.array(ferrs, text),
                     pa.array(year, i32), pa.array(month, i32), pa.array(day, i32),
                     pa.array(time, f64), pa.array(lat, f64), pa.array(lon, f64),
                 ],
                 names=[
-                    "rec", "ferr", "year", "month", "day", "time",
+                    "file", "rec", "ferr", "year", "month", "day", "time",
                     "latitude", "longitude",
                 ],
             )
 
-    return files.mapInArrow(frame, FRAMED)
+    return rows.mapInArrow(frame, FRAMED)
 
 
 def wod_scan(
@@ -266,7 +273,7 @@ def wod_scan(
         return files.mapInArrow(decode, PARSED)
 
     def frame(batches):
-        for ds, chunk in _framed(batches, dataset):
+        for _path, ds, chunk in _framed(batches, dataset):
             recs, ferrs = zip(*chunk)
             yield pa.RecordBatch.from_arrays(
                 [
