@@ -95,13 +95,12 @@ def test_cli_compact_target_bytes_consolidates_datasets(spark, tmp_path, capsys)
 
 def test_compact_preserves_digit_only_geohash3_cells(spark, tmp_path):
     """ADVICE r12 (medium): a dataset whose geohash3 dirs are ALL
-    digit-only base32 cells ('077', '978') must not have them inferred
-    as integers during the compaction read — that either fails the
-    unionByName against string-typed sibling datasets or silently
-    rewrites '077' -> '77' in the compacted layout, breaking the
-    geohash-prefix invariant. The corruption happens at partition-value
-    parse time, so compact_convert_output reads with type inference
-    disabled."""
+    digit-only base32 cells ('077', '978') must keep them as strings
+    through compaction: a read with partition discovery infers such a
+    cell as an integer and rewrites '077' -> '77' in the compacted
+    layout, breaking the geohash-prefix invariant. compact_convert_output
+    reads without partition discovery and takes geohash3 from geohash,
+    as convert does."""
     import os
 
     from wod_ascii_to_parquet_spark_spark.plans.convert import (
@@ -133,14 +132,17 @@ def test_compact_preserves_digit_only_geohash3_cells(spark, tmp_path):
 
 
 def test_compact_target_bytes_splits_oversized_hot_cell(spark, tmp_path):
-    """ADVICE r12: target_bytes must actually bound file sizes — the
-    previous repartition(n, geohash3) routed each cell wholly to one
-    task (one file per dir regardless of BYTES). With the REBALANCE
-    exchange + conf-scoped advisory size, a hot cell larger than
-    target_bytes splits into several geohash-sorted files in its dir
-    while row content is preserved exactly."""
+    """ADVICE r12: target_bytes must actually bound file sizes. A hot
+    cell larger than target_bytes is written by its one writer task into
+    several geohash-sorted files in its dir, each closed once it holds
+    target_bytes of Arrow data (a batch is split at the bound), so every
+    file is at most target_bytes plus its footer, the files hold disjoint
+    geohash ranges in c000 < c001 < ... order, and row content is
+    preserved exactly."""
     import glob
+    import os
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from wod_ascii_to_parquet_spark_spark.plans.convert import (
@@ -155,9 +157,18 @@ def test_compact_target_bytes_splits_oversized_hot_cell(spark, tmp_path):
         F.sha2(F.col("id").cast("string"), 512).alias("payload"),
     )
     hot.write.partitionBy("geohash3").parquet(f"{out}/yearly/CTD/OBS/A.parquet")
-    compact_convert_output(spark, out, target_bytes=512 * 1024)
-    files = glob.glob(f"{out}/compacted/CTD/OBS/geohash3=9q8/part-*")
+    target = 512 * 1024
+    compact_convert_output(spark, out, target_bytes=target)
+    files = sorted(glob.glob(f"{out}/compacted/CTD/OBS/geohash3=9q8/part-*"))
     assert len(files) > 1, "hot cell was not split"
+    ranges = []
+    for f in files:
+        footer = pq.ParquetFile(f).metadata.serialized_size + 8
+        assert os.path.getsize(f) <= target + footer, (f, os.path.getsize(f))
+        ghs = pq.read_table(f, columns=["geohash"])["geohash"].to_pylist()
+        assert ghs == sorted(ghs), f
+        ranges.append((ghs[0], ghs[-1]))
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:])), ranges
     comp = spark.read.parquet(f"{out}/compacted/CTD/OBS")
     assert comp.count() == 50_000
     src = spark.read.parquet(f"{out}/yearly/CTD/OBS/A.parquet")

@@ -611,6 +611,78 @@ def test_compaction_runs_no_footer_job(spark, tmp_path):
     assert spark.read.parquet(dest).count() == 2 * GEN_CASTS
 
 
+def test_compaction_crash_at_each_mutation_reruns_to_the_same_output(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that crashes at its k-th mutating ``FsClient`` call
+    (``delete``, ``rename_all`` or ``write_bytes``), for every k, is
+    repaired by a rerun: the same stats, the same ``convert_digest``
+    digest of ``compacted/`` as an uninterrupted run, no ``_temporary``,
+    and both ``_SUCCESS`` and the sidecar in place."""
+    import pathlib
+    import sys
+
+    from wod_ascii_to_parquet_spark_spark.plans.convert import compact_convert_output
+    from wod_ascii_to_parquet_spark_spark.sources.filesystem import FsClient
+
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
+    try:
+        import convert_digest
+    finally:
+        sys.path.pop(0)
+
+    out = _compaction_input(spark, tmp_path, "point")
+    dest = os.path.join(out, "compacted", "XBT", "OBS")
+    fs = FsClient(spark)
+    mutating = ("delete", "rename_all", "write_bytes")
+    real = {name: getattr(FsClient, name) for name in mutating}
+    calls = []
+
+    def compact(crash_at=None):
+        def counted(name):
+            def call(self, *args):
+                calls.append(name)
+                if len(calls) == crash_at:
+                    raise RuntimeError(f"crash at call {crash_at}, {name}")
+                return real[name](self, *args)
+
+            return call
+
+        calls.clear()
+        with monkeypatch.context() as m:
+            for name in mutating:
+                m.setattr(FsClient, name, counted(name))
+            return compact_convert_output(spark, out)
+
+    stats = compact()
+    expected, done = convert_digest.digest(spark, fs, dest), list(calls)
+    assert set(done) == set(mutating), done
+    for k in range(1, len(done) + 1):
+        with pytest.raises(RuntimeError, match=f"crash at call {k}, {done[k - 1]}"):
+            compact(crash_at=k)
+        assert compact() == stats
+        assert convert_digest.digest(spark, fs, dest) == expected, k
+        assert not os.path.exists(os.path.join(dest, "_temporary")), k
+        assert os.path.exists(os.path.join(dest, "_SUCCESS")), k
+        assert os.path.exists(os.path.join(dest, "_geo_metadata.json")), k
+
+
+def test_convert_pipeline_query_leaves_no_temp_dir(spark):
+    """The ``wod_convert_pipeline`` query converts into a temp dir and
+    removes it before it returns: two calls leave no new
+    ``wod_pipeline_q_*`` dir, and the rows they return outlive it."""
+    import tempfile
+
+    from wod_ascii_to_parquet_spark_spark.operators.wod import wod_convert_pipeline
+
+    pattern = os.path.join(tempfile.gettempdir(), "wod_pipeline_q_*")
+    before = set(glob.glob(pattern))
+    first, second = (wod_convert_pipeline(spark, "") for _ in range(2))
+    assert set(glob.glob(pattern)) <= before
+    assert first.count() == second.count() > 0
+    assert sorted(first.collect()) == sorted(second.collect())
+
+
 # -- decode in the writer tasks ----------------------------------------------
 
 

@@ -16,30 +16,29 @@ TMP = f"{OUT}/_temporary/job"
 
 
 def test_publish_plan_renames_cells_and_never_a_failed_attempt():
-    """One task dir per cell becomes the cell (one rename); a cell split
-    over two tasks gets its second task's file renamed into it; the files
-    of a failed attempt are not among the returned rows, so no rename
-    touches them."""
+    """Each cell's task dir becomes the cell: one rename per cell, however
+    many files (c000, c001, ...) the task wrote in it; the files of a
+    failed attempt are not among the returned rows, so no rename touches
+    them; a cell under two task dirs raises, since a rename onto the
+    published cell would nest the second dir in it."""
     returned = [
         # partition 0 succeeded on its retry (attempt id 7); its first
         # attempt (id 2) wrote files under 00000-2/ and failed
         f"{TMP}/00000-7/geohash3=abc/part-00000-job.c000.snappy.parquet",
         f"{TMP}/00000-7/geohash3=def/part-00000-job.c000.snappy.parquet",
-        # partition 1 holds the rest of cell def, and cell ghi
-        f"{TMP}/00001-3/geohash3=def/part-00001-job.c000.snappy.parquet",
+        f"{TMP}/00000-7/geohash3=def/part-00000-job.c001.snappy.parquet",
         f"{TMP}/00001-3/geohash3=ghi/part-00001-job.c000.snappy.parquet",
     ]
     assert _publish_plan(returned, OUT) == [
         (f"{TMP}/00000-7/geohash3=abc", f"{OUT}/geohash3=abc"),
         (f"{TMP}/00000-7/geohash3=def", f"{OUT}/geohash3=def"),
-        (
-            f"{TMP}/00001-3/geohash3=def/part-00001-job.c000.snappy.parquet",
-            f"{OUT}/geohash3=def/part-00001-job.c000.snappy.parquet",
-        ),
         (f"{TMP}/00001-3/geohash3=ghi", f"{OUT}/geohash3=ghi"),
     ]
     assert not [r for r in _publish_plan(returned, OUT) if "/00000-2/" in r[0]]
     assert _publish_plan([], OUT) == []
+    split = f"{TMP}/00001-3/geohash3=def/part-00001-job.c000.snappy.parquet"
+    with pytest.raises(ValueError, match="geohash3=def"):
+        _publish_plan([*returned, split], OUT)
 
 
 @pytest.mark.parametrize(

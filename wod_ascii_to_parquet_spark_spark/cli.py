@@ -85,9 +85,9 @@ def build_parser() -> argparse.ArgumentParser:
         help="after all file jobs publish, consolidate the per-input-file "
         "datasets into one geohash3-partitioned dataset per "
         "(dataset, level) under <output>/compacted/ — one file per cold "
-        "geohash3 dir, hot cells split into several ~BYTES-sized "
-        "geohash-sorted files via a REBALANCE exchange (OPTIMIZE; "
-        "yearly/ and its _SUCCESS resume markers are left untouched)",
+        "geohash3 dir, hot cells split into several geohash-sorted files "
+        "of at most ~BYTES each (OPTIMIZE; yearly/ and its _SUCCESS "
+        "resume markers are left untouched)",
     )
     return p
 

@@ -57,27 +57,32 @@ def wod_convert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S5/S6 end-to-end: run the full conversion pipeline (parse → split
     → geohash → clustered partitioned write → _SUCCESS) on the smallest
     fixture into a fresh temp dir, then return the re-read output — the
-    whole reference workload as one verifiable query. Rows-only (output
-    location is ephemeral); layout/sort/marker assertions live in
-    tests/test_convert_e2e.py."""
+    whole reference workload as one verifiable query. Rows-only: the few
+    projected rows are collected into a single-slice frame
+    (``registry.local_df``) and the temp dir is removed before returning;
+    layout/sort/marker assertions live in tests/test_convert_e2e.py."""
+    import shutil
     import tempfile
 
     from ..plans.convert import FileTask, convert_file
 
     out = tempfile.mkdtemp(prefix="wod_pipeline_q_")
-    task = FileTask("CTD", "OBS", f"{wod_fixtures_dir()}/CTD/OBS/CTDO1971.gz", out, out)
-    convert_file(spark, task)
-    df = spark.read.parquet(task.output_path)
-    return df.select(
-        "dataset",
-        "castNumber",
-        "year",
-        "latitude",
-        "longitude",
-        "geohash",
-        "geohash3",
-        F.size("depths").alias("n_levels"),
-    )
+    try:
+        task = FileTask("CTD", "OBS", f"{wod_fixtures_dir()}/CTD/OBS/CTDO1971.gz", out, out)
+        convert_file(spark, task)
+        df = spark.read.parquet(task.output_path).select(
+            "dataset",
+            "castNumber",
+            "year",
+            "latitude",
+            "longitude",
+            "geohash",
+            "geohash3",
+            F.size("depths").alias("n_levels"),
+        )
+        return local_df(spark, df.collect(), df.schema)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 @register("wod_ascii_scan", None, tags=("wod", "rows-only"))

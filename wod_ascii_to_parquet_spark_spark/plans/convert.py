@@ -60,7 +60,8 @@ ones in shared jobs; per-file output partitioning is by ``geohash3`` (max
 geohash sort giving parquet row-group min/max locality for spatial
 readers. A skewed geohash3 (coastal hot cells) only skews the decode and
 WRITE of one job, bounded by file size (a batch's by its few MiB);
-cross-file global compaction would bucket by (geohash3, salt) instead.
+compaction writes a hot cell in one task too, rolling its file at
+``target_bytes``.
 """
 
 from __future__ import annotations
@@ -68,6 +69,7 @@ from __future__ import annotations
 import json
 import os
 import posixpath
+from bisect import bisect_right
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import partial
@@ -81,6 +83,7 @@ from ..registry import cached_frames
 from ..schemas import CAST, CAST_ERROR
 from ..sources.filesystem import FsClient
 from ..sources.wod_ascii import encode_batches, errors, frame_headers, wod_scan
+from .compact import plan_target_files
 from .geo_metadata import (
     GEOMETRY_COLUMN,
     SIDECAR_NAME,
@@ -232,14 +235,15 @@ _CHUNK_BYTES = 64 << 20
 class _CellFile:
     """One geohash3 cell's parquet file, open in a writer task: batches
     are buffered and written as row groups of about ``_ROW_GROUP_BYTES``
-    (pyarrow starts a new row group on every write). With no ``store``
-    the file is written to memory, and :meth:`close` returns its bytes."""
+    (pyarrow starts a new row group on every write); ``nbytes`` counts the
+    Arrow bytes added. With no ``store`` the file is written to memory,
+    and :meth:`close` returns its bytes."""
 
     def __init__(self, store, path: str, schema):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        self.path, self._pending, self._bytes = path, [], 0
+        self.path, self._pending, self._bytes, self.nbytes = path, [], 0, 0
         self._schema = schema
         self._in_memory = store is None
         self._sink = pa.BufferOutputStream() if store is None else store.open_output(path)
@@ -253,6 +257,7 @@ class _CellFile:
     def add(self, batch) -> None:
         self._pending.append(batch)
         self._bytes += batch.nbytes
+        self.nbytes += batch.nbytes
         if self._bytes >= _ROW_GROUP_BYTES:
             self._flush()
 
@@ -345,7 +350,9 @@ def _runs(files, cells):
     return zip(ends, files.take(last).to_pylist(), cells.take(last).to_pylist())
 
 
-def _cell_writer(store, tmp_roots: list[str], job: str, schema, prepare=_split_cells):
+def _cell_writer(
+    store, tmp_roots: list[str], job: str, schema, prepare=_split_cells, file_bytes=None
+):
     """The ``mapInArrow`` body of the one-pass writer. Each task gets its
     rows sorted by ``(file, geohash3, geohash)``, ``file`` an index into
     ``tmp_roots``; ``prepare`` turns each input batch into ``(files,
@@ -353,9 +360,12 @@ def _cell_writer(store, tmp_roots: list[str], job: str, schema, prepare=_split_c
     equal ``(files, cells)`` values ``(f, v)`` as ``<tmp_roots[f]>/
     <partition>-<attempt>/geohash3=<v>/part-<partition>-<job>.c000.snappy.
     parquet`` (``data``'s rows, Arrow ``schema``, its metadata in the
-    footer) through ``store``, or to memory when ``store`` is None. It
-    returns ``_WRITTEN_SCHEMA`` rows as each file closes, so a task holds at
-    most one in-memory file, and the ``errors`` rows, already
+    footer) through ``store``, or to memory when ``store`` is None. With
+    ``file_bytes``, a file that holds that many bytes of Arrow data is
+    closed and the run goes on in ``c001``, ``c002``, …, a batch split at
+    the bound, so the files of a cell hold disjoint, ordered slices of its
+    rows. It returns ``_WRITTEN_SCHEMA`` rows as each file closes, so a
+    task holds at most one in-memory file, and the ``errors`` rows, already
     ``_WRITTEN_SCHEMA`` rows, as they come. ``<attempt>`` is the task
     attempt's id, unique in the application, so a failed or speculative
     attempt's files never share a directory with the files the driver
@@ -384,8 +394,14 @@ def _cell_writer(store, tmp_roots: list[str], job: str, schema, prepare=_split_c
 
         ctx = TaskContext.get()
         task_dir = f"{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
-        name = f"part-{ctx.partitionId():05d}-{job}.c000.snappy.parquet"
-        key, current = None, None
+        name = f"part-{ctx.partitionId():05d}-{job}.c{{:03d}}.snappy.parquet"
+        key, current, count = None, None, 0
+
+        def opened(file, cell):
+            part = _NULL_PARTITION if cell is None else cell
+            path = f"{tmp_roots[file]}/{task_dir}/geohash3={part}/{name.format(count)}"
+            return _CellFile(store, path, schema)
+
         try:
             for batch in batches:
                 for files, cells, data, errs in prepare(batch):
@@ -396,15 +412,25 @@ def _cell_writer(store, tmp_roots: list[str], job: str, schema, prepare=_split_c
                         if current is None or (file, cell) != key:
                             if current is not None:
                                 yield from returned(current, key[0])
-                            key = (file, cell)
-                            part = _NULL_PARTITION if cell is None else cell
-                            current = _CellFile(
-                                store,
-                                f"{tmp_roots[file]}/{task_dir}/geohash3={part}/{name}",
-                                schema,
-                            )
-                        current.add(data.slice(start, end - start))
-                        start = end
+                            key, count = (file, cell), 0
+                            current = opened(file, cell)
+                        rows, start = data.slice(start, end - start), end
+                        while rows.num_rows:
+                            fit = rows.num_rows
+                            if file_bytes is not None:  # the leading rows that fit
+                                fit = bisect_right(
+                                    range(1, fit + 1),
+                                    file_bytes - current.nbytes,
+                                    key=lambda k: rows.slice(0, k).nbytes,
+                                )
+                            if not fit and current.nbytes:  # full: go on in the next file
+                                yield from returned(current, file)
+                                count += 1
+                                current = opened(file, cell)
+                                continue
+                            fit = fit or 1  # a row over the bound: a file of its own
+                            current.add(rows.slice(0, fit))
+                            rows = rows.slice(fit)
             if current is not None:
                 last, current = current, None
                 yield from returned(last, key[0])
@@ -419,22 +445,19 @@ def _publish_plan(paths: list[str], out: str) -> list[tuple[str, str]]:
     """The ``(src, dst)`` renames that publish the files at ``paths`` —
     the rows the writer tasks returned, each under
     ``<out>/_temporary/<job>/<task>/geohash3=<v>/`` — into ``out``, in
-    order. A cell's first task directory is renamed to
-    ``<out>/geohash3=<v>``: one rename per cell when every cell is one
-    task's, as in convert. The files of a cell's other task directories (a
-    cell split over tasks by compaction's rebalance) are renamed into it.
+    order: one rename per cell, of its task directory to
+    ``<out>/geohash3=<v>``. Every cell must be one task's, as the writer's
+    exchange, keyed on the cell, makes it; a cell under two task
+    directories raises ``ValueError``, since a second rename onto the
+    cell's directory would nest it on Hadoop filesystems without error.
     Files not in ``paths``, such as a failed attempt's, are not moved."""
-    first: dict[str, str] = {}
-    renames: list[tuple[str, str]] = []
+    dirs: dict[str, str] = {}
     for path in paths:
         task_cell = posixpath.dirname(path)
         cell = posixpath.basename(task_cell)
-        if cell not in first:
-            first[cell] = task_cell
-            renames.append((task_cell, _join(out, cell)))
-        elif first[cell] != task_cell:
-            renames.append((path, _join(out, cell, posixpath.basename(path))))
-    return renames
+        if dirs.setdefault(cell, task_cell) != task_cell:
+            raise ValueError(f"{cell} written by two tasks: {dirs[cell]}, {task_cell}")
+    return [(task_cell, _join(out, cell)) for cell, task_cell in dirs.items()]
 
 
 def _geo_value(encoding: str) -> bytes:
@@ -464,11 +487,13 @@ def _write_geoparquet(
     encoding: str,
     schema,
     prepare=_split_cells,
+    file_bytes=None,
 ) -> list[tuple[list[str], list]]:
     """Write ``frame`` (sorted by ``(file, geohash3, geohash)`` within each
     partition, ``file`` an index into ``outs``; see :func:`_cell_writer`)
     as geohash3-partitioned GeoParquet in one pass, with rows of the Spark
-    ``schema`` as ``prepare`` makes them. Returns, per output, the paths of
+    ``schema`` as ``prepare`` makes them, files of at most ``file_bytes``
+    of Arrow data each when it is given. Returns, per output, the paths of
     the files written for it and the error rows ``prepare`` found, as
     ``(dataset, castNumber, error)`` rows; :func:`_publish_geoparquet`
     then publishes each output.
@@ -492,7 +517,8 @@ def _write_geoparquet(
     )
     tmp_roots = [_join(out, "_temporary", job) for out in outs]
     written = frame.mapInArrow(
-        _cell_writer(store, tmp_roots, job, file_schema, prepare), _WRITTEN_SCHEMA
+        _cell_writer(store, tmp_roots, job, file_schema, prepare, file_bytes),
+        _WRITTEN_SCHEMA,
     )
     results: list[tuple[list[str], list]] = [([], []) for _ in outs]
     if store is not None:
@@ -961,106 +987,73 @@ def compact_convert_output(
     where in-place publish renames are copy+delete. Re-running this
     function is idempotent (each destination is deleted and rewritten).
 
-    Layout: a ``REBALANCE(geohash3)`` exchange (ADVICE r12: the previous
-    ``repartition(n, geohash3)`` routed each geohash3 WHOLLY to one
-    task, so the output was always exactly one file per geohash3 dir and
-    ``target_bytes`` was inert — a hot coastal cell could not be split)
-    + within-partition ``(geohash3, geohash)`` sort + the one-pass
-    GeoParquet writer (:func:`_write_geoparquet`), with AQE's advisory
-    partition size conf-scoped to ``target_bytes`` so the rebalance
-    actually aims at it: cold cells coalesce into shared tasks (still one
-    file each — the writer starts a file at every geohash3 run), an
-    oversized hot cell splits into several ~``target_bytes``
-    geohash-sorted files in its dir. Same clustering contract as the
-    per-file jobs (zorder-compatible: the sort key is pluggable the way
-    ``plans/zorder.py`` layers on ``plans/compact.py``); the
-    geohash-prefix dir invariant is enforced by the writer itself,
-    independent of task layout. Every file is written with the ``geo``
-    footer the input's ``geometry`` column calls for (binary: 1.0.0 WKB;
-    otherwise 1.1.0 point), and the sidecar follows, so compaction never
-    demotes the dataset or mislabels its geometry. Returns
-    per-(dataset, level) stats.
-
-    Reads run with partition-column TYPE INFERENCE DISABLED (ADVICE r12
-    medium): a dataset whose geohash3 dirs are all digit-only base32
-    cells (e.g. ``077``, ``978``) would otherwise infer geohash3 as
-    integer — failing the unionByName against string-typed siblings or,
-    worse, silently rewriting ``077`` → ``77`` in the compacted layout
-    and breaking the geohash-prefix invariant. The corruption happens AT
-    READ (partition-value parse), so a post-read cast cannot repair it;
-    only inference-off reads can."""
-    from pyspark.sql.types import BinaryType, StructType
-
-    from .compact import _is_data_file
+    Each ``(dataset, level)`` is one job shaped as convert's: one read of
+    the data files of its complete datasets (``_SUCCESS``), which lists
+    them without partition discovery, so ``geohash3`` is taken from
+    ``geohash`` as convert computes it (a digit-only cell such as ``077``
+    stays a string); ``repartition(n, geohash3)``, ``n`` the input bytes
+    over ``target_bytes``; a ``(geohash3, geohash)`` sort within each
+    partition; and the one-pass GeoParquet writer
+    (:func:`_write_geoparquet`). Each cell is one task's: its rows go into
+    geohash-sorted files of at most ``target_bytes`` of Arrow data each,
+    so a hot cell is split into ``c000``, ``c001``, … in geohash order, and
+    it is published with one rename. Every file is written with the
+    ``geo`` footer the input's ``geometry`` column calls for (binary:
+    1.0.0 WKB; otherwise 1.1.0 point), and the sidecar follows, so
+    compaction never demotes the dataset or mislabels its geometry.
+    Returns per-(dataset, level) stats."""
+    from pyspark.sql.types import BinaryType
 
     fs = FsClient(spark)
     output = fs.qualify(output)
     yearly = _join(output, "yearly")
     stats: dict = {}
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    advisory_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old_infer = spark.conf.get(infer_key, "true")
-    old_advisory = spark.conf.get(advisory_key, "64MB")
-    spark.conf.set(infer_key, "false")
-    spark.conf.set(advisory_key, str(int(target_bytes)))
-    try:
-        for ds in fs.list_names(yearly):
-            for lvl in fs.list_names(_join(yearly, ds)):
-                dirs = [
-                    _join(yearly, ds, lvl, name)
-                    for name in fs.list_names(_join(yearly, ds, lvl))
-                ]
-                # only COMPLETE datasets (the _SUCCESS skip/resume
-                # marker); a concurrent or crashed file-job's partial
-                # output must not leak into the consolidated set
-                dirs = [d for d in dirs if _has_success(fs, d)]
-                if not dirs:
-                    continue
-                sizes: dict[str, int] = {}
-                for d in dirs:
-                    sizes.update(
-                        (p, n)
-                        for p, n in fs.file_sizes(d).items()
-                        if _is_data_file(p)
-                    )
-                total = sum(sizes.values())
-                # one read per dataset root, unioned: a single multi-path
-                # read trips partition discovery ([CONFLICTING_DIRECTORY_
-                # STRUCTURES] — each root is its own geohash3=* tree)
-                from functools import reduce
-
-                df = reduce(
-                    lambda a, b: a.unionByName(b),
-                    (spark.read.parquet(d) for d in dirs),
-                )
-                dest = _join(output, "compacted", ds, lvl)
-                # the footer the input's geometry column calls for: binary
-                # is WKB; a struct, or no geometry at all, the point footer
-                types = {f.name: f.dataType for f in df.schema.fields}
-                enc = "WKB" if isinstance(types.get(GEOMETRY_COLUMN), BinaryType) else "point"
-                ((paths, _),) = _write_geoparquet(
-                    spark,
-                    fs,
-                    _resolve_executor_store(spark, dest),
-                    df.hint("rebalance", F.col("geohash3")).sortWithinPartitions(
-                        "geohash3", "geohash"
-                    ),
-                    [dest],
-                    enc,
-                    StructType([f for f in df.schema.fields if f.name != "geohash3"]),
-                )
-                _publish_geoparquet(fs, dest, paths, enc)
-                fs.write_bytes(
-                    _join(dest, SIDECAR_NAME), geo_sidecar_bytes(enc)
-                )
-                stats[f"{ds}/{lvl}"] = {
-                    "inputs": len(dirs),
-                    "files_before": len(sizes),
-                    "files_after": len(paths),
-                    "bytes_total": total,
-                    "dest": dest,
-                }
-    finally:
-        spark.conf.set(infer_key, old_infer)
-        spark.conf.set(advisory_key, old_advisory)
+    for ds in fs.list_names(yearly):
+        for lvl in fs.list_names(_join(yearly, ds)):
+            level = _join(yearly, ds, lvl)
+            # only COMPLETE datasets (the _SUCCESS skip/resume marker); a
+            # concurrent or crashed file-job's partial output must not
+            # leak into the consolidated set
+            dirs = [_join(level, name) for name in fs.list_names(level)]
+            dirs = [d for d in dirs if _has_success(fs, d)]
+            if not dirs:
+                continue
+            df = (
+                spark.read.option("recursiveFileLookup", "true")
+                .option("pathGlobFilter", "part-*")
+                .parquet(*dirs)
+            )
+            # the stats come from the read's own file index: a second
+            # listing would cost as much again (about 3 ms a local file)
+            index = df._jdf.queryExecution().analyzed().relation().location()
+            total = int(index.sizeInBytes())
+            frame = (
+                df.withColumn("geohash3", F.substring("geohash", 1, 3))
+                .repartition(plan_target_files(total, target_bytes), "geohash3")
+                .sortWithinPartitions("geohash3", "geohash")
+            )
+            dest = _join(output, "compacted", ds, lvl)
+            # the footer the input's geometry column calls for: binary is
+            # WKB; a struct, or no geometry at all, the point footer
+            types = {f.name: f.dataType for f in df.schema.fields}
+            enc = "WKB" if isinstance(types.get(GEOMETRY_COLUMN), BinaryType) else "point"
+            ((paths, _),) = _write_geoparquet(
+                spark,
+                fs,
+                _resolve_executor_store(spark, dest),
+                frame,
+                [dest],
+                enc,
+                df.schema,
+                file_bytes=target_bytes,
+            )
+            _publish_geoparquet(fs, dest, paths, enc)
+            fs.write_bytes(_join(dest, SIDECAR_NAME), geo_sidecar_bytes(enc))
+            stats[f"{ds}/{lvl}"] = {
+                "inputs": len(dirs),
+                "files_before": len(index.inputFiles()),
+                "files_after": len(paths),
+                "bytes_total": total,
+                "dest": dest,
+            }
     return stats

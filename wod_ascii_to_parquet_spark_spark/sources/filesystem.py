@@ -286,9 +286,9 @@ class FsClient:
                 raise OSError(f"rename refused: {src} -> {dst}")
 
     def file_sizes(self, path: str, recursive: bool = True) -> dict[str, int]:
-        """{path: bytes} for every regular file under ``path`` — the
-        planning input for compaction (``listFiles`` streams a
-        RemoteIterator; s3a pages the listing internally)."""
+        """{path: bytes} for every regular file under ``path``
+        (``listFiles`` streams a RemoteIterator; s3a pages the listing
+        internally)."""
         fs, p = self._fs_path(path)
         if not fs.exists(p):
             return {}
